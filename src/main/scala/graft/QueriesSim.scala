@@ -2523,11 +2523,11 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       GraphAnn.buildGraph(Tables.embeddings(s, dir)))
 
   /** Embeddings for the graph SERVING paths: a raw scan WITHOUT the
-    * Tables fan-out repartition. Serving re-reads the corpus in every
-    * hop's checkpoint job only to probe ≤ef·|Q| candidates — locally
-    * that side ends in a BroadcastExchange, so the fan-out exchange
-    * under it is pure waste (the Tables scaladoc's own criterion), and
-    * at scale the scan carries its own parallelism. The BUILD path
+    * Tables fan-out repartition. Serving reads the corpus into the
+    * resident index (a driver collect) and walks the few query rows in
+    * one executor pass, so a fan-out exchange under either is pure
+    * waste (the Tables scaladoc's own criterion), and at scale the scan
+    * carries its own parallelism. The BUILD path
     * (graphNswAll) keeps the fan-out: NN-Descent scoring is heavy
     * per-row compute over the whole corpus, exactly what it is for.
     * r16 optimization, guide §2.4. */
@@ -2563,9 +2563,8 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
 
   /** Beam-served top-k over the persisted graph (the sim_*_topk
     * contract: queries = every 20th vector, k=10). Serving reads ONLY
-    * the stored adjacency + vectors; each hop is one equi-join of the
-    * ≤ef·|Q| frontier against the distributed graph — the 100 TB
-    * shape. */
+    * the stored adjacency + vectors, resident on each executor; every
+    * query walks them in one executor pass (GraphAnn.beamSearch). */
   protected val simGraphTopk = Q("sim_graph_topk",
     (s, dir) => GraphAnn.graphTopK(embServe(s, dir),
       graphNswAll(s, dir), k = 10, stride = 20),
@@ -2764,10 +2763,10 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
   /** Graph routing over STORED PQ CODES + exact re-rank — the DiskANN
     * memory posture composed from three persisted artifacts (navigable
     * graph, wide code table, trained codebooks): the beam scores
-    * candidates with the native `adc_sum_l` kernel against the
-    * broadcast per-query LUT (integer micro-L2 — corpus VECTORS are
-    * untouched during routing), and only the final ≤ef shortlist
-    * reads true vectors for the exact cosine re-rank. At 100 TB the
+    * candidates with the `adc_sum_l` sum against each query's LUT
+    * (integer micro-L2 — corpus VECTORS are untouched during routing),
+    * and only the final shortlist reads true vectors for the exact
+    * cosine re-rank. At 100 TB the
     * serving tier holds m bytes/vector, not the embeddings. */
   protected val simGraphAdcTopk = Q("sim_graph_adc_topk",
     (s, dir) => GraphAnn.graphAdcTopK(embServe(s, dir),

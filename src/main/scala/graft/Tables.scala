@@ -17,9 +17,10 @@ object Tables {
     * file scan is one task no matter what `maxPartitionBytes` says (a row
     * group is the atomic split unit) — and every narrow pipeline above it
     * would run on one core. When the scan's planned parallelism is below
-    * the session's, fan out with one cheap round-robin exchange (tens of
-    * MB here). On a real many-file/many-row-group layout — the 100 TB case
-    * — the scan is already parallel and this is a no-op. */
+    * the session's, fan out with one cheap hash exchange on the leading id
+    * column (tens of MB here; see [[load]]). On a real many-file/many-row-group
+    * layout — the 100 TB case — the scan is already parallel and this is a
+    * no-op. */
   /** Memo of loaded table frames, keyed (session, path) — r16 session 2.
     * `spark.read.parquet` runs an eager footer/schema-inference job on
     * every call, so before this every query BUILD re-listed and re-read
@@ -75,8 +76,15 @@ object Tables {
     // no sort is needed, retries are safe (guide §2.5 "derive the synthetic
     // key deterministically"), and downstream aggregates/joins keyed on the
     // same id reuse the fan-out partitioning outright (guide §2.4: two
-    // operations keyed the same way share one exchange). Keys are unique
-    // ids, so the hash spread is uniform — no skew risk at any SF.
+    // operations keyed the same way share one exchange). Keys are
+    // high-cardinality ids (unique, or a few rows per key: l_orderkey has
+    // about 4 lineitems each), so the hash spread is even — PlanShapeSpec
+    // guards distinct(leading column)/rows ≥ 0.2 on every fanned table.
+    // The width is min(defaultParallelism, 32), and because downstream
+    // joins/aggregates keyed on the same id REUSE this partitioning, they
+    // run at that width too instead of spark.sql.shuffle.partitions — at
+    // most 32 tasks, however many cores or shuffle partitions the session
+    // has.
     if (!tiny && estScanParts < target)
       df.repartition(target, org.apache.spark.sql.functions.col(df.schema.head.name))
     else df

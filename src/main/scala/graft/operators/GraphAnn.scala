@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.functions.SimFns._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,13 +28,18 @@ import org.apache.spark.sql.functions._
   *    (round-4 cosine DESC, dst). Candidate volume is N·(2K)² per
   *    round — linear in N, bounded per node;
   *  - '''serving''': multi-entry unrolled BEAM search, `hops` fixed
-  *    expansion steps: pool ← top-ef(pool ∪ score(pool ⋈ G)) per
-  *    query. The frontier is |Q|·ef rows (broadcastable); the graph
-  *    and vector tables stay partitioned and are probed by equi-join —
-  *    at 100 TB each hop is one hash join however large the corpus.
-  *    Entry points are the `nEntries` smallest nodes in
-  *    (md5(vec_id), vec_id) order — a deterministic pseudo-random
-  *    spread, the distributed stand-in for HNSW's top-layer descent.
+  *    expansion steps: pool ← top-ef(pool ∪ score(out(pool))) per
+  *    query. The hop-invariant index — adjacency, the scorer's per-node
+  *    payload, the entry points — is collected once per call and
+  *    broadcast, so it is RESIDENT on each executor: N·(K+15) ids plus
+  *    N·dim doubles (cosine) or N·m code bytes (ADC). Every query then
+  *    walks it in one executor pass ([[walk]]) — no Spark job per hop.
+  *    The collect is bounded by `spark.driver.maxResultSize`; the scale
+  *    path past it is a graph sharded per partition with per-shard
+  *    walks merged by query, out of scope here. Entry points are the
+  *    `nEntries` smallest nodes in (md5(vec_id), vec_id) order — a
+  *    deterministic pseudo-random spread, the distributed stand-in for
+  *    HNSW's top-layer descent.
   *
   * Everything is deterministic (fixed planes, round-4 cosine, id
   * tie-breaks, monotone pool growth), so the ENTIRE build + search
@@ -175,19 +181,144 @@ object GraphAnn {
   /** The `nEntries` deterministic entry points: smallest nodes in
     * (md5(vec_id-as-string), vec_id) order — a fixed pseudo-random
     * spread over the corpus, identical in both engines. */
-  private def entryPoints(n: DataFrame, nEntries: Int): DataFrame =
+  private def entryIds(n: DataFrame, nEntries: Int): Array[Long] =
     n.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(nEntries)
-      .select(col("vec_id"), col("v"), col("nrm"))
+      .limit(nEntries).select(col("vec_id")).collect().map(_.getLong(0))
+
+  /** Rows keyed by node id, resident on every executor: ids sorted once,
+    * looked up by binary search — no boxed keys or hash buckets, so the
+    * index costs its payload plus one long per node. */
+  private[graft] final class ById[A](ids: Array[Long], rows: IndexedSeq[A])
+      extends Serializable {
+    def get(node: Long): Option[A] = {
+      val i = java.util.Arrays.binarySearch(ids, node)
+      if (i < 0) None else Some(rows(i))
+    }
+  }
+
+  private[graft] object ById {
+    def apply[A](pairs: Iterable[(Long, A)]): ById[A] = {
+      val sorted = pairs.toVector.sortBy(_._1)
+      val ids = sorted.map(_._1).toArray
+      require(ids.indices.drop(1).forall(i => ids(i) != ids(i - 1)),
+        "graph serving needs unique node ids")
+      new ById(ids, sorted.map(_._2))
+    }
+  }
+
+  /** The hop-invariant serving index: adjacency src → dsts, the scorer's
+    * per-node payload ((v, nrm) vectors or PQ codes), the entry points
+    * and, for filtered serving, the sorted matching ids. */
+  private final case class Index[P](adj: ById[Array[Long]], nodes: ById[P],
+      entries: Array[Long], matchIds: Option[Array[Long]] = None) {
+    def out(node: Long): Array[Long] = adj.get(node).getOrElse(Array.emptyLongArray)
+  }
+
+  private def adjacency(graph: DataFrame): ById[Array[Long]] =
+    ById(graph.select(col("src"), col("dst")).collect()
+      .groupMap(_.getLong(0))(_.getLong(1)))
+
+  /** Spark's DESC order over doubles ([[SQLOrderingUtil.compareDoubles]]
+    * reversed): −0.0 ties 0.0, NaN sorts first. */
+  private[graft] val CosineDesc: Ordering[Double] =
+    (a, b) => SQLOrderingUtil.compareDoubles(b, a)
+
+  /** One node a query's walk scored. `hop` is the last hop that gathered
+    * it, so a node reached along several edges enters a hop's candidate
+    * list once — the oracle's `min` per (query, node), since a node's
+    * score is fixed. */
+  private final class Scored[S](val node: Long, val score: S) {
+    var hop: Int = -1
+  }
+
+  /** One query's beam walk — the serving kernel, replaying [[beamSql]]'s
+    * unrolled walk for a single query: pool₀ = cap(score(entries)),
+    * poolₕ = cap(poolₕ₋₁ ∪ score(out(poolₕ₋₁))), where cap keeps each node
+    * once and the best `ef` by (score, node) under `ord`. Each hop expands
+    * the whole pool through the adjacency (DiskANN-style beam, not
+    * best-first). `score` is None for a node the scorer cannot score (no
+    * stored vector or code, zero norm): the node is dropped, as the inner
+    * join it replaces dropped it. Scores are memoized per query; a node
+    * re-reached by a later hop re-scores to the same value, so results
+    * are unchanged.
+    *
+    * Returns the final pool and every node the walk scored, both ranked.
+    * The second feeds the passive accumulators (the ADC shortlist, the
+    * filtered match pool): a prefix of it is their one end-of-walk cap,
+    * which equals capping per hop (top-k(top-k(A) ∪ B) = top-k(A ∪ B)). */
+  private[graft] def walk[S](out: Long => Array[Long], entries: Array[Long],
+      ef: Int, hops: Int, score: Long => Option[S])(
+      implicit ord: Ordering[S]): (Seq[(Long, S)], Seq[(Long, S)]) = {
+    import scala.collection.mutable.{ArrayBuffer, LongMap}
+    val rank: Ordering[Scored[S]] = (a, b) => {
+      val c = ord.compare(a.score, b.score)
+      if (c != 0) c else java.lang.Long.compare(a.node, b.node)
+    }
+    val memo = LongMap.empty[Scored[S]] // null: the node has no score
+    val all = ArrayBuffer.empty[Scored[S]]
+    def gather(v: Long, hop: Int, into: ArrayBuffer[Scored[S]]): Unit = {
+      val c = memo.getOrElseUpdate(v,
+        score(v).map { s => val c = new Scored(v, s); all += c; c }.orNull)
+      if (c != null && c.hop != hop) { c.hop = hop; into += c }
+    }
+    def cap(xs: ArrayBuffer[Scored[S]]) = xs.sortInPlace()(rank).take(ef)
+    var pool = ArrayBuffer.empty[Scored[S]]
+    entries.foreach(gather(_, 0, pool))
+    pool = cap(pool)
+    for (h <- 1 to hops) {
+      pool.foreach(_.hop = h)
+      val next = pool.clone()
+      pool.foreach(p => out(p.node).foreach(gather(_, h, next)))
+      pool = cap(next)
+    }
+    def pairs(xs: ArrayBuffer[Scored[S]]) = xs.map(c => c.node -> c.score).toSeq
+    (pairs(pool), pairs(all.sortInPlace()(rank)))
+  }
+
+  /** round(dot(qv, v) / (qnrm · nrm), 4) exactly as Spark evaluates it:
+    * [[graft.plans.DotProductD]]'s index-order loop, then `round`'s
+    * BigDecimal HALF_UP (NaN/±∞ pass through). None where Spark yields
+    * NULL: a length mismatch or a zero divisor. */
+  private[graft] def cosine4(qv: Array[Double], qnrm: Double, v: Array[Double],
+      nrm: Double): Option[Double] = {
+    val den = qnrm * nrm
+    if (qv.length != v.length || den == 0.0) None
+    else {
+      var acc = 0.0
+      var i = 0
+      while (i < v.length) { acc += qv(i) * v(i); i += 1 }
+      val c = acc / den
+      Some(if (c.isNaN || c.isInfinite) c
+        else BigDecimal(c).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    }
+  }
+
+  /** The ADC distance of [[graft.plans.AdcSumL]]: Σ_sub lut(sub·ksub +
+    * code). Codes and LUT are validated on the Spark side before they
+    * reach the kernel ([[Similarity.validWideCodes]]/[[Similarity
+    * .validWideLut]]), so every lookup is in range. */
+  private[graft] def adcDistance(codes: Array[Byte], lut: Array[Long],
+      ksub: Int): Long = {
+    var acc = 0L
+    var s = 0
+    while (s < codes.length) { acc += lut(s * ksub + (codes(s) & 0xff)); s += 1 }
+    acc
+  }
 
   /** Unrolled multi-entry beam search over a prebuilt graph:
     * `queries` must carry (query_id, qv, qnrm); returns the standard
     * sim contract (query_id, rank, neighbor_id, cosine), self-pairs
     * excluded at the final rank (the query's own node stays in the
-    * pool mid-walk — it is a useful router). Each hop expands the
-    * whole ≤ef pool through the adjacency (DiskANN-style beam, not
-    * best-first: monotone pool growth keeps the unrolled plan — and
-    * the oracle — free of visited-set anti-joins). */
+    * pool mid-walk — it is a useful router).
+    *
+    * Serving is ONE executor pass over the query rows: the graph's
+    * adjacency, the corpus (vec_id, v, nrm) and the entry points are
+    * collected once per call and broadcast, so the index is resident on
+    * each executor — N·(K+15) ids plus N·dim doubles — and every query
+    * walks it in memory ([[walk]]), scored by [[cosine4]]. The collect is
+    * bounded by `spark.driver.maxResultSize`; past that, the scale path is
+    * a graph sharded per partition with per-shard walks merged by query,
+    * which this operator does not build. */
   def beamSearch(graph: DataFrame, corpus: DataFrame, queries: DataFrame,
       k: Int, ef: Int = Ef, hops: Int = Hops,
       nEntries: Int = NEntries): DataFrame =
@@ -225,101 +356,30 @@ object GraphAnn {
       matchIds: Option[DataFrame], excludeSelf: Boolean): DataFrame = {
     val n = corpus.select(col("vec_id"), col("v"), col("nrm"))
       .where(col("nrm") > 0)
-    // The query side is ≤|Q| rows by construction and is re-read by a
-    // broadcast build in EVERY hop's checkpoint job — without a cut each
-    // of those builds re-runs the whole query-prep lineage (scan +
-    // fan-out exchange + norm projection). One materialization serves
-    // all hops (guide §2.4: remove repeated work feeding each exchange).
-    val q = queries.where(col("qnrm") > 0).localCheckpoint(eager = false)
-    val mset = matchIds.map(m =>
-      broadcast(m.select(col("vec_id").as("node")).distinct()))
-    // ONE exchange per cap (guide §2.4): pre-partition by query_id —
-    // hashpartitioning(query_id) satisfies the clustered distribution of
-    // BOTH the (query_id, node) dedup aggregate and the query_id rank
-    // window, so agg + sort + window + filter all run in that single
-    // shuffle's stage (was: one exchange for the aggregate keyed
-    // (query_id, node), then a second re-keying to query_id for the
-    // window). AQE coalesces the tiny partitions.
-    def capped(pool: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("node"))
-      pool.repartition(col("query_id"))
-        .groupBy(col("query_id"), col("node"))
-        .agg(min(col("cosine")).as("cosine"))
-        .withColumn("rnk", row_number().over(w)).where(col("rnk") <= ef)
-        .select(col("query_id"), col("node"), col("cosine"))
+    val index = queries.sparkSession.sparkContext.broadcast(Index(
+      adjacency(graph),
+      ById(n.collect().map(r =>
+        r.getLong(0) -> (r.getSeq[Double](1).toArray, r.getDouble(2)))),
+      entryIds(n, nEntries),
+      matchIds.map(_.select(col("vec_id")).collect().map(_.getLong(0)).sorted)))
+    val serve = udf { (qid: Long, qv: Seq[Double], qnrm: Double) =>
+      val ix = index.value
+      val q = qv.toArray
+      val (pool, scored) = walk(ix.out, ix.entries, ef, hops,
+        v => ix.nodes.get(v).flatMap { case (vec, nrm) => cosine4(q, qnrm, vec, nrm) })(
+        CosineDesc)
+      val ranked = ix.matchIds match {
+        case Some(m) =>
+          scored.filter(p => java.util.Arrays.binarySearch(m, p._1) >= 0).take(ef)
+        case None => if (excludeSelf) pool.filter(_._1 != qid) else pool
+      }
+      ranked.take(k).zipWithIndex.map { case ((v, c), i) => (i + 1, v, c) }
     }
-    def scoreNodes(cand: DataFrame): DataFrame =
-      cand.join(n.select(col("vec_id").as("node"), col("v"), col("nrm")), "node")
-        .join(broadcast(q), "query_id")
-        .select(col("query_id"), col("node"),
-          round(cosinePrenormed(dot(col("qv"), col("v")),
-            col("qnrm"), col("nrm")), 4).as("cosine"))
-    def matched(scored: DataFrame): DataFrame =
-      mset.map(m => scored.join(m, Seq("node"), "leftsemi")).getOrElse(scored)
-    // Each hop references the pool TWICE (expand + union): without a
-    // lineage cut the plan tree doubles per hop — 2^hops copies of the
-    // entry scoring, measured 13 s → 21 s → 44 s for hops 3/4/5 at
-    // sf0.1. localCheckpoint materializes the ≤|Q|·ef-row pool (tiny by
-    // construction) and truncates the lineage, making serving O(hops).
-    // At cluster scale the same cut is a reliable checkpoint or a
-    // persisted intermediate table — the standard iterative-algorithm
-    // posture.
-    // scored0 is consumed once in unfiltered mode (by the first cap) —
-    // checkpoint it only when the matched accumulator references it too.
-    val scored0raw = scoreNodes(
-      q.select(col("query_id"))
-        .crossJoin(broadcast(entryPoints(n, nEntries).select(col("vec_id").as("node")))))
-    // LAZY checkpoints throughout the walk (r16, second pass): the cut
-    // exists for LINEAGE (the plan tree doubles per hop), not for
-    // scheduling — eager cuts ran one materialization job per hop plus
-    // the next hop's broadcast-build job re-reading it (2 jobs/hop of
-    // pure overhead on ≤|Q|·ef rows, ~0.4 s/hop warm at sf0.1, gprof3).
-    // eager=false truncates the plan identically while the RDD
-    // materializes once, cached, inside the next consumer's own job —
-    // the per-hop scheduling overhead collapses into the broadcast
-    // builds the walk already pays.
-    val scored0 = if (mset.isEmpty) scored0raw
-      else scored0raw.localCheckpoint(eager = false)
-    var pool = capped(scored0).localCheckpoint(eager = false)
-    // Matched-result accumulator (filtered mode only): fed from the
-    // UNCAPPED per-hop scorings, so a matching node the routing pool
-    // evicts still reaches the final rank. PASSIVE (feeds nothing back
-    // into the walk) ⇒ one end-of-walk cap returns the identical set
-    // (top-k(top-k(A) ∪ B) = top-k(A ∪ B)) with hops fewer window
-    // stages; the union is bounded per query (hops·ef·degree rows) at
-    // any corpus size.
-    var matchedAcc = if (mset.isEmpty) None else Some(matched(scored0))
-    for (_ <- 1 to hops) {
-      // BROADCAST the ≤|Q|·ef frontier into the adjacency probe — the
-      // documented 100 TB shape made explicit (guide §3.1): the graph
-      // stays partitioned and is probed by a broadcast hash join, no
-      // exchange of graph bytes whatever the corpus size. The per-hop
-      // dedup `.distinct()` this replaces bought almost nothing
-      // (measured 41k → 39.6k rows at sf0.1) and cost an exchange +
-      // two aggregates per hop: duplicate (query_id, node) candidates
-      // score to the SAME deterministic cosine and collapse in the
-      // cap's (query_id, node) aggregate, so results are identical.
-      val expand = graph.select(col("src"), col("dst"))
-        .join(broadcast(pool.select(col("query_id"), col("node").as("src"))), "src")
-        .select(col("query_id"), col("dst").as("node"))
-      // the per-hop scoring is referenced twice only in filtered mode
-      // (routing pool + matched accumulator) — checkpoint it there;
-      // unfiltered serving consumes it once and skips the extra
-      // materialization
-      val scored = if (mset.isEmpty) scoreNodes(expand)
-        else scoreNodes(expand).localCheckpoint(eager = false)
-      pool = capped(pool.unionByName(scored)).localCheckpoint(eager = false)
-      matchedAcc = matchedAcc.map(_.unionByName(matched(scored)))
-    }
-    val outPool = matchedAcc.map(capped).getOrElse(pool)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("node"))
-    val base = if (excludeSelf) outPool.where(col("node") =!= col("query_id"))
-      else outPool
-    base.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("query_id"), col("rank"),
-        col("node").as("neighbor_id"), col("cosine"))
+    queries.where(col("qnrm") > 0)
+      .select(col("query_id"),
+        explode(serve(col("query_id"), col("qv"), col("qnrm"))).as("hit"))
+      .select(col("query_id"), col("hit._1").as("rank"),
+        col("hit._2").as("neighbor_id"), col("hit._3").as("cosine"))
   }
 
   /** Self-join convenience (the sim_*_topk contract): queries are the
@@ -369,17 +429,28 @@ object GraphAnn {
   }
 
   /** Graph routing with ADC scoring over STORED PQ codes + exact
-    * re-rank of the surviving pool — the DiskANN memory posture made
-    * Spark-native: at 100 TB the full vectors don't fit a serving
-    * tier, the m-byte codes do, so the beam walks the graph scoring
-    * candidates with [[graft.plans.AdcSumL]] against the per-query
-    * flattened LUT (integer micro-L2, broadcast — corpus vectors
-    * untouched during routing), and only the final ≤ef shortlist per
-    * query reads true vectors for the exact cosine re-rank (the
-    * pqTopKRefined posture). Composes three persisted artifacts:
-    * the navigable graph, the wide code table, the trained codebooks.
-    * Deterministic end to end (integer ADC distances, id tie-breaks)
-    * ⇒ static-oracle-checkable. */
+    * re-rank of the surviving shortlist — the DiskANN memory posture:
+    * the beam walks the graph scoring candidates by [[adcDistance]]
+    * (integer micro-L2, the [[graft.plans.AdcSumL]] sum) against each
+    * query's flattened LUT, so corpus vectors are untouched during
+    * routing, and only the final shortlist reads true vectors for the
+    * exact cosine re-rank (the pqTopKRefined posture). Composes three
+    * persisted artifacts: the navigable graph, the wide code table, the
+    * trained codebooks. Deterministic end to end (integer ADC distances,
+    * id tie-breaks) ⇒ static-oracle-checkable.
+    *
+    * Two accumulators (the pqTopKRefined shortlist posture): the ROUTING
+    * pool stays at ef (what the walk expands), while the RE-RANK
+    * shortlist keeps the best `shortlist` ADC candidates ever scored — a
+    * true neighbor the ef-pool evicts still reaches the exact re-rank
+    * (measured at sf0.001: recall@10 0.712 with the ef-pool as shortlist
+    * vs 0.94+ with shortlist 200).
+    *
+    * Serving is one executor pass over the LUT rows ([[beamSearch]]'s
+    * shape): the adjacency, the valid wide codes and the entry points are
+    * collected once per call and broadcast — N·(K+15) ids plus N·m code
+    * bytes resident per executor (codes are one byte: ksub ≤ 256). The
+    * LUT derivation and the exact re-rank stay Spark expressions. */
   def graphAdcTopK(embeddings: DataFrame, graph: DataFrame,
       codesWide: DataFrame, books: Seq[Seq[Array[Double]]], k: Int,
       stride: Int, ef: Int = Ef, hops: Int = Hops,
@@ -388,72 +459,30 @@ object GraphAnn {
     require(books.forall(_.size == books.head.size),
       "wide ADC layout requires uniform per-subspace codebook sizes")
     val (m, ksub) = (books.size, books.head.size)
+    require(ksub <= 256, s"graph ADC serving keeps one-byte codes, got ksub=$ksub")
     val n = prepped(embeddings, nPlanes, dim)
       .select(col("vec_id"), col("v"), col("nrm"))
-    // q and the per-query LUT are ≤|Q| / |Q|·m·ksub rows by construction
-    // and re-read by broadcast builds in every hop's checkpoint job —
-    // one materialization each serves all hops (guide §2.4; the LUT
-    // derivation in particular re-runs an embeddings scan + the full
-    // codebook arithmetic per rebuild).
     val q = n.where(pmod(col("vec_id"), lit(stride)) === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qnrm"))
-      .localCheckpoint(eager = false)
-    val lutW = broadcast(Similarity.adcLutWideFrom(
-        Similarity.adcLut(
-          embeddings.where(pmod(col("vec_id"), lit(stride)) === 0), books))
+    val lutW = Similarity.adcLutWideFrom(Similarity.adcLut(
+        q.select(col("query_id").as("vec_id"), col("qv").as("embedding")), books))
       .where(Similarity.validWideLut(m, ksub))
-      .localCheckpoint(eager = false))
-    val codes = codesWide.where(Similarity.validWideCodes(m, ksub))
-      .select(col("vec_id").as("node"), col("codes"))
-    def scoreAdc(cand: DataFrame): DataFrame =
-      cand.join(codes, "node").join(lutW, "query_id")
-        .select(col("query_id"), col("node"),
-          adcSum(col("codes"), col("lut"), ksub).as("d2u"))
-    // single-exchange cap — same reasoning as beamCore's capped():
-    // hashpartitioning(query_id) satisfies both the (query_id, node)
-    // dedup aggregate and the rank window, so one shuffle serves both.
-    def capAt(limit: Int)(pool: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("d2u").asc_nulls_last, col("node"))
-      pool.repartition(col("query_id"))
-        .groupBy(col("query_id"), col("node"))
-        .agg(min(col("d2u")).as("d2u"))
-        .withColumn("rnk", row_number().over(w)).where(col("rnk") <= limit)
-        .select(col("query_id"), col("node"), col("d2u"))
+    val index = embeddings.sparkSession.sparkContext.broadcast(Index(
+      adjacency(graph),
+      ById(codesWide.where(Similarity.validWideCodes(m, ksub))
+        .select(col("vec_id"), col("codes")).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Int](1).map(_.toByte).toArray)),
+      entryIds(n, nEntries)))
+    val serve = udf { (lut: Seq[Long]) =>
+      val ix = index.value
+      val l = lut.toArray
+      val (_, scored) = walk(ix.out, ix.entries, ef, hops,
+        v => ix.nodes.get(v).map(adcDistance(_, l, ksub)))
+      scored.take(shortlist).map(_._1)
     }
-    // Two accumulators (the pqTopKRefined shortlist posture): the
-    // ROUTING pool stays at ef (what the walk expands), while the
-    // RE-RANK shortlist keeps the best `shortlist` ADC candidates ever
-    // scored — a true neighbor the ef-pool evicts still reaches the
-    // exact re-rank (measured at sf0.001: recall@10 0.712 with the
-    // ef-pool as shortlist vs 0.94+ with shortlist 200). The shortlist
-    // is PASSIVE (feeds nothing back into the walk), and top-k
-    // selection satisfies top-k(top-k(A) ∪ B) = top-k(A ∪ B), so ONE
-    // end-of-walk cap over the unioned per-hop scorings returns the
-    // identical set with hops fewer window stages; the union stays
-    // bounded per query (hops·ef·degree rows) at ANY corpus size.
-    // lazy checkpoints — same reasoning as beamCore's walk: the cut is
-    // for lineage, the materialization rides inside the consumers' jobs
-    val scored0 = scoreAdc(
-      q.select(col("query_id"))
-        .crossJoin(broadcast(entryPoints(n, nEntries).select(col("vec_id").as("node")))))
-      .localCheckpoint(eager = false)
-    var pool = capAt(ef)(scored0).localCheckpoint(eager = false)
-    var shortAcc = scored0
-    for (_ <- 1 to hops) {
-      // broadcast frontier + no per-hop distinct — same reasoning (and
-      // identical-results argument) as beamCore's expand: duplicate
-      // (query_id, node) candidates carry the same deterministic d2u
-      // and collapse in the caps' (query_id, node) aggregates.
-      val expand = graph.select(col("src"), col("dst"))
-        .join(broadcast(pool.select(col("query_id"), col("node").as("src"))), "src")
-        .select(col("query_id"), col("dst").as("node"))
-      val scored = scoreAdc(expand).localCheckpoint(eager = false)
-      pool = capAt(ef)(pool.unionByName(scored)).localCheckpoint(eager = false)
-      shortAcc = shortAcc.unionByName(scored)
-    }
-    val short = capAt(shortlist)(shortAcc)
+    val short = lutW.select(col("query_id"),
+      explode(serve(col("lut"))).as("node"))
     // exact re-rank of the shortlist: only here do corpus vectors load
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("node"))

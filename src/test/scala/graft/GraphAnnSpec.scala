@@ -150,6 +150,77 @@ class GraphAnnSpec extends AnyFunSuite {
     assert(recall >= 0.85, s"ADC-routed recall $recall below floor")
   }
 
+  test("walk kernel on a hand-built 8-node graph: pools, tie-break, " +
+      "dedup, dropped nodes, filtered accumulator") {
+    val adj = GraphAnn.ById(Seq(1L -> Array(2L, 3L), 2L -> Array(4L, 5L),
+      3L -> Array(4L, 6L), 4L -> Array(7L), 5L -> Array(8L), 6L -> Array(8L),
+      7L -> Array(1L), 8L -> Array(2L)))
+    def out(v: Long) = adj.get(v).getOrElse(Array.emptyLongArray)
+    // one subspace, ksub 64, lut(c) = c: a node's ADC distance is its code;
+    // node 6 has no valid code, so the scorer cannot score it
+    val lut = Array.tabulate(64)(_.toLong)
+    val codes = GraphAnn.ById(Seq(1L -> 50, 2L -> 40, 3L -> 40, 4L -> 10,
+      5L -> 30, 7L -> 5, 8L -> 20).map { case (v, c) => v -> Array(c.toByte) })
+    var calls = 0
+    def score(v: Long): Option[Long] = {
+      calls += 1
+      codes.get(v).map(GraphAnn.adcDistance(_, lut, 64))
+    }
+    def run(hops: Int) = GraphAnn.walk(out, Array(1L, 6L), ef = 2, hops, score)
+    // pool₀: entry 6 dropped; hop 1: 2 and 3 tie at 40, the smaller id
+    // ranks first and 1 (50) is evicted; hop 2: 4 is reached from both 2
+    // and 3 and enters once, 6 is dropped again; hop 3: 7 and 8 arrive,
+    // 5 is evicted; hop 4: only already-scored nodes come back
+    val pools = (0 to 4).map(h => run(h)._1)
+    assert(pools == Seq(
+      Seq(1L -> 50L),
+      Seq(2L -> 40L, 3L -> 40L),
+      Seq(4L -> 10L, 5L -> 30L),
+      Seq(7L -> 5L, 4L -> 10L),
+      Seq(7L -> 5L, 4L -> 10L)))
+    calls = 0
+    val (_, scored) = run(4)
+    assert(scored == Seq(7L -> 5L, 4L -> 10L, 8L -> 20L, 5L -> 30L,
+      2L -> 40L, 3L -> 40L, 1L -> 50L))
+    assert(calls == 8, "each reached node is scored once per query")
+    // filtered accumulator: the matched nodes the walk ever scored, capped
+    // once — 5 and 3 were evicted from the routing pool but still compete
+    val matched = Set(3L, 5L, 6L, 8L)
+    assert(scored.filter(p => matched(p._1)).take(2) == Seq(8L -> 20L, 5L -> 30L))
+    // one-byte codes read unsigned: code 200 of ksub 256
+    assert(GraphAnn.adcDistance(Array(200.toByte, 1.toByte),
+      Array.tabulate(512)(_.toLong), 256) == 200 + 257)
+  }
+
+  test("cosine scorer: Spark's rounding, zero norms dropped, " +
+      "−0.0 ties 0.0 in Spark's order") {
+    assert(GraphAnn.cosine4(Array(1.0, 0.0), 1.0, Array(0.6, 0.8), 1.0) ==
+      Some(0.6))
+    assert(GraphAnn.cosine4(Array(0.12345), 1.0, Array(1.0), 1.0) ==
+      Some(0.1235)) // HALF_UP on the decimal rendering, as round(_, 4)
+    assert(GraphAnn.cosine4(Array(1.0, 2.0), 1.0, Array(0.0, 0.0), 0.0).isEmpty)
+    assert(GraphAnn.cosine4(Array(1.0), 1.0, Array(1.0, 0.0), 1.0).isEmpty)
+    val row = Seq(3L -> 0.0, 1L -> 0.25, 2L -> -0.0, 4L -> Double.NaN)
+    val ranked = GraphAnn.walk(_ => Array.emptyLongArray, row.map(_._1).toArray,
+      ef = 4, hops = 0, v => row.toMap.get(v))(GraphAnn.CosineDesc)._1
+    assert(ranked.map(_._1) == Seq(4L, 1L, 2L, 3L))
+    import spark.implicits._
+    val sparkOrder = row.toDF("node", "cosine")
+      .orderBy(col("cosine").desc, col("node")).as[(Long, Double)]
+      .collect().map(_._1).toSeq
+    assert(ranked.map(_._1) == sparkOrder)
+    // a walk over vectors: the zero-norm node 3 is never scored
+    val vecs = GraphAnn.ById(Seq(1L -> (Array(1.0, 0.0), 1.0),
+      2L -> (Array(0.6, 0.8), 1.0), 3L -> (Array(0.0, 0.0), 0.0)))
+    val q = Array(0.0, 1.0)
+    val (pool, scored) = GraphAnn.walk(Map(1L -> Array(2L, 3L)),
+      Array(1L), ef = 4, hops = 1,
+      v => vecs.get(v).flatMap { case (x, nrm) => GraphAnn.cosine4(q, 1.0, x, nrm) })(
+      GraphAnn.CosineDesc)
+    assert(pool == Seq(2L -> 0.8, 1L -> 0.0))
+    assert(!scored.exists(_._1 == 3L))
+  }
+
   test("attachBatch: bounded origin-tagged edges from batch into history") {
     val hist = emb.where(pmod(col("vec_id"), lit(5)) =!= 0)
     val batch = emb.where(pmod(col("vec_id"), lit(5)) === 0)

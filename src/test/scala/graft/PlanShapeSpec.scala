@@ -147,22 +147,20 @@ class PlanShapeSpec extends AnyFunSuite {
       // broadcast side, the cell equi-join restricts pairs to probed
       // cells — exchanges are the LUT collapse + rank window only
       "sim_opq_ivfpq_topk" -> (2, 2),
-      // r16 graph-ANN serving face: the beam's per-hop pools are
-      // localCheckpoint-cut (the lineage-doubling fix measured in
-      // ProfileGraph), so the FINAL plan is just the rank window over
-      // the checkpointed pool RDD — one exchange, one RDD scan leaf.
-      // The per-hop shape (frontier equi-join vs the graph artifact,
-      // no product joins) is pinned structurally by GraphAnnSpec +
-      // the four hash oracles instead.
-      "sim_graph_topk" -> (1, 1),
-      // r16 ADC-routed graph face: the passive shortlist takes ONE
-      // end-of-walk cap, so the final plan shows the 5 checkpointed
-      // scoring legs (entry + 4 hops, RDD scans) unioned into the cap
-      // (groupBy + rank-window exchanges) plus the two vector-table
-      // scans of the exact re-rank (corpus side + broadcast query
-      // prep). Routing hops stay behind their checkpoint cuts, pinned
-      // by oracles + the ladder spec like sim_graph_topk.
-      "sim_graph_adc_topk" -> (1, 7))
+      // Graph-ANN serving face: the walk runs inside the query rows' own
+      // stage (a Generate over the broadcast resident index — adjacency,
+      // vectors and entry points are collected while the query fn is
+      // called), so the plan is the query scan plus that generator: no
+      // exchange, one scan. The walk itself is pinned by GraphAnnSpec's
+      // kernel test, its exactness ladders and the four hash oracles.
+      "sim_graph_topk" -> (0, 1),
+      // ADC-routed graph face: the per-query LUT aggregate is the only
+      // exchange — hashpartitioning(query_id). The walk's Generate and the
+      // re-rank's two broadcast joins (corpus vectors, query prep) run in
+      // its stage, and the re-rank window reuses its partitioning. Scans:
+      // the query prep feeding the LUT plus the re-rank's corpus and
+      // query sides.
+      "sim_graph_adc_topk" -> (1, 3))
     val failures = Queries.benchNames.flatMap { name =>
       ceilings.get(name) match {
         case None => Seq(s"$name: new bench query — add a (exchanges, scans) pin")
@@ -206,13 +204,34 @@ class PlanShapeSpec extends AnyFunSuite {
         // min(defaultParallelism, 32) = 4 on this session, conf-independent
         // (documents.parquet sits just UNDER the tiny cutoff there)
         val pt = plan(Tables.embeddings(spark, sf))
-        assert(pt.contains("hashpartitioning(vec_id") && pt.contains(", 4)"),
+        assert("""hashpartitioning\(vec_id#\d+L?, 4\)""".r.findFirstIn(pt).isDefined,
           s"Tables fan-out must follow defaultParallelism (4), not the shuffle conf ($p):\n$pt")
       }
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", orig)
       cleanCache()
     }
+  }
+
+  test("every fanned-out table leads with a high-cardinality column") {
+    // Tables hashes its fan-out on the leading column, which spreads rows
+    // evenly only while that column has many distinct values per row
+    val names = new java.io.File(sf).list().toSeq
+      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
+    val fanned = names.flatMap { name =>
+      val df = Tables(spark, sf, name)
+      val key = df.schema.head.name
+      if (!plan(df).contains(s"hashpartitioning($key")) None
+      else {
+        val r = df.agg(org.apache.spark.sql.functions.count_distinct(df(key)),
+          org.apache.spark.sql.functions.count("*")).head()
+        Some((name, r.getLong(0).toDouble / r.getLong(1)))
+      }
+    }
+    // embeddings and lineitem clear the 64 KB cutoff at sf0.001
+    assert(fanned.map(_._1).contains("lineitem"), fanned)
+    val skewed = fanned.filter(_._2 < 0.2)
+    assert(skewed.isEmpty, s"distinct(leading column)/rows < 0.2: $skewed")
   }
 
   test("sim family: no expensive expression (dot_d) in any join condition") {
