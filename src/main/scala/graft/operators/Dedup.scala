@@ -4,6 +4,7 @@ import graft.functions.TextFns
 import graft.plans.Stage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** Deduplication family for the training-data pipeline extensions
   * (SURVEY.md §2.10): exact, MinHash-LSH near-dup, SimHash, n-gram Jaccard
@@ -627,8 +628,8 @@ object Dedup {
     * The loop is driver-side *control flow* only — labels and edges stay
     * distributed; each round is a join + min-aggregate over the (tiny
     * relative to the corpus) pair graph, converging in ≤ diameter rounds.
-    * Intermediate label frames are persisted per round and released after
-    * use, so lineage doesn't snowball across iterations. */
+    * Label frames are local checkpoints, each freed once superseded, so
+    * a call leaves only the returned frame's RDD cached. */
   def nearDupClusters(documents: DataFrame, minJaccard: Double,
       maxIters: Int = 50): DataFrame =
     connectedComponents(
@@ -726,26 +727,28 @@ object Dedup {
     var iter = 1
     var converged = false
     while (iter < maxIters && !converged) {
+      val cur = labels.select(col("node"), col("label"))
       val neighborMin = edges
-        .join(labels.withColumnRenamed("node", "doc_b"), "doc_b")
+        .join(cur.withColumnRenamed("node", "doc_b"), "doc_b")
         .groupBy(col("doc_a").as("node"))
         .agg(min(col("label")).as("nbr_label"))
       // prev label CARRIED through the checkpoint (r16): convergence is
       // then a filter+count over the checkpointed frame instead of a
       // join-against-previous job per iteration — labels only decrease,
       // so label ≠ prev ⟺ label < prev ⟺ not yet converged.
-      val next = labels.withColumnRenamed("label", "prev")
+      val next = cur.withColumnRenamed("label", "prev")
         .join(neighborMin, Seq("node"), "left")
         .select(col("node"), col("prev"),
           least(col("prev"), coalesce(col("nbr_label"), col("prev"))).as("label"))
         .localCheckpoint(eager = false)
       val changed = next.where(col("label") =!= col("prev")).count()
-      labels.unpersist()
-      labels = next.select(col("node"), col("label"))
+      // Dataset.unpersist misses a localCheckpoint's RDD; this frees it
+      GraftBridge.freeCheckpointBlocks(labels)
+      labels = next
       converged = changed == 0
       iter += 1
     }
-    edges.unpersist()
+    Seq(p0, edges).foreach(GraftBridge.freeCheckpointBlocks)
     // A component with diameter > maxIters would return labels that are not
     // the component minimum — refuse to emit a silently-wrong clustering.
     if (!converged) throw new IllegalStateException(

@@ -1,10 +1,11 @@
 package graft.operators
 
 import graft.functions.SimFns._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Graph-based ANN (the NSW family), Spark-native (SURVEY.md §2.17).
   *
@@ -14,19 +15,24 @@ import org.apache.spark.sql.functions._
   * has a data-parallel member: an NSW-style navigable graph whose KNN
   * core is built by NN-Descent (Dong et al., WWW 2011 — "Efficient
   * K-Nearest Neighbor Graph Construction for Generic Similarity
-  * Measures"), the construction FAISS/pyNNDescent use offline. Every
-  * stage here is a bounded equi-join + top-K aggregate:
+  * Measures"), the construction FAISS/pyNNDescent use offline. Build
+  * and serving both run against a RESIDENT index — the query-invariant
+  * data is collected once and broadcast, and each step is one executor
+  * pass over it, not a distributed join per step:
   *
   *  - '''init''': candidate edges from shared sign-LSH buckets (the
-  *    [[Similarity.lshCorpus]] planes — per-bucket pairs, ~N·(N/2^p)
-  *    pairs total, never corpus all-pairs) plus a deterministic
+  *    [[Similarity.lshCorpus]] planes — bucket-mates, ~N·(N/2^p)
+  *    candidates total, never corpus all-pairs) plus a deterministic
   *    SKIP-LIST RING in vec_id rank order (+2^j successors, the
   *    O(log N)-diameter navigability device replacing HNSW's
   *    long-range upper layers — see [[RingOffsets]]);
   *  - '''refinement''' (×`rounds`): NN-Descent — candidates(x) =
-  *    U ∪ (U ⋈ U) where U = E ∪ reverse(E); per-src top-K by
-  *    (round-4 cosine DESC, dst). Candidate volume is N·(2K)² per
-  *    round — linear in N, bounded per node;
+  *    U(x) ∪ U(U(x)) minus x, where U = E ∪ reverse(E); per-src top-K
+  *    by (round-4 cosine DESC, dst). Candidate volume is N·(2K)² per
+  *    round — linear in N, bounded per node. Each round, init
+  *    included, is ONE `mapPartitions` job over the src ranks
+  *    ([[bestEdges]]) against the broadcast (v, nrm) table: N·dim
+  *    doubles plus N·2K ids resident per executor;
   *  - '''serving''': multi-entry unrolled BEAM search, `hops` fixed
   *    expansion steps: pool ← top-ef(pool ∪ score(out(pool))) per
   *    query. The hop-invariant index — adjacency, the scorer's per-node
@@ -34,12 +40,9 @@ import org.apache.spark.sql.functions._
   *    broadcast, so it is RESIDENT on each executor: N·(K+15) ids plus
   *    N·dim doubles (cosine) or N·m code bytes (ADC). Every query then
   *    walks it in one executor pass ([[walk]]) — no Spark job per hop.
-  *    The collect is bounded by `spark.driver.maxResultSize`; the scale
-  *    path past it is a graph sharded per partition with per-shard
-  *    walks merged by query, out of scope here. Entry points are the
-  *    `nEntries` smallest nodes in (md5(vec_id), vec_id) order — a
-  *    deterministic pseudo-random spread, the distributed stand-in for
-  *    HNSW's top-layer descent.
+  *    Entry points are the `nEntries` smallest nodes in (md5(vec_id),
+  *    vec_id) order — a deterministic pseudo-random spread, the
+  *    distributed stand-in for HNSW's top-layer descent.
   *
   * Everything is deterministic (fixed planes, round-4 cosine, id
   * tie-breaks, monotone pool growth), so the ENTIRE build + search
@@ -48,12 +51,11 @@ import org.apache.spark.sql.functions._
   * asked for, vs the thousands of dependent CTEs replaying HNSW's
   * insert order would need.
   *
-  * Scale notes: the one non-equi-join step is the ring's global
-  * row_number (a sort of (vec_id) pairs — 16 bytes/row — on one
-  * task). It runs ONCE per corpus inside the graph-build artifact; at
-  * 10^10 rows you'd derive the same rank with range partitioning +
-  * per-partition offsets (the zipWithIndex construction). Documented
-  * rather than built: the build path is already artifact-once.
+  * Scale notes: build and serving share one memory bound — N·dim
+  * doubles plus O(N·K) ids resident per executor, each collect bounded
+  * by `spark.driver.maxResultSize`. Past it the scale path is a graph
+  * sharded per partition, built and walked per shard and merged by
+  * query — out of scope for build as for serving.
   */
 object GraphAnn {
 
@@ -88,58 +90,83 @@ object GraphAnn {
     Similarity.lshCorpus(embeddings.select(col("vec_id"), col("embedding")),
       nPlanes, dim).where(col("nrm") > 0)
 
-  /** Round-4 cosine for a distinct (src, dst) pair frame — two hash
-    * joins against the vector table (the distributed NN-Descent shape:
-    * pair generation and scoring are both equi-joins). */
-  private def scorePairs(pairs: DataFrame, n: DataFrame): DataFrame =
-    pairs
-      .join(n.select(col("vec_id").as("src"), col("v").as("sv"),
-        col("nrm").as("snrm")), "src")
-      .join(n.select(col("vec_id").as("dst"), col("v").as("dv"),
-        col("nrm").as("dnrm")), "dst")
-      .select(col("src"), col("dst"),
-        round(cosinePrenormed(dot(col("sv"), col("dv")),
-          col("snrm"), col("dnrm")), 4).as("cosine"))
+  /** Skip-ring successors of node rank `s` among `n` ranks: (s + j) mod n
+    * for every offset j, self and repeats dropped (offsets ≥ n wrap). */
+  private[graft] def ring(s: Int, n: Int, offsets: Seq[Int]): Array[Int] =
+    offsets.map(j => ((s.toLong + j) % n).toInt).filter(_ != s).distinct.toArray
 
-  /** Per-src top-k by (cosine DESC, dst) — the one deterministic edge
-    * ranking rule, shared by init, every refinement round and the
-    * final rank face. */
-  private def topPerSrc(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("cosine").desc, col("dst"))
-    scored.withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k).select(col("src"), col("dst"), col("cosine"))
+  /** One NN-Descent step for one src rank — the build kernel: each
+    * candidate scored once (repeats and src skipped), the best k kept by
+    * (cosine DESC under [[CosineDesc]], rank); ranks are vec_id order,
+    * so this is the oracle's (cosine DESC, dst). `keep` ranks (the final
+    * pass's ring) are appended, scored, unless among the best. */
+  private[graft] def bestEdges(src: Int, cands: Array[Int], k: Int,
+      score: Int => Double, keep: Array[Int] = Array.emptyIntArray): Array[(Int, Double)] = {
+    val best = cands.distinct.filter(_ != src).map(d => d -> score(d))
+      .sorted(Ordering.Tuple2(CosineDesc, Ordering.Int).on[(Int, Double)](_.swap)).take(k)
+    best ++ keep.filterNot(d => best.exists(_._1 == d)).map(d => d -> score(d))
   }
 
-  /** Deterministic skip-list ring: each node links to its +offset-th
-    * successor in vec_id rank order (wrapping) for every
-    * [[RingOffsets]] entry — one navigable component with O(log N)
-    * diameter whatever the refinement keeps. */
-  private def ringEdges(n: DataFrame, offsets: Seq[Int]): DataFrame = {
-    val rk = n.select(col("vec_id"))
-      .withColumn("rn", row_number().over(Window.orderBy(col("vec_id"))) - 1)
-    val total = n.agg(count(lit(1)).as("n_total")) // 1-row annotation
-    rk.crossJoin(broadcast(total))
-      .select(col("vec_id").as("src"), col("rn"), col("n_total"),
-        explode(array(offsets.map(lit): _*)).as("j"))
-      .withColumn("dst_rn", (col("rn") + col("j")) % col("n_total"))
-      .join(rk.select(col("vec_id").as("dst"), col("rn").as("dst_rn")), "dst_rn")
-      .where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst")).distinct()
+  /** Init candidates of each rank: its bucket-mates ∪ its ring. */
+  private[graft] def initCands(bucket: Array[Int], offsets: Seq[Int]): Int => Array[Int] = {
+    val members = bucket.indices.toArray.groupBy(bucket(_))
+    val n = bucket.length
+    s => members(bucket(s)) ++ ring(s, n, offsets)
+  }
+
+  /** Refinement candidates: U(src) ∪ U(U(src)), U = E ∪ reverse(E). */
+  private[graft] def refineCands(edges: Array[Array[(Int, Double)]]): Int => Array[Int] = {
+    val u = Array.fill(edges.length)(Array.newBuilder[Int])
+    for (s <- edges.indices; (d, _) <- edges(s)) { u(s) += d; u(d) += s }
+    val adj = u.map(_.result().distinct)
+    s => adj(s) ++ adj(s).flatMap(adj(_))
+  }
+
+  /** NN-Descent over the prepped rows collected once, sorted by vec_id
+    * (a node's rank is its index) and broadcast; one job per round, only
+    * the edges come back. The result is a frame over the collected final
+    * rows (ring included when `withRing`); every broadcast is destroyed. */
+  private def nnDescent(embeddings: DataFrame, k: Int, rounds: Int,
+      nPlanes: Int, dim: Int, offsets: Seq[Int], withRing: Boolean): DataFrame = {
+    val spark = embeddings.sparkSession
+    val sc = spark.sparkContext
+    val rows = prepped(embeddings, nPlanes, dim).collect().sortBy(_.getLong(0))
+    val ids = rows.map(_.getLong(0))
+    require(ids.indices.drop(1).forall(i => ids(i) != ids(i - 1)),
+      "graph build needs unique vec_ids")
+    val n = ids.length
+    // prepped rows have nrm > 0 and one length, so cosine4 is defined
+    val vecs = sc.broadcast((rows.map(_.getSeq[Double](1).toArray), rows.map(_.getDouble(2))))
+    var edges = Array.empty[Array[(Int, Double)]]
+    try for (r <- 0 to rounds) {
+      val gen = sc.broadcast(
+        if (r == 0) initCands(rows.map(_.getInt(3)), offsets) else refineCands(edges))
+      val keep: Int => Array[Int] =
+        if (withRing && r == rounds) ring(_, n, offsets) else _ => Array.emptyIntArray
+      edges = try sc.parallelize(0 until n, sc.defaultParallelism).mapPartitions { it =>
+        val (v, nrm) = vecs.value
+        val c = gen.value
+        it.map(s => bestEdges(s, c(s), k,
+          d => cosine4(v(s), nrm(s), v(d), nrm(d)).get, keep(s)))
+      }.collect() finally gen.destroy()
+    } finally vecs.destroy()
+    val schema = StructType(Seq(StructField("src", LongType),
+      StructField("dst", LongType), StructField("cosine", DoubleType)))
+    spark.createDataFrame(sc.parallelize(
+      for (s <- 0 until n; (d, c) <- edges(s)) yield Row(ids(s), ids(d), c),
+      sc.defaultParallelism), schema)
   }
 
   /** The navigable graph: (src, dst, cosine), out-degree ≤ K + |offsets|.
     * Final edge set = NN-Descent-refined top-K ∪ ring. Deterministic
     * end to end, so it persists as a write-once artifact and the
-    * DuckDB oracle re-derives it bit-exactly. */
+    * DuckDB oracle re-derives it bit-exactly. Memory: N·dim doubles
+    * plus N·2K ids resident per executor, the collects bounded by
+    * `spark.driver.maxResultSize`. */
   def buildGraph(embeddings: DataFrame, k: Int = K, rounds: Int = Rounds,
       nPlanes: Int = NPlanes, dim: Int = 64,
-      offsets: Seq[Int] = RingOffsets): DataFrame = {
-    val n = prepped(embeddings, nPlanes, dim)
-    val ring = ringEdges(n, offsets)
-    refinedFrom(n, ring, k, rounds)
-      .unionByName(scorePairs(ring, n)).distinct()
-  }
+      offsets: Seq[Int] = RingOffsets): DataFrame =
+    nnDescent(embeddings, k, rounds, nPlanes, dim, offsets, withRing = true)
 
   /** The NN-Descent-refined top-K edges alone (no ring union) — exposed
     * for the monotonicity spec: each round ranks over a candidate set
@@ -147,36 +174,8 @@ object GraphAnn {
     * only improve round over round. */
   private[graft] def refinedEdges(embeddings: DataFrame, k: Int = K,
       rounds: Int = Rounds, nPlanes: Int = NPlanes, dim: Int = 64,
-      offsets: Seq[Int] = RingOffsets): DataFrame = {
-    val n = prepped(embeddings, nPlanes, dim)
-    refinedFrom(n, ringEdges(n, offsets), k, rounds)
-  }
-
-  private def refinedFrom(n: DataFrame, ring: DataFrame, k: Int,
-      rounds: Int): DataFrame = {
-    val bucketPairs = n.select(col("vec_id").as("src"), col("bucket"))
-      .join(n.select(col("vec_id").as("dst"), col("bucket")), "bucket")
-      .where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"))
-    // Same lineage-cut reasoning as the beam: each round references the
-    // previous edge set four times (U twice, the 2-hop self-join twice
-    // more), so without a cut the plan tree grows ~4^rounds.
-    var edges = topPerSrc(
-      scorePairs(bucketPairs.unionByName(ring).distinct(), n), k)
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val u = edges.select(col("src"), col("dst"))
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-      val twoHop = u.select(col("src"), col("dst").as("mid"))
-        .join(u.select(col("src").as("mid"), col("dst")), "mid")
-        .where(col("src") =!= col("dst"))
-        .select(col("src"), col("dst"))
-      edges = topPerSrc(scorePairs(u.unionByName(twoHop).distinct(), n), k)
-        .localCheckpoint()
-    }
-    edges
-  }
+      offsets: Seq[Int] = RingOffsets): DataFrame =
+    nnDescent(embeddings, k, rounds, nPlanes, dim, offsets, withRing = false)
 
   /** The `nEntries` deterministic entry points: smallest nodes in
     * (md5(vec_id-as-string), vec_id) order — a fixed pseudo-random
@@ -311,14 +310,9 @@ object GraphAnn {
     * excluded at the final rank (the query's own node stays in the
     * pool mid-walk — it is a useful router).
     *
-    * Serving is ONE executor pass over the query rows: the graph's
-    * adjacency, the corpus (vec_id, v, nrm) and the entry points are
-    * collected once per call and broadcast, so the index is resident on
-    * each executor — N·(K+15) ids plus N·dim doubles — and every query
-    * walks it in memory ([[walk]]), scored by [[cosine4]]. The collect is
-    * bounded by `spark.driver.maxResultSize`; past that, the scale path is
-    * a graph sharded per partition with per-shard walks merged by query,
-    * which this operator does not build. */
+    * Serving is ONE executor pass over the query rows against the
+    * resident index (adjacency, corpus (vec_id, v, nrm), entry points):
+    * each query walks it in memory ([[walk]]), scored by [[cosine4]]. */
   def beamSearch(graph: DataFrame, corpus: DataFrame, queries: DataFrame,
       k: Int, ef: Int = Ef, hops: Int = Hops,
       nEntries: Int = NEntries): DataFrame =
@@ -447,10 +441,9 @@ object GraphAnn {
     * vs 0.94+ with shortlist 200).
     *
     * Serving is one executor pass over the LUT rows ([[beamSearch]]'s
-    * shape): the adjacency, the valid wide codes and the entry points are
-    * collected once per call and broadcast — N·(K+15) ids plus N·m code
-    * bytes resident per executor (codes are one byte: ksub ≤ 256). The
-    * LUT derivation and the exact re-rank stay Spark expressions. */
+    * shape) against the resident adjacency, one-byte wide codes (ksub ≤
+    * 256) and entry points; the LUT derivation and the exact re-rank
+    * stay Spark expressions. */
   def graphAdcTopK(embeddings: DataFrame, graph: DataFrame,
       codesWide: DataFrame, books: Seq[Seq[Array[Double]]], k: Int,
       stride: Int, ef: Int = Ef, hops: Int = Hops,

@@ -60,6 +60,97 @@ class GraphAnnSpec extends AnyFunSuite {
       "round 2 degraded a src")
   }
 
+  test("build kernel on hand-built ranks: bucket-mates, ring wrap, 2-hop " +
+      "self excluded, one score per candidate, (cosine DESC, dst) order") {
+    // ring wrap: among 5 ranks the offsets 1, 2, 4, 8, 16 land on +1, +2,
+    // +4, +3, +1 — the repeat drops; offsets ≡ 0 mod n would be self-links
+    assert(GraphAnn.ring(3, 5, Seq(1, 2, 4, 8, 16)).toSeq == Seq(4, 0, 2, 1))
+    assert(GraphAnn.ring(1, 4, Seq(4, 8)).isEmpty)
+    // init: bucket-mates (src included, skipped by the kernel) ∪ ring
+    val init = GraphAnn.initCands(Array(0, 1, 0, 1, 2, 0, 1, 2, 0, 1), Seq(1))
+    assert(init(0).toSet == Set(0, 2, 5, 8, 1))
+    assert(init(9).toSet == Set(1, 3, 6, 9, 0))
+    assert(init(4).toSet == Set(4, 7, 5))
+    val scores = Map(1 -> 0.1, 2 -> 0.5, 5 -> 0.9, 8 -> 0.5)
+    var calls = Map.empty[Int, Int].withDefaultValue(0)
+    def score(d: Int): Double = { calls += d -> (calls(d) + 1); scores(d) }
+    // 2 and 8 tie at 0.5: the smaller dst ranks first
+    assert(GraphAnn.bestEdges(0, init(0), 3, score).toSeq ==
+      Seq(5 -> 0.9, 2 -> 0.5, 8 -> 0.5))
+    assert(calls == Map(1 -> 1, 2 -> 1, 5 -> 1, 8 -> 1))
+    // kept ranks (the final ring) are appended unless already among the best
+    assert(GraphAnn.bestEdges(0, init(0), 1, score, keep = Array(5, 8)).toSeq ==
+      Seq(5 -> 0.9, 8 -> 0.5))
+    // refinement over 0→1, 1→2, 2→0 (rank 3 isolated): U(0) = {1, 2} and
+    // its 2-hop repeats both and reaches 0 itself
+    val refine = GraphAnn.refineCands(Array(Array(1 -> 0.0), Array(2 -> 0.0),
+      Array(0 -> 0.0), Array.empty[(Int, Double)]))
+    assert(refine(0).length == 6 && refine(0).toSet == Set(0, 1, 2))
+    assert(refine(3).isEmpty)
+    calls = calls.empty.withDefaultValue(0)
+    assert(GraphAnn.bestEdges(0, refine(0), 12, score).map(_._1).toSet == Set(1, 2))
+    assert(calls == Map(1 -> 1, 2 -> 1), "each candidate scored once, src never")
+    // −0.0 ties 0.0 and NaN sorts first, as Spark's orderBy ranks them
+    val row = Seq(3 -> 0.0, 1 -> -0.0, 2 -> 0.25, 4 -> Double.NaN)
+    val ranked = GraphAnn.bestEdges(9, row.map(_._1).toArray, 4, row.toMap)
+      .map(_._1).toSeq
+    import spark.implicits._
+    assert(ranked == row.toDF("dst", "cosine")
+      .orderBy(col("cosine").desc, col("dst")).as[(Int, Double)]
+      .collect().map(_._1).toSeq)
+    assert(ranked == Seq(4, 2, 1, 3))
+  }
+
+  test("build on fewer than K+1 nodes: every pair is an edge, zero norm dropped") {
+    import spark.implicits._
+    val tiny = Seq(1L -> Seq(1f, 0f), 2L -> Seq(0f, 1f), 3L -> Seq(3f, 4f),
+      4L -> Seq(-3f, 4f), 5L -> Seq(0f, 0f)).toDF("vec_id", "embedding")
+    val cos = Map((1L, 2L) -> 0.0, (1L, 3L) -> 0.6, (1L, 4L) -> -0.6,
+      (2L, 3L) -> 0.8, (2L, 4L) -> 0.8, (3L, 4L) -> 0.28)
+    val expected = cos.flatMap { case ((a, b), c) => Seq((a, b, c), (b, a, c)) }.toSet
+    assert(GraphAnn.buildGraph(tiny, dim = 2).as[(Long, Long, Double)]
+      .collect().toSet == expected)
+    assert(GraphAnn.refinedEdges(tiny, dim = 2).as[(Long, Long, Double)]
+      .collect().toSet == expected)
+  }
+
+  test("build runs at most Rounds + 4 jobs with its artifact write and " +
+      "leaves nothing persisted or broadcast") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.BroadcastProbe
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val e = Tables.embeddings(spark, dir)
+    e.count()
+    BroadcastProbe.drainListeners(sc)
+    val persisted = sc.getPersistentRDDs.keySet
+    val broadcasts = BroadcastProbe.liveIds()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft-graph-").toString
+    sc.addSparkListener(listener)
+    try {
+      GraphAnn.buildGraph(e).write.mode("overwrite").parquet(out)
+      BroadcastProbe.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= GraphAnn.Rounds + 4, s"${jobs.get} jobs")
+    assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty)
+    // what may stay is Spark's own: stage task binaries and scan confs,
+    // freed by the ContextCleaner. An index broadcast still referenced
+    // after the build (a memo, a lazy final pass) fails here; one merely
+    // dropped unreferenced is also released by the cleaner after a GC,
+    // so this cannot tell that from destroy()
+    eventually(timeout(10.seconds)) {
+      val left = BroadcastProbe.valueClasses(BroadcastProbe.liveIds() -- broadcasts)
+      assert(left.subsetOf(Set("[B",
+        "org.apache.spark.util.SerializableConfiguration")), left)
+    }
+    assert(spark.read.parquet(out).count() == graph.count())
+  }
+
   test("beam recall@10 holds the floor and dominates single-bucket LSH") {
     def recallOf(approx: org.apache.spark.sql.DataFrame): Double = {
       val brute = Similarity.bruteTopK(emb, k = 10, stride = 20)

@@ -513,6 +513,29 @@ class DedupSpec extends AnyFunSuite {
       assert(members.keys.min == label)
     }
   }
+
+  test("components releases its checkpoints: each call leaves at most the " +
+      "returned frame's RDD persisted") {
+    // the sf0.001 survivor pair graph, collected so the pair stage's own
+    // caches stay outside the measured window
+    val pairs = Dedup.nearDupPairs(
+        Queries.curateSurvivors(spark, "/root/testdata/sf0.001")
+          .select(col("doc_id"), col("text")), 0.2)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSeq
+      .toDF("doc_a", "doc_b")
+    assert(pairs.count() > 0)
+    val sc = spark.sparkContext
+    // the returned frames stay referenced, so no ContextCleaner release
+    // can stand in for the operator's own
+    val results = (1 to 3).map { _ =>
+      val before = sc.getPersistentRDDs.size
+      val comp = Dedup.components(pairs)
+      assert(sc.getPersistentRDDs.size <= before + 1)
+      comp
+    }
+    val labels = results.map(_.as[(Long, Long)].collect().toSet)
+    assert(labels.forall(_ == labels.head) && labels.head.nonEmpty)
+  }
 }
 
 class SimilaritySpec extends AnyFunSuite {
