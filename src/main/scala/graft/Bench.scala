@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Headline benchmark: runs the bench-flagged subset of the query inventory
   * on SPARK_GRAFT_SF_DIR, prints one JSON line (driver contract). Queries
   * are forced with a `count()` (no results pulled to the driver).
@@ -27,15 +25,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
     // Untimed warmup at the smallest SF: identical plans → codegen compiles
     // and JIT warm before the measured pass (same data files are NOT read).
     // Warmup and measurement are INTERLEAVED per query, so each query's

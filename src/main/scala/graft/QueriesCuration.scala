@@ -400,12 +400,6 @@ private[graft] trait QueriesCuration extends QueriesRelational {
       .where(col("quality_bp") >= 7000 && col("predicted_lang") === "en")
       .drop("predicted_lang")
 
-  /** [[curateGateFrom]] over the documents table — the registered-query
-    * form, exposed (package-private) so ProfileCurate can time each stage
-    * of the curation pipeline without duplicating its plan. */
-  private[graft] def curateGated(s: SparkSession, dir: String): DataFrame =
-    curateGateFrom(Tables.documents(s, dir))
-
   /** Stage 2 of docs-prep: exact dedup of the gated set. The LSH pass
     * references the survivor set ~5× (band self-join + two shingle joins +
     * the final anti-join); persisting cuts the gate subtree from five
@@ -414,7 +408,7 @@ private[graft] trait QueriesCuration extends QueriesRelational {
     * reuse ONE entry (one per distinct sfDir per session), each tiny
     * (survivor ids + text) and LRU-evictable. */
   private[graft] def curateSurvivors(s: SparkSession, dir: String): DataFrame =
-    curateSurvivorsFrom(curateGated(s, dir))
+    curateSurvivorsFrom(curateGateFrom(Tables.documents(s, dir)))
 
   private[graft] def curateSurvivorsFrom(gated: DataFrame): DataFrame = {
     val exactKeep = gated

@@ -1064,7 +1064,7 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
     * equi-join however large the corpus; each query scores its own plus
     * every Hamming-1 bucket, ≈(nPlanes+1)/2^nPlanes of the corpus — the
     * Lv et al. 2007 recall knob, measured vs single-bucket and brute in
-    * ProfileRetrievalR12 / NOTES). `nPlanes` is that dial surfaced as a
+    * the r12 dense-recall measurements, NOTES.md r12). `nPlanes` is that dial surfaced as a
     * parameter (VERDICT r12 #6): 6 planes ≈ 11% scan / 0.37–0.48
     * recall@10, 4 planes ≈ 31% scan / 0.62 recall — a recall-hungry
     * deployment picks an operating point, not a code edit. `ivfCents`
@@ -1224,7 +1224,7 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
     * (the r11 verdict's last brute scan in a capstone). Deterministic ⇒
     * hash-exact; the oracle derives the SAME buckets from interpolated
     * plane literals and joins USING (bucket). Recall vs the brute twin
-    * is measured in ProfileHybridLsh / NOTES (the LSH tier trades
+    * is measured in NOTES.md r12 (the LSH tier trades
     * recall for the equi-join plan — the knob is nPlanes). */
   protected val textHybridLsh = Q("text_hybrid_lsh",
     (s, dir) => hybridTopKFrom(s, Tables.documents(s, dir), denseLsh = true),

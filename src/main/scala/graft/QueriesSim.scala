@@ -472,7 +472,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * 50 per query), then only the |queries|×50 shortlisted vectors are
     * read back for an exact round-4 cosine top-10 — crossTopK's output
     * contract from a fraction of its vector reads. Recall vs brute is
-    * measured in ProfilePq / NOTES; determinism is oracled end to end
+    * measured in NOTES.md r14; determinism is oracled end to end
     * from the codebook literals. */
   protected val simPqRerank = Q("sim_pq_rerank",
     (s, dir) => {
@@ -641,7 +641,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * serving face without a hash-checked recall figure (binq/sq8 have
     * sim_binq_recall/sim_sq8_recall; residual/OPQ are oracled on the
     * planted fixtures): per-query overlap between the exact brute
-    * top-10 and pqTopKRefined's top-10 at shortlist 200 (ProfilePq:
+    * top-10 and pqTopKRefined's top-10 at shortlist 200 (NOTES.md r14:
     * 0.768 aggregate at m8k16). Both rankings deterministic, so the
     * recall figures themselves hash-check against DuckDB's
     * re-derivation of both chains from the codebook literals. */
@@ -744,7 +744,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * ROTATED code table persists (the pq_codes_all posture), and the
     * search is plain ADC over stored codes with rotated queries. On
     * this near-uniform corpus the rotation is ~recall-neutral
-    * (ProfileQuant sf0.1: plain 0.162 vs OPQ 0.174 — the covariance is
+    * (quantized-tier recall probe, NOTES.md r15, sf0.1: plain 0.162 vs OPQ 0.174 — the covariance is
     * already ~isotropic); the point here is the
     * operating pipeline: rotate → encode once → search codes, all
     * artifacts write-once, oracle re-derives rotation + encode + ADC
@@ -850,14 +850,14 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
   /** Oracle-gated recall for the OPQ serving tier (VERDICT r14 #2) — the
     * last quantized serving face without a hash-checked recall figure
     * (pq/binq/sq8 have sim_*_recall rows; the OPQ number lived only in
-    * ProfileQuant): per-query overlap between the exact brute top-10
+    * the NOTES.md r15 recall probe): per-query overlap between the exact brute top-10
     * over the RAW embeddings and sim_opq_topk's ADC top-10 over the
     * PERSISTED rotated code artifact (rotated queries, stored codes —
     * the serving face itself, no rerank). Both rankings deterministic,
     * so the recall figures hash-check against DuckDB's re-derivation of
     * both chains from the rotation + codebook literals. On this
     * near-uniform corpus the figure is low by construction (~0.17,
-    * ProfileQuant — 16-byte codes over 64 near-isotropic dims); the
+    * NOTES.md r15 — 16-byte codes over 64 near-isotropic dims); the
     * contract is that the figure is ORACLED, not that it is high — the
     * quality claim lives on the planted fixture (sim_opq_trained). */
   protected val simOpqRecall = Q("sim_opq_recall",
@@ -1165,7 +1165,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * between the exact brute top-10 and the Hamming-shortlist(200) +
     * exact-rerank top-10. Both rankings are deterministic, so their
     * intersection is too — DuckDB re-derives both chains and must agree
-    * on every per-query recall figure. (ProfileQuant's aggregate
+    * on every per-query recall figure. (The NOTES.md aggregate
     * recall@10 = mean of recall_bp/10⁴ over queries.) */
   protected val simBinqRecall = Q("sim_binq_recall",
     (s, dir) => {
@@ -1259,7 +1259,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
   /** Oracled recall for the int8 tier (the sim_binq_recall pattern):
     * per-query overlap between the exact brute top-10 and the
     * sq8 dequantized-cosine top-10 — hash-checks the tier's near-exact
-    * claim (ProfileQuant: 0.98 aggregate) instead of noting it. */
+    * claim (NOTES.md r14: 0.98 aggregate) instead of noting it. */
   protected val simSq8Recall = Q("sim_sq8_recall",
     (s, dir) => {
       val e = Tables.embeddings(s, dir)
@@ -1385,7 +1385,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * raw PQ's 8 codes per subspace get consumed by the 8 cluster
     * projections (no intra-cluster detail left), while residual codes
     * spend all 8 on local detail — the configuration where the
-    * residual claim is starkest (ProfileQuant: raw 0.225 vs residual
+    * residual claim is starkest (NOTES.md r14: raw 0.225 vs residual
     * 0.918 recall@10). */
   protected val fixtureCache =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
@@ -1635,7 +1635,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * independent) and searches rotated queries against rotated codes —
     * legal because the orthonormal rotation preserves every dot product
     * BIT-EXACTLY here (H entries ±1/4 on dyadic inputs). Both recalls
-    * ride in the hashed output (ProfileQuant: plain 0.496, OPQ 0.811
+    * ride in the hashed output (NOTES.md r15: plain 0.496, OPQ 0.811
     * @ m=8 ksub=16). The oracle re-derives latent, rotation, ground
     * truth and both ADC pipelines from the trained literals. */
   protected val simOpqGain = Q("sim_opq_gain",
@@ -1719,7 +1719,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * moment (deterministic cyclic Jacobi on the bounded sample) and
     * allocates eigen-directions to subspaces by greedy log-eigenvalue
     * balancing; unlike sim_opq_gain the latent basis is NOT given — the
-    * rotation is learned from data and must rediscover it (ProfileQuant:
+    * rotation is learned from data and must rediscover it (NOTES.md r15:
     * trained 0.796 vs known-basis 0.811 vs plain 0.496 recall@10). The
     * rotation matrix interpolates into the oracle as literals (the
     * trained-centroid posture), rotated values are index-order dots of
@@ -1873,7 +1873,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
 
   /** Trained pieces for the COMPOSED OPQ ∘ residual-IVF-PQ gain pair on
     * the smeared aniso fixture: both tiers train their own cells (8 — the
-    * probe sweep in ProfileOpqIvfPq: at 8 cells the rotation wins, resid
+    * probe sweep in NOTES.md r15: at 8 cells the rotation wins, resid
     * 0.807 vs opq∘resid 0.832 recall@10, both above flat trained-OPQ's
     * 0.796) and their own residual codebooks; the OPQ tier trains in the
     * ROTATED space (the FAISS OPQ-pretransform order). */
@@ -1908,7 +1908,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * the rotated vector, PQ-encode the rotated residual, search with one
     * exact per-probed-cell LUT from the rotated query's residual. Both
     * code tables are persisted WIDE artifacts; both searches read stored
-    * codes only. ProfileOpqIvfPq at 8 cells / 2 probes: resid 0.807,
+    * codes only. NOTES.md r15 probe sweep at 8 cells / 2 probes: resid 0.807,
     * opq∘resid 0.832 recall@10 (flat trained OPQ: 0.796) — the residual
     * tier already absorbs most of the anisotropy the rotation targets
     * (centroids capture the low-rank structure), so the composition's
@@ -2118,7 +2118,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * oracled gain pair for the composed layout (the aniso pair proves
     * the rotation effect where residuals DON'T absorb it; this one
     * proves the rotation still adds ON TOP of residual coding when the
-    * cluster structure is real — ProfileOpqIvfPq r15: resid 0.918 vs
+    * cluster structure is real — NOTES.md r15 probe sweep: resid 0.918 vs
     * composed 0.961 recall@10 at m=8 ksub=8 nProbes=2 on the planted
     * 8-cluster corpus, +4.3 points at residual coding's BEST operating
     * point). Same contract as sim_opq_ivfpq; all trained literals

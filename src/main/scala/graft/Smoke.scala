@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke main mirroring the driver's t1 check: run [[SparkEntry.entry]] on
   * sf0.001 and print the row count (driver requires > 0), plus the physical
   * plan so scale shape is reviewable per round.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
     val df = SparkEntry.entry(spark)
     println(s"[smoke] entry rows = ${df.count()}")
     df.show(5, truncate = 40, vertical = true)

@@ -25,7 +25,7 @@ object Tables {
     * `spark.read.parquet` runs an eager footer/schema-inference job on
     * every call, so before this every query BUILD re-listed and re-read
     * the footers of every table it touches, once per bench repeat (1–4
-    * driver-visible jobs per row, measured in ProfileJobs). A DataFrame
+    * Spark jobs per row, measured with `graft.Dev jobs --trace`). A DataFrame
     * is an immutable plan — handing every caller the same instance
     * changes no result and no execution; only the redundant metadata
     * jobs disappear. Entries are per-session, so tests with fresh

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,14 +8,7 @@ object Verify {
     // Ambient context for data-derived oracles (SparkEntry.oracleSql):
     // derivation must read the same SF the query dump reads.
     sys.props("graft.verify.sfDir") = sfDir
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated names); the driver sets
     // nothing and always dumps the full inventory.

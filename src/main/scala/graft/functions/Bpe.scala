@@ -57,11 +57,6 @@ object Bpe {
   def tokenCount(text: Column, merges: Seq[(String, String)] = DefaultMerges): Column =
     size(encode(TextFns.tokens(text), merges))
 
-  /** [[tokenCount]] over an already-staged token array. */
-  def tokenCountFromTokens(toks: Column,
-      merges: Seq[(String, String)] = DefaultMerges): Column =
-    size(encode(toks, merges))
-
   // ─────────────────────────────── train ───────────────────────────────
 
   /** UTF-8 byte order (unsigned, lexicographic) — the collation Spark's

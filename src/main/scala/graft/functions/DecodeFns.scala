@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 
 /** Message-decode vocabulary of the push leg (SURVEY.md §2.8 T4 / §2.6
   * C9–C10): websocket frame → JSON envelope → base64 `payload` → JSON event
@@ -18,11 +18,6 @@ object DecodeFns {
   /** C9 — base64 payload → UTF-8 string (`base64.b64decode`,
     * `src/mm_calls.py:167,173`). */
   def decodeBase64(c: Column): Column = unbase64(c).cast(StringType)
-
-  /** T4 — full frame decode: pull `payload` out of the JSON envelope,
-    * base64-decode it, parse the inner JSON against `schema`. */
-  def decodeFrame(raw: Column, schema: DataType): Column =
-    from_json(decodeBase64(jsonGet(raw, "payload")), schema)
 
   /** Encode side (used to build replay fixtures): inner struct → JSON →
     * base64 → JSON envelope with routing fields. */

@@ -52,18 +52,6 @@ object TextFns {
         concat_ws(" ", (0 until n).map(k => element_at(toks, i + k)): _*)))
       .otherwise(array(concat_ws(" ", toks)))
 
-  /** One MinHash value: lexicographic min of salted md5 over shingles.
-    * md5 hex strings order identically in Spark and DuckDB. Costs one md5
-    * per shingle per hash — prefer the [[shingleHashes]]+[[minhashNum]]
-    * family when several minhashes are needed. */
-  def minhash(shingleCol: Column, salt: Int): Column =
-    array_min(transform(shingleCol, s => md5(concat(lit(s"$salt:"), s))))
-
-  /** LSH band key: r=2 minhashes concatenated. Two docs collide on a band
-    * with probability J², and on any of `b` bands with 1−(1−J²)^b. */
-  def minhashBand(shingleCol: Column, band: Int): Column =
-    concat(minhash(shingleCol, 2 * band), minhash(shingleCol, 2 * band + 1))
-
   // ── single-hash MinHash family: md5 once per shingle, then universal
   //    (a·h + b) mod p mixing per hash function — ~8× cheaper than salted
   //    md5 per band, bit-identical in DuckDB (no 63-bit overflow: h < 2²⁸,

@@ -7,7 +7,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[graft.plans.Md5Base28L]] and friends) — the DeflateLen convention:
   * the Expression's codegen is one static call into here, so the hot
   * loop is plain Java-shaped Scala inside whole-stage codegen instead of
-  * an interpreted higher-order-function lambda (r16 ProfileTextHof: the
+  * an interpreted higher-order-function lambda (r16 text-HOF profile, NOTES.md: the
   * HOF forms cost 0.9–11 s per 500k docs; see each method's doc).
   *
   * Every method replicates its HOF chain's semantics BIT-EXACTLY,
@@ -130,7 +130,7 @@ object TextKernels {
   /** [[graft.functions.LangIdModel.trigrams]]: character trigrams of a
     * string in one pass — replaces `transform(sequence(1, n-2),
     * i => substr(i, 3))`, which interprets one Substring per character
-    * position (ProfileTextHof: 13.05 s per 500k ~180-char docs — the
+    * position (r16 text-HOF profile, NOTES.md: 13.05 s per 500k ~180-char docs — the
     * hottest remaining site). Char = one UTF-8 sequence, exactly
     * `length()` / `substringSQL`'s counting: the byte offsets of all
     * char starts are computed once, each trigram is one byte-range

@@ -501,6 +501,21 @@ object Dedup {
       .partitionBy(col("band"), col("key")).orderBy(col("doc_id"))
     val bounded = banded
       .withColumn("bucket_rn", row_number().over(wB))
+      // Both sides of the candidate self-join reference this frame, and
+      // AQE does NOT reuse the band shuffle stage across them (the final
+      // adaptive plan shows two full tokenize→minhash→band pipelines), so
+      // without a persist the corpus is scanned and hashed twice. The
+      // cached frame is (doc_id, band, key, bucket_rn) — a few short rows
+      // per doc, no text — which at any scale is far cheaper than a second
+      // full read+hash pass. Wall-clock at sf1 is unchanged (the pair join
+      // dominates there); the 2×→1× scan is the 100 TB argument. Rows past
+      // the cap are cached too: the cap bounds the join, and the cache
+      // stays 4 rows per doc, linear in the corpus. The persist sits BELOW
+      // the observe(): the cached plan carries no per-call metric name, so
+      // CacheManager canonicalization matches repeated calls on one input
+      // to ONE entry (as in curateSurvivorsFrom) instead of adding an
+      // entry per call.
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // Truncation is observable, never silent: any action over this plan
       // reports how many band-bucket members the cap dropped (0 in the
       // normal, post-[[exact]]-dedup case) through an observed metric
@@ -508,35 +523,25 @@ object Dedup {
       // (match by prefix) after executing THIS plan (collect/write; a
       // derived count() runs its own QueryExecution) or use a
       // QueryExecutionListener, which sees every execution. No extra pass,
-      // no eager job. Non-zero `truncated_members` means recall loss: run
-      // [[oversizedBuckets]] to see which buckets, and [[exact]] dedup
-      // upstream to fix. The name carries a per-invocation suffix because
-      // Spark rejects one plan holding two same-named CollectMetrics over
-      // DIFFERENT datasets — a fixed name would break any query composing
-      // two minhashCandidates calls (the internal self-join of ONE call is
-      // the allowed same-dataset form). The suffix depends on invocation
-      // ORDER within the JVM (a plan snapshot may show _1/_2/...): match by
-      // prefix, or use [[minhashCandidatesNamed]] for the exact name. Both
-      // metrics are coalesced so a zero-row plan reports 0, not null (an
-      // unguarded getAs[Long] would NPE on unboxing).
+      // no eager job; it fires on every execution over the cached frame
+      // (DedupSpec's cap-headroom cases pin it). Non-zero
+      // `truncated_members` means recall loss: run [[oversizedBuckets]] to
+      // see which buckets, and [[exact]] dedup upstream to fix. The name
+      // carries a per-invocation suffix because Spark rejects one plan
+      // holding two same-named CollectMetrics over DIFFERENT datasets — a
+      // fixed name would break any query composing two minhashCandidates
+      // calls (the internal self-join of ONE call is the allowed
+      // same-dataset form). The suffix depends on invocation ORDER within
+      // the JVM (a plan snapshot may show _1/_2/...): match by prefix, or
+      // use [[minhashCandidatesNamed]] for the exact name. Both metrics are
+      // coalesced so a zero-row plan reports 0, not null (an unguarded
+      // getAs[Long] would NPE on unboxing).
       .observe(metricName,
         coalesce(sum(when(col("bucket_rn") > maxBucket, 1L).otherwise(0L)),
           lit(0L)).as("truncated_members"),
         coalesce(max(col("bucket_rn")), lit(0)).as("largest_bucket"))
       .where(col("bucket_rn") <= maxBucket)
       .drop("bucket_rn")
-      // Both sides of the candidate self-join reference this frame, and
-      // AQE does NOT reuse the band shuffle stage across them (the final
-      // adaptive plan shows two full tokenize→minhash→band pipelines), so
-      // without a persist the corpus is scanned and hashed twice. The
-      // cached frame is (doc_id, band, key) — a few short rows per doc,
-      // no text — which at any scale is far cheaper than a second full
-      // read+hash pass. Wall-clock at sf1 is unchanged (the pair join
-      // dominates there); the 2×→1× scan is the 100 TB argument. Same
-      // CacheManager canonicalization rationale as curateSurvivorsFrom;
-      // the observe() metric above still fires on materialization
-      // (DedupSpec's cap-headroom cases pin it).
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = bounded.alias("a"); val b = bounded.alias("b")
     metricName -> a.join(b,
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
@@ -584,19 +589,21 @@ object Dedup {
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "key"))
     val wB = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("key")).orderBy(col("doc_id"))
-    // same persist rationale as minhashCandidatesNamed: both self-join
-    // sides reference this frame and AQE does not reuse the band shuffle
-    // stage across them. Cache-ownership contract as in Retrieval:
-    // never unpersisted here, reclaim with clearCache between corpora.
+    // same persist rationale and placement as minhashCandidatesNamed: both
+    // self-join sides reference this frame, AQE does not reuse the band
+    // shuffle stage across them, and the persist sits below the per-call
+    // observe() so repeated calls on one input share one cache entry.
+    // Cache-ownership contract as in Retrieval: never unpersisted here,
+    // reclaim with clearCache between corpora.
     val bounded = banded
       .withColumn("bucket_rn", row_number().over(wB))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .observe(metricName,
         coalesce(sum(when(col("bucket_rn") > maxBucket, 1L).otherwise(0L)),
           lit(0L)).as("truncated_members"),
         coalesce(max(col("bucket_rn")), lit(0)).as("largest_bucket"))
       .where(col("bucket_rn") <= maxBucket)
       .drop("bucket_rn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = bounded.alias("a"); val b = bounded.alias("b")
     a.join(b,
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&

@@ -108,7 +108,7 @@ object EntityResolution {
       // A pair can collide on several keys (one per shared deletion);
       // dedup so each surviving pair is emitted once. (The optimizer pushes
       // the levenshtein verify into the join, so the aggregate only sees
-      // qualifying pairs — see PlanFinal er_fuzzy_pairs.) The THRESHOLD
+      // qualifying pairs — see `graft.Dev final-plan er_fuzzy_pairs`.) The THRESHOLD
       // form of levenshtein bands the DP to O(maxDist·n) with early exit
       // (returns -1 past the threshold) — the verify inner loop at scale.
       .select(col("id_a"), col("na"), col("id_b"), col("nb")).distinct()

@@ -117,46 +117,6 @@ object Layout {
     df.repartitionByRange(nFiles, key).sortWithinPartitions(key)
   }
 
-  /** Write `df` as a parquet table hash-bucketed on `key` into `nBuckets`
-    * buckets (rows sorted by `key` within each bucket), register it in the
-    * session catalog with its data at `path`, and return the catalog-backed
-    * frame. Bucketing is the JOIN half of write-time layout: a scan of a
-    * bucketed table reports `hashpartitioning(key, nBuckets)` to the
-    * planner, so an equi-join of two tables bucketed on the same key with
-    * the same count needs NO exchange on either side — the strategy for
-    * fact-to-fact joins where neither side can broadcast and a shuffle
-    * would move the whole table. The shuffle is paid ONCE at write time
-    * and amortized over every future join/aggregation on the key.
-    *
-    * The pre-write `repartition(nBuckets, key)` matters as much as the
-    * bucketing itself: Spark's bucketed write opens one file per bucket
-    * per task, so writing from N unaligned tasks yields N×nBuckets
-    * fragments. Repartitioning on the same hash (`repartition` and
-    * `bucketBy` both use Murmur3 mod nBuckets) lands each bucket's rows in
-    * exactly one task → exactly nBuckets files, and `sortBy` becomes one
-    * in-task sort. Size nBuckets ≈ table bytes / target file size at
-    * cluster scale, and use the SAME count on every table sharing the key
-    * (mismatched counts fall back to a shuffle unless bucket coalescing
-    * kicks in). */
-  def bucketedTable(df: DataFrame, table: String, path: String,
-      nBuckets: Int, key: String): DataFrame = {
-    require(nBuckets >= 1, s"need nBuckets >= 1, got $nBuckets")
-    // The name is interpolated into SQL below; restrict it to a safe
-    // identifier so quoting can never be broken out of. Note DROP on an
-    // external table only unregisters it — if the same name is re-created
-    // at a DIFFERENT path, the previous location's files are left behind
-    // (caller owns external storage lifecycle, as with any external table).
-    require(table.matches("[A-Za-z_][A-Za-z0-9_]*"),
-      s"table name must be a plain identifier, got '$table'")
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    df.repartition(nBuckets, col(key))
-      .write.mode("overwrite").option("path", path)
-      .bucketBy(nBuckets, key).sortBy(key)
-      .format("parquet").saveAsTable(table)
-    spark.table(table)
-  }
-
   /** ANALYZE wrapper: table row count + per-column NDV/min/max/null stats
     * for Catalyst's cost-based optimizer. Stats are the third leg of
     * write-time layout (partitioning prunes, bucketing co-locates, stats

@@ -167,7 +167,7 @@ object Similarity {
     * at most once — still one equi-join, no dedup, at ANY corpus size.
     * Scanned fraction ≈ (nPlanes+1)/2^nPlanes of the corpus per query
     * (7/64 at the default) vs the single bucket's 1/64 — measured on the
-    * hybrid dense leg in ProfileRetrievalR12 / NOTES. Deterministic ⇒
+    * hybrid dense leg in the r12 dense-recall measurements (NOTES.md r12). Deterministic ⇒
     * oracle-checkable. */
   def crossTopKLshMultiProbe(corpus: DataFrame, queries: DataFrame, k: Int,
       nPlanes: Int = 6, dim: Int = 64): DataFrame = {
@@ -1154,7 +1154,7 @@ object Similarity {
     * query, and only THOSE |queries|·shortlist vectors are read back for
     * an exact round-4 cosine re-rank — the standard recipe for
     * recovering exact-tier recall while the corpus-wide pass still runs
-    * on codes (measured in ProfilePq / NOTES: the shortlist multiplies
+    * on codes (measured in NOTES.md r14: the shortlist multiplies
     * recall@10 ~3× at shortlist = 5k). The shortlist frame is tiny and
     * BROADCASTS into the corpus join, so the refinement costs one
     * hash-joined corpus scan, never a second pair loop. Contract:

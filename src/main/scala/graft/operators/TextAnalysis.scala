@@ -117,7 +117,7 @@ object TextAnalysis {
     * small joins (unigram frame broadcast by AQE when small). */
   def collocations(documents: DataFrame, k: Int, minPairN: Long = 5): DataFrame = {
     // the unigram and bigram branches both consume the tokenize stage —
-    // checkpoint it once (PlanFinal showed 4 scans / 12 scan+generate
+    // checkpoint it once (`graft.Dev final-plan` showed 4 scans / 12 scan+generate
     // nodes without it; ContextCleaner frees the blocks on GC)
     val toks = Stage(documents.select(col("doc_id"), col("text")),
       "w", TextFns.tokens(col("text"))).drop("text").localCheckpoint(false)
@@ -1066,7 +1066,7 @@ object TextAnalysis {
     // fused native kernel (r16): hash + bucket + sign + fold in ONE pass
     // over the tokens — the per-token hash-struct transform plus the
     // dim×|tokens| fold it replaced was the hottest text HOF site
-    // (ProfileTextHof: 11.25 s → see NOTES r16). Bit-identical
+    // (11.25 s in the r16 text-HOF profile, NOTES.md r16). Bit-identical
     // ([[embedDocumentsHof]] kept for the parity suite).
     toks.select(col("doc_id"), TextFns.featEmbed(col("w"), dim).as("embedding"))
   }

@@ -56,7 +56,7 @@ object VariantOps {
 
   /** Parse once → typed columns. The parse is routed through a
     * `plans.Stage` Generate barrier, which buys two things (both measured
-    * in ProfileVariant at 10M rows): (1) within one projection codegen CSE
+    * at 10M rows, NOTES.md r8 VARIANT tier): (1) within one projection codegen CSE
     * already dedups the parse, but a downstream FILTER on a shredded
     * column gets pushed into the scan as a DataFilter that re-runs
     * `parse_json` in a different stage — no CSE across stages; the barrier

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Engine extension entry point: registers the native odds expressions so
   * they're callable from SQL text as well as the Column API. Install via
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * `graft.Sessions.builder(cpus).withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

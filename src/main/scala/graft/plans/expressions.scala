@@ -1077,7 +1077,7 @@ case class PrefixSumI(child: Expression) extends UnaryExpression {
 }
 
 // ── r16 text kernels (VERDICT r15 #1): the measured-hot HOF chains on
-//    the text tier, ported per ProfileTextHof. Each is one static call
+//    the text tier, ported per the r16 text-HOF profile (NOTES.md r16). Each is one static call
 //    into graft.functions.TextKernels (the DeflateLen convention) so the
 //    per-row loop runs inside whole-stage codegen; each replicates its
 //    HOF chain bit-exactly incl. null-element behavior (TextKernelProps
@@ -1087,7 +1087,7 @@ case class PrefixSumI(child: Expression) extends UnaryExpression {
   * `array<string>` (the shingle→base-hash step of the MinHash family):
   * replaces `transform(transform(sh, md5), md5Base28-decode)` — two
   * interpreted lambdas and a 7-nibble string decode per shingle
-  * (ProfileTextHof: 2.16 s HOF on 500k docs). Null elements stay null. */
+  * (r16 text-HOF profile, NOTES.md: 2.16 s HOF on 500k docs). Null elements stay null. */
 case class Md5Base28L(child: Expression) extends UnaryExpression {
   import org.apache.spark.sql.types.{ArrayType, StringType}
 
@@ -1121,7 +1121,7 @@ case class Md5Base28L(child: Expression) extends UnaryExpression {
 /** `minhash_sig_l(hs, first, count)` — MinHash minima for universal-hash
   * indices [first, first+count) over an `array<long>` of base hashes, in
   * ONE pass: replaces `count` separate `array_min(transform(...))` HOF
-  * passes (a 4-band key needs 8 of them — ProfileTextHof: 0.96 s HOF).
+  * passes (a 4-band key needs 8 of them — r16 text-HOF profile, NOTES.md: 0.96 s HOF).
   * Element k is null when the input has no non-null elements
   * (array_min's null-skip). */
 case class MinhashSigL(child: Expression, first: Int, count: Int)
@@ -1158,7 +1158,7 @@ case class MinhashSigL(child: Expression, first: Int, count: Int)
 
 /** `simhash16_l(hs)` — 16-bit SimHash over an `array<long>` (or
   * `array<int>` — the hash16 feed) of base hashes in one pass: replaces
-  * the nested 16×|hs| aggregate (ProfileTextHof: 3.95 s HOF on 500k
+  * the nested 16×|hs| aggregate (r16 text-HOF profile, NOTES.md: 3.95 s HOF on 500k
   * docs). Keeps the HOF's quirk that any null element zeroes the whole
   * hash (each bit's vote nulls, the when() maps null to 0). */
 case class Simhash16L(child: Expression) extends UnaryExpression {
@@ -1200,7 +1200,7 @@ case class Simhash16L(child: Expression) extends UnaryExpression {
   * (hashing trick) fused into one pass over the tokens: md5 base hash,
   * bucket h mod dim, sign ±1 from the next hash bit, accumulate —
   * replaces the per-token hash-struct transform PLUS the dim×|tokens|
-  * fold (ProfileTextHof: 11.25 s HOF on 500k docs, the hottest text
+  * fold (r16 text-HOF profile, NOTES.md: 11.25 s HOF on 500k docs, the hottest text
   * site). Null tokens contribute 0 to every dimension. containsNull
   * stays true so the dumped parquet schema matches the HOF chain. */
 case class FeatEmbedL(child: Expression, dim: Int) extends UnaryExpression {
@@ -1237,7 +1237,7 @@ case class FeatEmbedL(child: Expression, dim: Int) extends UnaryExpression {
 /** `shingles_s(toks, n)` — word n-gram shingles joined with " " (whole-
   * document shingle below n tokens), one string-builder pass per row:
   * replaces `transform(sequence(...), i => concat_ws(element_at…))`
-  * (ProfileTextHof: 0.91 s HOF on 500k docs). concat_ws semantics —
+  * (r16 text-HOF profile, NOTES.md: 0.91 s HOF on 500k docs). concat_ws semantics —
   * null tokens are skipped inside a shingle, never nulled. */
 case class ShinglesS(child: Expression, n: Int) extends UnaryExpression {
   import org.apache.spark.sql.types.{ArrayType, StringType}
@@ -1276,7 +1276,8 @@ case class ShinglesS(child: Expression, n: Int) extends UnaryExpression {
   * ([[graft.functions.TextKernels.trigrams]]): replaces the langid
   * tier's `transform(sequence(1, length(t)-2), i => substr(i, 3))`
   * chain, which interprets one Substring per character position —
-  * ProfileTextHof measured it at 13.05 s per 500k docs, the hottest
+  * the r16 text-HOF profile (NOTES.md) measured it at 13.05 s per 500k
+  * docs, the hottest
   * remaining text site (it runs inside every model-language gate in
   * the curation pipelines). < 3 chars ⇒ empty array; char counting is
   * UTF8String's own first-byte table, bit-identical to

@@ -161,7 +161,7 @@ class GraphAnnSpec extends AnyFunSuite {
     }
     val g = recallOf(GraphAnn.graphTopK(emb, graph, k = 10, stride = 20))
     val l = recallOf(Similarity.lshTopK(emb, k = 10, stride = 20))
-    // sweep-pinned config (ProfileGraph, sf0.1): graph 0.971; the floor
+    // sweep-pinned config (NOTES.md r16 graph-ANN sweep, sf0.1): graph 0.971; the floor
     // leaves headroom for corpus regeneration, not for regressions
     assert(g >= 0.85, s"graph recall $g below floor")
     assert(g > l, s"graph recall $g not above LSH $l")

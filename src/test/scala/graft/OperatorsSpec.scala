@@ -536,6 +536,25 @@ class DedupSpec extends AnyFunSuite {
     val labels = results.map(_.as[(Long, Long)].collect().toSet)
     assert(labels.forall(_ == labels.head) && labels.head.nonEmpty)
   }
+
+  test("minhashCandidates / nearDupPairs: repeated calls on one corpus " +
+      "share one cache entry") {
+    // the per-call bucket-cap metric name must stay out of the persisted
+    // plan, or CacheManager adds an entry per call that nothing releases
+    val corpus = Tables.documents(spark, Bench.WarmupSfDir) // sf0.001
+      .select(col("doc_id"), col("text"))
+    val sc = spark.sparkContext
+    val ops = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "minhashCandidates" -> (Dedup.minhashCandidates(_)),
+      "nearDupPairs" -> (Dedup.nearDupPairs(_, 0.2)))
+    ops.foreach { case (name, op) =>
+      val before = sc.getPersistentRDDs.size
+      val counts = (1 to 3).map(_ => op(corpus).collect().length)
+      assert(counts.forall(_ == counts.head) && counts.head > 0, name)
+      val added = sc.getPersistentRDDs.size - before
+      assert(added <= 1, s"$name: 3 calls added $added persisted RDDs")
+    }
+  }
 }
 
 class SimilaritySpec extends AnyFunSuite {

@@ -294,7 +294,7 @@ class PlanShapeSpec extends AnyFunSuite {
       // docs_prep persist boundary, audited there), and each carries the
       // URL window/join, so the printed tree is ~2.4× docs_prep's. At
       // execution the persisted survivors serve all downstream stages
-      // (PlanFinal: InMemoryTableScans + ReusedExchange, one URL shuffle).
+      // (`graft.Dev final-plan`: InMemoryTableScans + ReusedExchange, one URL shuffle).
       "pipeline_crawl_to_trainer" -> (20, 15))
     val failures = ceilings.toSeq.sortBy(_._1).flatMap { case (name, (exchCeil, scanCeil)) =>
       val p = plan(Queries.queries(name)(spark, sf))
@@ -361,7 +361,7 @@ class PlanShapeSpec extends AnyFunSuite {
       // PRE-execution counts: the extracted-pages persist boundary prints
       // its frontier subtree (robots verdict + history anti-join + fetch
       // join) once per pageClean consumer — same print-inflation caveat
-      // as pipeline_crawl_to_trainer; PlanFinal shows InMemoryTableScans
+      // as pipeline_crawl_to_trainer; `Dev final-plan` shows InMemoryTableScans
       "pipeline_crawl_frontier" -> (13, 12))
     val failures = ceilings.toSeq.sortBy(_._1).flatMap { case (name, (exchCeil, scanCeil)) =>
       val p = plan(Queries.queries(name)(spark, sf))

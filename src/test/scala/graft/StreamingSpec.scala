@@ -1473,7 +1473,7 @@ class StreamingOpqIvfPqMaintainSpec extends AnyFunSuite {
   * are independent in mmrDiversify, so serving a query batch inside
   * foreachBatch must produce exactly the rows the batch operator
   * produces for those queries — the streamed RAG context is the batch
-  * RAG context. Cost is measured in ProfileMmrStream (warm ≈ 2.1 s per
+  * RAG context. Cost is measured in NOTES.md r14 (warm ≈ 2.1 s per
   * 30-query batch at sf0.1 — the k−1 sequential pick jobs +
   * localCheckpoints are pure scheduling at this size), which bounds the
   * viable trigger cadence to multi-second micro-batches. */

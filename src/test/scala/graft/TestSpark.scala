@@ -3,17 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (Spark startup is the dominant
-  * test cost; suites must not stop it). */
+  * test cost; suites must not stop it). Fixed at 4 cores rather than
+  * SPARK_GRAFT_CPUS: the plan-shape pins carry partition counts. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Sessions.builder(4)
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
