@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -10,9 +11,12 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * Smoke contract). `runMain graft.Dev <subcommand> …`:
   *
   *  - `time <q,…> [reps]` — run the list in order `reps` times (default 1)
-  *    in one JVM and print each query's wall time and row count. One name
-  *    times a single query; a list bisects cross-query interference; a
-  *    second rep gives the warm number.
+  *    in one JVM and print each query's wall time, row count and the
+  *    number of classes whole-stage codegen compiled during it (the
+  *    change in Spark's codegen compile count; a warm rep that still
+  *    compiles shows generated code evicted from the codegen cache). One
+  *    name times a single query; a list bisects cross-query interference;
+  *    a second rep gives the warm number.
   *  - `explain <outDir> <suffix> <q,…>` — write each query's formatted
   *    physical plan to `<outDir>/<q>_<suffix>.txt` (before/after evidence).
   *  - `final-plan <q>` — run the query to completion and print the FINAL
@@ -24,7 +28,10 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   *    materialization however often they print. Count scans per distinct
   *    InMemoryRelation.
   *  - `plans` — regenerate PLANS.md in the working directory. Pinned to
-  *    sf0.001 on `local[4]`: the plan text carries partition counts.
+  *    sf0.001 on `local[4]`: the plan text carries partition counts. All
+  *    queries are called once, and the cache cleared, before any is
+  *    explained, so the text does not depend on which index artifacts
+  *    already sat under `java.io.tmpdir`.
   *  - `jobs [q,…] [--trace]` — per query (default: the bench rows), one
   *    warm run, then a measured run reporting its Spark jobs, stages and
   *    tasks plus wall seconds. At bench SFs the data is small, so the
@@ -128,11 +135,15 @@ object Dev {
   }
 
   private def time(spark: SparkSession, sfDir: String, qs: Seq[String],
-      reps: Int): Unit =
+      reps: Int): Unit = {
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     for (i <- 1 to reps; name <- qs) {
+      val before = compiles.getCount
       val (sec, n) = timed(Queries.queries(name)(spark, sfDir).count())
-      println(f"[time] $name rep $i: $sec%.2f s, $n rows")
+      val compiled = compiles.getCount - before
+      println(f"[time] $name rep $i: $sec%.2f s, $n rows, $compiled classes compiled")
     }
+  }
 
   private def explain(spark: SparkSession, sfDir: String, outDir: String,
       suffix: String, qs: Seq[String]): Unit = {
@@ -163,6 +174,13 @@ object Dev {
     out ++= "Things to look for: `PushedFilters`/`ReadSchema` pruning on scans,\n"
     out ++= "`BroadcastHashJoin` on dims, `WindowGroupLimit` before rank\n"
     out ++= "exchanges, narrow Generate chains with no duplicate subtrees.\n"
+    // One untimed call of every query first writes each missing
+    // write-once index artifact; clearing the cache then drops the frames
+    // those builds left persisted, which later queries' plans would
+    // otherwise reuse. The explained calls so print the same text
+    // whatever an earlier run left under java.io.tmpdir.
+    PlanNames.foreach(Queries.queries(_)(spark, sfDir))
+    spark.catalog.clearCache()
     PlanNames.foreach { name =>
       val plan = Queries.queries(name)(spark, sfDir).queryExecution
         .explainString(FormattedMode)

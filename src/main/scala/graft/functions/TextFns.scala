@@ -52,6 +52,33 @@ object TextFns {
         concat_ws(" ", (0 until n).map(k => element_at(toks, i + k)): _*)))
       .otherwise(array(concat_ws(" ", toks)))
 
+  /** ExactSubstr span anchors: the md5 hex of every k-token window of a
+    * token array, position p at index p ([[graft.plans.SpanMd5s]]) —
+    * bit-identical to `md5(array_join(slice(toks, p+1, k), ' '))` per
+    * position ([[spanMd5Hof]], kept for the parity suite). */
+  def spanMd5s(toks: Column, k: Int): Column =
+    bridge(graft.plans.SpanMd5s(expr0(toks), k))
+
+  /** The per-position anchor form [[spanMd5s]] replaced — parity-spec
+    * reference only. */
+  private[graft] def spanMd5Hof(toks: Column, pos: Column, k: Int): Column =
+    md5(array_join(slice(toks, pos + 1, lit(k)), " "))
+
+  /** ExactSubstr rebuild: `struct(n_removed, clean_text)` of a document
+    * after removing the k-token spans starting at `starts`
+    * ([[graft.plans.SpanKeep]]) — bit-identical to [[spanKeepHof]] over
+    * the sorted distinct coverage of those spans. */
+  def spanKeep(toks: Column, starts: Column, k: Int): Column =
+    bridge(graft.plans.SpanKeep(expr0(toks), expr0(starts), k))
+
+  /** The coverage-array rebuild [[spanKeep]] replaced, over the covered
+    * positions `cov` — parity-spec reference only. */
+  private[graft] def spanKeepHof(toks: Column, cov: Column): Column =
+    struct(size(cov).cast("long").as("n_removed"),
+      array_join(transform(
+        filter(sequence(lit(0), size(toks) - 1), i => !array_contains(cov, i)),
+        i => element_at(toks, i + 1)), " ").as("clean_text"))
+
   // ── single-hash MinHash family: md5 once per shingle, then universal
   //    (a·h + b) mod p mixing per hash function — ~8× cheaper than salted
   //    md5 per band, bit-identical in DuckDB (no 63-bit overflow: h < 2²⁸,

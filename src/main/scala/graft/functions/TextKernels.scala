@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -187,5 +189,116 @@ object TextKernels {
       while (i <= sz - n) { out(i) = join(i, n); i += 1 }
       new GenericArrayData(out)
     } else new GenericArrayData(Array[Any](join(0, sz)))
+  }
+
+  private val HexDigits = "0123456789abcdef".getBytes(
+    java.nio.charset.StandardCharsets.US_ASCII)
+
+  /** [[TextFns.spanMd5s]]: for every p in [0, n−k], the md5 hex of
+    * `array_join(slice(a, p+1, k), ' ')` — Spark's `md5` of that string,
+    * lowercase hex of the digest of its UTF-8 bytes. No string is built per
+    * position: the non-null tokens are copied ONCE into one space-joined
+    * buffer, and because array_join skips null elements (and their
+    * separators), a window's join is exactly the buffer slice from its
+    * first to its last non-null token — one digest update per position.
+    * A window of only nulls joins to "" (an empty slice). n < k ⇒ empty. */
+  def spanMd5s(a: ArrayData, k: Int): ArrayData = {
+    val n = a.numElements()
+    if (n < k) return new GenericArrayData(Array.empty[Any])
+    val toks = new Array[UTF8String](n)
+    var len = 0
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i)) {
+        toks(i) = a.getUTF8String(i)
+        len += toks(i).numBytes + 1
+      }
+      i += 1
+    }
+    // buf = non-null tokens joined by ' '; [start(i), end(i)) is token i's
+    // byte range (unset for nulls). first(i) = first non-null index >= i
+    // (n if none); last(i) = last non-null index <= i (-1 if none).
+    val buf = new Array[Byte](math.max(len - 1, 0))
+    val start = new Array[Int](n)
+    val end = new Array[Int](n)
+    val last = new Array[Int](n)
+    var off = 0
+    var prev = -1
+    i = 0
+    while (i < n) {
+      val t = toks(i)
+      if (t != null) {
+        if (prev >= 0) { buf(off) = ' '.toByte; off += 1 }
+        start(i) = off
+        t.writeToMemory(buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + off)
+        off += t.numBytes
+        end(i) = off
+        prev = i
+      }
+      last(i) = prev
+      i += 1
+    }
+    val first = new Array[Int](n)
+    var next = n
+    i = n - 1
+    while (i >= 0) { if (toks(i) != null) next = i; first(i) = next; i -= 1 }
+    val d = md5.get()
+    val dig = new Array[Byte](16)
+    val out = new Array[Any](n - k + 1)
+    var p = 0
+    while (p <= n - k) {
+      val f = first(p)
+      val l = last(p + k - 1)
+      d.reset()
+      if (f <= l) d.update(buf, start(f), end(l) - start(f))
+      d.digest(dig, 0, 16)
+      val hex = new Array[Byte](32)
+      var j = 0
+      while (j < 16) {
+        hex(2 * j) = HexDigits((dig(j) >> 4) & 0xf)
+        hex(2 * j + 1) = HexDigits(dig(j) & 0xf)
+        j += 1
+      }
+      out(p) = UTF8String.fromBytes(hex)
+      p += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** [[TextFns.spanKeep]]: (n_removed, clean_text) of a document whose
+    * duplicate spans start at `starts` (each covering tokens [s, s+k)).
+    * The coverage bitmap comes from one difference-array pass — +1 at s,
+    * −1 at s+k, running sum > 0 ⇒ covered — so overlapping and repeated
+    * starts cost O(n + |starts|), not ×k. n_removed counts the covered
+    * positions inside the document; clean_text joins the uncovered
+    * tokens with ' ', skipping null elements (array_join semantics). Null
+    * entries of `starts` cover nothing. */
+  def spanKeep(a: ArrayData, starts: ArrayData, k: Int): InternalRow = {
+    val n = a.numElements()
+    val delta = new Array[Int](n + 1)
+    var i = 0
+    while (i < starts.numElements()) {
+      if (!starts.isNullAt(i)) {
+        val s = starts.getInt(i).toLong
+        val e = math.min(s + k, n.toLong)
+        if (e > 0 && s < n) {
+          delta(math.max(s, 0L).toInt) += 1
+          delta(e.toInt) -= 1
+        }
+      }
+      i += 1
+    }
+    val kept = new Array[UTF8String](n)
+    var removed = 0L
+    var cover = 0
+    i = 0
+    while (i < n) {
+      cover += delta(i)
+      if (cover > 0) removed += 1
+      else if (!a.isNullAt(i)) kept(i) = a.getUTF8String(i)
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](removed,
+      UTF8String.concatWs(UTF8String.fromString(" "), kept: _*)))
   }
 }

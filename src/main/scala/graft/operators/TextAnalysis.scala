@@ -683,7 +683,10 @@ object TextAnalysis {
     * Algorithm (suffix-array-free, shuffle-bucketed, never all-pairs):
     *   1. anchor every position p ∈ [0, n−k] with the md5 of its k-token
     *      shingle (hashing first keeps the shuffle key at 32 bytes no
-    *      matter how long the span text is);
+    *      matter how long the span text is). One native
+    *      [[TextFns.spanMd5s]] pass per document emits all of them from a
+    *      single joined token buffer — one digest per position, no
+    *      per-position string — and a posexplode turns them into rows;
     *   2. a hash AGGREGATE per shingle hash — occurrence count plus the
     *      global first occurrence as a packed-long min (see
     *      [[packedFirst]]; BIGINT buffer ⇒ HashAggregate) — filtered
@@ -694,24 +697,26 @@ object TextAnalysis {
     *      (1M copies of a cookie banner) costs a skewed-but-sortless join
     *      probe that AQE skew-split handles, instead of a 1M-row sort
     *      buffer in a single window partition;
-    *   3. those occurrences explode to their k covered token positions
-    *      (cost proportional to DUPLICATED content only, ≤ k× its size),
-    *      dedup to a per-document sorted coverage array;
-    *   4. one broadcast-free left join back to the tokenized docs and a
-    *      narrow per-row rebuild keeps exactly the uncovered tokens.
+    *   3. those occurrences' start positions collect per document
+    *      (`collect_list(pos)` — one int per DUPLICATED anchor, never
+    *      expanded to the k positions each one covers);
+    *   4. one broadcast-free left join back to the tokenized docs and one
+    *      native [[TextFns.spanKeep]] pass per document: a difference-array
+    *      coverage bitmap over the starts, then the uncovered tokens
+    *      joined — exactly the tokens no duplicate span covers.
     *
     * Scale notes: the duplicated-shingle side of step 2's join is tiny in
     * a healthy corpus (dup shingles are the exception), so AQE turns it
-    * into a broadcast; rebuild is O(n·|cov|) per document via
-    * array_contains — bounded by document length, not corpus size.
+    * into a broadcast; the rebuild is O(n + |starts|) per document —
+    * linear in document length however many duplicate spans overlap it.
     * Documents whose every token is covered survive with empty
     * `clean_text` (the caller's drop policy, not ours).
     * Output: (doc_id, n_tokens, n_removed, clean_text). */
   def exactSubstrDedup(documents: DataFrame, spanTokens: Int = 10): DataFrame = {
     require(spanTokens > 0, s"need spanTokens > 0, got $spanTokens")
     val toks = substrToks(documents)
-    val anchors = substrAnchors(toks, spanTokens)
-    substrRebuild(toks, substrCovered(substrBatchDups(anchors), spanTokens))
+    substrRebuild(toks, substrBatchDups(substrAnchors(toks, spanTokens)),
+      spanTokens)
   }
 
   /** Tokenized (doc_id, w, n) frame shared by the span-dedup family. */
@@ -723,24 +728,9 @@ object TextAnalysis {
 
   /** Every k-token span anchor: (doc_id, pos, h = md5 of the span). */
   private def substrAnchors(toks: DataFrame, spanTokens: Int): DataFrame =
-    toks
-      .where(col("n") >= spanTokens)
-      .withColumn("pos", explode(sequence(lit(0), col("n") - spanTokens)))
-      .select(col("doc_id"), col("pos"),
-        md5(array_join(slice(col("w"), col("pos") + 1, lit(spanTokens)), " "))
-          .as("h"))
+    toks.select(col("doc_id"),
+      posexplode(TextFns.spanMd5s(col("w"), spanTokens)).as(Seq("pos", "h")))
 
-  /** Non-first occurrences of duplicated spans within one corpus (the
-    * sortless aggregate dup-marking — see [[exactSubstrDedup]] step 2).
-    *
-    * The anchor subtree is deliberately NOT persisted even though both the
-    * aggregate build side and the join probe side recompute it (the final
-    * adaptive plan shows two tokenize→explode→md5 pipelines). Unlike the
-    * minhash bands / multimodal signature caches — a few short rows per
-    * doc — the anchor set is one 32-byte hash PER TOKEN POSITION, i.e.
-    * several times the corpus itself; at 100 TB caching it costs far more
-    * than the second narrow scan+hash pass it would save. Recompute is
-    * the scale-correct trade here. */
   /** Packed-long global-first encoding: min(doc_id·2^24 + pos) is the
     * lexicographic (doc_id, pos) min whenever 0 ≤ pos < 2^24 and doc_id
     * fits the remaining 39 bits. The payoff is the aggregation BUFFER
@@ -762,6 +752,19 @@ object TextAnalysis {
         col("doc_id"), lit(", "), col("pos"), lit(")"))).cast("long"))
       .otherwise(col("doc_id") * PosCap + col("pos"))
 
+  /** Non-first occurrences of duplicated spans within one corpus (the
+    * sortless aggregate dup-marking — see [[exactSubstrDedup]] step 2).
+    *
+    * The anchor subtree is deliberately NOT persisted even though both the
+    * aggregate build side and the join probe side recompute it (the final
+    * adaptive plan shows two tokenize→span_md5s→posexplode pipelines).
+    * Unlike the minhash bands / multimodal signature caches — a few short
+    * rows per doc — the anchor set is one 32-byte hash PER TOKEN POSITION,
+    * i.e. several times the corpus itself, while the recompute is one
+    * narrow scan, one tokenize and one span_md5s pass (one digest per
+    * position, no per-position string). At 100 TB caching it costs far
+    * more than the second pass it would save; recompute is the
+    * scale-correct trade here. */
   private def substrBatchDups(anchors: DataFrame): DataFrame = {
     val dupFirsts = anchors
       .groupBy(col("h"))
@@ -774,26 +777,26 @@ object TextAnalysis {
       .where(col("doc_id") * PosCap + col("pos") =!= col("first_packed"))
   }
 
-  /** (doc_id, pos) duplicate occurrences → per-document sorted coverage. */
-  private def substrCovered(dups: DataFrame, spanTokens: Int): DataFrame =
-    dups
-      .select(col("doc_id"),
-        explode(sequence(col("pos"), col("pos") + (spanTokens - 1))).as("cpos"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_set(col("cpos"))).as("cov"))
-
-  /** Rebuild each document keeping exactly the uncovered tokens. */
-  private def substrRebuild(toks: DataFrame, covered: DataFrame): DataFrame =
-    Stage(toks.join(covered, Seq("doc_id"), "left"),
-      "covf", coalesce(col("cov"), array().cast("array<int>")))
-      .select(col("doc_id"),
-        col("n").cast("long").as("n_tokens"),
-        size(col("covf")).cast("long").as("n_removed"),
-        array_join(
-          transform(
-            filter(sequence(lit(0), col("n") - 1),
-              i => !array_contains(col("covf"), i)),
-            i => element_at(col("w"), i + 1)), " ").as("clean_text"))
+  /** Rebuild each document keeping exactly the tokens no duplicate span
+    * covers: the (doc_id, pos) duplicate starts collect per document and
+    * one [[TextFns.spanKeep]] pass turns them into (n_removed,
+    * clean_text). A document with no duplicate span misses the left join
+    * and keeps every token. */
+  private def substrRebuild(toks: DataFrame, dups: DataFrame,
+      spanTokens: Int): DataFrame = {
+    val starts = dups.groupBy(col("doc_id"))
+      .agg(collect_list(col("pos")).as("starts"))
+    // Staged, not a plain projection: the kernel then runs once per row
+    // for both fields, and the rebuild stays in every plan of this frame.
+    // As a projection a bare count() prunes it, and with it the whole
+    // dup-marking join (starts is unique per doc_id), so a count would
+    // no longer measure the dedup.
+    Stage(toks.join(starts, Seq("doc_id"), "left"), "kept",
+      TextFns.spanKeep(col("w"),
+        coalesce(col("starts"), array().cast("array<int>")), spanTokens))
+      .select(col("doc_id"), col("n").cast("long").as("n_tokens"),
+        col("kept.n_removed"), col("kept.clean_text"))
+  }
 
   /** The persistable SPAN INDEX of a corpus: its distinct k-token shingle
     * hashes — what a daily pipeline stores (one 32-byte value per distinct
@@ -832,7 +835,7 @@ object TextAnalysis {
       historyIndex.select(col("h")), Seq("h"), "left_semi")
     val dups = substrBatchDups(anchors).select(col("doc_id"), col("pos"))
       .unionByName(histHits.select(col("doc_id"), col("pos")))
-    substrRebuild(toks, substrCovered(dups, spanTokens))
+    substrRebuild(toks, dups, spanTokens)
   }
 
   /** Per-document TF-IDF top-k terms. The rank key is

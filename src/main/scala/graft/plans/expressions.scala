@@ -1272,6 +1272,89 @@ case class ShinglesS(child: Expression, n: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** `span_md5s(w, k)` — the ExactSubstr anchor hashes of a token array:
+  * for every p in [0, n−k], `md5(array_join(slice(w, p+1, k), ' '))`,
+  * without building the joined string per position
+  * ([[graft.functions.TextKernels.spanMd5s]] feeds one digest per
+  * position from a single joined buffer). Same md5 hex as the per-position
+  * chain it replaced, so span indexes and blooms built before and after
+  * are interchangeable. Null elements are skipped as array_join skips
+  * them; n < k ⇒ empty array. */
+case class SpanMd5s(child: Expression, k: Int) extends UnaryExpression {
+  import org.apache.spark.sql.types.{ArrayType, StringType}
+  require(k > 0, s"need k > 0, got $k")
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = true
+  override def prettyName: String = "span_md5s"
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(_: StringType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"span_md5s requires array<string>, got ${other.simpleString}")
+    }
+
+  override protected def nullSafeEval(v: Any): Any =
+    graft.functions.TextKernels.spanMd5s(
+      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.TextKernels.spanMd5s($c, $k)")
+
+  override protected def withNewChildInternal(newChild: Expression): SpanMd5s =
+    copy(child = newChild)
+}
+
+/** `span_keep(w, starts, k)` — the ExactSubstr rebuild of one document:
+  * `struct(n_removed, clean_text)` after removing the k-token spans that
+  * start at `starts` (the document's duplicate anchor positions, as
+  * collected). One linear pass over a coverage bitmap
+  * ([[graft.functions.TextKernels.spanKeep]]) replaces the ×k position
+  * explode, the per-document sorted coverage set and the O(n·|cov|)
+  * `filter(array_contains)` rebuild. */
+case class SpanKeep(left: Expression, right: Expression, k: Int)
+    extends BinaryExpression {
+  import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+  require(k > 0, s"need k > 0, got $k")
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("n_removed", LongType, nullable = false),
+    StructField("clean_text", StringType, nullable = false)))
+  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = true
+  override def prettyName: String = "span_keep"
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(_: StringType, _), ArrayType(IntegerType, _)) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case (l, r) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"span_keep requires (array<string>, array<int>), " +
+            s"got ${l.simpleString} and ${r.simpleString}")
+    }
+
+  override protected def nullSafeEval(w: Any, s: Any): Any =
+    graft.functions.TextKernels.spanKeep(
+      w.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
+      s.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      (w, s) => s"graft.functions.TextKernels.spanKeep($w, $s, $k)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): SpanKeep =
+    copy(left = newLeft, right = newRight)
+}
+
 /** `trigrams_s(t)` — character trigrams of a string in one pass
   * ([[graft.functions.TextKernels.trigrams]]): replaces the langid
   * tier's `transform(sequence(1, length(t)-2), i => substr(i, 3))`

@@ -558,6 +558,11 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("Window"), s"dup-marking regressed to a sort window:\n$p")
     assert(p.contains("HashAggregate") || p.contains("ObjectHashAggregate"),
       "per-shingle aggregate missing")
+    // Anchors and rebuild are the native span kernels: no per-position
+    // joined string (array_join/slice) and no O(n·|cov|) array_contains
+    // lambda may plan back in.
+    for (f <- Seq("array_join(", "slice(", "array_contains("))
+      assert(!p.contains(f), s"exact-substr plans a per-position $f:\n$p")
   }
 
   test("strict-C4 flagship keeps the default's plan shape (branch is a projection)") {

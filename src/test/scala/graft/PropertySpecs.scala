@@ -720,6 +720,42 @@ object TextKernelProps extends Properties("TextKernels") {
         else Seq(xs.flatten.mkString(" "))
       out == expect
     }
+
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"$b%02x").mkString
+
+  property("span_md5s == per-window md5 hex of the null-skipping ' ' join; " +
+      "n < k -> empty") =
+    forAll(Gen.listOf(Gen.option(genStr)), Gen.oneOf(1, 2, 3, 4, 10)) { (xs, k) =>
+      val out = graft.plans.SpanMd5s(sref, k).eval(InternalRow(sarr(xs)))
+        .asInstanceOf[ArrayData].toObjectArray(StringType)
+        .map(_.asInstanceOf[UTF8String].toString).toSeq
+      val expect =
+        if (xs.size < k) Seq.empty[String]
+        else xs.sliding(k).map(win => md5Hex(win.flatten.mkString(" "))).toSeq
+      out == expect
+    }
+
+  property("span_keep == set-coverage reference: n_removed = covered " +
+      "positions in the document, clean_text = uncovered non-null tokens; " +
+      "repeated, overlapping and out-of-range starts") =
+    forAll(Gen.listOf(Gen.option(genStr)), Gen.chooseNum(1, 5)) { (xs, k) =>
+      forAll(Gen.listOf(Gen.option(Gen.chooseNum(-k - 1, xs.size + 1)))) { starts =>
+        val startsRef = BoundReference(1, ArrayType(
+          org.apache.spark.sql.types.IntegerType, containsNull = true), nullable = true)
+        val row = graft.plans.SpanKeep(sref, startsRef, k).eval(InternalRow(sarr(xs),
+          new GenericArrayData(starts.map(_.map(Integer.valueOf).orNull).toArray[Any])))
+          .asInstanceOf[InternalRow]
+        val covered = starts.flatten.flatMap(s => s until s + k)
+          .filter(i => i >= 0 && i < xs.size).toSet
+        val clean = xs.zipWithIndex.collect {
+          case (Some(t), i) if !covered(i) => t
+        }.mkString(" ")
+        row.getLong(0) == covered.size.toLong && row.getUTF8String(1).toString == clean
+      }
+    }
 }
 
 /** Interpreted-eval property for the r16 trigram kernel. */

@@ -93,6 +93,94 @@ class TextKernelParitySpec extends AnyFunSuite {
     rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), s"$r"))
   }
 
+  // The span kernels' parity runs over an RDD-backed frame: a projection
+  // over a local relation is folded at optimization time by interpreted
+  // eval (ConvertToLocalRelation), so only a non-local scan reaches
+  // whole-stage codegen. `codegenStage` asserts that it did.
+  private def rddFrame(rows: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType) =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+
+  private def codegenStage(df: org.apache.spark.sql.DataFrame, kernel: String): Unit = {
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.linesIterator.exists(l => l.contains(kernel) &&
+      l.matches("""^[\s+\-:|]*\*\(\d+\).*""")),
+      s"$kernel did not run in a whole-stage codegen stage:\n$p")
+  }
+
+  private val tokSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.IntegerType),
+    org.apache.spark.sql.types.StructField("w", org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.StringType, containsNull = true))))
+
+  // the spec's token arrays plus two long enough for k = 10: one with
+  // nulls in the middle and at both ends, one unicode-heavy
+  private lazy val spanToks = rddFrame(
+    (toks.collect().map(_.getSeq[String](0)).toSeq ++ Seq(
+      Seq(null, "a", "b", null, null, "c", "d", "e", "a", "b", null, "c",
+        "d", "e", "f", null),
+      Seq("汉字", "ünïcode", "éclair", "普通话", "𐍈", "x", "汉字", "ünïcode",
+        "éclair", "普通话", "𐍈", "y", "")))
+      .zipWithIndex.map { case (w, i) => org.apache.spark.sql.Row(i, w) },
+    tokSchema)
+
+  test("span_md5s == md5(array_join(slice(w, p+1, k), ' ')) at every p, " +
+      "k = 1..4 and 10, incl. null elements, unicode, empty and n < k") {
+    for (k <- (1 to 4) :+ 10) {
+      val native = spanToks.select($"id",
+        posexplode(TextFns.spanMd5s($"w", k)).as(Seq("pos", "h")))
+      codegenStage(native, "span_md5s")
+      val hof = spanToks.where(size($"w") >= k)
+        .select($"id", $"w", explode(sequence(lit(0), size($"w") - k)).as("pos"))
+        .select($"id", $"pos", TextFns.spanMd5Hof($"w", $"pos", k).as("h"))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getInt(0), r.getInt(1), r.getString(2)))
+          .sortBy(r => (r._1, r._2)).toSeq
+      val (n, h) = (rows(native), rows(hof))
+      assert(n.nonEmpty && n == h, s"span_md5s k=$k:\nnative=$n\nhof=$h")
+    }
+  }
+
+  test("span_keep == the coverage-array rebuild chain and size(cov) on " +
+      "all-covered, none-covered, overlapping and repeated starts") {
+    val w = Seq("a", "b", "c", null, "d", "e", "f", "g", "h", "i", "j", "k")
+    val long = (0 until 23).map(i => s"t${i % 7}")
+    val cases: Seq[(Seq[String], Seq[Int], Int)] = Seq(
+      (w, Seq.empty, 3),                         // none covered
+      (w, Seq(0, 3, 6, 9), 3),                   // all covered, abutting
+      (w, (0 to 9), 3),                          // all covered, overlapping
+      (w, Seq(1, 2), 4),                         // overlapping
+      (w, Seq(5, 5, 5), 2),                      // repeated
+      (w, Seq(8, 0, 8, 4), 4),                   // unsorted, repeated
+      (w, Seq(0), 1),
+      (Seq("solo"), Seq(0), 1),                  // one token, covered
+      (Seq("solo"), Seq.empty, 1),
+      (long, Seq(0, 13), 10),                    // k = 10, overlapping
+      (long, Seq(2, 2), 10))
+    val rows = cases.zipWithIndex.map { case ((toks, starts, k), i) =>
+      val cov = starts.flatMap(s => s until s + k).distinct.sorted
+      org.apache.spark.sql.Row(i, toks, starts, cov, k)
+    }
+    import org.apache.spark.sql.types._
+    val df = rddFrame(rows, StructType(Seq(StructField("id", IntegerType),
+      StructField("w", ArrayType(StringType, containsNull = true)),
+      StructField("starts", ArrayType(IntegerType, containsNull = false)),
+      StructField("cov", ArrayType(IntegerType, containsNull = false)),
+      StructField("k", IntegerType))))
+    // separate queries: the reference's lambdas are interpreted-only, and
+    // sharing a projection with them would take the kernel out of codegen
+    for (k <- cases.map(_._3).distinct) {
+      val at = df.where($"k" === k)
+      val native = at.select($"id", TextFns.spanKeep($"w", $"starts", k))
+      codegenStage(native, "span_keep")
+      val hof = at.select($"id", TextFns.spanKeepHof($"w", $"cov"))
+      def rows(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(r => r.getInt(0) -> r.get(1)).toMap
+      val (n, h) = (rows(native), rows(hof))
+      assert(n.nonEmpty && n == h, s"span_keep k=$k:\nnative=$n\nhof=$h")
+    }
+  }
+
   test("embedDocuments == HOF form on the real documents table (and the " +
       "dumped schema keeps a nullable embedding element)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
