@@ -375,29 +375,34 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
   protected def pqBooks(s: SparkSession, dir: String): Seq[Seq[Array[Double]]] =
     pqBooksFor(s, dir, "all", Tables.embeddings(s, dir))
 
-  /** Persisted all-corpus PQ code tables (VERDICT r13 #1) — the flat ADC
+  /** Persisted all-corpus PQ code table (VERDICT r13 #1) — the flat ADC
     * family's stored index, the posture every other expensive tier
     * already has: the corpus encodes ONCE per (data fingerprint,
-    * codebooks) and every search (and every later JVM — Verify builds,
-    * Bench reads warm) loads m ints per vector instead of re-running
-    * the packed-min argmin aggregate over the raw vectors. At 100 TB
-    * the difference is a code-table scan vs a full corpus re-encode per
-    * query batch. The wide variant additionally persists the
-    * one-row-per-vector array<int> layout the AdcSumL kernel reads. */
-  protected def pqCodesAll(s: SparkSession, dir: String): DataFrame =
-    parquetArtifact(s, dir, "pq_codes_all_m8_k16", "embeddings")(
-      Similarity.pqEncode(Tables.embeddings(s, dir), pqBooks(s, dir)))
+    * codebooks) into one (vec_id, codes) row per vector, and every
+    * search (and every later JVM — Verify builds, Bench reads warm)
+    * loads m ints per vector instead of re-encoding the raw vectors. At
+    * 100 TB the difference is a code-table scan vs a full corpus
+    * re-encode per query batch. */
   protected def pqCodesAllWide(s: SparkSession, dir: String): DataFrame =
     parquetArtifact(s, dir, "pq_codes_all_wide_m8_k16", "embeddings")(
-      // fused kernel (r15): one zero-shuffle projection over the raw
-      // table — identical content to the narrow-artifact reshape it
-      // replaced (parity spec; artifact name/fingerprint unchanged)
-      Similarity.pqEncodeWideDirect(Tables.embeddings(s, dir), pqBooks(s, dir)))
+      Similarity.pqEncode(Tables.embeddings(s, dir), pqBooks(s, dir)))
+  /** The same codes as (vec_id, sub, code), one row per stored code —
+    * the relation sim_pq_codes outputs and artifact_catalog counts. */
+  protected def pqCodesAll(s: SparkSession, dir: String): DataFrame =
+    parquetArtifact(s, dir, "pq_codes_all_m8_k16", "embeddings")(
+      narrowCodes(pqCodesAllWide(s, dir)))
+
+  /** A code table as (vec_id[, keys…], sub, code): one row per stored
+    * code, sub = its position in `codes` — the relation the code-output
+    * rows emit. A NULL codes row (wrong-width vector) emits nothing. */
+  protected def narrowCodes(codes: DataFrame, keys: String*): DataFrame =
+    codes.select(((col("vec_id") +: keys.map(col)) :+
+      posexplode(col("codes")).as(Seq("sub", "code"))): _*)
 
   /** Shared derived-oracle CTE block for the PQ family: codebook VALUES
     * literals with self-dots, per-subspace corpus slices, and the encode
     * relation `enc(vec_id, sub, code)` — round-6 micro-L2 argmin with
-    * the same (d2u, code) total order the packed-min aggregate uses. */
+    * the same (d2u, code) total order the pq_encode_i kernel uses. */
   protected def pqCtes(books: Seq[Seq[Array[Double]]],
       srcSql: String = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"): String = {
     val values = books.zipWithIndex.flatMap { case (cs, sub) =>
@@ -422,10 +427,10 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
   }
 
   /** PQ encode (Similarity.pqEncode): the corpus as (vec_id, sub, code) —
-    * m codes per vector against the persisted codebooks. THIS relation is
-    * what a 100 TB deployment stores and searches (m bytes instead of D
-    * floats per vector); the derived oracle re-runs the round-6 micro-L2
-    * argmin from the codebook literals. */
+    * m codes per vector against the persisted codebooks, one row per
+    * stored code (m bytes instead of D floats per vector); the derived
+    * oracle re-runs the round-6 micro-L2 argmin from the codebook
+    * literals. */
   protected val simPqCodes = Q("sim_pq_codes",
     (s, dir) => pqCodesAll(s, dir),
     None, oracleFn = Some { (s, dir) =>
@@ -442,7 +447,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
   protected val simPqTopk = Q("sim_pq_topk",
     (s, dir) => {
       val e = Tables.embeddings(s, dir)
-      Similarity.pqTopKAdc(pqCodesAll(s, dir),
+      Similarity.pqTopKAdc(pqCodesAllWide(s, dir),
         e.where(pmod(col("vec_id"), lit(20)) === 0),
         pqBooks(s, dir), k = 10)
     },
@@ -477,7 +482,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
   protected val simPqRerank = Q("sim_pq_rerank",
     (s, dir) => {
       val e = Tables.embeddings(s, dir)
-      Similarity.pqTopKRefined(pqCodesAll(s, dir), e,
+      Similarity.pqTopKRefined(pqCodesAllWide(s, dir), e,
         e.where(pmod(col("vec_id"), lit(20)) === 0),
         pqBooks(s, dir), k = 10, shortlist = 50)
     },
@@ -650,7 +655,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       val e = Tables.embeddings(s, dir)
       val brute = Similarity.bruteTopK(e, k = 10, stride = 20)
         .select(col("query_id"), col("neighbor_id"))
-      val pq = Similarity.pqTopKRefined(pqCodesAll(s, dir), e,
+      val pq = Similarity.pqTopKRefined(pqCodesAllWide(s, dir), e,
           e.where(pmod(col("vec_id"), lit(20)) === 0),
           pqBooks(s, dir), k = 10, shortlist = 200)
         .select(col("query_id"), col("neighbor_id"))
@@ -711,21 +716,21 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * sim_ivf_incr: codebooks train on HISTORY only (vec_id ≡ 0 mod 7)
     * and persist; the history CODE TABLE is itself a parquet artifact
     * (encoded once, never re-encoded); a new batch encodes against the
-    * LOADED codebooks — one broadcast + one packed-min aggregate per
-    * batch, history vectors never rescanned — and appends with its
-    * origin tag. Derived oracle re-encodes every row from the
-    * history-trained literals (encode is per-row, so one enc relation
-    * serves both origins). */
+    * LOADED codebooks — one pq_encode_i projection per batch, history
+    * vectors never rescanned — and appends with its
+    * origin tag, as (vec_id, sub, code) rows. Derived oracle re-encodes
+    * every row from the history-trained literals (encode is per-row, so
+    * one enc relation serves both origins). */
   protected val simPqIncr = Q("sim_pq_incr",
     (s, dir) => {
       val e = Tables.embeddings(s, dir)
       val books = pqBooksFor(s, dir, "hist7",
         e.where(pmod(col("vec_id"), lit(7)) === 0))
-      val histCodes = parquetArtifact(s, dir, "pq_codes_hist7", "embeddings")(
+      val histCodes = parquetArtifact(s, dir, "pq_codes_wide_hist7", "embeddings")(
         Similarity.pqEncode(e.where(pmod(col("vec_id"), lit(7)) === 0), books))
-      histCodes.withColumn("origin", lit("history"))
-        .unionByName(
-          Similarity.pqEncode(e.where(pmod(col("vec_id"), lit(7)) =!= 0), books)
+      narrowCodes(histCodes).withColumn("origin", lit("history"))
+        .unionByName(narrowCodes(
+          Similarity.pqEncode(e.where(pmod(col("vec_id"), lit(7)) =!= 0), books))
             .withColumn("origin", lit("batch")))
     },
     None, oracleFn = Some { (s, dir) =>
@@ -761,14 +766,10 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     pqBooksFor(s, dir, "opqrot", opqEmbRotated(s, dir))
   protected val simOpqTopk = Q("sim_opq_topk",
     (s, dir) => {
-      // WIDE layout (bit-identical to narrow, same oracle): one stored
-      // array<int> row per vector and one adc_sum_l per pair — the
-      // narrow twin's per-(query, vec) re-aggregation is the measured
-      // sf1 bottleneck (85 s narrow vs ~32 s wide, NOTES r14)
       val codesWide = parquetArtifact(s, dir, "pq_codes_opqrot_wide_m8_k16",
-        "embeddings")(Similarity.pqEncodeWideDirect(
+        "embeddings")(Similarity.pqEncode(
         opqEmbRotated(s, dir), opqEmbBooks(s, dir)))
-      Similarity.pqTopKAdcWide(codesWide,
+      Similarity.pqTopKAdc(codesWide,
         opqEmbRotated(s, dir).where(pmod(col("vec_id"), lit(20)) === 0),
         opqEmbBooks(s, dir), k = 10)
     },
@@ -822,12 +823,12 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       def rot(df: DataFrame): DataFrame = Similarity.rotateEmbeddings(df, r)
       val books = pqBooksFor(s, dir, "opqrot_hist7",
         rot(e.where(pmod(col("vec_id"), lit(7)) === 0)))
-      val histCodes = parquetArtifact(s, dir, "opq_codes_hist7_m8_k16",
+      val histCodes = parquetArtifact(s, dir, "opq_codes_wide_hist7_m8_k16",
         "embeddings")(
         Similarity.pqEncode(rot(e.where(pmod(col("vec_id"), lit(7)) === 0)), books))
-      histCodes.withColumn("origin", lit("history"))
-        .unionByName(
-          Similarity.pqEncode(rot(e.where(pmod(col("vec_id"), lit(7)) =!= 0)), books)
+      narrowCodes(histCodes).withColumn("origin", lit("history"))
+        .unionByName(narrowCodes(
+          Similarity.pqEncode(rot(e.where(pmod(col("vec_id"), lit(7)) =!= 0)), books))
             .withColumn("origin", lit("batch")))
     },
     None, oracleFn = Some { (s, dir) =>
@@ -866,9 +867,9 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       val brute = Similarity.bruteTopK(e, k = 10, stride = 20)
         .select(col("query_id"), col("neighbor_id"))
       val codesWide = parquetArtifact(s, dir, "pq_codes_opqrot_wide_m8_k16",
-        "embeddings")(Similarity.pqEncodeWideDirect(
+        "embeddings")(Similarity.pqEncode(
         opqEmbRotated(s, dir), opqEmbBooks(s, dir)))
-      val opq = Similarity.pqTopKAdcWide(codesWide,
+      val opq = Similarity.pqTopKAdc(codesWide,
           opqEmbRotated(s, dir).where(pmod(col("vec_id"), lit(20)) === 0),
           opqEmbBooks(s, dir), k = 10)
         .select(col("query_id"), col("neighbor_id"))
@@ -926,17 +927,21 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
 
   /** IVF-PQ composition (Similarity.ivfPqTopK): cell-probed ADC — the
     * corpus is cell-assigned against the persisted embedding centroids
-    * AND PQ-encoded against the persisted codebooks; a query probes its
-    * 3 nearest cells and scores only those cells' CODES. Both pruning
-    * structures are loaded artifacts; the derived oracle re-runs
-    * assignment, probe ranking and ADC from the two literal sets. */
+    * AND PQ-encoded against the persisted codebooks into one stored
+    * (vec_id, cell, codes) row per vector (a write-once artifact:
+    * searches never re-assign or re-encode the corpus); a query probes
+    * its 3 nearest cells and scores only those cells' CODES. The
+    * derived oracle re-runs assignment, probe ranking and ADC from the
+    * two literal sets. */
   protected val simIvfpqTopk = Q("sim_ivfpq_topk",
     (s, dir) => {
       val e = Tables.embeddings(s, dir)
-      Similarity.ivfPqTopK(e,
+      val cents = embCentroids(s, dir, "all", e)
+      val codes = parquetArtifact(s, dir, "ivfpq_codes_wide_m8_k16_c10",
+        "embeddings")(Similarity.ivfPqEncode(e, cents, pqBooks(s, dir)))
+      Similarity.ivfPqTopK(codes,
         e.where(pmod(col("vec_id"), lit(20)) === 0),
-        embCentroids(s, dir, "all", Tables.embeddings(s, dir)),
-        pqBooks(s, dir), k = 10, nProbes = 3)
+        cents, pqBooks(s, dir), k = 10, nProbes = 3)
     },
     None, oracleFn = Some { (s, dir) =>
       val cents = embCentroids(s, dir, "all", Tables.embeddings(s, dir))
@@ -1421,8 +1426,9 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       val cents = fixCents(s)
       val brute = Similarity.bruteTopK(fix, k = 10, stride = 20)
         .select(col("query_id"), col("neighbor_id"))
-      val raw = Similarity.ivfPqTopK(fix, fq, cents, fixRawBooks(s),
-          k = 10, nProbes = 2)
+      val raw = Similarity.ivfPqTopK(
+          Similarity.ivfPqEncode(fix, cents, fixRawBooks(s)),
+          fq, cents, fixRawBooks(s), k = 10, nProbes = 2)
         .select(col("query_id"), col("neighbor_id"))
       val res = Similarity.ivfPqResidualTopK(
           Similarity.ivfPqResidualEncode(fix, cents, fixResBooks(s)),
@@ -1903,11 +1909,11 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
   /** OPQ composed with residual IVF-PQ beats the unrotated residual tier
     * at equal code budget on the smeared-latent corpus — ORACLE-CHECKED
     * recall pair (VERDICT r14 #1, the sim_residual_gain pattern) over the
-    * complete FAISS production layout (Similarity.opqIvfPqEncodeWide /
-    * opqIvfPqTopKWide): rotate by the TRAINED Jacobi rotation, cell-assign
+    * complete FAISS production layout (Similarity.opqIvfPqEncode /
+    * opqIvfPqTopK): rotate by the TRAINED Jacobi rotation, cell-assign
     * the rotated vector, PQ-encode the rotated residual, search with one
     * exact per-probed-cell LUT from the rotated query's residual. Both
-    * code tables are persisted WIDE artifacts; both searches read stored
+    * code tables are persisted artifacts; both searches read stored
     * codes only. NOTES.md r15 probe sweep at 8 cells / 2 probes: resid 0.807,
     * opq∘resid 0.832 recall@10 (flat trained OPQ: 0.796) — the residual
     * tier already absorbs most of the anisotropy the rotation targets
@@ -1922,16 +1928,16 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       val brute = Similarity.bruteTopK(corpus, k = 10, stride = 20)
         .select(col("query_id"), col("neighbor_id"))
       val codesU = parquetArtifact(s, dir, "opqivf_codes_u_wide_m8_k16_c8",
-        "embeddings")(Similarity.ivfPqResidualEncodeWide(corpus,
+        "embeddings")(Similarity.ivfPqResidualEncode(corpus,
         opqIvfCentsU(s), opqIvfBooksU(s)))
-      val resid = Similarity.ivfPqResidualTopKWide(codesU,
+      val resid = Similarity.ivfPqResidualTopK(codesU,
           corpus.where(pmod(col("vec_id"), lit(20)) === 0),
           opqIvfCentsU(s), opqIvfBooksU(s), k = 10, nProbes = 2)
         .select(col("query_id"), col("neighbor_id"))
       val codesR = parquetArtifact(s, dir, "opqivf_codes_r_wide_m8_k16_c8",
-        "embeddings")(Similarity.opqIvfPqEncodeWide(corpus, opqTrainedR(s),
+        "embeddings")(Similarity.opqIvfPqEncode(corpus, opqTrainedR(s),
         opqIvfCentsR(s), opqIvfBooksR(s)))
-      val opq = Similarity.opqIvfPqTopKWide(codesR,
+      val opq = Similarity.opqIvfPqTopK(codesR,
           corpus.where(pmod(col("vec_id"), lit(20)) === 0), opqTrainedR(s),
           opqIvfCentsR(s), opqIvfBooksR(s), k = 10, nProbes = 2)
         .select(col("query_id"), col("neighbor_id"))
@@ -2023,9 +2029,9 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       val e = Tables.embeddings(s, dir)
       val codesWide = parquetArtifact(s, dir,
         "opq_ivfpq_resid_codes_wide_m8_k16_c10", "embeddings")(
-        Similarity.opqIvfPqEncodeWide(e, opqEmbR(s, dir),
+        Similarity.opqIvfPqEncode(e, opqEmbR(s, dir),
           opqEmbResidCents(s, dir), opqEmbResidBooks(s, dir)))
-      Similarity.opqIvfPqTopKWide(codesWide,
+      Similarity.opqIvfPqTopK(codesWide,
         e.where(pmod(col("vec_id"), lit(20)) === 0), opqEmbR(s, dir),
         opqEmbResidCents(s, dir), opqEmbResidBooks(s, dir),
         k = 10, nProbes = 3)
@@ -2065,9 +2071,9 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
         .select(col("query_id"), col("neighbor_id"))
       val codesWide = parquetArtifact(s, dir,
         "opq_ivfpq_resid_codes_wide_m8_k16_c10", "embeddings")(
-        Similarity.opqIvfPqEncodeWide(e, opqEmbR(s, dir),
+        Similarity.opqIvfPqEncode(e, opqEmbR(s, dir),
           opqEmbResidCents(s, dir), opqEmbResidBooks(s, dir)))
-      val opq = Similarity.opqIvfPqTopKWide(codesWide,
+      val opq = Similarity.opqIvfPqTopK(codesWide,
           e.where(pmod(col("vec_id"), lit(20)) === 0), opqEmbR(s, dir),
           opqEmbResidCents(s, dir), opqEmbResidBooks(s, dir),
           k = 10, nProbes = 3)
@@ -2153,16 +2159,16 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       val brute = Similarity.bruteTopK(fix, k = 10, stride = 20)
         .select(col("query_id"), col("neighbor_id"))
       val codesU = parquetArtifact(s, dir, "opqivfc_codes_u_wide_m8_k8_c8",
-        "embeddings")(Similarity.ivfPqResidualEncodeWide(fix,
+        "embeddings")(Similarity.ivfPqResidualEncode(fix,
         opqIvfcCentsU(s), opqIvfcBooksU(s)))
-      val resid = Similarity.ivfPqResidualTopKWide(codesU,
+      val resid = Similarity.ivfPqResidualTopK(codesU,
           fix.where(pmod(col("vec_id"), lit(20)) === 0),
           opqIvfcCentsU(s), opqIvfcBooksU(s), k = 10, nProbes = 2)
         .select(col("query_id"), col("neighbor_id"))
       val codesR = parquetArtifact(s, dir, "opqivfc_codes_r_wide_m8_k8_c8",
-        "embeddings")(Similarity.opqIvfPqEncodeWide(fix, opqIvfcR(s),
+        "embeddings")(Similarity.opqIvfPqEncode(fix, opqIvfcR(s),
         opqIvfcCentsR(s), opqIvfcBooksR(s)))
-      val opq = Similarity.opqIvfPqTopKWide(codesR,
+      val opq = Similarity.opqIvfPqTopK(codesR,
           fix.where(pmod(col("vec_id"), lit(20)) === 0), opqIvfcR(s),
           opqIvfcCentsR(s), opqIvfcBooksR(s), k = 10, nProbes = 2)
         .select(col("query_id"), col("neighbor_id"))
@@ -2229,10 +2235,10 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
   /** Incremental maintenance for the COMPOSED index — the sim_opq_incr
     * posture applied to the full chain: rotation, rotated-space cells
     * and residual codebooks all train on HISTORY only (vec_id ≡ 0
-    * mod 7) and persist; the history (vec_id, cell, sub, code) table is
+    * mod 7) and persist; the history (vec_id, cell, codes) table is
     * a write-once artifact; a new batch rotates + cell-assigns +
     * residual-encodes against the LOADED artifacts and appends
-    * origin-tagged — history vectors never rescanned, nothing ever
+    * origin-tagged as (vec_id, cell, sub, code) rows — history vectors never rescanned, nothing ever
     * retrained per batch. Derived oracle re-runs rotate → assign →
     * residual-encode for every row from the history-trained literals
     * (per-row ops, so one derivation serves both origins). */
@@ -2259,13 +2265,13 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       val cents = opqIvfHistCents(s, dir)
       val books = opqIvfHistBooks(s, dir)
       val histCodes = parquetArtifact(s, dir,
-        "opq_ivfpq_resid_codes_hist7_m8_k16_c10", "embeddings")(
+        "opq_ivfpq_resid_codes_wide_hist7_m8_k16_c10", "embeddings")(
         Similarity.ivfPqResidualEncode(
           rot(e.where(pmod(col("vec_id"), lit(7)) === 0)), cents, books))
-      histCodes.withColumn("origin", lit("history"))
-        .unionByName(
+      narrowCodes(histCodes, "cell").withColumn("origin", lit("history"))
+        .unionByName(narrowCodes(
           Similarity.ivfPqResidualEncode(
-              rot(e.where(pmod(col("vec_id"), lit(7)) =!= 0)), cents, books)
+              rot(e.where(pmod(col("vec_id"), lit(7)) =!= 0)), cents, books), "cell")
             .withColumn("origin", lit("batch")))
     },
     None, oracleFn = Some { (s, dir) =>
@@ -2300,9 +2306,8 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
               m = 8, ksub = 16)))))
 
   /** Residual IVF-PQ search (Similarity.ivfPqResidualTopK) — the complete
-    * FAISS IVFADC layout: the stored code table is (vec_id, cell, sub,
-    * code) over RESIDUALS v − c(cell) (a persisted artifact, encoded
-    * once), queries probe 3 of the 10 persisted cells and ADC-score with
+    * FAISS IVFADC layout: the stored code table is (vec_id, cell, codes)
+    * over RESIDUALS v − c(cell) (a persisted artifact, encoded once), queries probe 3 of the 10 persisted cells and ADC-score with
     * one exact LUT PER PROBED CELL from their own residual. The derived
     * oracle re-runs assignment, residuals, encode, probe ranking and ADC
     * from the two literal sets (centroids + residual codebooks). */
@@ -2311,7 +2316,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       val e = Tables.embeddings(s, dir)
       val cents = embCentroids(s, dir, "all", e)
       val books = pqResidBooks(s, dir)
-      val codes = parquetArtifact(s, dir, "ivfpq_resid_codes_m8_k16_c10",
+      val codes = parquetArtifact(s, dir, "ivfpq_resid_codes_wide_m8_k16_c10",
         "embeddings")(Similarity.ivfPqResidualEncode(e, cents, books))
       Similarity.ivfPqResidualTopK(codes,
         e.where(pmod(col("vec_id"), lit(20)) === 0),
@@ -2386,59 +2391,15 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
         |FROM r WHERE rank <= 10""".stripMargin
     })
 
-  /** WIDE-layout twin of sim_pq_topk (Similarity.pqCodesWide +
-    * pqTopKAdcWide): one array<int> code row per vector, the query LUT
-    * flattened to a broadcast array, and each pair scored by ONE native
-    * adc_sum_l (m loads+adds) — no per-(query, vec) re-aggregation of m
-    * joined rows, which is what dominates the narrow search at sf1
-    * (NOTES r13 measurements). Bit-identical results ⇒ the SAME derived
-    * oracle as the narrow twin. */
-  protected val simPqTopkWide = Q("sim_pq_topk_wide",
-    (s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      Similarity.pqTopKAdcWide(pqCodesAllWide(s, dir),
-        e.where(pmod(col("vec_id"), lit(20)) === 0), pqBooks(s, dir), k = 10)
-    },
+  /** sim_pq_topk, sim_ivfpq_topk and sim_ivfpq_residual under their
+    * earlier `_wide` names: the same query and oracle, kept so the bench
+    * board and plan pins that name them stay comparable. */
+  protected val simPqTopkWide = Q("sim_pq_topk_wide", simPqTopk.fn,
     None, oracleFn = simPqTopk.oracleFn, bench = true)
-
-  /** WIDE-layout twin of sim_ivfpq_topk (Similarity.ivfPqTopKWide):
-    * raw-vector LUTs are cell-independent, so each query ships one
-    * broadcast array; the probe relation restricts the cell equi-join
-    * and each surviving pair costs one adc_sum_l. Same derived oracle —
-    * bit-identical ranking. */
-  protected val simIvfpqTopkWide = Q("sim_ivfpq_topk_wide",
-    (s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val cents = embCentroids(s, dir, "all", e)
-      // the stored (vec_id, cell, codes) row persists once (r14 — the
-      // sim_ivfpq_residual posture): searches read the artifact, never
-      // re-assign or re-encode the corpus
-      val codesWide = parquetArtifact(s, dir, "ivfpq_codes_wide_m8_k16_c10",
-        "embeddings")(Similarity.ivfPqEncodeWide(e, cents, pqBooks(s, dir)))
-      Similarity.ivfPqTopKWideFrom(codesWide,
-        e.where(pmod(col("vec_id"), lit(20)) === 0),
-        cents, pqBooks(s, dir), k = 10, nProbes = 3)
-    },
+  protected val simIvfpqTopkWide = Q("sim_ivfpq_topk_wide", simIvfpqTopk.fn,
     None, oracleFn = simIvfpqTopk.oracleFn)
-
-  /** WIDE-layout twin of sim_ivfpq_residual: the stored code artifact
-    * reshapes to (vec_id, cell, codes) once at load, per-probe LUTs
-    * collapse to broadcast arrays, and the cell equi-join + one
-    * adc_sum_l per pair replaces the narrow join + 8-rows-per-pair
-    * aggregate. Same derived oracle — results are bit-identical. */
   protected val simIvfpqResidualWide = Q("sim_ivfpq_residual_wide",
-    (s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val cents = embCentroids(s, dir, "all", e)
-      val books = pqResidBooks(s, dir)
-      val codes = parquetArtifact(s, dir, "ivfpq_resid_codes_m8_k16_c10",
-        "embeddings")(Similarity.ivfPqResidualEncode(e, cents, books))
-      Similarity.ivfPqResidualTopKWide(
-        Similarity.pqCodesWide(codes, Seq("cell")),
-        e.where(pmod(col("vec_id"), lit(20)) === 0),
-        cents, books, k = 10, nProbes = 3)
-    },
-    None, oracleFn = simIvfpqResidual.oracleFn)
+    simIvfpqResidual.fn, None, oracleFn = simIvfpqResidual.oracleFn)
 
   /** Debug catalog of the persisted artifacts under this sfDir's root
     * (VERDICT r14 #7): one row per artifact dir — logical name, source

@@ -6,21 +6,30 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Similarity search over the `embeddings` table (SURVEY.md §2.10).
+/** Similarity search over the `embeddings` table (SURVEY.md §2.10), as
+  * tiers that trade exactness for the share of the corpus they read:
+  *  - exact: [[bruteTopK]] / [[bruteTopKAgg]] / [[crossTopK]] — the query
+  *    set broadcasts against the corpus scan, cosine is a codegen'd fold,
+  *    and a per-query window keeps the top k. The correctness baseline.
+  *  - LSH: [[lshTopK]], [[crossTopKLsh]] and their multi-probe forms —
+  *    sign-hyperplane buckets turn the pair loop into a bucket equi-join.
+  *  - IVF: [[ivfTopK]] (per-label representatives), [[ivfTopKKmeans]] and
+  *    [[crossTopKIvf]] (trained k-means‖ cells) — a query probes its
+  *    nearest cells only; the same cells drive [[semanticDedup]].
+  *  - PQ family: [[pqEncode]] stores m codes per vector; flat ADC
+  *    ([[pqTopKAdc]], [[pqTopKRefined]]), IVF-PQ ([[ivfPqTopK]]),
+  *    residual IVF-PQ ([[ivfPqResidualTopK]]) and OPQ ∘ residual
+  *    ([[opqIvfPqTopK]]) each build their query LUTs and share one ADC
+  *    search body.
+  *  - binary: [[binqEncode]] sign bits, Hamming top-k and the exact
+  *    banded near-dup join ([[hammingNearDupPairs]]).
+  *  - int8: [[sq8Encode]] / [[sq8TopK]] scalar quantization.
+  *  - graph: [[GraphAnn]] walks an NN-Descent graph and routes with this
+  *    object's ADC LUTs and code guards.
   *
-  * Two paths, same contract (query_id, rank, neighbor_id, cosine):
-  *  - [[bruteTopK]]: exact top-k — the correctness baseline. The query set
-  *    is broadcast against the corpus scan, cosine is a codegen'd fold, and
-  *    top-k is a per-query window. At 100 TB the corpus side stays
-  *    partitioned-and-parallel; only |queries|×k rows survive the window.
-  *  - [[ivfTopK]]: IVF-style scale path — the corpus is bucketed into cells
-  *    by nearest centroid, and each query probes only its own cell
-  *    (1/|cells| of the corpus). Centroids here are deterministic
-  *    representatives (min vec_id per label) so results are exactly
-  *    reproducible cross-engine; a production build would k-means them.
-  *
-  * Norms are precomputed once per side; the window's `orderBy` rounds the
-  * cosine and tie-breaks on neighbor id so ranking is deterministic.
+  * Every tier outputs (query_id, rank, neighbor_id, score) with a
+  * deterministic total order: scores are rounded or integral, and ties
+  * break on neighbor id, so results hash-check against DuckDB.
   */
 object Similarity {
 
@@ -843,43 +852,38 @@ object Similarity {
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray).toSeq)
 
-  /** PQ ENCODE: (vec_id, sub, code) — each subvector's nearest codebook
-    * entry by round-6 micro-L2 (tie: smaller code). One broadcast of the
-    * m·ksub codebook + one packed-long min aggregate (the
-    * [[assignCellsWithCos]] shape: map-side partial, no window, no
-    * shuffle of the m·ksub expansion) — at corpus scale THIS is the
-    * stored table, m codes per vector instead of D floats. */
+  /** PQ ENCODE: (vec_id, codes) — one row per vector with its m codes as
+    * `array<int>` in sub order (the FAISS contiguous-codes layout), each
+    * code the subvector's nearest codebook entry by round-6 micro-L2
+    * (tie: smaller code). A pure projection through the fused
+    * [[graft.plans.PqEncodeI]] kernel: zero fan-out, zero shuffle, so at
+    * corpus scale the encode job is embarrassingly parallel and its
+    * output is the stored table — m ints per vector instead of D floats.
+    * A vector of the wrong width encodes to NULL codes, which every
+    * search drops per row ([[validWideCodes]]). */
   def pqEncode(embeddings: DataFrame,
       books: Seq[Seq[Array[Double]]]): DataFrame =
-    pqEncodeCore(preparedVecs(embeddings).select(col("vec_id"), col("v")),
+    pqEncodeKeyed(preparedVecs(embeddings).select(col("vec_id"), col("v")),
       books, Nil)
 
-  /** Shared encode body: `prep` carries (vec_id, v) plus any
-    * `extraKeys` that must ride the grouping key to the output without a
-    * rejoin (the [[assignCellsWithCos]] trick — [[ivfPqResidualEncode]]
-    * threads `cell` through this way, so one pass emits the whole stored
-    * row). */
-  private def pqEncodeCore(prep: DataFrame,
+  /** Shared encode body: `prep` carries (vec_id, extraKeys…, v); the
+    * keys ride to the output unchanged, so the IVF encodes emit the
+    * whole stored (vec_id, cell, codes) row in one pass. The codes sit
+    * behind [[Stage]]: as a plain projection, every filter on `codes`
+    * downstream — the search's [[validWideCodes]] guard, the
+    * `size(codes) > 0` the optimizer infers under an explode — would be
+    * pushed below it with the kernel substituted, running pq_encode_i up
+    * to three times per row. */
+  private def pqEncodeKeyed(prep: DataFrame,
       books: Seq[Seq[Array[Double]]], extraKeys: Seq[String]): DataFrame = {
-    val dsub = books.head.head.length
-    val cb = codebookFrame(prep.sparkSession, books)
-    val keyCols = col("vec_id") +: extraKeys.map(col)
-    prep
-      .crossJoin(broadcast(cb))
-      .select((keyCols ++ Seq(col("sub"), col("code"),
-        d2Micros(slice(col("v"), col("sub") * dsub + lit(1), lit(dsub)),
-          col("cv"), col("cc")).as("d2u"))): _*)
-      // packed lexicographic (d2u, code) min in ONE primitive long:
-      // d2u · 2¹⁶ + code (ksub < 2¹⁶ by contract)
-      .groupBy((keyCols :+ col("sub")): _*)
-      .agg(min(col("d2u") * lit(65536L) + col("code")).as("best"))
-      .select((keyCols ++ Seq(col("sub"),
-        pmod(col("best"), lit(65536L)).cast("int").as("code"))): _*)
+    requireUniformBooks(books)
+    Stage(prep, "codes", graft.functions.SimFns.pqEncodeCodes(col("v"), books))
+      .select((col("vec_id") +: extraKeys.map(col) :+ col("codes")): _*)
   }
 
   /** The per-query exact subspace-distance lookup table (query_id, sub,
     * code, d2u) — |queries|·m·ksub rows, tiny, built once per search and
-    * broadcast. Shared by [[pqTopKAdc]] and [[ivfPqTopK]]. */
+    * broadcast. [[adcLutWideFrom]] flattens it for the ADC kernel. */
   private[operators] def adcLut(queries: DataFrame,
       books: Seq[Seq[Array[Double]]]): DataFrame = {
     val dsub = books.head.head.length
@@ -911,14 +915,14 @@ object Similarity {
       .select(col("query_id"), col("qv"), col("qnrm"), col("cell"))
 
   /** Shared distance-ASC ranking tail: d2u asc NULLS LAST with
-    * neighbor-id tie-break. The wide callers guard BOTH join sides
-    * per-row ([[validWideCodes]]/[[validWideLut]]) so a null d2u is
-    * impossible by construction — a `d2u IS NOT NULL` filter here
-    * would be WRONG: Catalyst inlines the alias and pushes the whole
-    * `adc_sum_l` into the join condition, re-evaluating the pair
-    * kernel per pair (the r12 double-dot defect class; PlanShapeSpec
-    * pins kernels out of join conditions). NULLS LAST stays as
-    * belt-and-braces ordering only. */
+    * neighbor-id tie-break. [[adcTopK]] guards BOTH join sides per-row
+    * ([[validWideCodes]]/[[validWideLut]]) so a null d2u is impossible
+    * by construction — a `d2u IS NOT NULL` filter here would be WRONG:
+    * Catalyst inlines the alias and pushes the whole `adc_sum_l` into
+    * the join condition, re-evaluating the pair kernel per pair (the
+    * r12 double-dot defect class; PlanShapeSpec pins kernels out of
+    * join conditions). NULLS LAST stays as belt-and-braces ordering
+    * only. */
   private def rankAscByDist(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("d2u").asc_nulls_last, col("vec_id"))
@@ -928,121 +932,37 @@ object Similarity {
         col("vec_id").as("neighbor_id"), col("d2u"))
   }
 
-  /** Per-ROW validity guards for the wide ADC join sides — the
+  /** Per-ROW validity guards for the ADC join sides — the
     * [[scoreAgainst]] degenerate-input posture applied to the code
     * tier (ADVICE r13): every null source of [[graft.plans.AdcSumL]]
     * (wrong code count, out-of-range or null code, wrong LUT length,
     * null LUT entry — the stale-artifact-searched-with-wrong-books
     * cases) is a property of ONE side, so mismatched rows drop per-row
     * BEFORE the pair join — never k null-distance rows in the output
-    * (matching the narrow path's n_sub filter) and never a predicate
-    * on the kernel's alias that Catalyst would inline into the join
-    * condition. The HOF guards run once per stored row / per query,
-    * not per pair. */
+    * and never a predicate on the kernel's alias that Catalyst would
+    * inline into the join condition. The HOF guards run once per stored
+    * row / per query, not per pair. */
   private[operators] def validWideCodes(m: Int, ksub: Int): Column =
     size(col("codes")) === m &&
       forall(col("codes"), c => c.isNotNull && c >= 0 && c < lit(ksub))
   private[operators] def validWideLut(m: Int, ksub: Int): Column =
     size(col("lut")) === m * ksub && !exists(col("lut"), _.isNull)
 
-  /** Shared NARROW ADC ranking tail: integer distance sum over the m
-    * subspaces, then [[rankAscByDist]]. `m` guards completeness: a pair
-    * whose codes matched FEWER than m LUT rows (stale code artifact
-    * searched with the wrong books — codes ≥ the books\' ksub simply
-    * fail the equi-join) would otherwise rank on a silently-PARTIAL
-    * sum, i.e. an underestimated distance that looks like a great
-    * neighbor (review r13). Such pairs drop — loud by absence, the
-    * same contract [[graft.plans.AdcSumL]] enforces with its
-    * out-of-range null. The filter sits ABOVE the aggregate, so
-    * nothing lands in a join condition. */
-  private def rankAdc(scored: DataFrame, k: Int, m: Int): DataFrame = {
-    val summed = scored
-      .where(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("d2u")).as("d2u"), count(lit(1)).as("n_sub"))
-      .where(col("n_sub") === m && col("d2u").isNotNull)
-      .drop("n_sub")
-    rankAscByDist(summed, k)
-  }
-
-  /** The wide ADC layout flattens per-subspace LUT slices positionally
+  /** The ADC layout flattens per-subspace LUT slices positionally
     * (entry sub·ksub + code), which is only well-defined when every
     * subspace has the SAME codebook size — [[pqTrain]] legitimately
     * emits fewer codes for a low-diversity subspace (distinct-subvector
     * cap), and a ragged flatten would misalign every lookup (review
-    * r13). Fail loudly instead. */
+    * r13). Every encode and search fails loudly instead. */
   private def requireUniformBooks(books: Seq[Seq[Array[Double]]]): Unit =
     require(books.forall(_.size == books.head.size),
-      s"wide ADC layout requires uniform per-subspace codebook sizes, " +
-        s"got ${books.map(_.size).mkString(",")} — pad or retrain " +
-        "(the narrow path serves ragged books)")
-
-  /** ADC top-k over a PRE-ENCODED code table: the query side expands to
-    * its exact per-(sub, code) distance LUT (|queries|·m·ksub rows, tiny,
-    * broadcast), the code table joins it on (sub, code), and the ADC
-    * distance is an integer SUM over the m subspaces — corpus vectors
-    * are never touched, and the whole search is one broadcast hash join
-    * + one map-combinable aggregate at ANY corpus size. Ranking is
-    * distance ASC with neighbor-id tie-break (total order ⇒ hash-exact).
-    * Output: (query_id, rank, neighbor_id, d2u) with d2u the summed
-    * micro-L2. Self-pairs are excluded by id (the [[bruteTopK]]
-    * convention — queries here come from the same id space). */
-  def pqTopKAdc(codes: DataFrame, queries: DataFrame,
-      books: Seq[Seq[Array[Double]]], k: Int): DataFrame =
-    rankAdc(codes.join(broadcast(adcLut(queries, books)), Seq("sub", "code")),
-      k, books.size)
-
-  /** Narrow (vec_id[, keys…], sub, code) code table → WIDE layout: one
-    * row per vector with its m codes as `array<int>` in sub order (the
-    * FAISS contiguous-codes layout). `extraKeys` ride the grouping key
-    * ([[pqEncodeCore]]'s contract — `cell` for the IVF-PQ tables). The
-    * wide row is what a 100 TB deployment stores: scoring reads ONE row
-    * per vector and the ADC sum is m primitive loads ([[graft.plans
-    * .AdcSumL]]) instead of m joined rows re-aggregated per pair —
-    * measured at sf1 the narrow aggregate dominates the whole search. */
-  /** WIDE encode as a PURE PROJECTION — the fused-kernel fast path
-    * ([[graft.plans.PqEncodeI]]): one (keys…, codes) row per vector with
-    * zero fan-out and ZERO SHUFFLE, bit-identical to
-    * [[pqCodesWide]]([[pqEncode]](…)) (parity spec incl. the (d2u, code)
-    * tie-break; every PQ-family oracle hash-exact across the swap). The
-    * declarative narrow encode stays for the narrow-table queries; at
-    * corpus scale THIS is the encode job — embarrassingly parallel. */
-  def pqEncodeWideDirect(embeddings: DataFrame,
-      books: Seq[Seq[Array[Double]]]): DataFrame =
-    pqEncodeWideCore(preparedVecs(embeddings).select(col("vec_id"), col("v")),
-      books, Nil)
-
-  /** Shared fused-encode body — `prep` carries (vec_id, extraKeys…, v),
-    * the [[pqEncodeCore]] contract. */
-  private def pqEncodeWideCore(prep: DataFrame,
-      books: Seq[Seq[Array[Double]]], extraKeys: Seq[String]): DataFrame = {
-    requireUniformBooks(books)
-    val keyCols = col("vec_id") +: extraKeys.map(col)
-    prep.select((keyCols :+
-      graft.functions.SimFns.pqEncodeCodes(col("v"), books).as("codes")): _*)
-  }
-
-  /** [[ivfPqResidualEncode]] emitting the WIDE row directly through the
-    * fused kernel — cell-assign, residual, all m codes in one projection,
-    * zero shuffle past the assignment's map-side aggregate. */
-  def ivfPqResidualEncodeWide(corpus: DataFrame, cents: Seq[Array[Double]],
-      books: Seq[Seq[Array[Double]]]): DataFrame =
-    pqEncodeWideCore(residualFrame(corpus, cents)
-      .select(col("vec_id"), col("cell"), col("embedding").as("v")),
-      books, Seq("cell"))
-
-  def pqCodesWide(codes: DataFrame, extraKeys: Seq[String] = Nil): DataFrame = {
-    val keyCols = col("vec_id") +: extraKeys.map(col)
-    codes.groupBy(keyCols: _*)
-      .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("sc"))
-      .select((keyCols :+
-        transform(col("sc"), x => x.getField("code")).as("codes")): _*)
-  }
+      s"PQ codes require uniform per-subspace codebook sizes, " +
+        s"got ${books.map(_.size).mkString(",")} — pad or retrain")
 
   /** The per-query LUT of [[adcLut]] flattened sub-major to ONE
     * `array<bigint>` row per query (entry sub·ksub + code), ready for
-    * the [[graft.plans.AdcSumL]] kernel. `extraKeys` as above (`cell`
-    * for the per-probe residual LUTs). */
+    * the [[graft.plans.AdcSumL]] kernel. `extraKeys` ride the grouping
+    * key (`cell` for the per-probe residual LUTs). */
   private[operators] def adcLutWideFrom(lut: DataFrame,
       extraKeys: Seq[String] = Nil): DataFrame = {
     val keyCols = col("query_id") +: extraKeys.map(col)
@@ -1053,101 +973,86 @@ object Similarity {
         transform(col("scl"), x => x.getField("d2u")).as("lut")): _*)
   }
 
-  /** [[pqTopKAdc]] over the WIDE layout — bit-identical results, one
-    * row and one `adc_sum_l` call per scored pair: the query side
-    * collapses its LUT to a broadcast array, every corpus row scores as
-    * m loads+adds inside whole-stage codegen, and the only aggregate
-    * left is the rank window (the narrow path's per-(query, vec)
-    * re-aggregation of m joined rows is gone — THE sf1 bottleneck).
-    * Same contract: (query_id, rank, neighbor_id, d2u). */
-  def pqTopKAdcWide(codesWide: DataFrame, queries: DataFrame,
+  /** The per-(query, probed cell) ADC LUT (query_id, cell, sub, code,
+    * d2u) of the IVF faces: the `nProbes` nearest cells per query
+    * ([[probeCells]]), then one exact subspace-distance table per probe.
+    * With `residual` the table is built from the query's OWN residual
+    * q − c(cell), matching codes that quantize v − c(cell); without it,
+    * from the raw query — the same table for every probed cell. */
+  private def probedAdcLut(queries: DataFrame, cents: Seq[Array[Double]],
+      books: Seq[Seq[Array[Double]]], nProbes: Int,
+      residual: Boolean): DataFrame = {
+    val spark = queries.sparkSession
+    val cdf = centroidFrame(spark, cents)
+    val dsub = books.head.head.length
+    val probes = probeCells(queries, cdf, nProbes)
+      .select(col("query_id"), col("cell"), col("qv"))
+    val q = if (!residual) probes else probes
+      .join(broadcast(cdf.select(col("cell"), col("cv").as("ccv"))), "cell")
+      .select(col("query_id"), col("cell"),
+        graft.functions.SimFns.vecSub(col("qv"), col("ccv")).as("qv"))
+    q.crossJoin(broadcast(codebookFrame(spark, books)))
+      .select(col("query_id"), col("cell"), col("sub"), col("code"),
+        d2Micros(slice(col("qv"), col("sub") * dsub + lit(1), lit(dsub)),
+          col("cv"), col("cc")).as("d2u"))
+  }
+
+  /** The one ADC search body behind every PQ face: per-side validity
+    * guards, then the pair join — a `cell` equi-join when the LUT is
+    * keyed per probed cell (the IVF faces: a corpus row lives in ONE
+    * cell and probed cells are distinct, so a pair joins at most once),
+    * a cross join against the broadcast LUTs otherwise (flat PQ) —
+    * self-exclusion by id (the [[bruteTopK]] convention), ONE
+    * `adc_sum_l` per pair (m primitive loads + adds inside whole-stage
+    * codegen; corpus vectors are never read), and [[rankAscByDist]].
+    * `codes` is (vec_id[, cell], codes), `lut` is (query_id[, cell],
+    * lut). Output: (query_id, rank, neighbor_id, d2u) with d2u the
+    * summed integer micro-L2 — a total order, so hash-exact. */
+  private def adcTopK(codes: DataFrame, lut: DataFrame,
       books: Seq[Seq[Array[Double]]], k: Int): DataFrame = {
     requireUniformBooks(books)
     val (m, ksub) = (books.size, books.head.size)
-    val q = adcLutWideFrom(adcLut(queries, books))
-      .where(validWideLut(m, ksub))
-    val scored = codesWide.where(validWideCodes(m, ksub))
-      .crossJoin(broadcast(q))
-      .where(col("vec_id") =!= col("query_id"))
+    val c = codes.where(validWideCodes(m, ksub))
+    val q = broadcast(lut.where(validWideLut(m, ksub)))
+    val pairs = if (lut.columns.contains("cell")) c.join(q, "cell") else c.crossJoin(q)
+    rankAscByDist(pairs.where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        adcSum(col("codes"), col("lut"), ksub).as("d2u"))
-    rankAscByDist(scored, k)
+        adcSum(col("codes"), col("lut"), ksub).as("d2u")), k)
   }
 
-  /** IVF-PQ: the two index structures COMPOSED (the FAISS IVFADC layout,
-    * minus residual encoding — codes here quantize the raw vectors, the
-    * honest trade for keeping one code table shared with [[pqTopKAdc]]):
-    * the corpus is cell-assigned once against the trained centroids
-    * (cosine cells, the [[assignCells]] metric) and PQ-encoded once;
-    * a query probes its `nProbes` nearest cells and runs ADC over ONLY
-    * those cells' codes — scan fraction ≈ nProbes/|cells| of the code
-    * table, which itself is m ints per vector. Both pruning structures
-    * are persisted artifacts at scale; neither search step reads a
-    * corpus vector. Deterministic end to end (round-6 cosine probes,
-    * integer micro-L2 ADC) ⇒ oracle-checkable from the two literal
-    * sets. */
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame,
-      cents: Seq[Array[Double]], books: Seq[Seq[Array[Double]]],
-      k: Int, nProbes: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
-    val cdf = centroidFrame(spark, cents)
-    val cells = assignCells(preparedVecs(corpus), cdf)
-      .select(col("vec_id"), col("cell"))
-    val codes = pqEncode(corpus, books).join(cells, "vec_id")
-    val probes = probeCells(queries, cdf, nProbes)
-      .select(col("query_id"), col("cell"))
-    rankAdc(codes
-      .join(broadcast(probes), "cell")
-      .join(broadcast(adcLut(queries, books)), Seq("query_id", "sub", "code")),
-      k, books.size)
-  }
+  /** Flat ADC top-k over a PRE-ENCODED [[pqEncode]] table: each query
+    * broadcasts its exact per-(sub, code) distance LUT as one array and
+    * every stored code row scores against it ([[adcTopK]]). */
+  def pqTopKAdc(codes: DataFrame, queries: DataFrame,
+      books: Seq[Seq[Array[Double]]], k: Int): DataFrame =
+    adcTopK(codes, adcLutWideFrom(adcLut(queries, books)), books, k)
 
-  /** [[ivfPqTopK]] over the WIDE layout — bit-identical results. One
-    * pass builds the stored row (vec_id, cell, codes) (cell threads
-    * through [[pqEncodeCore]]'s grouping key, so no assignment rejoin);
-    * raw-vector LUTs are cell-independent, so each query broadcasts ONE
-    * flattened array and the probe relation restricts the cell
-    * equi-join. Each surviving pair costs one `adc_sum_l`. */
-  def ivfPqTopKWide(corpus: DataFrame, queries: DataFrame,
-      cents: Seq[Array[Double]], books: Seq[Seq[Array[Double]]],
-      k: Int, nProbes: Int = 2): DataFrame =
-    ivfPqTopKWideFrom(ivfPqEncodeWide(corpus, cents, books),
-      queries, cents, books, k, nProbes)
-
-  /** The stored row of the wide IVF-PQ index — (vec_id, cell, codes):
-    * one pass builds cell assignment + wide PQ codes (cell threads
-    * through [[pqEncodeCore]]'s grouping key, so no assignment rejoin).
-    * At scale this runs ONCE and persists; [[ivfPqTopKWideFrom]]
+  /** IVF-PQ ENCODE: the stored (vec_id, cell, codes) row — the corpus is
+    * cell-assigned against the trained centroids (cosine cells, the
+    * [[assignCells]] metric) and PQ-encodes its RAW vectors in the same
+    * projection (cell threads through as a key, so no assignment
+    * rejoin). At scale this runs ONCE and persists; [[ivfPqTopK]]
     * searches the stored table and never touches a corpus vector. */
-  def ivfPqEncodeWide(corpus: DataFrame, cents: Seq[Array[Double]],
+  def ivfPqEncode(corpus: DataFrame, cents: Seq[Array[Double]],
       books: Seq[Seq[Array[Double]]]): DataFrame = {
     val cdf = centroidFrame(corpus.sparkSession, cents)
-    // fused kernel (r15): the encode is a projection over the assigned
-    // rows — no m·ksub fan-out, no (vec_id, sub) exchange
-    pqEncodeWideCore(assignCells(preparedVecs(corpus), cdf)
+    pqEncodeKeyed(assignCells(preparedVecs(corpus), cdf)
       .select(col("vec_id"), col("cell"), col("v")), books, Seq("cell"))
   }
 
-  /** [[ivfPqTopKWide]] over a PRE-ENCODED [[ivfPqEncodeWide]] table —
-    * the loaded-artifact search face. */
-  def ivfPqTopKWideFrom(codesWide: DataFrame, queries: DataFrame,
+  /** IVF-PQ search (the FAISS IVFADC layout minus residual encoding —
+    * codes quantize the raw vectors): a query probes its `nProbes`
+    * nearest cells with one LUT array per probe ([[probedAdcLut]]), so
+    * [[adcTopK]]'s cell equi-join scores ONLY those cells' codes — scan
+    * fraction ≈ nProbes/|cells|. Deterministic end to end (round-6
+    * cosine probes, integer micro-L2 ADC) ⇒ oracle-checkable from the
+    * two literal sets. */
+  def ivfPqTopK(codes: DataFrame, queries: DataFrame,
       cents: Seq[Array[Double]], books: Seq[Seq[Array[Double]]],
-      k: Int, nProbes: Int = 2): DataFrame = {
-    requireUniformBooks(books)
-    val cdf = centroidFrame(codesWide.sparkSession, cents)
-    val probes = probeCells(queries, cdf, nProbes)
-      .select(col("query_id"), col("cell"))
-    val (m, ksub) = (books.size, books.head.size)
-    val lutWide = adcLutWideFrom(adcLut(queries, books))
-      .where(validWideLut(m, ksub))
-    val scored = codesWide.where(validWideCodes(m, ksub))
-      .join(broadcast(probes), "cell")
-      .join(broadcast(lutWide), "query_id")
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        adcSum(col("codes"), col("lut"), ksub).as("d2u"))
-    rankAscByDist(scored, k)
-  }
+      k: Int, nProbes: Int = 2): DataFrame =
+    adcTopK(codes, adcLutWideFrom(
+      probedAdcLut(queries, cents, books, nProbes, residual = false), Seq("cell")),
+      books, k)
 
   /** ADC + exact re-rank (the "+R" refinement of Jégou et al. §V): the
     * quantized search produces a `shortlist`-sized candidate set per
@@ -1256,26 +1161,6 @@ object Similarity {
         col("vec_id").as("neighbor_id"), col("hamming"))
   }
 
-  /** EXACT Hamming near-dup self-join via pigeonhole banding — the
-    * dedup-family face of the sign-bit tier: split each vector's bit
-    * pattern into `nBands` disjoint `bandBits`-bit bands; two patterns
-    * within Hamming distance d < nBands MUST agree on at least one band
-    * (pigeonhole: d differing bits can dirty at most d bands), so the
-    * banded equi-join generates a candidate superset WITH NO MISSES and
-    * the verify step makes the result exact — the classic exact
-    * Hamming-join construction, the same shape as MinHash banding but
-    * with a guarantee instead of a probability. At 100 TB this is ONE
-    * equi-join on (band_idx, band_val) over 16-byte codes + per-pair
-    * verification of the survivors; never an all-pairs product.
-    *
-    * The verify kernel ([[graft.plans.HammingL]]) lives in a PROJECTION
-    * and the threshold filter sits above the pair AGGREGATE (which also
-    * dedups multi-band candidate duplicates) — the aggregate is the
-    * pushdown barrier that keeps the kernel out of the join condition
-    * (the r12 double-dot class; a bare `.where(hamming <= d)` on the
-    * projection would be pushed there by Catalyst). Requires
-    * maxHamming < nBands (checked) — that inequality IS the exactness
-    * proof. Output: (vec_a, vec_b, hamming), vec_a < vec_b. */
   /** Sign-bit codes with the per-row width guard (the scoreAgainst
     * posture): a vector of the wrong dim can't satisfy the pigeonhole
     * contract — drop it loudly. The guard checks the RAW vector width
@@ -1325,6 +1210,26 @@ object Similarity {
       .where(col("hamming") <= maxHamming)
   }
 
+  /** EXACT Hamming near-dup self-join via pigeonhole banding — the
+    * dedup-family face of the sign-bit tier: split each vector's bit
+    * pattern into `nBands` disjoint `bandBits`-bit bands; two patterns
+    * within Hamming distance d < nBands MUST agree on at least one band
+    * (pigeonhole: d differing bits can dirty at most d bands), so the
+    * banded equi-join generates a candidate superset WITH NO MISSES and
+    * the verify step makes the result exact — the classic exact
+    * Hamming-join construction, the same shape as MinHash banding but
+    * with a guarantee instead of a probability. At 100 TB this is ONE
+    * equi-join on (band_idx, band_val) over 16-byte codes + per-pair
+    * verification of the survivors; never an all-pairs product.
+    *
+    * The verify kernel ([[graft.plans.HammingL]]) lives in a PROJECTION
+    * and the threshold filter sits above the pair AGGREGATE (which also
+    * dedups multi-band candidate duplicates) — the aggregate is the
+    * pushdown barrier that keeps the kernel out of the join condition
+    * (the r12 double-dot class; a bare `.where(hamming <= d)` on the
+    * projection would be pushed there by Catalyst). Requires
+    * maxHamming < nBands (checked) — that inequality IS the exactness
+    * proof. Output: (vec_a, vec_b, hamming), vec_a < vec_b. */
   def hammingNearDupPairs(embeddings: DataFrame, dim: Int, maxHamming: Int,
       bandBits: Int = 8): DataFrame = {
     require(bandBits >= 1 && 32 % bandBits == 0,
@@ -1680,120 +1585,71 @@ object Similarity {
     pqTrain(residualFrame(corpus, cents).select(col("vec_id"), col("embedding")),
       m, ksub, iters, maxSample)
 
-  /** Residual IVF-PQ ENCODE — one pass producing the stored code table
-    * (vec_id, cell, sub, code): cell assignment against the trained
+  /** Residual IVF-PQ ENCODE — one pass producing the stored
+    * (vec_id, cell, codes) row: cell assignment against the trained
     * centroids plus PQ codes of the RESIDUAL v − c(cell) against the
-    * residual-trained codebooks. At scale this runs once and persists
-    * (the [[pqEncode]] posture); [[ivfPqResidualTopK]] searches the
-    * stored table and never touches a corpus vector. */
+    * residual-trained codebooks, cell-assign, residual and all m codes
+    * in one projection past the assignment's map-side aggregate. At
+    * scale this runs once and persists (the [[pqEncode]] posture);
+    * [[ivfPqResidualTopK]] searches the stored table and never touches
+    * a corpus vector. */
   def ivfPqResidualEncode(corpus: DataFrame, cents: Seq[Array[Double]],
       books: Seq[Seq[Array[Double]]]): DataFrame =
-    pqEncodeCore(residualFrame(corpus, cents)
+    pqEncodeKeyed(residualFrame(corpus, cents)
       .select(col("vec_id"), col("cell"), col("embedding").as("v")),
       books, Seq("cell"))
 
   /** Residual-encoded IVF-PQ search over a PRE-ENCODED
     * [[ivfPqResidualEncode]] table — the COMPLETE FAISS IVFADC layout
-    * ([[ivfPqTopK]] plus the residual encoding it documents as missing):
-    * the code table is still m ints per vector, it just means "offset
-    * from my centroid" instead of "absolute position". A query probes
-    * its `nProbes` nearest cells and
-    * builds one exact LUT PER PROBED CELL from its own residual
-    * q − c(cell) — |queries|·nProbes·m·ksub rows, still tiny, still
-    * broadcast. ADC distance is then ‖(q − c) − code‖² = ‖q − (c +
-    * code)‖², the true distance to the reconstructed vector, which is
-    * what buys residual PQ its recall at equal code budget. Neither
-    * search step reads a corpus vector; scan fraction ≈ nProbes/|cells|
-    * of the code table. Deterministic end to end (round-6 cosine probes
-    * and centroids, integer micro-L2 ADC) ⇒ oracle-checkable from the two
-    * literal sets. */
-  /** The per-(query, probed cell) residual ADC LUT shared by both
-    * residual search layouts: nProbes nearest cells per query (round-6
-    * cosine, min-cell tie-break — the ivfPqTopK probe order), then one
-    * exact subspace-distance table per probe from the query's OWN
-    * residual q − c(cell) — the one structural difference from the
-    * shared [[adcLut]]: the query's residual differs per cell, so the
-    * LUT key grows a cell column. */
-  private def residualAdcLut(queries: DataFrame, cents: Seq[Array[Double]],
-      books: Seq[Seq[Array[Double]]], nProbes: Int): DataFrame = {
-    val spark = queries.sparkSession
-    val cdf = centroidFrame(spark, cents)
-    val dsub = books.head.head.length
-    val cb = codebookFrame(spark, books)
-    probeCells(queries, cdf, nProbes)
-      .select(col("query_id"), col("cell"), col("qv"))
-      .join(broadcast(cdf.select(col("cell"), col("cv").as("ccv"))), "cell")
-      .select(col("query_id"), col("cell"),
-        graft.functions.SimFns.vecSub(col("qv"), col("ccv")).as("qres"))
-      .crossJoin(broadcast(cb))
-      .select(col("query_id"), col("cell"), col("sub"), col("code"),
-        d2Micros(slice(col("qres"), col("sub") * dsub + lit(1), lit(dsub)),
-          col("cv"), col("cc")).as("d2u"))
-  }
-
+    * ([[ivfPqTopK]] plus the residual encoding): the code row is still
+    * m ints per vector, it just means "offset from my centroid" instead
+    * of "absolute position". A query probes its `nProbes` nearest cells
+    * and builds one exact LUT PER PROBED CELL from its own residual
+    * ([[probedAdcLut]]) — |queries|·nProbes LUT arrays, still tiny,
+    * still broadcast — and [[adcTopK]]'s cell equi-join scores only
+    * those cells' codes. ADC distance is then ‖(q − c) − code‖² =
+    * ‖q − (c + code)‖², the true distance to the reconstructed vector,
+    * which is what buys residual PQ its recall at equal code budget.
+    * Deterministic end to end (round-6 cosine probes and centroids,
+    * integer micro-L2 ADC) ⇒ oracle-checkable from the two literal
+    * sets. */
   def ivfPqResidualTopK(codes: DataFrame, queries: DataFrame,
       cents: Seq[Array[Double]], books: Seq[Seq[Array[Double]]],
-      k: Int, nProbes: Int = 2): DataFrame = {
-    val lut = residualAdcLut(queries, cents, books, nProbes)
-    // a corpus row lives in ONE cell and probed cells are distinct, so a
-    // (query, vec) pair joins at most once — no dedup needed
-    rankAdc(codes.join(broadcast(lut), Seq("cell", "sub", "code")),
-      k, books.size)
-  }
+      k: Int, nProbes: Int = 2): DataFrame =
+    adcTopK(codes, adcLutWideFrom(
+      probedAdcLut(queries, cents, books, nProbes, residual = true), Seq("cell")),
+      books, k)
 
-  /** [[ivfPqResidualTopK]] over the WIDE layout
-    * ([[pqCodesWide]](codes, Seq("cell"))) — bit-identical results: the
-    * per-(query, probed cell) LUTs collapse to broadcast arrays, the
-    * cell equi-join restricts pairs to probed cells, and each surviving
-    * pair costs one `adc_sum_l` (m loads+adds) instead of m joined rows
-    * plus the 20M-group re-aggregation that dominates the narrow path
-    * at sf1. */
   /** OPQ ∘ residual IVF-PQ ENCODE (VERDICT r14 #1) — the complete FAISS
     * production index layout (OPQ pretransform + IVFADC, Ge et al. 2013
     * composed with Jégou et al. 2011): rotate each corpus vector by the
     * trained rotation `r` ([[opqTrainRotation]]), assign the ROTATED
     * vector to its nearest trained cell, PQ-encode the rotated residual
     * v′ − c(cell) against residual-trained codebooks, and store the one
-    * wide (vec_id, cell, codes) row. `cents` and `books` must be
-    * trained IN THE ROTATED SPACE ([[kmeansCentroidArrays]] /
-    * [[pqTrainResidual]] over [[rotateEmbeddings]](corpus, r)). Runs
-    * once and persists (the [[pqEncode]] posture); searches read the
-    * stored table and never touch a corpus vector. */
-  def opqIvfPqEncodeWide(corpus: DataFrame, r: Seq[Array[Double]],
+    * (vec_id, cell, codes) row. `cents` and `books` must be trained IN
+    * THE ROTATED SPACE ([[kmeansCentroidArrays]] / [[pqTrainResidual]]
+    * over [[rotateEmbeddings]](corpus, r)). Runs once and persists (the
+    * [[pqEncode]] posture); searches read the stored table and never
+    * touch a corpus vector. */
+  def opqIvfPqEncode(corpus: DataFrame, r: Seq[Array[Double]],
       cents: Seq[Array[Double]],
       books: Seq[Seq[Array[Double]]]): DataFrame =
-    ivfPqResidualEncodeWide(rotateEmbeddings(corpus, r), cents, books)
+    ivfPqResidualEncode(rotateEmbeddings(corpus, r), cents, books)
 
-  /** OPQ ∘ residual IVF-PQ SEARCH over a PRE-ENCODED
-    * [[opqIvfPqEncodeWide]] table: the query rotates by the same trained
-    * `r` (one dim×dim dot set per query — the OPQ pretransform), probes
-    * its `nProbes` nearest rotated cells, and ADC-scores each probed
-    * cell's stored codes with one exact LUT from its own ROTATED
-    * residual q′ − c(cell) — [[ivfPqResidualTopKWide]] with the rotation
-    * folded in front, which is the entire FAISS `OPQ…,IVF…,PQ…` chain.
-    * Neither step reads a corpus vector; scan fraction ≈
-    * nProbes/|cells| of the 16-byte-code table. Deterministic end to
-    * end (trained literals + round-6 probes + integer micro-L2 ADC) ⇒
-    * oracle-checkable from the three literal sets. */
-  def opqIvfPqTopKWide(codesWide: DataFrame, queries: DataFrame,
+  /** OPQ ∘ residual IVF-PQ SEARCH over a PRE-ENCODED [[opqIvfPqEncode]]
+    * table: the query rotates by the same trained `r` (one dim×dim dot
+    * set per query — the OPQ pretransform), probes its `nProbes` nearest
+    * rotated cells, and ADC-scores each probed cell's stored codes with
+    * one exact LUT from its own ROTATED residual q′ − c(cell) —
+    * [[ivfPqResidualTopK]] with the rotation folded in front, which is
+    * the entire FAISS `OPQ…,IVF…,PQ…` chain. Neither step reads a corpus
+    * vector; scan fraction ≈ nProbes/|cells| of the 16-byte-code table.
+    * Deterministic end to end (trained literals + round-6 probes +
+    * integer micro-L2 ADC) ⇒ oracle-checkable from the three literal
+    * sets. */
+  def opqIvfPqTopK(codes: DataFrame, queries: DataFrame,
       r: Seq[Array[Double]], cents: Seq[Array[Double]],
       books: Seq[Seq[Array[Double]]], k: Int, nProbes: Int = 2): DataFrame =
-    ivfPqResidualTopKWide(codesWide, rotateEmbeddings(queries, r),
+    ivfPqResidualTopK(codes, rotateEmbeddings(queries, r),
       cents, books, k, nProbes)
-
-  def ivfPqResidualTopKWide(codesWide: DataFrame, queries: DataFrame,
-      cents: Seq[Array[Double]], books: Seq[Seq[Array[Double]]],
-      k: Int, nProbes: Int = 2): DataFrame = {
-    requireUniformBooks(books)
-    val (m, ksub) = (books.size, books.head.size)
-    val lutWide = adcLutWideFrom(
-      residualAdcLut(queries, cents, books, nProbes), Seq("cell"))
-      .where(validWideLut(m, ksub))
-    val scored = codesWide.where(validWideCodes(m, ksub))
-      .join(broadcast(lutWide), "cell")
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        adcSum(col("codes"), col("lut"), ksub).as("d2u"))
-    rankAscByDist(scored, k)
-  }
 }

@@ -391,16 +391,18 @@ case class SignPackL(child: Expression) extends UnaryExpression {
   * .setScale(n, HALF_UP), which is what Spark's Round generates for
   * doubles; cc re-derived as the same index-order Σcv² the driver-side
   * codebookFrame computes) — and the chosen code is the packed-long
-  * lexicographic (d2u, code) min, the encode aggregate's exact rule.
+  * lexicographic (d2u, code) min, the (d2u, code) order the DuckDB
+  * oracles' encode ranks by.
   *
-  * WHY: the declarative encode is a broadcast fan-out of m·ksub rows
-  * per vector + a groupBy(vec_id, sub) min — partial aggregation
-  * collapses map-side, but |corpus|·m rows still cross an exchange on
-  * EVERY encode pass. This kernel makes the wide encode a pure
-  * projection: zero expansion, ZERO SHUFFLE, embarrassingly parallel
-  * at any corpus size. NULL on shape defects (null vector/elements,
-  * vector length ≠ m·dsub, books length not divisible by m·ksub) —
-  * loud-by-absence where the fan-out emitted null-code rows. */
+  * WHY: a declarative encode is a broadcast fan-out of m·ksub rows per
+  * vector + a groupBy(vec_id, sub) min — partial aggregation collapses
+  * map-side, but |corpus|·m rows still cross an exchange on EVERY
+  * encode pass. This kernel makes the encode a pure projection: zero
+  * expansion, ZERO SHUFFLE, embarrassingly parallel at any corpus
+  * size. It is the only PQ encode (Similarity.pqEncode and the IVF
+  * encodes). NULL on shape defects (null vector/elements, vector
+  * length ≠ m·dsub, books length not divisible by m·ksub) —
+  * loud-by-absence: every search drops a NULL codes row. */
 case class PqEncodeI(left: Expression, right: Expression, m: Int, ksub: Int)
     extends BinaryExpression {
   require(m >= 1 && ksub >= 1 && ksub < 65536,
@@ -797,14 +799,13 @@ case class HammingL(left: Expression, right: Expression)
 }
 
 /** `adc_sum_l(codes, lut, ksub)` — asymmetric-distance lookup sum, the
-  * PQ search kernel over the WIDE code layout: codes is the vector's m
-  * PQ codes (`array<int>`), lut the query's flattened m×ksub subspace
-  * distance table (`array<bigint>`, laid out sub-major: entry
-  * sub·ksub + code), and the result Σ_sub lut[sub·ksub + codes[sub]]
-  * — m primitive loads + adds per query×vector pair, replacing the
-  * narrow layout's m joined rows per pair and their (query, vec)
-  * re-aggregation (measured: the narrow ADC aggregate dominates the
-  * sf1 searches). `ksub` is EXPLICIT (the codebook size the caller
+  * PQ search kernel: codes is the vector's m PQ codes (`array<int>`),
+  * lut the query's flattened m×ksub subspace distance table
+  * (`array<bigint>`, laid out sub-major: entry sub·ksub + code), and
+  * the result Σ_sub lut[sub·ksub + codes[sub]] — m primitive loads +
+  * adds per query×vector pair, instead of m joined (sub, code) rows
+  * per pair and their (query, vec) re-aggregation (measured: that
+  * aggregate dominated the sf1 searches, NOTES.md r14). `ksub` is EXPLICIT (the codebook size the caller
   * trained with) — an inferred lut.length/codes.length would let a
   * wrong-m codes array whose length coincidentally divides the LUT
   * (4 codes against an 8×16 table infers ksub=32) score a misaligned

@@ -217,7 +217,7 @@ class GraphAnnSpec extends AnyFunSuite {
   test("ADC-routed serving: exactness ladder and recall floor") {
     // codes + books through the same trainer the PQ family uses
     val books = Similarity.pqTrain(emb, m = 8, ksub = 16)
-    val codesWide = Similarity.pqEncodeWideDirect(emb, books)
+    val codesWide = Similarity.pqEncode(emb, books)
     val n = emb.count().toInt
     // ladder: uncapped pool + full-corpus shortlist + full reach ⇒ the
     // exact re-rank sees every node ⇒ ≡ brute exactly, regardless of

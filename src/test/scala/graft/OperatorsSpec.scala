@@ -557,6 +557,53 @@ class DedupSpec extends AnyFunSuite {
   }
 }
 
+/** Plain-Scala PQ references, independent of the Spark plans: the
+  * round-6 micro-L2 of `d2Micros` / `pq_encode_i` (BigDecimal HALF_UP,
+  * the rounding Spark's `round` applies to doubles), the (d2u, code)
+  * argmin encode, and ADC top-k ranked by (d2u, vec_id). */
+object PqReference {
+  type Books = Seq[Seq[Array[Double]]]
+
+  def d2u(xs: Seq[Double], cv: Seq[Double]): Long = {
+    val xx = xs.foldLeft(0.0)((a, x) => a + x * x)
+    val xcv = xs.zip(cv).foldLeft(0.0) { case (a, (x, c)) => a + x * c }
+    val cc = cv.foldLeft(0.0)((a, c) => a + c * c)
+    val r6 = java.math.BigDecimal.valueOf((xx - 2.0 * xcv) + cc)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    java.math.BigDecimal.valueOf(r6 * 1e6)
+      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
+  }
+
+  private def subvec(v: Seq[Double], sub: Int, books: Books): Seq[Double] = {
+    val dsub = books.head.head.length
+    v.slice(sub * dsub, (sub + 1) * dsub)
+  }
+
+  def encode(v: Seq[Double], books: Books): Seq[Int] =
+    books.indices.map { sub =>
+      books(sub).indices.minBy(c =>
+        (d2u(subvec(v, sub, books), books(sub)(c).toSeq), c))
+    }
+
+  /** lut(sub)(code) for one query vector (or query residual). */
+  def lut(q: Seq[Double], books: Books): Seq[Seq[Long]] =
+    books.indices.map(sub =>
+      books(sub).map(cv => d2u(subvec(q, sub, books), cv.toSeq)))
+
+  /** (query_id, rank, neighbor_id, d2u) rows of one query: each
+    * candidate is (vec_id, codes, the LUT it scores against). */
+  def topK(qid: Long, cands: Seq[(Long, Seq[Int], Seq[Seq[Long]])],
+      k: Int): Seq[(Long, Int, Long, Long)] =
+    cands.filter(_._1 != qid)
+      .map { case (id, codes, l) =>
+        (codes.zipWithIndex.map { case (c, sub) => l(sub)(c) }.sum, id) }
+      .sorted.take(k).zipWithIndex
+      .map { case ((d, id), r) => (qid, r + 1, id, d) }
+
+  def minus(a: Seq[Double], b: Array[Double]): Seq[Double] =
+    a.zip(b).map { case (x, y) => x - y }
+}
+
 class SimilaritySpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -613,11 +660,10 @@ class SimilaritySpec extends AnyFunSuite {
     val loaded = Similarity.pqBooksFromDF(Similarity.pqBooksToDF(spark, books))
     assert(loaded.map(_.map(_.toSeq)) == books.map(_.map(_.toSeq)))
     val codes = Similarity.pqEncode(dim8, books)
-    val perVec = codes.groupBy("vec_id").count()
-      .as[(Long, Long)].collect().toMap
-    assert(perVec.values.forall(_ == 2), s"m=2 codes per vector: $perVec")
-    assert(codes.select("code").as[Int].collect()
-      .forall(c => c >= 0 && c < 4))
+    val perVec = codes.as[(Long, Seq[Int])].collect().toMap
+    assert(perVec.size == 5 && perVec.values.forall(_.size == 2),
+      s"m=2 codes per vector: $perVec")
+    assert(perVec.values.flatten.forall(c => c >= 0 && c < 4))
     // the corpus has 3 distinct vectors and ksub=4 ≥ 3, so Lloyd lands a
     // centroid ON each distinct subvector — ADC distance is then the
     // EXACT squared L2, and vec 0's nearest must be its twin vec 1
@@ -627,8 +673,8 @@ class SimilaritySpec extends AnyFunSuite {
     assert(top.head == ((1L, 0L)), s"twin must rank first at distance 0: ${top.toSeq}")
   }
 
-  test("wide ADC layout is bit-identical to the narrow path — flat PQ " +
-      "and residual IVF-PQ both, including probe pruning") {
+  test("ADC search == the plain-Scala ADC reference — flat PQ and " +
+      "residual IVF-PQ both, at nProbes = nCells and at nProbes = 1") {
     val dim8 = Seq(
       (0L, Array(1.0f, 0f, 0f, 0f, 0f, 0f, 0f, 1.0f)),
       (1L, Array(0.9f, 0.1f, 0f, 0f, 0f, 0f, 0.1f, 0.9f)),
@@ -637,25 +683,43 @@ class SimilaritySpec extends AnyFunSuite {
       (4L, Array(0f, 0.9f, 0.1f, 0f, 0.1f, 0.9f, 0f, 0f)),
       (5L, Array(0.2f, 0.2f, 0.6f, 0f, 0.6f, 0.2f, 0.2f, 0f)))
       .toDF("vec_id", "embedding")
+    val vec = dim8.as[(Long, Seq[Float])].collect()
+      .map { case (id, v) => id -> v.map(_.toDouble) }.toMap
     val qs = dim8.where(col("vec_id") % 2 === 0)
+    val qIds = Seq(0L, 2L, 4L)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rank")
         .as[(Long, Int, Long, Long)].collect().toSeq
+    // flat PQ: stored codes == the reference encode, search == reference
     val books = Similarity.pqTrain(dim8, m = 2, ksub = 4, maxSample = 100)
-    val narrow = Similarity.pqEncode(dim8, books)
-    assert(rows(Similarity.pqTopKAdcWide(Similarity.pqCodesWide(narrow),
-        qs, books, k = 3)) ==
-      rows(Similarity.pqTopKAdc(narrow, qs, books, k = 3)))
+    val codes = Similarity.pqEncode(dim8, books)
+      .as[(Long, Seq[Int])].collect().toMap
+    assert(codes == vec.map { case (id, v) => id -> PqReference.encode(v, books) })
+    val flatRef = qIds.flatMap { q =>
+      val l = PqReference.lut(vec(q), books)
+      PqReference.topK(q, codes.toSeq.map { case (id, c) => (id, c, l) }, 3)
+    }
+    assert(rows(Similarity.pqTopKAdc(Similarity.pqEncode(dim8, books),
+      qs, books, k = 3)) == flatRef)
+    // residual IVF-PQ over 2 cells: codes quantize v − c(cell), and each
+    // probed cell scores with the query's own residual LUT
     val cents = Similarity.kmeansCentroidArrays(dim8, nCells = 2)
     val rBooks = Similarity.pqTrainResidual(dim8, cents, m = 2, ksub = 4)
-    val rCodes = Similarity.ivfPqResidualEncode(dim8, cents, rBooks)
+    val rCodesDf = Similarity.ivfPqResidualEncode(dim8, cents, rBooks)
+    val rCodes = rCodesDf.as[(Long, Int, Seq[Int])].collect()
+    assert(rCodes.length == 6 && rCodes.forall { case (id, cell, c) =>
+      c == PqReference.encode(PqReference.minus(vec(id), cents(cell)), rBooks) })
+    val cellOf = rCodes.map(r => r._1 -> r._2).toMap
     for (p <- Seq(1, 2)) {
-      assert(rows(Similarity.ivfPqResidualTopKWide(
-          Similarity.pqCodesWide(rCodes, Seq("cell")), qs, cents, rBooks,
-          k = 3, nProbes = p)) ==
-        rows(Similarity.ivfPqResidualTopK(rCodes, qs, cents, rBooks,
-          k = 3, nProbes = p)),
-        s"wide != narrow at nProbes=$p")
+      val ref = qIds.flatMap { q =>
+        val probed = if (p == 2) Set(0, 1) else Set(cellOf(q))
+        val luts = probed.map(c =>
+          c -> PqReference.lut(PqReference.minus(vec(q), cents(c)), rBooks)).toMap
+        PqReference.topK(q, rCodes.toSeq.collect {
+          case (id, cell, c) if probed(cell) => (id, c, luts(cell)) }, 3)
+      }
+      assert(rows(Similarity.ivfPqResidualTopK(rCodesDf, qs, cents, rBooks,
+        k = 3, nProbes = p)) == ref, s"residual search != reference at nProbes=$p")
     }
   }
 
@@ -690,8 +754,10 @@ class SimilaritySpec extends AnyFunSuite {
     val big = Seq(
       (0L, Array(1.0f, 0f, 0f, 0f)), (1L, Array(0f, 1.0f, 0f, 0f)),
       (2L, Array(0f, 0f, 1.0f, 0f)), (3L, Array(0f, 0f, 0f, 1.0f)),
-      (4L, Array(0.5f, 0.5f, 0f, 0f))).toDF("vec_id", "embedding")
+      (4L, Array(0.5f, 0.5f, 0.5f, 0.5f))).toDF("vec_id", "embedding")
+    // 4 distinct subvectors per subspace, so the ksub-4 books are uniform
     val books4 = Similarity.pqTrain(big, m = 2, ksub = 4, maxSample = 100)
+    assert(books4.map(_.size) == Seq(4, 4))
     val books2 = Similarity.pqTrain(big, m = 2, ksub = 2, maxSample = 100)
     val codes4 = Similarity.pqEncode(big, books4)
     val stale = Similarity.pqTopKAdc(codes4, big.where(col("vec_id") === 0L),
@@ -700,29 +766,43 @@ class SimilaritySpec extends AnyFunSuite {
       big.where(col("vec_id") === 0L), books4, k = 5)
     assert(complete.count() == 4, "sanity: matched books rank everything")
     // with ksub-2 books only codes 0/1 exist in the LUT; any vector
-    // carrying a code >= 2 in EITHER subspace must be absent
-    val maxCode = codes4.groupBy("vec_id")
-      .agg(max(col("code")).as("mx")).as[(Long, Int)].collect().toMap
+    // carrying a code >= 2 in EITHER subspace must be absent — the
+    // per-side guards drop it before the pair join, so a query with
+    // fewer than k valid candidates gets fewer rows, never a null
+    val maxCode = codes4.as[(Long, Seq[Int])].collect()
+      .map { case (id, c) => id -> c.max }.toMap
     val ranked = stale.select("neighbor_id").as[Long].collect().toSet
     assert(ranked.forall(v => maxCode(v) < 2),
       s"a partial-sum pair ranked: $ranked vs codes $maxCode")
-    // ADVICE r13: the WIDE twin of the stale-books case — per-side
-    // guards drop the mismatched rows, so wide stays bit-identical to
-    // narrow even when a query has fewer than k valid candidates
-    // (nulls previously survived the nulls_last window there)
-    val staleWide = Similarity.pqTopKAdcWide(Similarity.pqCodesWide(codes4),
-      big.where(col("vec_id") === 0L), books2, k = 5)
-    assert(staleWide.orderBy("query_id", "rank")
-        .as[(Long, Int, Long, Long)].collect().toSeq ==
-      stale.orderBy("query_id", "rank")
-        .as[(Long, Int, Long, Long)].collect().toSeq,
-      "stale-books wide must equal narrow (rows drop, no null distances)")
-    assert(staleWide.where(col("d2u").isNull).count() == 0)
-    // ragged books (pqTrain's distinct-subvector cap) must fail the
-    // WIDE layout loudly instead of misaligning the flattened LUT
+    assert(ranked == maxCode.collect { case (v, mx) if v != 0L && mx < 2 => v }.toSet,
+      s"every in-range vector must still rank: $ranked vs codes $maxCode")
+    assert(stale.where(col("d2u").isNull).count() == 0)
+    // ragged books (pqTrain's distinct-subvector cap) misalign the
+    // flattened LUT: every encode and every search face refuses them
     val ragged = Seq(Seq(Array(0.0, 0.0)), books4(1))
-    intercept[IllegalArgumentException] {
-      Similarity.pqTopKAdcWide(Similarity.pqCodesWide(codes4), big, ragged, 2)
+    val cents = Similarity.kmeansCentroidArrays(big, nCells = 2)
+    val rot = Seq.tabulate(4)(i => Array.tabulate(4)(j => if (i == j) 1.0 else 0.0))
+    val q0 = big.where(col("vec_id") === 0L)
+    val faces: Seq[(String, () => Any)] = Seq(
+      "pqEncode" -> (() => Similarity.pqEncode(big, ragged)),
+      "pqTopKAdc" -> (() => Similarity.pqTopKAdc(codes4, q0, ragged, 2)),
+      "pqTopKRefined" -> (() =>
+        Similarity.pqTopKRefined(codes4, big, q0, ragged, 2, shortlist = 3)),
+      "ivfPqEncode" -> (() => Similarity.ivfPqEncode(big, cents, ragged)),
+      "ivfPqTopK" -> (() => Similarity.ivfPqTopK(
+        Similarity.ivfPqEncode(big, cents, books4), q0, cents, ragged, 2)),
+      "ivfPqResidualEncode" -> (() =>
+        Similarity.ivfPqResidualEncode(big, cents, ragged)),
+      "ivfPqResidualTopK" -> (() => Similarity.ivfPqResidualTopK(
+        Similarity.ivfPqResidualEncode(big, cents, books4), q0, cents, ragged, 2)),
+      "opqIvfPqEncode" -> (() =>
+        Similarity.opqIvfPqEncode(big, rot, cents, ragged)),
+      "opqIvfPqTopK" -> (() => Similarity.opqIvfPqTopK(
+        Similarity.opqIvfPqEncode(big, rot, cents, books4), q0, rot, cents,
+        ragged, 2)))
+    faces.foreach { case (name, face) =>
+      val e = intercept[IllegalArgumentException](face())
+      assert(e.getMessage.contains("uniform"), s"$name: ${e.getMessage}")
     }
   }
 
@@ -877,46 +957,57 @@ class SimilaritySpec extends AnyFunSuite {
     assert(ragged == 1L, "wrong-width vector must yield a NULL embedding")
   }
 
-  test("pq_encode_i fused kernel == declarative encode+reshape bit-for-bit " +
-      "(incl. engineered (d2u, code) ties); cell variant too; wrong-width " +
-      "vector -> NULL (loud-by-absence)") {
+  test("pq_encode_i fused kernel == the plain-Scala argmin reference " +
+      "bit-for-bit in a whole-stage codegen stage (incl. engineered " +
+      "(d2u, code) ties); cell variant too; wrong-width vector -> NULL " +
+      "(loud-by-absence)") {
     // varied vectors over dim 8, m=4/dsub=2/ksub=4 books with two
     // DUPLICATE codewords in sub 0 (codes 1 and 2 identical) — every
-    // vector ties there and the packed min must pick the LOWER code
+    // vector ties there and the (d2u, code) order must pick the LOWER code
     val books: Seq[Seq[Array[Double]]] = Seq(
       Seq(Array(0.1, -0.3), Array(0.7, 0.7), Array(0.7, 0.7), Array(-1.1, 0.2)),
       Seq(Array(0.0, 0.0), Array(1.0, -1.0), Array(0.25, 0.5), Array(-0.5, -0.25)),
       Seq(Array(2.0, 0.0), Array(0.0, 2.0), Array(-2.0, 0.0), Array(0.0, -2.0)),
       Seq(Array(0.3, 0.3), Array(0.31, 0.3), Array(0.3, 0.31), Array(0.33, 0.29)))
-    val vecs = (0 until 60).map { k =>
-      (k.toLong, Seq.tabulate(8)(d =>
-        (math.sin(k * 11 + d * 5) * math.pow(2.0, (k + d) % 5 - 2)).toFloat))
-    }.toDF("vec_id", "embedding")
-    val declarative = Similarity.pqCodesWide(Similarity.pqEncode(vecs, books))
-      .as[(Long, Seq[Int])].collect().toMap
-    val fused = Similarity.pqEncodeWideDirect(vecs, books)
-      .as[(Long, Seq[Int])].collect().toMap
-    assert(fused == declarative && fused.size == 60,
-      "fused wide encode must equal encode+reshape exactly")
-    assert(fused.values.exists(_.head == 1) || fused.values.forall(_.head != 2),
+    val raw = (0 until 60).map { k =>
+      k.toLong -> Seq.tabulate(8)(d =>
+        (math.sin(k * 11 + d * 5) * math.pow(2.0, (k + d) % 5 - 2)).toFloat)
+    }
+    // an RDD-backed frame: a projection over a local relation is folded
+    // by interpreted eval at optimization time and never reaches codegen
+    import org.apache.spark.sql.types._
+    val vecs = spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        raw.map { case (k, v) => org.apache.spark.sql.Row(k, v) }, 2),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType)))))
+    val fusedDf = Similarity.pqEncode(vecs, books)
+    val fused = fusedDf.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    TestSpark.assertCodegenStage(fusedDf, "pq_encode_i")
+    val expect = raw.map { case (k, v) =>
+      k -> PqReference.encode(v.map(_.toDouble), books) }.toMap
+    assert(fused == expect && fused.size == 60,
+      "fused encode must equal the argmin reference exactly")
+    assert(fused.values.forall(_.head != 2) && fused.values.exists(_.head == 1),
       "tie must resolve to the lower duplicate code")
-    // the cell-threaded variant (residual path's shape): same equality
+    // the cell-threaded residual shape: codes quantize v − c(cell)
     val cents = Seq(Array.fill(8)(0.5), Array.fill(8)(-0.5))
-    val narrowCell = Similarity.pqCodesWide(
-        Similarity.ivfPqResidualEncode(vecs, cents, books), Seq("cell"))
-      .as[(Long, Int, Seq[Int])].collect().toSet
-    val fusedCell = Similarity.ivfPqResidualEncodeWide(vecs, cents, books)
-      .as[(Long, Int, Seq[Int])].collect().toSet
-    assert(fusedCell == narrowCell && fusedCell.nonEmpty,
-      "fused residual wide encode must equal the reshape path")
-    // wrong-width vector: NULL codes row (the fan-out emitted null-code
-    // narrow rows; the kernel is loud-by-absence — divergence documented)
-    val ragged = Similarity.pqEncodeWideDirect(
+    val cellDf = Similarity.ivfPqResidualEncode(vecs, cents, books)
+    val fusedCell = cellDf.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2)))
+    TestSpark.assertCodegenStage(cellDf, "pq_encode_i")
+    assert(fusedCell.length == 60 && fusedCell.forall { case (k, cell, c) =>
+      c == PqReference.encode(
+        PqReference.minus(raw.toMap.apply(k).map(_.toDouble), cents(cell)),
+        books) },
+      "fused residual encode must equal the argmin reference")
+    // wrong-width vector: NULL codes row (loud-by-absence: every search
+    // drops it per row, and the code-output rows emit nothing for it)
+    val ragged = Similarity.pqEncode(
         Seq((9L, Seq.fill(7)(1.0f))).toDF("vec_id", "embedding"), books)
       .where(col("codes").isNull).count()
     assert(ragged == 1L, "wrong-width vector must yield NULL codes")
   }
-
   test("sq8 native kernels == the HOF chains bit-for-bit: abs_max_d vs " +
       "array_max(transform(abs)), sq8_codes_i vs transform(floor) — incl. " +
       "negative halves, exact .5 boundaries, subnormal-ish magnitudes") {
@@ -1000,8 +1091,8 @@ class SimilaritySpec extends AnyFunSuite {
     val books = Similarity.pqTrainResidual(dupes, cents, m = 2, ksub = 4)
     val codes = Similarity.ivfPqResidualEncode(dupes, cents, books)
     // every vector carries exactly m codes plus its cell
-    assert(codes.groupBy("vec_id").count().as[(Long, Long)].collect()
-      .forall(_._2 == 2))
+    assert(codes.as[(Long, Int, Seq[Int])].collect()
+      .map(_._3.size).toSeq == Seq.fill(5)(2))
     val q0 = dupes.where(col("vec_id") === 0L)
     val both = Similarity.ivfPqResidualTopK(codes, q0, cents, books,
         k = 4, nProbes = 2)
@@ -1011,7 +1102,7 @@ class SimilaritySpec extends AnyFunSuite {
       s"twin must be STRICTLY nearest (same cell, same codes as the " +
         s"query's own residual): ${both.toSeq}")
     // nProbes=1 prunes to the query's own cell — neighbors must all share it
-    val cellOf = codes.select("vec_id", "cell").distinct()
+    val cellOf = codes.select("vec_id", "cell")
       .as[(Long, Int)].collect().toMap
     val one = Similarity.ivfPqResidualTopK(codes, q0, cents, books,
         k = 4, nProbes = 1)
@@ -1293,9 +1384,10 @@ class KmeansIvfSpec extends AnyFunSuite {
         s"$spread vs $naiveSpread")
   }
 
-  test("composed OPQ∘residual-IVF-PQ: wide search == narrow twin " +
-      "bit-for-bit at a partial probe AND at nProbes = nCells (the " +
-      "exactness ladder — every pair scored exactly once)") {
+  test("composed OPQ∘residual-IVF-PQ: search == the plain-Scala ADC " +
+      "reference over the rotated residuals at nProbes = nCells (every " +
+      "pair scored exactly once, |queries|·k rows); nProbes = 1 stays in " +
+      "the query's cell") {
     import graft.operators.Similarity
     val corpus = Similarity.synthesizeClustered(spark, n = 120,
       dim = 16, nClusters = 4)
@@ -1303,28 +1395,31 @@ class KmeansIvfSpec extends AnyFunSuite {
     val rotC = Similarity.rotateEmbeddings(corpus, r)
     val cents = Similarity.kmeansCentroidArrays(rotC, nCells = 4)
     val books = Similarity.pqTrainResidual(rotC, cents, m = 8, ksub = 8)
-    val narrow = Similarity.ivfPqResidualEncode(rotC, cents, books)
-    val wide = Similarity.pqCodesWide(narrow, Seq("cell"))
+    val codesDf = Similarity.opqIvfPqEncode(corpus, r, cents, books)
+    val codes = codesDf.as[(Long, Int, Seq[Int])].collect().toSeq
     val queries = corpus.where(col("vec_id") % 30 === 0)
+    val rotQ = Similarity.rotateEmbeddings(queries, r)
+      .as[(Long, Seq[Double])].collect().toSeq
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Int, Long, Long)].collect().toSet
-    for (nProbes <- Seq(2, 4)) {
-      // the wide path folds the rotation in front (opqIvfPqTopKWide);
-      // the narrow twin rotates explicitly — different join/agg shapes,
-      // same integer ADC arithmetic, so outputs must be IDENTICAL
-      val w = rows(Similarity.opqIvfPqTopKWide(wide, queries, r,
-        cents, books, k = 5, nProbes = nProbes))
-      val n = rows(Similarity.ivfPqResidualTopK(narrow,
-        Similarity.rotateEmbeddings(queries, r),
-        cents, books, k = 5, nProbes = nProbes))
-      assert(w == n && w.nonEmpty, s"wide != narrow at nProbes=$nProbes")
-      if (nProbes == 4) {
-        // all cells probed ⇒ every (query, vec≠query) pair scored once:
-        // k=5 of 119 candidates must return exactly |queries|·5 rows
-        val nQ = queries.count()
-        assert(w.size == nQ * 5, s"expected ${nQ * 5} rows, got ${w.size}")
-      }
-    }
+    // all cells probed ⇒ every (query, vec≠query) pair scored once with
+    // the LUT of the query's residual against the vector's own cell
+    val all = rows(Similarity.opqIvfPqTopK(codesDf, queries, r,
+      cents, books, k = 5, nProbes = 4))
+    val ref = rotQ.flatMap { case (q, qv) =>
+      val luts = cents.indices.map(c =>
+        PqReference.lut(PqReference.minus(qv, cents(c)), books))
+      PqReference.topK(q, codes.map { case (id, cell, c) => (id, c, luts(cell)) }, 5)
+    }.toSet
+    assert(all == ref && all.size == rotQ.size * 5,
+      s"expected ${rotQ.size * 5} reference rows, got ${all.size}")
+    // one probe: the query's nearest rotated cell is its own assigned cell
+    val cellOf = codes.map(c => c._1 -> c._2).toMap
+    val one = Similarity.opqIvfPqTopK(codesDf, queries, r, cents, books,
+        k = 5, nProbes = 1)
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
+    assert(one.nonEmpty && one.forall { case (q, n) => cellOf(n) == cellOf(q) },
+      s"nProbes=1 left the query's cell: ${one.toSeq}")
   }
 
   test("kmeans centroids are bit-deterministic across partition orders") {

@@ -269,6 +269,42 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("PQ family: one code layout — every search scores with adc_sum_l, " +
+      "every live encode is pq_encode_i, no aggregate is keyed on sub") {
+    cleanCache()
+    // The 21 registry rows that encode or search PQ codes. Codes are
+    // stored one (vec_id[, cell], codes) row per vector; a re-introduced
+    // per-(vec, sub) layout shows as a join on (sub, code) re-aggregated
+    // per pair, or as an argmin aggregate over the (vec, sub) fan-out.
+    val codeRows = Seq("sim_pq_codes", "sim_pq_incr", "sim_opq_incr",
+      "sim_opq_ivfpq_incr")
+    val searchRows = Seq("sim_pq_topk", "sim_pq_topk_wide", "sim_pq_rerank",
+      "sim_pq_recall", "sim_opq_topk", "sim_opq_recall", "sim_opq_gain",
+      "sim_opq_trained", "sim_ivfpq_topk", "sim_ivfpq_topk_wide",
+      "sim_ivfpq_residual", "sim_ivfpq_residual_wide", "sim_residual_gain",
+      "sim_opq_ivfpq", "sim_opq_ivfpq_topk", "sim_opq_ivfpq_recall",
+      "sim_opq_ivfpq_gain")
+    // rows that encode at query time (the incremental rows' batch legs,
+    // the fixture rows' corpora); the others read stored code artifacts
+    val liveEncodes = Seq("sim_pq_incr", "sim_opq_incr", "sim_opq_ivfpq_incr",
+      "sim_residual_gain", "sim_opq_gain", "sim_opq_trained")
+    val aggKeys = """(?:HashAggregate|SortAggregate|ObjectHashAggregate)\(keys=\[([^\]]*)\]""".r
+    val plans = (codeRows ++ searchRows).map(n =>
+      n -> plan(Queries.queries(n)(spark, sf))).toMap
+    val failures =
+      searchRows.filterNot(plans(_).contains("adc_sum_l"))
+        .map(n => s"$n: search without adc_sum_l") ++
+      liveEncodes.filterNot(plans(_).contains("pq_encode_i"))
+        .map(n => s"$n: encode without pq_encode_i") ++
+      plans.toSeq.sortBy(_._1).flatMap { case (n, p) =>
+        aggKeys.findAllMatchIn(p).map(_.group(1))
+          .filter(k => "\\bsub#".r.findFirstIn(k).isDefined)
+          .map(k => s"$n: aggregate keyed on sub [$k]")
+      }
+    assert(codeRows.size + searchRows.size == 21)
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
   test("round-10 queries: exchange/scan counts pinned (duplicate-subtree guard)") {
     cleanCache()
     // Same contract as the bench-board pin above, for the round-10
@@ -444,14 +480,17 @@ class PlanShapeSpec extends AnyFunSuite {
       "sim_binq_rerank" -> (6, 4),
       "sim_binq_recall" -> (15, 8), // two full ranking chains by design
       "sim_sq8_topk" -> (3, 2),
-      "sim_ivfpq_residual" -> (3, 2),
-      "sim_ivfpq_residual_wide" -> (3, 2),
-      "sim_pq_topk_wide" -> (4, 2),
-      "sim_ivfpq_topk_wide" -> (6, 3),
-      "sim_pq_codes" -> (1, 1),
-      "sim_pq_topk" -> (3, 2),
-      "sim_pq_rerank" -> (6, 4),
-      "sim_ivfpq_topk" -> (6, 4),
+      // one PQ code layout: searches read the stored (vec_id[, cell],
+      // codes) artifact and score one adc_sum_l per pair — exchanges are
+      // the LUT collapse + rank window
+      "sim_ivfpq_residual" -> (2, 2),
+      "sim_ivfpq_residual_wide" -> (2, 2),
+      "sim_pq_topk_wide" -> (2, 2),
+      "sim_ivfpq_topk_wide" -> (2, 2),
+      "sim_pq_codes" -> (0, 1),
+      "sim_pq_topk" -> (2, 2),
+      "sim_pq_rerank" -> (5, 4),
+      "sim_ivfpq_topk" -> (2, 2),
       "sim_pq_incr" -> (1, 2),
       "text_hybrid_trained" -> (0, 1),
       "pipeline_rag_mmr" -> (0, 1),

@@ -587,9 +587,9 @@ object EncodeKernelProps extends Properties("EncodeKernels") {
           java.math.BigDecimal.valueOf(r6 * 1e6)
             .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
         }
-        // pmod semantics, matching the declarative pqEncodeCore unpack —
-        // pins the kernel to the declarative behavior even if a packed
-        // min ever goes negative (FP cancellation to a negative micro).
+        // pmod semantics of the packed (d2u, code) unpack — pins the
+        // kernel's behavior even if a packed min ever goes negative (FP
+        // cancellation to a negative micro).
         val expect = (0 until m).map { sub =>
           java.lang.Math.floorMod(
             (0 until ksub).map(code => (d2u(sub, code) * 65536L + code)).min,

@@ -1436,7 +1436,7 @@ class StreamingOpqIvfPqMaintainSpec extends AnyFunSuite {
     val q = input.toDF().toDF("vec_id", "embedding")
       .writeStream.outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        val fresh = Similarity.opqIvfPqEncodeWide(batch, r, cents, books)
+        val fresh = Similarity.opqIvfPqEncode(batch, r, cents, books)
         val next = latest match {
           case Some(p) => spark.read.parquet(p).unionByName(fresh)
           case None => fresh
@@ -1451,17 +1451,17 @@ class StreamingOpqIvfPqMaintainSpec extends AnyFunSuite {
 
     val folded = spark.read.parquet(latest.get)
     val foldedRows = folded.as[(Long, Int, Seq[Int])].collect().toSet
-    val eagerRows = Similarity.opqIvfPqEncodeWide(corpus, r, cents, books)
+    val eagerRows = Similarity.opqIvfPqEncode(corpus, r, cents, books)
       .as[(Long, Int, Seq[Int])].collect().toSet
     assert(foldedRows == eagerRows && eagerRows.size == all.size,
       "stream-folded composed code table must equal the eager encode")
     // serving against the FOLDED artifact equals the batch search
     val queries = corpus.where(col("vec_id") % 30 === 0)
-    val servedFromFold = Similarity.opqIvfPqTopKWide(folded, queries, r,
+    val servedFromFold = Similarity.opqIvfPqTopK(folded, queries, r,
         cents, books, k = 3, nProbes = 2)
       .as[(Long, Int, Long, Long)].collect().toSet
-    val batchRun = Similarity.opqIvfPqTopKWide(
-        Similarity.opqIvfPqEncodeWide(corpus, r, cents, books), queries, r,
+    val batchRun = Similarity.opqIvfPqTopK(
+        Similarity.opqIvfPqEncode(corpus, r, cents, books), queries, r,
         cents, books, k = 3, nProbes = 2)
       .as[(Long, Int, Long, Long)].collect().toSet
     assert(servedFromFold == batchRun && batchRun.nonEmpty,
@@ -1592,7 +1592,7 @@ class StreamingOpqIvfPqServeSpec extends AnyFunSuite {
     val rotC = Similarity.rotateEmbeddings(corpus, r)
     val cents = Similarity.kmeansCentroidArrays(rotC, nCells = 4)
     val books = Similarity.pqTrainResidual(rotC, cents, m = 8, ksub = 8)
-    Similarity.opqIvfPqEncodeWide(corpus, r, cents, books)
+    Similarity.opqIvfPqEncode(corpus, r, cents, books)
       .write.parquet(s"$root/codes_wide")
     val codesWide = spark.read.parquet(s"$root/codes_wide")
 
@@ -1603,7 +1603,7 @@ class StreamingOpqIvfPqServeSpec extends AnyFunSuite {
     val served = scala.collection.mutable.Set[(Long, Int, Long, Long)]()
     val q = input.toDF().toDF("vec_id", "embedding").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        served ++= Similarity.opqIvfPqTopKWide(codesWide, batch, r,
+        served ++= Similarity.opqIvfPqTopK(codesWide, batch, r,
             cents, books, k = 3, nProbes = 2)
           .as[(Long, Int, Long, Long)].collect()
         ()
@@ -1615,7 +1615,7 @@ class StreamingOpqIvfPqServeSpec extends AnyFunSuite {
       q.processAllAvailable()
     } finally q.stop()
 
-    val batchRun = Similarity.opqIvfPqTopKWide(codesWide,
+    val batchRun = Similarity.opqIvfPqTopK(codesWide,
         queryRows.toDF("vec_id", "embedding"), r, cents, books,
         k = 3, nProbes = 2)
       .as[(Long, Int, Long, Long)].collect().toSet

@@ -28,84 +28,94 @@ class TextKernelParitySpec extends AnyFunSuite {
       array(lit("a"), lit(null).cast("string"), lit("b"), lit(null).cast("string"))
         .as("w")))
 
-  private def bothEqual(native: org.apache.spark.sql.Column,
-      hof: org.apache.spark.sql.Column, tag: String): Unit = {
-    val rows = toks.select(native.as("n"), hof.as("h")).collect()
-    rows.zipWithIndex.foreach { case (r, i) =>
-      assert(r.get(0) == r.get(1), s"$tag row $i: native=${r.get(0)} hof=${r.get(1)}")
-    }
+  // Every parity case runs over an RDD-backed frame: a projection over a
+  // local relation is folded at optimization time by interpreted eval
+  // (ConvertToLocalRelation), so only a non-local scan reaches
+  // whole-stage codegen. `TestSpark.assertCodegenStage` asserts that it did.
+  private def rddFrame(rows: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType) =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+
+  /** `native` (asserted to run `kernel` in a codegen stage) and
+    * `reference` in SEPARATE projections over `df` — a CodegenFallback
+    * HOF reference sharing the kernel's projection would take the whole
+    * projection out of codegen — compared per `id`. */
+  private def parity(df: org.apache.spark.sql.DataFrame,
+      native: org.apache.spark.sql.Column, reference: org.apache.spark.sql.Column,
+      kernel: String, tag: String): Unit = {
+    val n = df.select($"id", native.as("v"))
+    TestSpark.assertCodegenStage(n, kernel)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => r.getInt(0) -> r.get(1)).toMap
+    val (a, b) = (rows(n), rows(df.select($"id", reference.as("v"))))
+    assert(a.nonEmpty && a == b, s"$tag:\nnative=$a\nreference=$b")
   }
+
+  private def idSchema(name: String, dt: org.apache.spark.sql.types.DataType) =
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.IntegerType),
+      org.apache.spark.sql.types.StructField(name, dt)))
 
   test("shingles_s == HOF shingles for n=1..4 incl. null tokens and empties") {
     for (n <- 1 to 4)
-      bothEqual(TextFns.shingles($"w", n), TextFns.shinglesHof($"w", n), s"shingles n=$n")
+      parity(spanToks, TextFns.shingles($"w", n), TextFns.shinglesHof($"w", n),
+        "shingles_s", s"shingles n=$n")
   }
 
   test("md5_base28_l == md5-hex + nibble-decode HOF incl. null elements") {
-    bothEqual(TextFns.shingleHashes($"w"), TextFns.shingleHashesHof($"w"), "base28")
+    parity(spanToks, TextFns.shingleHashes($"w"), TextFns.shingleHashesHof($"w"),
+      "md5_base28_l", "base28")
   }
 
+  /** (id, hs) frame of each token row's hashes plus one extra row. */
+  private def hashFrame(hashes: org.apache.spark.sql.Column,
+      extra: Seq[java.lang.Long]) =
+    rddFrame(spanToks.select($"id", hashes).collect()
+        .map(r => org.apache.spark.sql.Row(r.getInt(0), r.get(1))).toSeq :+
+        org.apache.spark.sql.Row(99, extra),
+      idSchema("hs", org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.LongType, containsNull = true)))
+
   test("minhash sig/band == per-index array_min HOF incl. all-null input") {
-    val hs = toks.select(TextFns.shingleHashes(
-      TextFns.shingles($"w", 3)).as("hs"))
-      .union(Seq(1).toDF("i").select(
-        array(lit(null).cast("long"), lit(null).cast("long")).as("hs")))
-    for (i <- 0 until 8) {
-      val rows = hs.select(TextFns.minhashNum($"hs", i).as("n"),
-        TextFns.minhashNumHof($"hs", i).as("h")).collect()
-      rows.foreach(r => assert(r.get(0) == r.get(1), s"minhash $i: $r"))
-    }
-    val bands = hs.select(TextFns.minhashBandNum($"hs", 1).as("n"),
+    val hs = hashFrame(TextFns.shingleHashes(TextFns.shingles($"w", 3)),
+      Seq[java.lang.Long](null, null))
+    for (i <- 0 until 8)
+      parity(hs, TextFns.minhashNum($"hs", i), TextFns.minhashNumHof($"hs", i),
+        "minhash_sig_l", s"minhash $i")
+    parity(hs, TextFns.minhashBandNum($"hs", 1),
       concat(TextFns.minhashNumHof($"hs", 2).cast("string"), lit(":"),
-        TextFns.minhashNumHof($"hs", 3).cast("string")).as("h")).collect()
-    bands.foreach(r => assert(r.get(0) == r.get(1), s"band: $r"))
+        TextFns.minhashNumHof($"hs", 3).cast("string")),
+      "minhash_sig_l", "band")
   }
 
   test("simhash16_l == nested-aggregate HOF incl. the null-element-zeroes quirk") {
-    val hs = toks.select(TextFns.shingleHashes($"w").as("hs"))
-      .union(Seq(1).toDF("i").select(
-        array(lit(7L), lit(null).cast("long"), lit(12L)).as("hs")))
-    val rows = hs.select(TextFns.simhash16($"hs").as("n"),
-      TextFns.simhash16Hof($"hs").as("h")).collect()
-    rows.foreach(r => assert(r.get(0) == r.get(1), s"simhash: $r"))
+    val hs = hashFrame(TextFns.shingleHashes($"w"), Seq[java.lang.Long](7L, null, 12L))
+    parity(hs, TextFns.simhash16($"hs"), TextFns.simhash16Hof($"hs"),
+      "simhash16_l", "simhash")
     // the quirk row really is 0
-    assert(hs.select(TextFns.simhash16($"hs")).collect().last.getInt(0) == 0)
+    assert(hs.where($"id" === 99).select(TextFns.simhash16($"hs"))
+      .head().getInt(0) == 0)
   }
 
   test("hash16 == md5_base28 >> 12 (the Dedup.simhash / LangIdModel.buckets " +
       "rewrite): top 4 of the 7 decoded nibbles") {
-    val rows = toks.select(explode($"w").as("t"))
-      .select(TextFns.hash16($"t").cast("long").as("h16"),
-        shiftright(element_at(TextFns.shingleHashes(array($"t")), 1), 12).as("hk"))
-      .collect()
-    assert(rows.nonEmpty)
-    // null tokens: both sides null — compare boxed (getLong NPEs on null)
-    rows.foreach(r => assert(r.get(0) == r.get(1), s"$r"))
+    // one row per token, null tokens included: both sides null there
+    val tokens = rddFrame(toks.collect().flatMap(_.getSeq[String](0)).toSeq
+        .zipWithIndex.map { case (t, i) => org.apache.spark.sql.Row(i, t) },
+      idSchema("t", org.apache.spark.sql.types.StringType))
+    parity(tokens,
+      shiftright(element_at(TextFns.shingleHashes(array($"t")), 1), 12),
+      TextFns.hash16($"t").cast("long"), "md5_base28_l", "hash16")
   }
 
   test("trigrams_s == per-position substr HOF incl. multi-byte chars, " +
       "short and empty strings") {
     import graft.functions.LangIdModel
-    val texts = Seq("the quick brown fox", "汉字普通话测试", "ab", "", "éäü",
-      "a b", "𐍈𐍈𐍈x").toDF("t")
-    val rows = texts.select(LangIdModel.trigrams($"t").as("n"),
-      LangIdModel.trigramsHof($"t").as("h")).collect()
-    rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), s"$r"))
-  }
-
-  // The span kernels' parity runs over an RDD-backed frame: a projection
-  // over a local relation is folded at optimization time by interpreted
-  // eval (ConvertToLocalRelation), so only a non-local scan reaches
-  // whole-stage codegen. `codegenStage` asserts that it did.
-  private def rddFrame(rows: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType) =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-
-  private def codegenStage(df: org.apache.spark.sql.DataFrame, kernel: String): Unit = {
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.linesIterator.exists(l => l.contains(kernel) &&
-      l.matches("""^[\s+\-:|]*\*\(\d+\).*""")),
-      s"$kernel did not run in a whole-stage codegen stage:\n$p")
+    val texts = rddFrame(Seq("the quick brown fox", "汉字普通话测试", "ab", "", "éäü",
+        "a b", "𐍈𐍈𐍈x").zipWithIndex.map { case (t, i) => org.apache.spark.sql.Row(i, t) },
+      idSchema("t", org.apache.spark.sql.types.StringType))
+    parity(texts, LangIdModel.trigrams($"t"), LangIdModel.trigramsHof($"t"),
+      "trigrams_s", "trigrams")
   }
 
   private val tokSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -129,7 +139,7 @@ class TextKernelParitySpec extends AnyFunSuite {
     for (k <- (1 to 4) :+ 10) {
       val native = spanToks.select($"id",
         posexplode(TextFns.spanMd5s($"w", k)).as(Seq("pos", "h")))
-      codegenStage(native, "span_md5s")
+      TestSpark.assertCodegenStage(native, "span_md5s")
       val hof = spanToks.where(size($"w") >= k)
         .select($"id", $"w", explode(sequence(lit(0), size($"w") - k)).as("pos"))
         .select($"id", $"pos", TextFns.spanMd5Hof($"w", $"pos", k).as("h"))
@@ -172,7 +182,7 @@ class TextKernelParitySpec extends AnyFunSuite {
     for (k <- cases.map(_._3).distinct) {
       val at = df.where($"k" === k)
       val native = at.select($"id", TextFns.spanKeep($"w", $"starts", k))
-      codegenStage(native, "span_keep")
+      TestSpark.assertCodegenStage(native, "span_keep")
       val hof = at.select($"id", TextFns.spanKeepHof($"w", $"cov"))
       def rows(d: org.apache.spark.sql.DataFrame) =
         d.collect().map(r => r.getInt(0) -> r.get(1)).toMap
