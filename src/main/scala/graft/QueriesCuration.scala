@@ -869,17 +869,13 @@ private[graft] trait QueriesCuration extends QueriesRelational {
     * adds the Hamming-1 probe fan-out on side A (a pair's bucket-XOR is
     * fixed, so no pair matches twice). */
   protected def duckLshPairsSql(multiProbe: Boolean, minCosine: Double): String = {
-    val planes = Similarity.lshPlanes(6, 64)
-    val bucket = planes.zipWithIndex.map { case (p, i) =>
-      s"(CASE WHEN list_dot_product(v, ${p.mkString("[", ", ", "]")}) > 0 THEN ${1 << i} ELSE 0 END)"
-    }.mkString(" + ")
     val aSide =
       if (multiProbe)
-        """pa AS (SELECT vec_id, v, nrm, xor(bucket, flip) AS bucket
-          |       FROM n CROSS JOIN (SELECT unnest([0, 1, 2, 4, 8, 16, 32]) AS flip)),""".stripMargin
+        s"pa AS (SELECT vec_id, v, nrm, unnest(${Similarity.hamming1ProbesSql(6)}) AS bucket FROM n),"
       else "pa AS (SELECT * FROM n),"
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm, $bucket AS bucket FROM e),
+      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
+      |  ${Similarity.lshBucketSql(6, 64)} AS bucket FROM e),
       |$aSide
       |lshp AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
       |  ROUND(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 4) AS cosine
@@ -1640,14 +1636,11 @@ private[graft] trait QueriesCuration extends QueriesRelational {
     },
     None, oracleFn = Some { (s, dir) =>
       val cents = docCentroids(s, dir, nCells = 8)
-      val values = cents.zipWithIndex.map { case (v, i) =>
-        s"($i, ${v.mkString("[", ", ", "]")}::DOUBLE[])"
-      }.mkString(",\n  ")
       s"""WITH $docVecCtes,
         |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM vec
         |  WHERE list_dot_product(v, v) > 0),
         |c(cell, cv) AS (VALUES
-        |  $values),
+        |  ${Similarity.vectorValuesSql(cents)}),
         |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
         |assigned AS (
         |  SELECT vec_id, cell, cell_cos FROM (
@@ -1680,14 +1673,11 @@ private[graft] trait QueriesCuration extends QueriesRelational {
     },
     None, oracleFn = Some { (s, dir) =>
       val cents = docCentroids(s, dir, nCells = 8)
-      val values = cents.zipWithIndex.map { case (v, i) =>
-        s"($i, ${v.mkString("[", ", ", "]")}::DOUBLE[])"
-      }.mkString(",\n  ")
       s"""WITH $docVecCtes,
         |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM vec
         |  WHERE list_dot_product(v, v) > 0),
         |c(cell, cv) AS (VALUES
-        |  $values),
+        |  ${Similarity.vectorValuesSql(cents)}),
         |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
         |assigned AS (
         |  SELECT vec_id AS doc_id, cell FROM (
@@ -1715,12 +1705,9 @@ private[graft] trait QueriesCuration extends QueriesRelational {
         dim = 16)
     },
     Some {
-      val planes = Similarity.lshPlanes(6, 16)
-      val bucket = planes.zipWithIndex.map { case (p, i) =>
-        s"(CASE WHEN list_dot_product(v, ${p.mkString("[", ", ", "]")}) > 0 THEN ${1 << i} ELSE 0 END)"
-      }.mkString(" + ")
       s"""WITH $docVecCtes,
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm, $bucket AS bucket FROM vec
+        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
+        |  ${Similarity.lshBucketSql(6, 16)} AS bucket FROM vec
         |  WHERE list_dot_product(v, v) > 0),
         |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, bucket FROM n WHERE vec_id % 10 = 0),
         |sc AS (SELECT q.query_id, n.vec_id AS neighbor_id,
@@ -1743,12 +1730,9 @@ private[graft] trait QueriesCuration extends QueriesRelational {
         e.where(pmod(col("vec_id"), lit(5)) === 0), k = 10)
     },
     Some {
-      val planes = Similarity.lshPlanes(6, 64)
-      val bucket = planes.zipWithIndex.map { case (p, i) =>
-        s"(CASE WHEN list_dot_product(v, ${p.mkString("[", ", ", "]")}) > 0 THEN ${1 << i} ELSE 0 END)"
-      }.mkString(" + ")
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm, $bucket AS bucket FROM e),
+        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
+        |  ${Similarity.lshBucketSql(6, 64)} AS bucket FROM e),
         |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, bucket FROM n WHERE vec_id % 5 = 0),
         |s AS (SELECT q.query_id, n.vec_id AS neighbor_id,
         |        ROUND(list_dot_product(q.qv, n.v) / (q.qnrm * n.nrm), 4) + 0.0 AS cosine
@@ -1772,16 +1756,12 @@ private[graft] trait QueriesCuration extends QueriesRelational {
         e.where(pmod(col("vec_id"), lit(5)) === 0), k = 10)
     },
     Some {
-      val planes = Similarity.lshPlanes(6, 64)
-      val bucket = planes.zipWithIndex.map { case (p, i) =>
-        s"(CASE WHEN list_dot_product(v, ${p.mkString("[", ", ", "]")}) > 0 THEN ${1 << i} ELSE 0 END)"
-      }.mkString(" + ")
-      val probes = (Seq("bucket") ++ (0 until 6).map(p =>
-        s"xor(bucket, ${1 << p})")).mkString("[", ", ", "]")
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm, $bucket AS bucket FROM e),
+        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
+        |  ${Similarity.lshBucketSql(6, 64)} AS bucket FROM e),
         |q0 AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, bucket FROM n WHERE vec_id % 5 = 0),
-        |q AS (SELECT query_id, qv, qnrm, unnest($probes) AS bucket FROM q0),
+        |q AS (SELECT query_id, qv, qnrm,
+        |    unnest(${Similarity.hamming1ProbesSql(6)}) AS bucket FROM q0),
         |s AS (SELECT q.query_id, n.vec_id AS neighbor_id,
         |        ROUND(list_dot_product(q.qv, n.v) / (q.qnrm * n.nrm), 4) + 0.0 AS cosine
         |      FROM q JOIN n USING (bucket) WHERE n.vec_id % 5 <> 0),
@@ -1809,13 +1789,10 @@ private[graft] trait QueriesCuration extends QueriesRelational {
     None, oracleFn = Some { (s, dir) =>
       val cents = embCentroids(s, dir, "corp5",
         Tables.embeddings(s, dir).where(pmod(col("vec_id"), lit(5)) =!= 0))
-      val values = cents.zipWithIndex.map { case (v, i) =>
-        s"($i, ${v.mkString("[", ", ", "]")}::DOUBLE[])"
-      }.mkString(",\n  ")
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
         |c(cell, cv) AS (VALUES
-        |  $values),
+        |  ${Similarity.vectorValuesSql(cents)}),
         |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
         |assigned AS (
         |  SELECT vec_id, v, nrm, cell FROM (

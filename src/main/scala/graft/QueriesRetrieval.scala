@@ -1126,22 +1126,14 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
   protected def hybridCtesFor(src: String, lsh: Boolean = false,
       nPlanes: Int = 6,
       ivfCents: Option[Seq[Array[Double]]] = None): String = {
-    def bucketExpr(v: String) = {
-      val planes = Similarity.lshPlanes(nPlanes, 16)
-      planes.zipWithIndex.map { case (p, i) =>
-        s"(CASE WHEN list_dot_product($v, ${p.mkString("[", ", ", "]")}) > 0 THEN ${1 << i} ELSE 0 END)"
-      }.mkString(", ", " + ", " AS bucket")
-    }
-    val bucket = if (lsh) bucketExpr("v") else ""
-    val qbucket = if (lsh) bucketExpr("qv") else ""
-    val probes = (Seq("bucket") ++ (0 until nPlanes).map(p =>
-      s"xor(bucket, ${1 << p})")).mkString("[", ", ", "]")
+    def bucketExpr(v: String) =
+      if (lsh) s", ${Similarity.lshBucketSql(nPlanes, 16, v)} AS bucket" else ""
+    val bucket = bucketExpr("v")
+    val qbucket = bucketExpr("qv")
+    val probes = Similarity.hamming1ProbesSql(nPlanes)
     val ivfCtes = ivfCents.fold("") { cs =>
-      val values = cs.zipWithIndex.map { case (v, i) =>
-        s"($i, ${v.mkString("[", ", ", "]")}::DOUBLE[])"
-      }.mkString(",\n  ")
       s"""c(cell, cv) AS (VALUES
-        |  $values),
+        |  ${Similarity.vectorValuesSql(cs)}),
         |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
         |asg AS (SELECT vec_id, v, nrm, cell FROM (
         |    SELECT n.vec_id, n.v, n.nrm, cn.cell,

@@ -34,6 +34,142 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     (s, dir) => Similarity.bruteTopKAgg(Tables.embeddings(s, dir), k = 10, stride = 20),
     simBruteTopk.oracle, bench = true)
 
+  // ---------------------------------------------------------------
+  // Recall rows: per query, how many of the exact top-10 each
+  // approximate tier recovers — the filter-and-refine evaluation step,
+  // as a hash-checked output. A recall row is an exact reference plus
+  // its tiers, each a Q whose fn is the Spark ranking and whose oracle
+  // (static or derived) is the DuckDB text of the same ranking; a tier
+  // taken from a registered row is that row. Only the recall row
+  // itself is registered.
+  // ---------------------------------------------------------------
+
+  /** (query_id, n_brute, overlap…, bp…): per query, the reference's row
+    * count, then per tier (overlap column, bp column, ranking) how many
+    * of the reference's (query_id, neighbor_id) pairs the tier also
+    * returned, then that count in basis points of n_brute. The left
+    * join keeps a query whose tier returns nothing, at 0. */
+  private[graft] def overlap(brute: DataFrame,
+      tiers: Seq[(String, String, DataFrame)]): DataFrame = {
+    val ref = brute.select(col("query_id"), col("neighbor_id"))
+    val counts = tiers.foldLeft(
+        ref.groupBy(col("query_id")).agg(count(lit(1)).as("n_brute"))) {
+      case (acc, (o, _, tier)) =>
+        acc.join(ref.join(tier.select(col("query_id"), col("neighbor_id")),
+            Seq("query_id", "neighbor_id"))
+          .groupBy(col("query_id")).agg(count(lit(1)).as(o)),
+          Seq("query_id"), "left")
+    }
+    counts.select((Seq(col("query_id"), col("n_brute")) ++
+      tiers.map { case (o, _, _) => coalesce(col(o), lit(0L)).as(o) } ++
+      tiers.map { case (o, b, _) =>
+        // integral div by construction, matching the oracle's floor
+        // `//` (ADVICE r13 — truncation==floor held only by IEEE luck)
+        expr(s"coalesce($o, 0) * 10000 div n_brute").as(b)
+      }): _*)
+  }
+
+  /** The DuckDB twin of [[overlap]]: the reference and each tier nest as
+    * CTEs (`brute`, `t0`, `t1`, …; inner names shadow outer ones), then
+    * one hits/base tail. */
+  private def overlapSql(brute: String,
+      tiers: Seq[(String, String, String)]): String = {
+    val ix = tiers.zipWithIndex
+    val ctes = Seq(s"brute AS (\n$brute)") ++
+      ix.map { case ((_, _, sql), i) => s"t$i AS (\n$sql)" } ++
+      ix.map { case ((o, _, _), i) =>
+        s"hits$i AS (SELECT b.query_id, count(*) AS $o\n  FROM brute b JOIN t$i USING (query_id, neighbor_id) GROUP BY 1)"
+      } :+ "base AS (SELECT query_id, count(*) AS n_brute FROM brute GROUP BY 1)"
+    val cols = Seq("CAST(base.n_brute AS BIGINT) AS n_brute") ++
+      ix.map { case ((o, _, _), i) => s"CAST(coalesce(hits$i.$o, 0) AS BIGINT) AS $o" } ++
+      ix.map { case ((o, b, _), i) =>
+        s"CAST(coalesce(hits$i.$o, 0) * 10000 // base.n_brute AS BIGINT) AS $b" }
+    s"WITH ${ctes.mkString(",\n")}\nSELECT base.query_id, ${cols.mkString(",\n  ")}\n" +
+      s"FROM base${ix.map { case (_, i) => s" LEFT JOIN hits$i USING (query_id)" }.mkString}"
+  }
+
+  /** A registered recall row over `reference` and `tiers` (overlap column,
+    * bp column, ranking). Its oracle is static when every part's is and
+    * derived at verify time when any part's is. */
+  private def recallRow(name: String, reference: Q,
+      tiers: Seq[(String, String, Q)]): Q = {
+    def sql(text: Q => String): String = overlapSql(text(reference),
+      tiers.map { case (o, b, q) => (o, b, text(q)) })
+    val fn: QueryFn = (s, dir) => overlap(reference.fn(s, dir),
+      tiers.map { case (o, b, q) => (o, b, q.fn(s, dir)) })
+    if ((reference +: tiers.map(_._3)).forall(_.oracle.isDefined))
+      Q(name, fn, Some(sql(_.oracle.get)))
+    else Q(name, fn, None, oracleFn = Some((s, dir) =>
+      sql(q => q.oracle.getOrElse(q.oracleFn.get(s, dir)))))
+  }
+
+  /** Single-tier recall: (query_id, n_brute, n_overlap, recall_bp). */
+  protected def recallQ(name: String, reference: Q, tier: Q): Q =
+    recallRow(name, reference, Seq(("n_overlap", "recall_bp", tier)))
+
+  /** Gain pair: (query_id, n_brute, a_overlap, b_overlap, a_bp, b_bp)
+    * for tiers labelled a and b. */
+  protected def gainQ(name: String, reference: Q, a: (String, Q),
+      b: (String, Q)): Q =
+    recallRow(name, reference, Seq(a, b).map { case (t, q) =>
+      (s"${t}_overlap", s"${t}_bp", q) })
+
+  /** The exact reference of every recall row: brute-force cosine top-10
+    * of the queries (vec_id ≡ 0 mod 20) over `srcSql` (vec_id, v), with
+    * zero-norm vectors dropped as [[Similarity.bruteTopK]] drops them. */
+  protected def bruteRefSql(srcSql: String): String =
+    s"""WITH src AS ($srcSql),
+       |nn AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM src
+       |  WHERE list_dot_product(v, v) > 0),
+       |qn AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM nn
+       |  WHERE vec_id % 20 = 0),
+       |bs AS (SELECT qn.query_id, nn.vec_id AS neighbor_id,
+       |    ROUND(list_dot_product(qn.qv, nn.v) / (qn.qnrm * nn.nrm), 4) + 0.0 AS cosine
+       |  FROM qn CROSS JOIN nn WHERE nn.vec_id <> qn.query_id)
+       |SELECT query_id, neighbor_id FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY query_id
+       |      ORDER BY cosine DESC, neighbor_id) AS rank FROM bs)
+       |  WHERE rank <= 10""".stripMargin
+
+  /** The embeddings table as a DuckDB relation (vec_id, v). */
+  protected val embSql = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
+
+  /** [[Similarity.synthesizeClustered]] as a DuckDB relation (vec_id, v). */
+  protected val clusteredFixSql =
+    """SELECT r.range AS vec_id,
+      |    list_transform(generate_series(0, 15), d ->
+      |      CAST(((r.range % 8) * 5 + d * 3) % 17 - 8 AS DOUBLE) / 4.0
+      |      + CAST((r.range * 13 + d * 7) % 9 - 4 AS DOUBLE) / 32.0) AS v
+      |  FROM range(0, 560) r""".stripMargin
+
+  /** `src` (vec_id, v) rotated by the literal matrix `m`, v′(i) = m(i)·v —
+    * the SQL twin of [[Similarity.rotateEmbeddings]]. */
+  protected def rotatedSql(src: String, m: Seq[Array[Double]]): String =
+    s"""SELECT s.vec_id, list(list_dot_product(r.rv, s.v) ORDER BY r.i) AS v
+       |  FROM $src s CROSS JOIN (VALUES
+       |  ${Similarity.vectorValuesSql(m)}) r(i, rv)
+       |  GROUP BY s.vec_id""".stripMargin
+
+  /** The smeared-latent OPQ corpus H·z ([[opqCorpus]]) as a DuckDB
+    * relation (vec_id, v). */
+  protected val opqCorpusSql =
+    s"""WITH lat AS (SELECT r.range AS vec_id,
+       |    list_transform(generate_series(0, 15), d ->
+       |      CAST((r.range * 13 + d * 7 + (r.range * d) % 29) % 65 - 32 AS DOUBLE)
+       |      / 32.0 / power(2.0, CAST(d AS DOUBLE))) AS v
+       |  FROM range(0, 560) r)
+       |${rotatedSql("lat", Similarity.hadamard16)}""".stripMargin
+
+  private val embBrute = Q("brute_embeddings", simBruteTopk.fn,
+    Some(bruteRefSql(embSql)))
+  private val clusteredBrute = Q("brute_clustered",
+    (s, _) => Similarity.bruteTopK(Similarity.synthesizeClustered(s),
+      k = 10, stride = 20),
+    Some(bruteRefSql(clusteredFixSql)))
+  private val opqBrute = Q("brute_opq_corpus",
+    (s, _) => Similarity.bruteTopK(opqCorpus(s), k = 10, stride = 20),
+    Some(bruteRefSql(opqCorpusSql)))
+
   protected val simIvfTopk = Q("sim_ivf_topk",
     (s, dir) => Similarity.ivfTopK(Tables.embeddings(s, dir), k = 10, stride = 20),
     Some("""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
@@ -67,9 +203,6 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
   protected def ivfTrainedOracle(spark: SparkSession, dir: String, nProbes: Int): String = {
     val cents = Similarity.kmeansCentroidArrays(
       Tables.embeddings(spark, dir), nCells = 10)
-    val values = cents.zipWithIndex.map { case (v, i) =>
-      s"($i, ${v.mkString("[", ", ", "]")}::DOUBLE[])"
-    }.mkString(",\n  ")
     val qCte =
       if (nProbes <= 1)
         "q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, cell FROM assigned WHERE vec_id % 20 = 0)"
@@ -84,7 +217,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
        |c(cell, cv) AS (VALUES
-       |  $values),
+       |  ${Similarity.vectorValuesSql(cents)}),
        |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
        |assigned AS (
        |  SELECT vec_id, v, nrm, cell FROM (
@@ -132,14 +265,11 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
   /** The centroid-literal assignment CTEs shared by the semantic-dedup
     * oracles: e/n/c/cn/assigned over the embeddings table, `assigned`
     * carrying (vec_id, v, nrm, cell, cell_cos). */
-  protected def semAssignedCtes(cents: Seq[Array[Double]]): String = {
-    val values = cents.zipWithIndex.map { case (v, i) =>
-      s"($i, ${v.mkString("[", ", ", "]")}::DOUBLE[])"
-    }.mkString(",\n  ")
+  protected def semAssignedCtes(cents: Seq[Array[Double]]): String =
     s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
       |c(cell, cv) AS (VALUES
-      |  $values),
+      |  ${Similarity.vectorValuesSql(cents)}),
       |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
       |assigned AS (
       |  SELECT vec_id, v, nrm, cell, cell_cos FROM (
@@ -149,7 +279,6 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       |        ORDER BY ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
       |    FROM n CROSS JOIN cn)
       |  WHERE crn = 1)""".stripMargin
-  }
 
   /** Dominated-vec_id subquery body over relation `rel` (the SemDeDup
     * drop rule: a same-cell near-twin farther from the centroid, vec_id
@@ -236,13 +365,10 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     val cents = Similarity.kmeansCentroidArrays(
       Tables.embeddings(spark, dir).where(pmod(col("vec_id"), lit(10)) =!= 0),
       nCells = 10)
-    val values = cents.zipWithIndex.map { case (v, i) =>
-      s"($i, ${v.mkString("[", ", ", "]")}::DOUBLE[])"
-    }.mkString(",\n  ")
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
        |c(cell, cv) AS (VALUES
-       |  $values),
+       |  ${Similarity.vectorValuesSql(cents)}),
        |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
        |assigned AS (
        |  SELECT vec_id, cell, cell_cos,
@@ -296,21 +422,18 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
 
   protected val simLshTopk = Q("sim_lsh_topk",
     (s, dir) => Similarity.lshTopK(Tables.embeddings(s, dir), k = 10, stride = 20),
-    Some {
-      val planes = Similarity.lshPlanes(6, 64)
-      val bucket = planes.zipWithIndex.map { case (p, i) =>
-        s"(CASE WHEN list_dot_product(v, ${p.mkString("[", ", ", "]")}) > 0 THEN ${1 << i} ELSE 0 END)"
-      }.mkString(" + ")
+    Some(
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm, $bucket AS bucket FROM e),
+        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
+        |  ${Similarity.lshBucketSql(6, 64)} AS bucket FROM e),
         |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, bucket FROM n WHERE vec_id % 20 = 0),
         |s AS (SELECT q.query_id, n.vec_id AS neighbor_id,
         |        ROUND(list_dot_product(q.qv, n.v) / (q.qnrm * n.nrm), 4) AS cosine
         |      FROM q JOIN n USING (bucket) WHERE n.vec_id != q.query_id),
         |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM s)
         |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-        |FROM r WHERE rank <= 10""".stripMargin
-    }, bench = true)
+        |FROM r WHERE rank <= 10""".stripMargin),
+    bench = true)
 
   /** Multi-probe LSH (own bucket + every Hamming-1 bucket per query) —
     * the deterministic ANN recall knob, oracle-checked unlike the trained
@@ -319,23 +442,19 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
   protected val simLshMultiprobe = Q("sim_lsh_multiprobe",
     (s, dir) => Similarity.lshTopKMultiProbe(Tables.embeddings(s, dir),
       k = 10, stride = 20),
-    Some {
-      val planes = Similarity.lshPlanes(6, 64)
-      val bucket = planes.zipWithIndex.map { case (p, i) =>
-        s"(CASE WHEN list_dot_product(v, ${p.mkString("[", ", ", "]")}) > 0 THEN ${1 << i} ELSE 0 END)"
-      }.mkString(" + ")
+    Some(
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm, $bucket AS bucket FROM e),
+        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
+        |  ${Similarity.lshBucketSql(6, 64)} AS bucket FROM e),
         |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, bucket FROM n WHERE vec_id % 20 = 0),
-        |probes AS (SELECT query_id, qv, qnrm, xor(bucket, flip) AS bucket
-        |           FROM q CROSS JOIN (SELECT unnest([0, 1, 2, 4, 8, 16, 32]) AS flip)),
+        |probes AS (SELECT query_id, qv, qnrm,
+        |    unnest(${Similarity.hamming1ProbesSql(6)}) AS bucket FROM q),
         |s AS (SELECT p.query_id, n.vec_id AS neighbor_id,
         |        ROUND(list_dot_product(p.qv, n.v) / (p.qnrm * n.nrm), 4) AS cosine
         |      FROM probes p JOIN n USING (bucket) WHERE n.vec_id != p.query_id),
         |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM s)
         |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-        |FROM r WHERE rank <= 10""".stripMargin
-    })
+        |FROM r WHERE rank <= 10""".stripMargin))
 
   /** Embedding int8 quantization stats: per-vector scale + checksum of the
     * quantized values. Quantization uses `floor(x·127/max + 0.5)` — the
@@ -400,21 +519,16 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       posexplode(col("codes")).as(Seq("sub", "code"))): _*)
 
   /** Shared derived-oracle CTE block for the PQ family: codebook VALUES
-    * literals with self-dots, per-subspace corpus slices, and the encode
-    * relation `enc(vec_id, sub, code)` — round-6 micro-L2 argmin with
-    * the same (d2u, code) total order the pq_encode_i kernel uses. */
+    * literals with self-dots, per-subspace slices (m = 8, width `dsub`)
+    * of the corpus `e`, and the encode relation `enc(vec_id, sub, code)`
+    * — round-6 micro-L2 argmin with the same (d2u, code) total order the
+    * pq_encode_i kernel uses. */
   protected def pqCtes(books: Seq[Seq[Array[Double]]],
-      srcSql: String = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"): String = {
-    val values = books.zipWithIndex.flatMap { case (cs, sub) =>
-      cs.zipWithIndex.map { case (c, code) =>
-        s"($sub, $code, ${c.mkString("[", ", ", "]")}::DOUBLE[])" }
-    }.mkString(",\n  ")
-    s"""cbv(sub, code, cv) AS (VALUES
-      |  $values),
-      |cb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM cbv),
+      srcSql: String = embSql, dsub: Int = 8): String =
+    s"""${booksCte(books)},
       |e AS ($srcSql),
       |sv AS (SELECT vec_id, CAST(r.range AS INTEGER) AS sub,
-      |    list_slice(v, r.range * 8 + 1, r.range * 8 + 8) AS xs
+      |    list_slice(v, r.range * $dsub + 1, r.range * $dsub + $dsub) AS xs
       |  FROM e CROSS JOIN range(0, 8) r),
       |sd AS (SELECT vec_id, sub, code,
       |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
@@ -424,7 +538,130 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       |    SELECT *, row_number() OVER (PARTITION BY vec_id, sub
       |      ORDER BY d2u, code) AS rn FROM sd)
       |  WHERE rn = 1)""".stripMargin
+
+  /** Codebook relation `cb`(sub, code, cv, cc) from the literals. */
+  protected def booksCte(books: Seq[Seq[Array[Double]]]): String =
+    s"""cb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM (VALUES
+       |  ${Similarity.codebookValuesSql(books)}) b(sub, code, cv))""".stripMargin
+
+  /** Centroid relation `cn`(cell, w, cnrm) from the literals. */
+  protected def centsCte(cents: Seq[Array[Double]]): String =
+    s"""cn AS (SELECT cell, w, sqrt(list_dot_product(w, w)) AS cnrm FROM (VALUES
+       |  ${Similarity.vectorValuesSql(cents)}) c(cell, w))""".stripMargin
+
+  /** Exact per-query ADC LUT over [[pqCtes]]' `cb`: `qs` slices the raw
+    * query vectors `qv` of `qRel`(query_id, qv) into the 8 subspaces,
+    * `lut`(query_id, sub, code, d2u) holds the round-6 micro-L2 to every
+    * code. */
+  private def pqLutCtes(qRel: String, dsub: Int = 8): String =
+    s"""qs AS (SELECT query_id, CAST(r.range AS INTEGER) AS sub,
+       |    list_slice(qv, r.range * $dsub + 1, r.range * $dsub + $dsub) AS xs
+       |  FROM $qRel CROSS JOIN range(0, 8) r),
+       |lut AS (SELECT query_id, sub, code,
+       |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
+       |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
+       |  FROM qs JOIN cb USING (sub))""".stripMargin
+
+  /** Flat ADC over [[pqCtes]]: the queries (vec_id ≡ 0 mod 20) of `e`,
+    * their [[pqLutCtes]], and `sc`(query_id, vec_id, d2u) — every stored
+    * code row but the query's own, scored by its summed LUT entries. */
+  private def pqAdcCtes(dsub: Int = 8): String =
+    s"""q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 20 = 0),
+       |${pqLutCtes("q", dsub)},
+       |sc AS (SELECT l.query_id, enc.vec_id, CAST(sum(l.d2u) AS BIGINT) AS d2u
+       |  FROM enc JOIN lut l USING (sub, code)
+       |  WHERE enc.vec_id <> l.query_id
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** The ADC ranking tail over `sc`: top-10 per query by (d2u, vec_id)
+    * as (query_id, rank, neighbor_id, d2u). */
+  private val adcRankSql =
+    """r AS (SELECT *, row_number() OVER (PARTITION BY query_id
+      |    ORDER BY d2u, vec_id) AS rank FROM sc)
+      |SELECT query_id, CAST(rank AS INTEGER) AS rank,
+      |  vec_id AS neighbor_id, d2u
+      |FROM r WHERE rank <= 10""".stripMargin
+
+  /** Flat-ADC top-10 over `srcSql` (vec_id, v) from codebook literals:
+    * the oracle of sim_pq_topk, sim_opq_topk and the fixture flat-PQ
+    * tiers. */
+  protected def pqTopkSql(books: Seq[Seq[Array[Double]]],
+      srcSql: String = embSql, dsub: Int = 8): String =
+    s"""WITH ${pqCtes(books, srcSql, dsub)},
+       |${pqAdcCtes(dsub)},
+       |$adcRankSql""".stripMargin
+
+  /** IVF ADC over a source relation `src`(vec_id, v) with the codebooks
+    * `cb`(sub, code, cv, cc) and centroids `cn`(cell, w, cnrm) in scope —
+    * the oracle fragment for every IVF-PQ layout: assignment (round-6
+    * cosine desc, min-cell tie-break), with `residual` the whole-vector
+    * residual v − c(cell) (else the raw vector), dsub-wide encode
+    * (m = 8; dsub 2 on the dim-16 fixtures, 8 on the dim-64 table) into
+    * `enc`(vec_id, cell, sub, code), nProbes probed cells per query
+    * (vec_id ≡ 0 mod 20), one exact LUT per probed cell from the query's
+    * own residual (or raw vector), and the ADC sum
+    * `sc`(query_id, vec_id, d2u). Without `residual` every probed cell
+    * gets the same LUT, so a pair scores as in the raw IVF-PQ search. */
+  protected def ivfAdcCtes(src: String, nProbes: Int, dsub: Int,
+      residual: Boolean): String = {
+    def res(v: String): String =
+      if (residual) s"list_transform($v, (x, i) -> x - cn.w[i])" else v
+    s"""vn AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm
+      |  FROM $src),
+      |asgn AS (SELECT vec_id, cell FROM (
+      |    SELECT n.vec_id, cn.cell,
+      |      row_number() OVER (PARTITION BY n.vec_id
+      |        ORDER BY ROUND(list_dot_product(cn.w, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
+      |    FROM vn n CROSS JOIN cn)
+      |  WHERE crn = 1),
+      |resid AS (SELECT n.vec_id, a.cell, ${res("n.v")} AS rv
+      |  FROM vn n JOIN asgn a ON a.vec_id = n.vec_id
+      |    JOIN cn ON cn.cell = a.cell),
+      |sv AS (SELECT vec_id, cell, CAST(r.range AS INTEGER) AS sub,
+      |    list_slice(rv, r.range * $dsub + 1, r.range * $dsub + $dsub) AS xs
+      |  FROM resid CROSS JOIN range(0, 8) r),
+      |sd AS (SELECT vec_id, cell, sub, code,
+      |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
+      |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
+      |  FROM sv JOIN cb USING (sub)),
+      |enc AS (SELECT vec_id, cell, sub, code FROM (
+      |    SELECT *, row_number() OVER (PARTITION BY vec_id, sub
+      |      ORDER BY d2u, code) AS rn FROM sd)
+      |  WHERE rn = 1),
+      |pb AS (SELECT query_id, cell FROM (
+      |    SELECT n.vec_id AS query_id, cn.cell,
+      |      row_number() OVER (PARTITION BY n.vec_id
+      |        ORDER BY ROUND(list_dot_product(n.v, cn.w) / (n.nrm * cn.cnrm), 6) DESC, cn.cell) AS pr
+      |    FROM vn n CROSS JOIN cn WHERE n.vec_id % 20 = 0)
+      |  WHERE pr <= $nProbes),
+      |qres AS (SELECT pb.query_id, pb.cell, ${res("q.v")} AS rqv
+      |  FROM pb JOIN vn q ON q.vec_id = pb.query_id
+      |    JOIN cn ON cn.cell = pb.cell),
+      |qs AS (SELECT query_id, cell, CAST(r.range AS INTEGER) AS sub,
+      |    list_slice(rqv, r.range * $dsub + 1, r.range * $dsub + $dsub) AS xs
+      |  FROM qres CROSS JOIN range(0, 8) r),
+      |lut AS (SELECT query_id, cell, sub, code,
+      |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
+      |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
+      |  FROM qs JOIN cb USING (sub)),
+      |sc AS (SELECT l.query_id, enc.vec_id, CAST(sum(l.d2u) AS BIGINT) AS d2u
+      |  FROM enc JOIN lut l ON l.cell = enc.cell
+      |      AND l.sub = enc.sub AND l.code = enc.code
+      |  WHERE enc.vec_id <> l.query_id
+      |  GROUP BY 1, 2)""".stripMargin
   }
+
+  /** IVF-ADC top-10 over `srcSql` (vec_id, v) from centroid and codebook
+    * literals ([[ivfAdcCtes]]): the oracle of the IVF-PQ, residual and
+    * OPQ ∘ residual rows and of the fixture IVF tiers. */
+  protected def ivfTopkSql(srcSql: String, cents: Seq[Array[Double]],
+      books: Seq[Seq[Array[Double]]], nProbes: Int, dsub: Int,
+      residual: Boolean = true): String =
+    s"""WITH src AS ($srcSql),
+       |${booksCte(books)},
+       |${centsCte(cents)},
+       |${ivfAdcCtes("src", nProbes, dsub, residual)},
+       |$adcRankSql""".stripMargin
 
   /** PQ encode (Similarity.pqEncode): the corpus as (vec_id, sub, code) —
     * m codes per vector against the persisted codebooks, one row per
@@ -451,59 +688,29 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
         e.where(pmod(col("vec_id"), lit(20)) === 0),
         pqBooks(s, dir), k = 10)
     },
-    None, oracleFn = Some { (s, dir) =>
-      s"""WITH ${pqCtes(pqBooks(s, dir))},
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 20 = 0),
-        |qs AS (SELECT query_id, CAST(r.range AS INTEGER) AS sub,
-        |    list_slice(qv, r.range * 8 + 1, r.range * 8 + 8) AS xs
-        |  FROM q CROSS JOIN range(0, 8) r),
-        |lut AS (SELECT query_id, sub, code,
-        |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-        |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-        |  FROM qs JOIN cb USING (sub)),
-        |sc AS (SELECT l.query_id, enc.vec_id, CAST(sum(l.d2u) AS BIGINT) AS d2u
-        |  FROM enc JOIN lut l USING (sub, code)
-        |  WHERE enc.vec_id <> l.query_id
-        |  GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY d2u, vec_id) AS rank FROM sc)
-        |SELECT query_id, CAST(rank AS INTEGER) AS rank,
-        |  vec_id AS neighbor_id, d2u
-        |FROM r WHERE rank <= 10""".stripMargin
-    })
+    None, oracleFn = Some((s, dir) => pqTopkSql(pqBooks(s, dir))))
 
   /** PQ ADC + exact re-rank (Similarity.pqTopKRefined, the "+R"
-    * refinement): the corpus-wide pass runs on CODES (ADC shortlist of
-    * 50 per query), then only the |queries|×50 shortlisted vectors are
-    * read back for an exact round-4 cosine top-10 — crossTopK's output
-    * contract from a fraction of its vector reads. Recall vs brute is
-    * measured in NOTES.md r14; determinism is oracled end to end
-    * from the codebook literals. */
-  protected val simPqRerank = Q("sim_pq_rerank",
+    * refinement): the corpus-wide pass runs on CODES (an ADC shortlist
+    * per query: 50 for sim_pq_rerank, 200 for sim_pq_recall's tier),
+    * then only the |queries|×shortlist vectors are read back for an
+    * exact round-4 cosine top-10 — crossTopK's output contract from a
+    * fraction of its vector reads. Recall vs brute is sim_pq_recall;
+    * determinism is oracled end to end from the codebook literals. */
+  protected def pqRerank(shortlist: Int): Q = Q("sim_pq_rerank",
     (s, dir) => {
       val e = Tables.embeddings(s, dir)
       Similarity.pqTopKRefined(pqCodesAllWide(s, dir), e,
         e.where(pmod(col("vec_id"), lit(20)) === 0),
-        pqBooks(s, dir), k = 10, shortlist = 50)
+        pqBooks(s, dir), k = 10, shortlist = shortlist)
     },
     None, oracleFn = Some { (s, dir) =>
       s"""WITH ${pqCtes(pqBooks(s, dir))},
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 20 = 0),
-        |qs AS (SELECT query_id, CAST(r.range AS INTEGER) AS sub,
-        |    list_slice(qv, r.range * 8 + 1, r.range * 8 + 8) AS xs
-        |  FROM q CROSS JOIN range(0, 8) r),
-        |lut AS (SELECT query_id, sub, code,
-        |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-        |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-        |  FROM qs JOIN cb USING (sub)),
-        |sc AS (SELECT l.query_id, enc.vec_id, CAST(sum(l.d2u) AS BIGINT) AS d2u
-        |  FROM enc JOIN lut l USING (sub, code)
-        |  WHERE enc.vec_id <> l.query_id
-        |  GROUP BY 1, 2),
+        |${pqAdcCtes()},
         |sl AS (SELECT query_id, vec_id FROM (
         |    SELECT *, row_number() OVER (PARTITION BY query_id
         |      ORDER BY d2u, vec_id) AS rank FROM sc)
-        |  WHERE rank <= 50),
+        |  WHERE rank <= $shortlist),
         |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e
         |  WHERE list_dot_product(v, v) > 0),
         |qn AS (SELECT vec_id AS query_id, v AS qv,
@@ -518,6 +725,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
         |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
         |FROM rr WHERE rank <= 10""".stripMargin
     })
+  protected val simPqRerank = pqRerank(shortlist = 50)
 
   /** EXACT Hamming near-dup pairs via pigeonhole banding
     * (Similarity.hammingNearDupPairs) — the dedup-family face of the
@@ -535,11 +743,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     (s, dir) =>
       Similarity.hammingNearDupPairs(Similarity.synthesizeClustered(s),
         dim = 16, maxHamming = 3, bandBits = 4),
-    Some("""WITH fix AS (SELECT r.range AS vec_id,
-      |    list_transform(generate_series(0, 15), d ->
-      |      CAST(((r.range % 8) * 5 + d * 3) % 17 - 8 AS DOUBLE) / 4.0
-      |      + CAST((r.range * 13 + d * 7) % 9 - 4 AS DOUBLE) / 32.0) AS v
-      |  FROM range(0, 560) r),
+    Some(s"""WITH fix AS ($clusteredFixSql),
       |p AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
       |    CAST(list_sum(list_transform(a.v,
       |      (x, i) -> CASE WHEN (x > 0) <> (b.v[i] > 0) THEN 1 ELSE 0 END))
@@ -566,11 +770,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
         fix.where(pmod(col("vec_id"), lit(7)) =!= 0), hist,
         dim = 16, maxHamming = 3, bandBits = 4)
     },
-    Some("""WITH fix AS (SELECT r.range AS vec_id,
-      |    list_transform(generate_series(0, 15), d ->
-      |      CAST(((r.range % 8) * 5 + d * 3) % 17 - 8 AS DOUBLE) / 4.0
-      |      + CAST((r.range * 13 + d * 7) % 9 - 4 AS DOUBLE) / 32.0) AS v
-      |  FROM range(0, 560) r),
+    Some(s"""WITH fix AS ($clusteredFixSql),
       |b AS (SELECT * FROM fix WHERE vec_id % 7 <> 0),
       |h AS (SELECT * FROM fix WHERE vec_id % 7 = 0),
       |ph AS (SELECT b.vec_id AS vec_a, h.vec_id AS vec_b,
@@ -623,11 +823,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
           dim = 16, maxHamming = 1, bandBits = 4)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       .select(col("doc_id").as("vec_id"), col("cluster")),
-    Some("""WITH RECURSIVE fix AS (SELECT r.range AS vec_id,
-      |    list_transform(generate_series(0, 15), d ->
-      |      CAST(((r.range % 8) * 5 + d * 3) % 17 - 8 AS DOUBLE) / 4.0
-      |      + CAST((r.range * 13 + d * 7) % 9 - 4 AS DOUBLE) / 32.0) AS v
-      |  FROM range(0, 560) r),
+    Some(s"""WITH RECURSIVE fix AS ($clusteredFixSql),
       |pairs AS MATERIALIZED (SELECT vec_a, vec_b FROM (
       |    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
       |      CAST(list_sum(list_transform(a.v,
@@ -650,67 +846,8 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * 0.768 aggregate at m8k16). Both rankings deterministic, so the
     * recall figures themselves hash-check against DuckDB's
     * re-derivation of both chains from the codebook literals. */
-  protected val simPqRecall = Q("sim_pq_recall",
-    (s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val brute = Similarity.bruteTopK(e, k = 10, stride = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      val pq = Similarity.pqTopKRefined(pqCodesAllWide(s, dir), e,
-          e.where(pmod(col("vec_id"), lit(20)) === 0),
-          pqBooks(s, dir), k = 10, shortlist = 200)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = brute.join(pq, Seq("query_id", "neighbor_id"))
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_overlap"))
-      brute.groupBy(col("query_id")).agg(count(lit(1)).as("n_brute"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), col("n_brute"),
-          coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-          expr("coalesce(n_overlap, 0) * 10000 div n_brute").as("recall_bp"))
-    },
-    None, oracleFn = Some { (s, dir) =>
-      s"""WITH ${pqCtes(pqBooks(s, dir))},
-        |nn AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e
-        |  WHERE list_dot_product(v, v) > 0),
-        |qn AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM nn
-        |  WHERE vec_id % 20 = 0),
-        |bbs AS (SELECT qn.query_id, nn.vec_id AS neighbor_id,
-        |    ROUND(list_dot_product(qn.qv, nn.v) / (qn.qnrm * nn.nrm), 4) + 0.0 AS cosine
-        |  FROM qn CROSS JOIN nn WHERE nn.vec_id <> qn.query_id),
-        |brute AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cosine DESC, neighbor_id) AS rank FROM bbs)
-        |  WHERE rank <= 10),
-        |qs AS (SELECT query_id, CAST(r.range AS INTEGER) AS sub,
-        |    list_slice(qv, r.range * 8 + 1, r.range * 8 + 8) AS xs
-        |  FROM qn CROSS JOIN range(0, 8) r),
-        |lut AS (SELECT query_id, sub, code,
-        |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-        |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-        |  FROM qs JOIN cb USING (sub)),
-        |sc AS (SELECT l.query_id, enc.vec_id, CAST(sum(l.d2u) AS BIGINT) AS d2u
-        |  FROM enc JOIN lut l USING (sub, code)
-        |  WHERE enc.vec_id <> l.query_id
-        |  GROUP BY 1, 2),
-        |sl AS (SELECT query_id, vec_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY d2u, vec_id) AS rank FROM sc)
-        |  WHERE rank <= 200),
-        |x AS (SELECT sl.query_id, sl.vec_id AS neighbor_id,
-        |    ROUND(list_dot_product(qn.qv, nn.v) / (qn.qnrm * nn.nrm), 4) + 0.0 AS cosine
-        |  FROM sl JOIN nn ON nn.vec_id = sl.vec_id
-        |    JOIN qn ON qn.query_id = sl.query_id),
-        |pq AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cosine DESC, neighbor_id) AS rank FROM x)
-        |  WHERE rank <= 10),
-        |hits AS (SELECT b.query_id, count(*) AS n_overlap
-        |  FROM brute b JOIN pq USING (query_id, neighbor_id) GROUP BY 1),
-        |base AS (SELECT query_id, count(*) AS n_brute FROM brute GROUP BY 1)
-        |SELECT base.query_id, CAST(base.n_brute AS BIGINT) AS n_brute,
-        |  CAST(coalesce(hits.n_overlap, 0) AS BIGINT) AS n_overlap,
-        |  CAST(coalesce(hits.n_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS recall_bp
-        |FROM base LEFT JOIN hits USING (query_id)""".stripMargin
-    })
+  protected val simPqRecall = recallQ("sim_pq_recall", embBrute,
+    pqRerank(shortlist = 200))
 
   /** Incremental PQ index maintenance — the code-table sibling of
     * sim_ivf_incr: codebooks train on HISTORY only (vec_id ≡ 0 mod 7)
@@ -773,32 +910,8 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
         opqEmbRotated(s, dir).where(pmod(col("vec_id"), lit(20)) === 0),
         opqEmbBooks(s, dir), k = 10)
     },
-    None, oracleFn = Some { (s, dir) =>
-      s"""WITH rm(i, rv) AS (VALUES
-        |  ${opqMatValues(opqEmbR(s, dir))}),
-        |e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v0 FROM embeddings),
-        |rot AS (SELECT e0.vec_id,
-        |    list(list_dot_product(r.rv, e0.v0) ORDER BY r.i) AS v
-        |  FROM e0 CROSS JOIN rm r GROUP BY e0.vec_id),
-        |${pqCtes(opqEmbBooks(s, dir), "SELECT vec_id, v FROM rot")},
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 20 = 0),
-        |qs AS (SELECT query_id, CAST(r.range AS INTEGER) AS sub,
-        |    list_slice(qv, r.range * 8 + 1, r.range * 8 + 8) AS xs
-        |  FROM q CROSS JOIN range(0, 8) r),
-        |lut AS (SELECT query_id, sub, code,
-        |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-        |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-        |  FROM qs JOIN cb USING (sub)),
-        |sc AS (SELECT l.query_id, enc.vec_id, CAST(sum(l.d2u) AS BIGINT) AS d2u
-        |  FROM enc JOIN lut l USING (sub, code)
-        |  WHERE enc.vec_id <> l.query_id
-        |  GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY d2u, vec_id) AS rank FROM sc)
-        |SELECT query_id, CAST(rank AS INTEGER) AS rank,
-        |  vec_id AS neighbor_id, d2u
-        |FROM r WHERE rank <= 10""".stripMargin
-    }, bench = true)
+    None, oracleFn = Some((s, dir) => pqTopkSql(opqEmbBooks(s, dir),
+      rotatedSql(s"($embSql)", opqEmbR(s, dir)))), bench = true)
 
   /** Incremental OPQ maintenance — the rotated-code sibling of
     * sim_pq_incr: rotation AND codebooks train on HISTORY only
@@ -836,13 +949,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       val books = pqBooksFor(s, dir, "opqrot_hist7",
         Similarity.rotateEmbeddings(
           Tables.embeddings(s, dir).where(pmod(col("vec_id"), lit(7)) === 0), r))
-      s"""WITH rm(i, rv) AS (VALUES
-        |  ${opqMatValues(r)}),
-        |e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v0 FROM embeddings),
-        |rot AS (SELECT e0.vec_id,
-        |    list(list_dot_product(x.rv, e0.v0) ORDER BY x.i) AS v
-        |  FROM e0 CROSS JOIN rm x GROUP BY e0.vec_id),
-        |${pqCtes(books, "SELECT vec_id, v FROM rot")}
+      s"""WITH ${pqCtes(books, rotatedSql(s"($embSql)", r))}
         |SELECT vec_id, sub, code,
         |  CASE WHEN vec_id % 7 = 0 THEN 'history' ELSE 'batch' END AS origin
         |FROM enc""".stripMargin
@@ -861,69 +968,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * NOTES.md r15 — 16-byte codes over 64 near-isotropic dims); the
     * contract is that the figure is ORACLED, not that it is high — the
     * quality claim lives on the planted fixture (sim_opq_trained). */
-  protected val simOpqRecall = Q("sim_opq_recall",
-    (s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val brute = Similarity.bruteTopK(e, k = 10, stride = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      val codesWide = parquetArtifact(s, dir, "pq_codes_opqrot_wide_m8_k16",
-        "embeddings")(Similarity.pqEncode(
-        opqEmbRotated(s, dir), opqEmbBooks(s, dir)))
-      val opq = Similarity.pqTopKAdc(codesWide,
-          opqEmbRotated(s, dir).where(pmod(col("vec_id"), lit(20)) === 0),
-          opqEmbBooks(s, dir), k = 10)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = brute.join(opq, Seq("query_id", "neighbor_id"))
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_overlap"))
-      brute.groupBy(col("query_id")).agg(count(lit(1)).as("n_brute"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), col("n_brute"),
-          coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-          expr("coalesce(n_overlap, 0) * 10000 div n_brute").as("recall_bp"))
-    },
-    None, oracleFn = Some { (s, dir) =>
-      s"""WITH rm(i, rv) AS (VALUES
-        |  ${opqMatValues(opqEmbR(s, dir))}),
-        |e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v0 FROM embeddings),
-        |rot AS (SELECT e0.vec_id,
-        |    list(list_dot_product(r.rv, e0.v0) ORDER BY r.i) AS v
-        |  FROM e0 CROSS JOIN rm r GROUP BY e0.vec_id),
-        |${pqCtes(opqEmbBooks(s, dir), "SELECT vec_id, v FROM rot")},
-        |nn AS (SELECT vec_id, v0 AS v, sqrt(list_dot_product(v0, v0)) AS nrm
-        |  FROM e0 WHERE list_dot_product(v0, v0) > 0),
-        |qn AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM nn
-        |  WHERE vec_id % 20 = 0),
-        |bbs AS (SELECT qn.query_id, nn.vec_id AS neighbor_id,
-        |    ROUND(list_dot_product(qn.qv, nn.v) / (qn.qnrm * nn.nrm), 4) + 0.0 AS cosine
-        |  FROM qn CROSS JOIN nn WHERE nn.vec_id <> qn.query_id),
-        |brute AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cosine DESC, neighbor_id) AS rank FROM bbs)
-        |  WHERE rank <= 10),
-        |q AS (SELECT vec_id AS query_id, v AS rqv FROM e WHERE vec_id % 20 = 0),
-        |qs AS (SELECT query_id, CAST(r.range AS INTEGER) AS sub,
-        |    list_slice(rqv, r.range * 8 + 1, r.range * 8 + 8) AS xs
-        |  FROM q CROSS JOIN range(0, 8) r),
-        |lut AS (SELECT query_id, sub, code,
-        |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-        |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-        |  FROM qs JOIN cb USING (sub)),
-        |sc AS (SELECT l.query_id, enc.vec_id, CAST(sum(l.d2u) AS BIGINT) AS d2u
-        |  FROM enc JOIN lut l USING (sub, code)
-        |  WHERE enc.vec_id <> l.query_id
-        |  GROUP BY 1, 2),
-        |opq AS (SELECT query_id, vec_id AS neighbor_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY d2u, vec_id) AS rank FROM sc)
-        |  WHERE rank <= 10),
-        |hits AS (SELECT b.query_id, count(*) AS n_overlap
-        |  FROM brute b JOIN opq USING (query_id, neighbor_id) GROUP BY 1),
-        |base AS (SELECT query_id, count(*) AS n_brute FROM brute GROUP BY 1)
-        |SELECT base.query_id, CAST(base.n_brute AS BIGINT) AS n_brute,
-        |  CAST(coalesce(hits.n_overlap, 0) AS BIGINT) AS n_overlap,
-        |  CAST(coalesce(hits.n_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS recall_bp
-        |FROM base LEFT JOIN hits USING (query_id)""".stripMargin
-    })
+  protected val simOpqRecall = recallQ("sim_opq_recall", embBrute, simOpqTopk)
 
   /** IVF-PQ composition (Similarity.ivfPqTopK): cell-probed ADC — the
     * corpus is cell-assigned against the persisted embedding centroids
@@ -943,49 +988,9 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
         e.where(pmod(col("vec_id"), lit(20)) === 0),
         cents, pqBooks(s, dir), k = 10, nProbes = 3)
     },
-    None, oracleFn = Some { (s, dir) =>
-      val cents = embCentroids(s, dir, "all", Tables.embeddings(s, dir))
-      val values = cents.zipWithIndex.map { case (v, i) =>
-        s"($i, ${v.mkString("[", ", ", "]")}::DOUBLE[])"
-      }.mkString(",\n  ")
-      s"""WITH ${pqCtes(pqBooks(s, dir))},
-        |c2(cell, w) AS (VALUES
-        |  $values),
-        |cn AS (SELECT cell, w, sqrt(list_dot_product(w, w)) AS cnrm FROM c2),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-        |asgn AS (SELECT vec_id, cell FROM (
-        |    SELECT n.vec_id, cn.cell,
-        |      row_number() OVER (PARTITION BY n.vec_id
-        |        ORDER BY ROUND(list_dot_product(cn.w, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
-        |    FROM n CROSS JOIN cn)
-        |  WHERE crn = 1),
-        |pb AS (SELECT query_id, cell FROM (
-        |    SELECT n.vec_id AS query_id, cn.cell,
-        |      row_number() OVER (PARTITION BY n.vec_id
-        |        ORDER BY ROUND(list_dot_product(n.v, cn.w) / (n.nrm * cn.cnrm), 6) DESC, cn.cell) AS pr
-        |    FROM n CROSS JOIN cn WHERE n.vec_id % 20 = 0)
-        |  WHERE pr <= 3),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 20 = 0),
-        |qs AS (SELECT query_id, CAST(r.range AS INTEGER) AS sub,
-        |    list_slice(qv, r.range * 8 + 1, r.range * 8 + 8) AS xs
-        |  FROM q CROSS JOIN range(0, 8) r),
-        |lut AS (SELECT query_id, sub, code,
-        |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-        |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-        |  FROM qs JOIN cb USING (sub)),
-        |sc AS (SELECT l.query_id, enc.vec_id, CAST(sum(l.d2u) AS BIGINT) AS d2u
-        |  FROM enc JOIN asgn a ON a.vec_id = enc.vec_id
-        |    JOIN pb ON pb.cell = a.cell
-        |    JOIN lut l ON l.query_id = pb.query_id
-        |      AND l.sub = enc.sub AND l.code = enc.code
-        |  WHERE enc.vec_id <> pb.query_id
-        |  GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY d2u, vec_id) AS rank FROM sc)
-        |SELECT query_id, CAST(rank AS INTEGER) AS rank,
-        |  vec_id AS neighbor_id, d2u
-        |FROM r WHERE rank <= 10""".stripMargin
-    })
+    None, oracleFn = Some((s, dir) => ivfTopkSql(embSql,
+      embCentroids(s, dir, "all", Tables.embeddings(s, dir)), pqBooks(s, dir),
+      nProbes = 3, dsub = 8, residual = false)))
 
   /** IVF cell-balance audit — the hot-key audit the other bucketed
     * families already have (Dedup.oversizedBuckets for MinHash bands,
@@ -1015,13 +1020,10 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     },
     None, oracleFn = Some { (s, dir) =>
       val cents = embCentroids(s, dir, "all", Tables.embeddings(s, dir))
-      val values = cents.zipWithIndex.map { case (v, i) =>
-        s"($i, ${v.mkString("[", ", ", "]")}::DOUBLE[])"
-      }.mkString(",\n  ")
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
         |c(cell, cv) AS (VALUES
-        |  $values),
+        |  ${Similarity.vectorValuesSql(cents)}),
         |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
         |asgn AS (SELECT vec_id, cell FROM (
         |    SELECT n.vec_id, cn.cell,
@@ -1055,13 +1057,10 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     },
     None, oracleFn = Some { (s, dir) =>
       val cents = embCentroids(s, dir, "all", Tables.embeddings(s, dir))
-      val values = cents.zipWithIndex.map { case (v, i) =>
-        s"($i, ${v.mkString("[", ", ", "]")}::DOUBLE[])"
-      }.mkString(",\n  ")
       s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
         |c(cell, cv) AS (VALUES
-        |  $values),
+        |  ${Similarity.vectorValuesSql(cents)}),
         |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
         |assigned AS (
         |  SELECT vec_id, v, nrm, cell FROM (
@@ -1131,16 +1130,17 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       |FROM r WHERE rank <= 10""".stripMargin), bench = true)
 
   /** Hamming shortlist + exact re-rank (Similarity.binqTopKRefined): the
-    * binary tier's "+R" — the corpus pass runs on codes (shortlist 50),
-    * then only |queries|×50 vectors are read back for an exact round-4
+    * binary tier's "+R" — the corpus pass runs on codes (a shortlist per
+    * query: 50 for sim_binq_rerank, 200 for sim_binq_recall's tier), then
+    * only |queries|×shortlist vectors are read back for an exact round-4
     * cosine top-10 (crossTopK's contract). Static oracle end to end. */
-  protected val simBinqRerank = Q("sim_binq_rerank",
+  protected def binqRerank(shortlist: Int): Q = Q("sim_binq_rerank",
     (s, dir) => {
       val e = Tables.embeddings(s, dir)
       Similarity.binqTopKRefined(Similarity.binqEncode(e), e,
-        e.where(pmod(col("vec_id"), lit(20)) === 0), k = 10, shortlist = 50)
+        e.where(pmod(col("vec_id"), lit(20)) === 0), k = 10, shortlist = shortlist)
     },
-    Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 20 = 0),
       |s AS (SELECT q.query_id, e.vec_id,
       |    CAST(list_sum(list_transform(q.qv,
@@ -1150,7 +1150,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       |sl AS (SELECT query_id, vec_id FROM (
       |    SELECT *, row_number() OVER (PARTITION BY query_id
       |      ORDER BY hamming, vec_id) AS rank FROM s)
-      |  WHERE rank <= 50),
+      |  WHERE rank <= $shortlist),
       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e
       |  WHERE list_dot_product(v, v) > 0),
       |qn AS (SELECT vec_id AS query_id, v AS qv,
@@ -1164,6 +1164,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       |    ORDER BY cosine DESC, neighbor_id) AS rank FROM x)
       |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
       |FROM rr WHERE rank <= 10""".stripMargin))
+  protected val simBinqRerank = binqRerank(shortlist = 50)
 
   /** ORACLED recall measurement — the binary tier's quality as a
     * hash-checked OUTPUT, not a NOTES claim: per query, the overlap
@@ -1172,62 +1173,8 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * intersection is too — DuckDB re-derives both chains and must agree
     * on every per-query recall figure. (The NOTES.md aggregate
     * recall@10 = mean of recall_bp/10⁴ over queries.) */
-  protected val simBinqRecall = Q("sim_binq_recall",
-    (s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val qs = e.where(pmod(col("vec_id"), lit(20)) === 0)
-      val brute = Similarity.bruteTopK(e, k = 10, stride = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      val binq = Similarity.binqTopKRefined(Similarity.binqEncode(e), e, qs,
-          k = 10, shortlist = 200)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = brute.join(binq, Seq("query_id", "neighbor_id"))
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_overlap"))
-      brute.groupBy(col("query_id")).agg(count(lit(1)).as("n_brute"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), col("n_brute"),
-          coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-          // integral div by construction, matching the oracle's floor
-          // `//` (ADVICE r13 — truncation==floor held only by IEEE luck)
-          expr("coalesce(n_overlap, 0) * 10000 div n_brute").as("recall_bp"))
-    },
-    Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e
-      |  WHERE list_dot_product(v, v) > 0),
-      |qn AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n
-      |  WHERE vec_id % 20 = 0),
-      |bs AS (SELECT qn.query_id, n.vec_id AS neighbor_id,
-      |    ROUND(list_dot_product(qn.qv, n.v) / (qn.qnrm * n.nrm), 4) + 0.0 AS cosine
-      |  FROM qn CROSS JOIN n WHERE n.vec_id <> qn.query_id),
-      |brute AS (SELECT query_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cosine DESC, neighbor_id) AS rank FROM bs)
-      |  WHERE rank <= 10),
-      |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 20 = 0),
-      |hs AS (SELECT q.query_id, e.vec_id,
-      |    CAST(list_sum(list_transform(q.qv,
-      |      (x, i) -> CASE WHEN (x > 0) <> (e.v[i] > 0) THEN 1 ELSE 0 END))
-      |      AS INTEGER) AS hamming
-      |  FROM q CROSS JOIN e WHERE e.vec_id <> q.query_id),
-      |sl AS (SELECT query_id, vec_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |      ORDER BY hamming, vec_id) AS rank FROM hs)
-      |  WHERE rank <= 200),
-      |x AS (SELECT sl.query_id, sl.vec_id AS neighbor_id,
-      |    ROUND(list_dot_product(qn.qv, n.v) / (qn.qnrm * n.nrm), 4) + 0.0 AS cosine
-      |  FROM sl JOIN n ON n.vec_id = sl.vec_id
-      |    JOIN qn ON qn.query_id = sl.query_id),
-      |binq AS (SELECT query_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cosine DESC, neighbor_id) AS rank FROM x)
-      |  WHERE rank <= 10),
-      |hits AS (SELECT b.query_id, count(*) AS n_overlap
-      |  FROM brute b JOIN binq USING (query_id, neighbor_id) GROUP BY 1),
-      |base AS (SELECT query_id, count(*) AS n_brute FROM brute GROUP BY 1)
-      |SELECT base.query_id, CAST(base.n_brute AS BIGINT) AS n_brute,
-      |  CAST(coalesce(hits.n_overlap, 0) AS BIGINT) AS n_overlap,
-      |  CAST(coalesce(hits.n_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS recall_bp
-      |FROM base LEFT JOIN hits USING (query_id)""".stripMargin))
+  protected val simBinqRecall = recallQ("sim_binq_recall", embBrute,
+    binqRerank(shortlist = 200))
 
   /** Int8 scalar-quantization top-k (Similarity.sq8Encode + sq8TopK): the
     * stored row is dim int8 codes + two scale doubles (~4× scan shrink,
@@ -1265,60 +1212,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * per-query overlap between the exact brute top-10 and the
     * sq8 dequantized-cosine top-10 — hash-checks the tier's near-exact
     * claim (NOTES.md r14: 0.98 aggregate) instead of noting it. */
-  protected val simSq8Recall = Q("sim_sq8_recall",
-    (s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val brute = Similarity.bruteTopK(e, k = 10, stride = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      val sq8 = Similarity.sq8TopK(Similarity.sq8Encode(e),
-          e.where(pmod(col("vec_id"), lit(20)) === 0), k = 10)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = brute.join(sq8, Seq("query_id", "neighbor_id"))
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_overlap"))
-      brute.groupBy(col("query_id")).agg(count(lit(1)).as("n_brute"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), col("n_brute"),
-          coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-          // integral div by construction, matching the oracle's floor
-          // `//` (ADVICE r13 — truncation==floor held only by IEEE luck)
-          expr("coalesce(n_overlap, 0) * 10000 div n_brute").as("recall_bp"))
-    },
-    Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e
-      |  WHERE list_dot_product(v, v) > 0),
-      |qn AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n
-      |  WHERE vec_id % 20 = 0),
-      |bs AS (SELECT qn.query_id, n.vec_id AS neighbor_id,
-      |    ROUND(list_dot_product(qn.qv, n.v) / (qn.qnrm * n.nrm), 4) + 0.0 AS cosine
-      |  FROM qn CROSS JOIN n WHERE n.vec_id <> qn.query_id),
-      |brute AS (SELECT query_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cosine DESC, neighbor_id) AS rank FROM bs)
-      |  WHERE rank <= 10),
-      |m AS (SELECT vec_id, v,
-      |    list_max(list_transform(v, x -> abs(x))) AS max_abs,
-      |    sqrt(list_dot_product(v, v)) AS nrm FROM e
-      |  WHERE list_dot_product(v, v) > 0),
-      |c AS (SELECT vec_id,
-      |    list_transform(v, x -> floor(x * 127.0 / max_abs + 0.5)) AS q8,
-      |    max_abs, nrm FROM m),
-      |q8q AS (SELECT vec_id AS query_id, q8 AS qq8, max_abs AS qmax,
-      |    nrm AS qnrm FROM c WHERE vec_id % 20 = 0),
-      |ss AS (SELECT q.query_id, c.vec_id,
-      |    ROUND(list_dot_product(q.qq8, c.q8) * q.qmax * c.max_abs
-      |      / (16129.0 * q.qnrm * c.nrm), 6) + 0.0 AS score
-      |  FROM q8q q CROSS JOIN c WHERE c.vec_id <> q.query_id),
-      |sq8 AS (SELECT query_id, vec_id AS neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |      ORDER BY score DESC, vec_id) AS rank FROM ss)
-      |  WHERE rank <= 10),
-      |hits AS (SELECT b.query_id, count(*) AS n_overlap
-      |  FROM brute b JOIN sq8 USING (query_id, neighbor_id) GROUP BY 1),
-      |base AS (SELECT query_id, count(*) AS n_brute FROM brute GROUP BY 1)
-      |SELECT base.query_id, CAST(base.n_brute AS BIGINT) AS n_brute,
-      |  CAST(coalesce(hits.n_overlap, 0) AS BIGINT) AS n_overlap,
-      |  CAST(coalesce(hits.n_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS recall_bp
-      |FROM base LEFT JOIN hits USING (query_id)""".stripMargin))
+  protected val simSq8Recall = recallQ("sim_sq8_recall", embBrute, simSq8Topk)
 
   /** Incremental binary-code index maintenance (VERDICT r13 #4) — the
     * sign-bit sibling of sim_pq_incr: the HISTORY code table (vec_id ≡ 0
@@ -1392,20 +1286,26 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * spend all 8 on local detail — the configuration where the
     * residual claim is starkest (NOTES.md r14: raw 0.225 vs residual
     * 0.918 recall@10). */
-  protected val fixtureCache =
+  private val fixtureCache =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  /** The per-JVM memo of one trained fixture artifact, built once per key. */
+  private def fixture[T <: AnyRef](key: String)(build: => T): T =
+    fixtureCache.computeIfAbsent(key, _ => build).asInstanceOf[T]
   protected def fixCents(s: SparkSession): Seq[Array[Double]] =
-    fixtureCache.computeIfAbsent("cents", _ =>
-      Similarity.kmeansCentroidArrays(Similarity.synthesizeClustered(s),
-        nCells = 8)).asInstanceOf[Seq[Array[Double]]]
+    fixture("cents")(Similarity.kmeansCentroidArrays(
+      Similarity.synthesizeClustered(s), nCells = 8))
   protected def fixRawBooks(s: SparkSession): Seq[Seq[Array[Double]]] =
-    fixtureCache.computeIfAbsent("raw", _ =>
-      Similarity.pqTrain(Similarity.synthesizeClustered(s), m = 8, ksub = 8))
-      .asInstanceOf[Seq[Seq[Array[Double]]]]
+    fixture("raw")(Similarity.pqTrain(Similarity.synthesizeClustered(s),
+      m = 8, ksub = 8))
   protected def fixResBooks(s: SparkSession): Seq[Seq[Array[Double]]] =
-    fixtureCache.computeIfAbsent("res", _ =>
-      Similarity.pqTrainResidual(Similarity.synthesizeClustered(s),
-        fixCents(s), m = 8, ksub = 8)).asInstanceOf[Seq[Seq[Array[Double]]]]
+    fixture("res")(Similarity.pqTrainResidual(
+      Similarity.synthesizeClustered(s), fixCents(s), m = 8, ksub = 8))
+
+  /** An unregistered tier of a fixture recall row: its Spark ranking and
+    * the oracle derived from the fixture's trained literals. */
+  private def fixtureTier(name: String, fn: QueryFn)(
+      sql: SparkSession => String): Q =
+    Q(name, fn, None, oracleFn = Some((s, _) => sql(s)))
 
   /** Residual IVF-PQ beats raw IVF-PQ at EQUAL code budget — proven on
     * the planted clustered corpus and ORACLE-CHECKED (VERDICT r13 #2):
@@ -1419,154 +1319,22 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * the sim_binq_recall pattern. The oracle re-derives the corpus, the
     * brute ground truth, and both quantized pipelines from the trained
     * literals end to end. */
-  protected val simResidualGain = Q("sim_residual_gain",
-    (s, dir) => {
+  protected val simResidualGain = gainQ("sim_residual_gain", clusteredBrute,
+    "raw" -> fixtureTier("ivfpq_raw_clustered", (s, _) => {
       val fix = Similarity.synthesizeClustered(s)
-      val fq = fix.where(pmod(col("vec_id"), lit(20)) === 0)
-      val cents = fixCents(s)
-      val brute = Similarity.bruteTopK(fix, k = 10, stride = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      val raw = Similarity.ivfPqTopK(
-          Similarity.ivfPqEncode(fix, cents, fixRawBooks(s)),
-          fq, cents, fixRawBooks(s), k = 10, nProbes = 2)
-        .select(col("query_id"), col("neighbor_id"))
-      val res = Similarity.ivfPqResidualTopK(
-          Similarity.ivfPqResidualEncode(fix, cents, fixResBooks(s)),
-          fq, cents, fixResBooks(s), k = 10, nProbes = 2)
-        .select(col("query_id"), col("neighbor_id"))
-      def overlap(cand: DataFrame, name: String): DataFrame =
-        brute.join(cand, Seq("query_id", "neighbor_id"))
-          .groupBy(col("query_id")).agg(count(lit(1)).as(name))
-      brute.groupBy(col("query_id")).agg(count(lit(1)).as("n_brute"))
-        .join(overlap(raw, "raw_overlap"), Seq("query_id"), "left")
-        .join(overlap(res, "resid_overlap"), Seq("query_id"), "left")
-        .select(col("query_id"), col("n_brute"),
-          coalesce(col("raw_overlap"), lit(0L)).as("raw_overlap"),
-          coalesce(col("resid_overlap"), lit(0L)).as("resid_overlap"),
-          expr("coalesce(raw_overlap, 0) * 10000 div n_brute").as("raw_bp"),
-          expr("coalesce(resid_overlap, 0) * 10000 div n_brute").as("resid_bp"))
-    },
-    None, oracleFn = Some { (s, dir) =>
-      def bookValues(books: Seq[Seq[Array[Double]]]): String =
-        books.zipWithIndex.flatMap { case (cs, sub) =>
-          cs.zipWithIndex.map { case (c, code) =>
-            s"($sub, $code, ${c.mkString("[", ", ", "]")}::DOUBLE[])" }
-        }.mkString(",\n  ")
-      val centValues = fixCents(s).zipWithIndex.map { case (v, i) =>
-        s"($i, ${v.mkString("[", ", ", "]")}::DOUBLE[])"
-      }.mkString(",\n  ")
-      s"""WITH fix AS (SELECT r.range AS vec_id,
-        |    list_transform(generate_series(0, 15), d ->
-        |      CAST(((r.range % 8) * 5 + d * 3) % 17 - 8 AS DOUBLE) / 4.0
-        |      + CAST((r.range * 13 + d * 7) % 9 - 4 AS DOUBLE) / 32.0) AS v
-        |  FROM range(0, 560) r),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM fix),
-        |qn AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n
-        |  WHERE vec_id % 20 = 0),
-        |bs AS (SELECT qn.query_id, n.vec_id AS neighbor_id,
-        |    ROUND(list_dot_product(qn.qv, n.v) / (qn.qnrm * n.nrm), 4) + 0.0 AS cosine
-        |  FROM qn CROSS JOIN n WHERE n.vec_id <> qn.query_id),
-        |brute AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cosine DESC, neighbor_id) AS rank FROM bs)
-        |  WHERE rank <= 10),
-        |c2(cell, w) AS (VALUES
-        |  $centValues),
-        |cn AS (SELECT cell, w, sqrt(list_dot_product(w, w)) AS cnrm FROM c2),
-        |asgn AS (SELECT vec_id, cell FROM (
-        |    SELECT n.vec_id, cn.cell,
-        |      row_number() OVER (PARTITION BY n.vec_id
-        |        ORDER BY ROUND(list_dot_product(cn.w, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
-        |    FROM n CROSS JOIN cn)
-        |  WHERE crn = 1),
-        |pb AS (SELECT query_id, cell FROM (
-        |    SELECT n.vec_id AS query_id, cn.cell,
-        |      row_number() OVER (PARTITION BY n.vec_id
-        |        ORDER BY ROUND(list_dot_product(n.v, cn.w) / (n.nrm * cn.cnrm), 6) DESC, cn.cell) AS pr
-        |    FROM n CROSS JOIN cn WHERE n.vec_id % 20 = 0)
-        |  WHERE pr <= 2),
-        |rb(sub, code, cv) AS (VALUES
-        |  ${bookValues(fixRawBooks(s))}),
-        |rcb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM rb),
-        |sv AS (SELECT vec_id, CAST(r.range AS INTEGER) AS sub,
-        |    list_slice(v, r.range * 2 + 1, r.range * 2 + 2) AS xs
-        |  FROM fix CROSS JOIN range(0, 8) r),
-        |sd AS (SELECT vec_id, sub, code,
-        |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-        |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-        |  FROM sv JOIN rcb USING (sub)),
-        |renc AS (SELECT vec_id, sub, code FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |      ORDER BY d2u, code) AS rn FROM sd)
-        |  WHERE rn = 1),
-        |qs AS (SELECT query_id, CAST(r.range AS INTEGER) AS sub,
-        |    list_slice(qv, r.range * 2 + 1, r.range * 2 + 2) AS xs
-        |  FROM qn CROSS JOIN range(0, 8) r),
-        |rlut AS (SELECT query_id, sub, code,
-        |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-        |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-        |  FROM qs JOIN rcb USING (sub)),
-        |rsc AS (SELECT l.query_id, renc.vec_id, CAST(sum(l.d2u) AS BIGINT) AS d2u
-        |  FROM renc JOIN asgn a ON a.vec_id = renc.vec_id
-        |    JOIN pb ON pb.cell = a.cell
-        |    JOIN rlut l ON l.query_id = pb.query_id
-        |      AND l.sub = renc.sub AND l.code = renc.code
-        |  WHERE renc.vec_id <> pb.query_id
-        |  GROUP BY 1, 2),
-        |rtop AS (SELECT query_id, vec_id AS neighbor_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY d2u, vec_id) AS rank FROM rsc)
-        |  WHERE rank <= 10),
-        |sb(sub, code, cv) AS (VALUES
-        |  ${bookValues(fixResBooks(s))}),
-        |scb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM sb),
-        |resid AS (SELECT n.vec_id, a.cell,
-        |    list_transform(n.v, (x, i) -> x - cn.w[i]) AS rv
-        |  FROM n JOIN asgn a ON a.vec_id = n.vec_id
-        |    JOIN cn ON cn.cell = a.cell),
-        |rsv AS (SELECT vec_id, cell, CAST(r.range AS INTEGER) AS sub,
-        |    list_slice(rv, r.range * 2 + 1, r.range * 2 + 2) AS xs
-        |  FROM resid CROSS JOIN range(0, 8) r),
-        |rsd AS (SELECT vec_id, cell, sub, code,
-        |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-        |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-        |  FROM rsv JOIN scb USING (sub)),
-        |senc AS (SELECT vec_id, cell, sub, code FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |      ORDER BY d2u, code) AS rn FROM rsd)
-        |  WHERE rn = 1),
-        |qres AS (SELECT pb.query_id, pb.cell,
-        |    list_transform(q.qv, (x, i) -> x - cn.w[i]) AS rqv
-        |  FROM pb JOIN qn q ON q.query_id = pb.query_id
-        |    JOIN cn ON cn.cell = pb.cell),
-        |sqs AS (SELECT query_id, cell, CAST(r.range AS INTEGER) AS sub,
-        |    list_slice(rqv, r.range * 2 + 1, r.range * 2 + 2) AS xs
-        |  FROM qres CROSS JOIN range(0, 8) r),
-        |slut AS (SELECT query_id, cell, sub, code,
-        |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-        |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-        |  FROM sqs JOIN scb USING (sub)),
-        |ssc AS (SELECT l.query_id, senc.vec_id, CAST(sum(l.d2u) AS BIGINT) AS d2u
-        |  FROM senc JOIN slut l ON l.cell = senc.cell
-        |      AND l.sub = senc.sub AND l.code = senc.code
-        |  WHERE senc.vec_id <> l.query_id
-        |  GROUP BY 1, 2),
-        |stop AS (SELECT query_id, vec_id AS neighbor_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY d2u, vec_id) AS rank FROM ssc)
-        |  WHERE rank <= 10),
-        |hr AS (SELECT b.query_id, count(*) AS raw_overlap
-        |  FROM brute b JOIN rtop USING (query_id, neighbor_id) GROUP BY 1),
-        |hs AS (SELECT b.query_id, count(*) AS resid_overlap
-        |  FROM brute b JOIN stop USING (query_id, neighbor_id) GROUP BY 1),
-        |base AS (SELECT query_id, count(*) AS n_brute FROM brute GROUP BY 1)
-        |SELECT base.query_id, CAST(base.n_brute AS BIGINT) AS n_brute,
-        |  CAST(coalesce(hr.raw_overlap, 0) AS BIGINT) AS raw_overlap,
-        |  CAST(coalesce(hs.resid_overlap, 0) AS BIGINT) AS resid_overlap,
-        |  CAST(coalesce(hr.raw_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS raw_bp,
-        |  CAST(coalesce(hs.resid_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS resid_bp
-        |FROM base LEFT JOIN hr USING (query_id) LEFT JOIN hs USING (query_id)""".stripMargin
-    })
+      Similarity.ivfPqTopK(Similarity.ivfPqEncode(fix, fixCents(s), fixRawBooks(s)),
+        fix.where(pmod(col("vec_id"), lit(20)) === 0), fixCents(s),
+        fixRawBooks(s), k = 10, nProbes = 2)
+    })(s => ivfTopkSql(clusteredFixSql, fixCents(s), fixRawBooks(s),
+      nProbes = 2, dsub = 2, residual = false)),
+    "resid" -> fixtureTier("ivfpq_resid_clustered", (s, _) => {
+      val fix = Similarity.synthesizeClustered(s)
+      Similarity.ivfPqResidualTopK(
+        Similarity.ivfPqResidualEncode(fix, fixCents(s), fixResBooks(s)),
+        fix.where(pmod(col("vec_id"), lit(20)) === 0), fixCents(s),
+        fixResBooks(s), k = 10, nProbes = 2)
+    })(s => ivfTopkSql(clusteredFixSql, fixCents(s), fixResBooks(s),
+      nProbes = 2, dsub = 2)))
 
   /** OPQ fixture frames + trained books (VERDICT r13 #8, Ge et al.
     * 2013): the corpus is H·z — an axis-aligned anisotropic latent z
@@ -1584,54 +1352,26 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
   protected def opqUnrot(s: SparkSession): DataFrame =
     Similarity.rotateEmbeddings(opqCorpus(s), Similarity.hadamard16)
   protected def opqPlainBooks(s: SparkSession): Seq[Seq[Array[Double]]] =
-    fixtureCache.computeIfAbsent("opq_plain", _ =>
-      Similarity.pqTrain(opqCorpus(s), m = 8, ksub = 16))
-      .asInstanceOf[Seq[Seq[Array[Double]]]]
+    fixture("opq_plain")(Similarity.pqTrain(opqCorpus(s), m = 8, ksub = 16))
   protected def opqRotBooks(s: SparkSession): Seq[Seq[Array[Double]]] =
-    fixtureCache.computeIfAbsent("opq_rot", _ =>
-      Similarity.pqTrain(opqUnrot(s), m = 8, ksub = 16))
-      .asInstanceOf[Seq[Seq[Array[Double]]]]
+    fixture("opq_rot")(Similarity.pqTrain(opqUnrot(s), m = 8, ksub = 16))
 
-  /** Shared oracle fragments for the OPQ family: codebook / rotation-
-    * matrix VALUES literals and the per-tier flat-ADC pipeline (dsub=2,
-    * m=8, k=10, queries = vec_id % 20 == 0) over a named source CTE. */
-  protected def opqBookValues(books: Seq[Seq[Array[Double]]]): String =
-    books.zipWithIndex.flatMap { case (cs, sub) =>
-      cs.zipWithIndex.map { case (c, code) =>
-        s"($sub, $code, ${c.mkString("[", ", ", "]")}::DOUBLE[])" }
-    }.mkString(",\n  ")
-  protected def opqMatValues(m: Seq[Array[Double]]): String =
-    m.zipWithIndex.map { case (r, i) =>
-      s"($i, ${r.mkString("[", ", ", "]")}::DOUBLE[])"
-    }.mkString(",\n  ")
-  protected def opqAdcTier(tag: String, src: String, cbRel: String): String =
-    s"""${tag}sv AS (SELECT vec_id, CAST(r.range AS INTEGER) AS sub,
-      |    list_slice(v, r.range * 2 + 1, r.range * 2 + 2) AS xs
-      |  FROM $src CROSS JOIN range(0, 8) r),
-      |${tag}sd AS (SELECT vec_id, sub, code,
-      |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-      |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-      |  FROM ${tag}sv JOIN $cbRel USING (sub)),
-      |${tag}enc AS (SELECT vec_id, sub, code FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-      |      ORDER BY d2u, code) AS rn FROM ${tag}sd)
-      |  WHERE rn = 1),
-      |${tag}qs AS (SELECT vec_id AS query_id, CAST(r.range AS INTEGER) AS sub,
-      |    list_slice(v, r.range * 2 + 1, r.range * 2 + 2) AS xs
-      |  FROM $src CROSS JOIN range(0, 8) r WHERE vec_id % 20 = 0),
-      |${tag}lut AS (SELECT query_id, sub, code,
-      |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-      |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-      |  FROM ${tag}qs JOIN $cbRel USING (sub)),
-      |${tag}sc AS (SELECT l.query_id, ${tag}enc.vec_id,
-      |    CAST(sum(l.d2u) AS BIGINT) AS d2u
-      |  FROM ${tag}enc JOIN ${tag}lut l USING (sub, code)
-      |  WHERE ${tag}enc.vec_id <> l.query_id
-      |  GROUP BY 1, 2),
-      |${tag}top AS (SELECT query_id, vec_id AS neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |      ORDER BY d2u, vec_id) AS rank FROM ${tag}sc)
-      |  WHERE rank <= 10)""".stripMargin
+  /** A flat-ADC tier over an OPQ-fixture frame (`src`, its SQL twin
+    * `srcSql`) with codebooks trained on it: dsub = 2, m = 8, k = 10,
+    * queries = vec_id % 20 == 0. */
+  private def opqFlatTier(name: String, src: SparkSession => DataFrame,
+      srcSql: SparkSession => String,
+      books: SparkSession => Seq[Seq[Array[Double]]]): Q =
+    fixtureTier(name, (s, _) => {
+      val c = src(s)
+      Similarity.pqTopKAdc(Similarity.pqEncode(c, books(s)),
+        c.where(pmod(col("vec_id"), lit(20)) === 0), books(s), k = 10)
+    })(s => pqTopkSql(books(s), srcSql(s), dsub = 2))
+
+  /** Identity-split PQ on the smeared corpus — the plain side of both
+    * OPQ gain pairs. */
+  private val opqPlainTier = opqFlatTier("pq_opq_corpus", opqCorpus,
+    _ => opqCorpusSql, opqPlainBooks)
 
   /** OPQ rotation beats identity-split PQ at equal code budget on the
     * smeared-latent corpus — ORACLE-CHECKED recall pair (the
@@ -1644,81 +1384,10 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * ride in the hashed output (NOTES.md r15: plain 0.496, OPQ 0.811
     * @ m=8 ksub=16). The oracle re-derives latent, rotation, ground
     * truth and both ADC pipelines from the trained literals. */
-  protected val simOpqGain = Q("sim_opq_gain",
-    (s, dir) => {
-      val corpus = opqCorpus(s)
-      val unrot = opqUnrot(s)
-      val cq = corpus.where(pmod(col("vec_id"), lit(20)) === 0)
-      val uq = unrot.where(pmod(col("vec_id"), lit(20)) === 0)
-      val brute = Similarity.bruteTopK(corpus, k = 10, stride = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      val plain = Similarity.pqTopKAdc(
-          Similarity.pqEncode(corpus, opqPlainBooks(s)), cq,
-          opqPlainBooks(s), k = 10)
-        .select(col("query_id"), col("neighbor_id"))
-      val opq = Similarity.pqTopKAdc(
-          Similarity.pqEncode(unrot, opqRotBooks(s)), uq,
-          opqRotBooks(s), k = 10)
-        .select(col("query_id"), col("neighbor_id"))
-      def overlap(cand: DataFrame, name: String): DataFrame =
-        brute.join(cand, Seq("query_id", "neighbor_id"))
-          .groupBy(col("query_id")).agg(count(lit(1)).as(name))
-      brute.groupBy(col("query_id")).agg(count(lit(1)).as("n_brute"))
-        .join(overlap(plain, "pq_overlap"), Seq("query_id"), "left")
-        .join(overlap(opq, "opq_overlap"), Seq("query_id"), "left")
-        .select(col("query_id"), col("n_brute"),
-          coalesce(col("pq_overlap"), lit(0L)).as("pq_overlap"),
-          coalesce(col("opq_overlap"), lit(0L)).as("opq_overlap"),
-          expr("coalesce(pq_overlap, 0) * 10000 div n_brute").as("pq_bp"),
-          expr("coalesce(opq_overlap, 0) * 10000 div n_brute").as("opq_bp"))
-    },
-    None, oracleFn = Some { (s, dir) =>
-      val bookValues = opqBookValues _
-      val hValues = opqMatValues(Similarity.hadamard16)
-      val adcTier = opqAdcTier _
-      s"""WITH lat AS (SELECT r.range AS vec_id,
-        |    list_transform(generate_series(0, 15), d ->
-        |      CAST((r.range * 13 + d * 7 + (r.range * d) % 29) % 65 - 32 AS DOUBLE)
-        |      / 32.0 / power(2.0, CAST(d AS DOUBLE))) AS z
-        |  FROM range(0, 560) r),
-        |hm(i, rv) AS (VALUES
-        |  $hValues),
-        |corpus AS (SELECT l.vec_id,
-        |    list(list_dot_product(h.rv, l.z) ORDER BY h.i) AS v
-        |  FROM lat l CROSS JOIN hm h GROUP BY l.vec_id),
-        |unrot AS (SELECT c.vec_id,
-        |    list(list_dot_product(h.rv, c.v) ORDER BY h.i) AS v
-        |  FROM corpus c CROSS JOIN hm h GROUP BY c.vec_id),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM corpus),
-        |qn AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n
-        |  WHERE vec_id % 20 = 0),
-        |bs AS (SELECT qn.query_id, n.vec_id AS neighbor_id,
-        |    ROUND(list_dot_product(qn.qv, n.v) / (qn.qnrm * n.nrm), 4) + 0.0 AS cosine
-        |  FROM qn CROSS JOIN n WHERE n.vec_id <> qn.query_id),
-        |brute AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cosine DESC, neighbor_id) AS rank FROM bs)
-        |  WHERE rank <= 10),
-        |pbk(sub, code, cv) AS (VALUES
-        |  ${bookValues(opqPlainBooks(s))}),
-        |pcb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM pbk),
-        |obk(sub, code, cv) AS (VALUES
-        |  ${bookValues(opqRotBooks(s))}),
-        |ocb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM obk),
-        |${adcTier("p", "corpus", "pcb")},
-        |${adcTier("o", "unrot", "ocb")},
-        |hp AS (SELECT b.query_id, count(*) AS pq_overlap
-        |  FROM brute b JOIN ptop USING (query_id, neighbor_id) GROUP BY 1),
-        |ho AS (SELECT b.query_id, count(*) AS opq_overlap
-        |  FROM brute b JOIN otop USING (query_id, neighbor_id) GROUP BY 1),
-        |base AS (SELECT query_id, count(*) AS n_brute FROM brute GROUP BY 1)
-        |SELECT base.query_id, CAST(base.n_brute AS BIGINT) AS n_brute,
-        |  CAST(coalesce(hp.pq_overlap, 0) AS BIGINT) AS pq_overlap,
-        |  CAST(coalesce(ho.opq_overlap, 0) AS BIGINT) AS opq_overlap,
-        |  CAST(coalesce(hp.pq_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS pq_bp,
-        |  CAST(coalesce(ho.opq_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS opq_bp
-        |FROM base LEFT JOIN hp USING (query_id) LEFT JOIN ho USING (query_id)""".stripMargin
-    })
+  protected val simOpqGain = gainQ("sim_opq_gain", opqBrute,
+    "pq" -> opqPlainTier,
+    "opq" -> opqFlatTier("pq_opq_unrot", opqUnrot,
+      _ => rotatedSql(s"($opqCorpusSql)", Similarity.hadamard16), opqRotBooks))
 
   /** TRAINED OPQ — the full parametric solution (Ge et al. 2013 §4):
     * [[Similarity.opqTrainRotation]] eigen-decomposes the corpus second
@@ -1733,149 +1402,16 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * hash-checked. Output: the sim_opq_gain contract with opq_* =
     * trained-rotation figures. */
   protected def opqTrainedR(s: SparkSession): Seq[Array[Double]] =
-    fixtureCache.computeIfAbsent("opq_trained_r", _ =>
-      Similarity.opqTrainRotation(opqCorpus(s), m = 8))
-      .asInstanceOf[Seq[Array[Double]]]
+    fixture("opq_trained_r")(Similarity.opqTrainRotation(opqCorpus(s), m = 8))
   protected def opqTrainedBooks(s: SparkSession): Seq[Seq[Array[Double]]] =
-    fixtureCache.computeIfAbsent("opq_trained_books", _ =>
-      Similarity.pqTrain(
-        Similarity.rotateEmbeddings(opqCorpus(s), opqTrainedR(s)),
-        m = 8, ksub = 16)).asInstanceOf[Seq[Seq[Array[Double]]]]
-  protected val simOpqTrained = Q("sim_opq_trained",
-    (s, dir) => {
-      val corpus = opqCorpus(s)
-      val rotT = Similarity.rotateEmbeddings(corpus, opqTrainedR(s))
-      val cq = corpus.where(pmod(col("vec_id"), lit(20)) === 0)
-      val tq = rotT.where(pmod(col("vec_id"), lit(20)) === 0)
-      val brute = Similarity.bruteTopK(corpus, k = 10, stride = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      val plain = Similarity.pqTopKAdc(
-          Similarity.pqEncode(corpus, opqPlainBooks(s)), cq,
-          opqPlainBooks(s), k = 10)
-        .select(col("query_id"), col("neighbor_id"))
-      val trained = Similarity.pqTopKAdc(
-          Similarity.pqEncode(rotT, opqTrainedBooks(s)), tq,
-          opqTrainedBooks(s), k = 10)
-        .select(col("query_id"), col("neighbor_id"))
-      def overlap(cand: DataFrame, name: String): DataFrame =
-        brute.join(cand, Seq("query_id", "neighbor_id"))
-          .groupBy(col("query_id")).agg(count(lit(1)).as(name))
-      brute.groupBy(col("query_id")).agg(count(lit(1)).as("n_brute"))
-        .join(overlap(plain, "pq_overlap"), Seq("query_id"), "left")
-        .join(overlap(trained, "opq_overlap"), Seq("query_id"), "left")
-        .select(col("query_id"), col("n_brute"),
-          coalesce(col("pq_overlap"), lit(0L)).as("pq_overlap"),
-          coalesce(col("opq_overlap"), lit(0L)).as("opq_overlap"),
-          expr("coalesce(pq_overlap, 0) * 10000 div n_brute").as("pq_bp"),
-          expr("coalesce(opq_overlap, 0) * 10000 div n_brute").as("opq_bp"))
-    },
-    None, oracleFn = Some { (s, dir) =>
-      s"""WITH lat AS (SELECT r.range AS vec_id,
-        |    list_transform(generate_series(0, 15), d ->
-        |      CAST((r.range * 13 + d * 7 + (r.range * d) % 29) % 65 - 32 AS DOUBLE)
-        |      / 32.0 / power(2.0, CAST(d AS DOUBLE))) AS z
-        |  FROM range(0, 560) r),
-        |hm(i, rv) AS (VALUES
-        |  ${opqMatValues(Similarity.hadamard16)}),
-        |corpus AS (SELECT l.vec_id,
-        |    list(list_dot_product(h.rv, l.z) ORDER BY h.i) AS v
-        |  FROM lat l CROSS JOIN hm h GROUP BY l.vec_id),
-        |tm(i, rv) AS (VALUES
-        |  ${opqMatValues(opqTrainedR(s))}),
-        |rott AS (SELECT c.vec_id,
-        |    list(list_dot_product(t.rv, c.v) ORDER BY t.i) AS v
-        |  FROM corpus c CROSS JOIN tm t GROUP BY c.vec_id),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM corpus),
-        |qn AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n
-        |  WHERE vec_id % 20 = 0),
-        |bs AS (SELECT qn.query_id, n.vec_id AS neighbor_id,
-        |    ROUND(list_dot_product(qn.qv, n.v) / (qn.qnrm * n.nrm), 4) + 0.0 AS cosine
-        |  FROM qn CROSS JOIN n WHERE n.vec_id <> qn.query_id),
-        |brute AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cosine DESC, neighbor_id) AS rank FROM bs)
-        |  WHERE rank <= 10),
-        |pbk(sub, code, cv) AS (VALUES
-        |  ${opqBookValues(opqPlainBooks(s))}),
-        |pcb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM pbk),
-        |tbk(sub, code, cv) AS (VALUES
-        |  ${opqBookValues(opqTrainedBooks(s))}),
-        |tcb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM tbk),
-        |${opqAdcTier("p", "corpus", "pcb")},
-        |${opqAdcTier("t", "rott", "tcb")},
-        |hp AS (SELECT b.query_id, count(*) AS pq_overlap
-        |  FROM brute b JOIN ptop USING (query_id, neighbor_id) GROUP BY 1),
-        |ht AS (SELECT b.query_id, count(*) AS opq_overlap
-        |  FROM brute b JOIN ttop USING (query_id, neighbor_id) GROUP BY 1),
-        |base AS (SELECT query_id, count(*) AS n_brute FROM brute GROUP BY 1)
-        |SELECT base.query_id, CAST(base.n_brute AS BIGINT) AS n_brute,
-        |  CAST(coalesce(hp.pq_overlap, 0) AS BIGINT) AS pq_overlap,
-        |  CAST(coalesce(ht.opq_overlap, 0) AS BIGINT) AS opq_overlap,
-        |  CAST(coalesce(hp.pq_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS pq_bp,
-        |  CAST(coalesce(ht.opq_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS opq_bp
-        |FROM base LEFT JOIN hp USING (query_id) LEFT JOIN ht USING (query_id)""".stripMargin
-    })
-
-  /** Residual-IVF ADC tier over a named source CTE — the oracle fragment
-    * for the COMPOSED quantized layouts (VERDICT r14 #1): assignment
-    * (round-6 cosine desc, min-cell tie-break), whole-vector residual,
-    * dsub-wide encode (m=8; dsub 2 on the dim-16 fixtures, 8 on the
-    * dim-64 table), nProbes probed cells
-    * per query (vec_id ≡ 0 mod 20), one exact LUT per probed cell from
-    * the query's own residual, ADC sum, top-10 by (d2u, vec_id). The
-    * caller supplies the source relation plus codebook (`cbRel`: sub,
-    * code, cv, cc) and centroid (`cnRel`: cell, w, cnrm) relations. */
-  protected def opqResidTier(tag: String, src: String, cbRel: String,
-      cnRel: String, nProbes: Int, dsub: Int = 2): String =
-    s"""${tag}vn AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm
-      |  FROM $src),
-      |${tag}asgn AS (SELECT vec_id, cell FROM (
-      |    SELECT n.vec_id, cn.cell,
-      |      row_number() OVER (PARTITION BY n.vec_id
-      |        ORDER BY ROUND(list_dot_product(cn.w, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
-      |    FROM ${tag}vn n CROSS JOIN $cnRel cn)
-      |  WHERE crn = 1),
-      |${tag}resid AS (SELECT n.vec_id, a.cell,
-      |    list_transform(n.v, (x, i) -> x - cn.w[i]) AS rv
-      |  FROM ${tag}vn n JOIN ${tag}asgn a ON a.vec_id = n.vec_id
-      |    JOIN $cnRel cn ON cn.cell = a.cell),
-      |${tag}sv AS (SELECT vec_id, cell, CAST(r.range AS INTEGER) AS sub,
-      |    list_slice(rv, r.range * $dsub + 1, r.range * $dsub + $dsub) AS xs
-      |  FROM ${tag}resid CROSS JOIN range(0, 8) r),
-      |${tag}sd AS (SELECT vec_id, cell, sub, code,
-      |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-      |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-      |  FROM ${tag}sv JOIN $cbRel USING (sub)),
-      |${tag}enc AS (SELECT vec_id, cell, sub, code FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-      |      ORDER BY d2u, code) AS rn FROM ${tag}sd)
-      |  WHERE rn = 1),
-      |${tag}pb AS (SELECT query_id, cell FROM (
-      |    SELECT n.vec_id AS query_id, cn.cell,
-      |      row_number() OVER (PARTITION BY n.vec_id
-      |        ORDER BY ROUND(list_dot_product(n.v, cn.w) / (n.nrm * cn.cnrm), 6) DESC, cn.cell) AS pr
-      |    FROM ${tag}vn n CROSS JOIN $cnRel cn WHERE n.vec_id % 20 = 0)
-      |  WHERE pr <= $nProbes),
-      |${tag}qres AS (SELECT pb.query_id, pb.cell,
-      |    list_transform(q.v, (x, i) -> x - cn.w[i]) AS rqv
-      |  FROM ${tag}pb pb JOIN ${tag}vn q ON q.vec_id = pb.query_id
-      |    JOIN $cnRel cn ON cn.cell = pb.cell),
-      |${tag}qs AS (SELECT query_id, cell, CAST(r.range AS INTEGER) AS sub,
-      |    list_slice(rqv, r.range * $dsub + 1, r.range * $dsub + $dsub) AS xs
-      |  FROM ${tag}qres CROSS JOIN range(0, 8) r),
-      |${tag}lut AS (SELECT query_id, cell, sub, code,
-      |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-      |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-      |  FROM ${tag}qs JOIN $cbRel USING (sub)),
-      |${tag}sc AS (SELECT l.query_id, enc.vec_id, CAST(sum(l.d2u) AS BIGINT) AS d2u
-      |  FROM ${tag}enc enc JOIN ${tag}lut l ON l.cell = enc.cell
-      |      AND l.sub = enc.sub AND l.code = enc.code
-      |  WHERE enc.vec_id <> l.query_id
-      |  GROUP BY 1, 2),
-      |${tag}top AS (SELECT query_id, vec_id AS neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |      ORDER BY d2u, vec_id) AS rank FROM ${tag}sc)
-      |  WHERE rank <= 10)""".stripMargin
+    fixture("opq_trained_books")(Similarity.pqTrain(
+      Similarity.rotateEmbeddings(opqCorpus(s), opqTrainedR(s)),
+      m = 8, ksub = 16))
+  protected val simOpqTrained = gainQ("sim_opq_trained", opqBrute,
+    "pq" -> opqPlainTier,
+    "opq" -> opqFlatTier("pq_opq_trained",
+      s => Similarity.rotateEmbeddings(opqCorpus(s), opqTrainedR(s)),
+      s => rotatedSql(s"($opqCorpusSql)", opqTrainedR(s)), opqTrainedBooks))
 
   /** Trained pieces for the COMPOSED OPQ ∘ residual-IVF-PQ gain pair on
     * the smeared aniso fixture: both tiers train their own cells (8 — the
@@ -1884,27 +1420,58 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * 0.796) and their own residual codebooks; the OPQ tier trains in the
     * ROTATED space (the FAISS OPQ-pretransform order). */
   protected def opqIvfCentsU(s: SparkSession): Seq[Array[Double]] =
-    fixtureCache.computeIfAbsent("opqivf_cents_u", _ =>
-      Similarity.kmeansCentroidArrays(opqCorpus(s), nCells = 8))
-      .asInstanceOf[Seq[Array[Double]]]
+    fixture("opqivf_cents_u")(Similarity.kmeansCentroidArrays(
+      opqCorpus(s), nCells = 8))
   protected def opqIvfBooksU(s: SparkSession): Seq[Seq[Array[Double]]] =
-    fixtureCache.computeIfAbsent("opqivf_books_u", _ =>
-      Similarity.pqTrainResidual(opqCorpus(s), opqIvfCentsU(s),
-        m = 8, ksub = 16)).asInstanceOf[Seq[Seq[Array[Double]]]]
+    fixture("opqivf_books_u")(Similarity.pqTrainResidual(opqCorpus(s),
+      opqIvfCentsU(s), m = 8, ksub = 16))
   protected def opqIvfRotC(s: SparkSession): DataFrame =
     Similarity.rotateEmbeddings(opqCorpus(s), opqTrainedR(s))
   protected def opqIvfCentsR(s: SparkSession): Seq[Array[Double]] =
-    fixtureCache.computeIfAbsent("opqivf_cents_r", _ =>
-      Similarity.kmeansCentroidArrays(opqIvfRotC(s), nCells = 8))
-      .asInstanceOf[Seq[Array[Double]]]
+    fixture("opqivf_cents_r")(Similarity.kmeansCentroidArrays(
+      opqIvfRotC(s), nCells = 8))
   protected def opqIvfBooksR(s: SparkSession): Seq[Seq[Array[Double]]] =
-    fixtureCache.computeIfAbsent("opqivf_books_r", _ =>
-      Similarity.pqTrainResidual(opqIvfRotC(s), opqIvfCentsR(s),
-        m = 8, ksub = 16)).asInstanceOf[Seq[Seq[Array[Double]]]]
-  protected def centValues(cents: Seq[Array[Double]]): String =
-    cents.zipWithIndex.map { case (v, i) =>
-      s"($i, ${v.mkString("[", ", ", "]")}::DOUBLE[])"
-    }.mkString(",\n  ")
+    fixture("opqivf_books_r")(Similarity.pqTrainResidual(opqIvfRotC(s),
+      opqIvfCentsR(s), m = 8, ksub = 16))
+
+  /** The two tiers of a composed-layout gain pair over a fixture (`src`,
+    * its SQL twin `srcSql`), nProbes = 2, dsub = 2, each searching a
+    * persisted wide code table: "resid" — residual IVF-PQ with cells
+    * and books `u`; "opq" — rotate by `r`, then residual IVF-PQ with
+    * the rotated-space cells and books `rc`. */
+  private def composedTiers(tag: String, src: SparkSession => DataFrame,
+      srcSql: String, codesU: String, codesR: String,
+      u: SparkSession => (Seq[Array[Double]], Seq[Seq[Array[Double]]]),
+      r: SparkSession => Seq[Array[Double]],
+      rc: SparkSession => (Seq[Array[Double]], Seq[Seq[Array[Double]]])
+  ): ((String, Q), (String, Q)) = {
+    val resid = fixtureTier(s"ivfpq_resid_$tag", (s, dir) => {
+      val corpus = src(s)
+      val (cents, books) = u(s)
+      val codes = parquetArtifact(s, dir, codesU, "embeddings")(
+        Similarity.ivfPqResidualEncode(corpus, cents, books))
+      Similarity.ivfPqResidualTopK(codes,
+        corpus.where(pmod(col("vec_id"), lit(20)) === 0),
+        cents, books, k = 10, nProbes = 2)
+    }) { s =>
+      val (cents, books) = u(s)
+      ivfTopkSql(srcSql, cents, books, nProbes = 2, dsub = 2)
+    }
+    val opq = fixtureTier(s"opq_ivfpq_$tag", (s, dir) => {
+      val corpus = src(s)
+      val (cents, books) = rc(s)
+      val codes = parquetArtifact(s, dir, codesR, "embeddings")(
+        Similarity.opqIvfPqEncode(corpus, r(s), cents, books))
+      Similarity.opqIvfPqTopK(codes,
+        corpus.where(pmod(col("vec_id"), lit(20)) === 0), r(s),
+        cents, books, k = 10, nProbes = 2)
+    }) { s =>
+      val (cents, books) = rc(s)
+      ivfTopkSql(rotatedSql(s"($srcSql)", r(s)), cents, books,
+        nProbes = 2, dsub = 2)
+    }
+    ("resid" -> resid, "opq" -> opq)
+  }
 
   /** OPQ composed with residual IVF-PQ beats the unrotated residual tier
     * at equal code budget on the smeared-latent corpus — ORACLE-CHECKED
@@ -1922,89 +1489,13 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * IVFADC. The oracle re-derives latent, rotation, both centroid sets,
     * both codebook sets, both full search chains and both recalls from
     * the trained literals. */
-  protected val simOpqIvfpq = Q("sim_opq_ivfpq",
-    (s, dir) => {
-      val corpus = opqCorpus(s)
-      val brute = Similarity.bruteTopK(corpus, k = 10, stride = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      val codesU = parquetArtifact(s, dir, "opqivf_codes_u_wide_m8_k16_c8",
-        "embeddings")(Similarity.ivfPqResidualEncode(corpus,
-        opqIvfCentsU(s), opqIvfBooksU(s)))
-      val resid = Similarity.ivfPqResidualTopK(codesU,
-          corpus.where(pmod(col("vec_id"), lit(20)) === 0),
-          opqIvfCentsU(s), opqIvfBooksU(s), k = 10, nProbes = 2)
-        .select(col("query_id"), col("neighbor_id"))
-      val codesR = parquetArtifact(s, dir, "opqivf_codes_r_wide_m8_k16_c8",
-        "embeddings")(Similarity.opqIvfPqEncode(corpus, opqTrainedR(s),
-        opqIvfCentsR(s), opqIvfBooksR(s)))
-      val opq = Similarity.opqIvfPqTopK(codesR,
-          corpus.where(pmod(col("vec_id"), lit(20)) === 0), opqTrainedR(s),
-          opqIvfCentsR(s), opqIvfBooksR(s), k = 10, nProbes = 2)
-        .select(col("query_id"), col("neighbor_id"))
-      def overlap(cand: DataFrame, name: String): DataFrame =
-        brute.join(cand, Seq("query_id", "neighbor_id"))
-          .groupBy(col("query_id")).agg(count(lit(1)).as(name))
-      brute.groupBy(col("query_id")).agg(count(lit(1)).as("n_brute"))
-        .join(overlap(resid, "resid_overlap"), Seq("query_id"), "left")
-        .join(overlap(opq, "opq_overlap"), Seq("query_id"), "left")
-        .select(col("query_id"), col("n_brute"),
-          coalesce(col("resid_overlap"), lit(0L)).as("resid_overlap"),
-          coalesce(col("opq_overlap"), lit(0L)).as("opq_overlap"),
-          expr("coalesce(resid_overlap, 0) * 10000 div n_brute").as("resid_bp"),
-          expr("coalesce(opq_overlap, 0) * 10000 div n_brute").as("opq_bp"))
-    },
-    None, oracleFn = Some { (s, dir) =>
-      s"""WITH lat AS (SELECT r.range AS vec_id,
-        |    list_transform(generate_series(0, 15), d ->
-        |      CAST((r.range * 13 + d * 7 + (r.range * d) % 29) % 65 - 32 AS DOUBLE)
-        |      / 32.0 / power(2.0, CAST(d AS DOUBLE))) AS z
-        |  FROM range(0, 560) r),
-        |hm(i, rv) AS (VALUES
-        |  ${opqMatValues(Similarity.hadamard16)}),
-        |corpus AS (SELECT l.vec_id,
-        |    list(list_dot_product(h.rv, l.z) ORDER BY h.i) AS v
-        |  FROM lat l CROSS JOIN hm h GROUP BY l.vec_id),
-        |tm(i, rv) AS (VALUES
-        |  ${opqMatValues(opqTrainedR(s))}),
-        |rott AS (SELECT c.vec_id,
-        |    list(list_dot_product(t.rv, c.v) ORDER BY t.i) AS v
-        |  FROM corpus c CROSS JOIN tm t GROUP BY c.vec_id),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM corpus),
-        |qn AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n
-        |  WHERE vec_id % 20 = 0),
-        |bs AS (SELECT qn.query_id, n.vec_id AS neighbor_id,
-        |    ROUND(list_dot_product(qn.qv, n.v) / (qn.qnrm * n.nrm), 4) + 0.0 AS cosine
-        |  FROM qn CROSS JOIN n WHERE n.vec_id <> qn.query_id),
-        |brute AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cosine DESC, neighbor_id) AS rank FROM bs)
-        |  WHERE rank <= 10),
-        |ubk(sub, code, cv) AS (VALUES
-        |  ${opqBookValues(opqIvfBooksU(s))}),
-        |ucb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM ubk),
-        |uc2(cell, w) AS (VALUES
-        |  ${centValues(opqIvfCentsU(s))}),
-        |ucn AS (SELECT cell, w, sqrt(list_dot_product(w, w)) AS cnrm FROM uc2),
-        |rbk(sub, code, cv) AS (VALUES
-        |  ${opqBookValues(opqIvfBooksR(s))}),
-        |rcb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM rbk),
-        |rc2(cell, w) AS (VALUES
-        |  ${centValues(opqIvfCentsR(s))}),
-        |rcn AS (SELECT cell, w, sqrt(list_dot_product(w, w)) AS cnrm FROM rc2),
-        |${opqResidTier("u", "corpus", "ucb", "ucn", nProbes = 2)},
-        |${opqResidTier("o", "rott", "rcb", "rcn", nProbes = 2)},
-        |hu AS (SELECT b.query_id, count(*) AS resid_overlap
-        |  FROM brute b JOIN utop USING (query_id, neighbor_id) GROUP BY 1),
-        |ho AS (SELECT b.query_id, count(*) AS opq_overlap
-        |  FROM brute b JOIN otop USING (query_id, neighbor_id) GROUP BY 1),
-        |base AS (SELECT query_id, count(*) AS n_brute FROM brute GROUP BY 1)
-        |SELECT base.query_id, CAST(base.n_brute AS BIGINT) AS n_brute,
-        |  CAST(coalesce(hu.resid_overlap, 0) AS BIGINT) AS resid_overlap,
-        |  CAST(coalesce(ho.opq_overlap, 0) AS BIGINT) AS opq_overlap,
-        |  CAST(coalesce(hu.resid_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS resid_bp,
-        |  CAST(coalesce(ho.opq_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS opq_bp
-        |FROM base LEFT JOIN hu USING (query_id) LEFT JOIN ho USING (query_id)""".stripMargin
-    })
+  protected val simOpqIvfpq = {
+    val (resid, opq) = composedTiers("opq_corpus", opqCorpus, opqCorpusSql,
+      "opqivf_codes_u_wide_m8_k16_c8", "opqivf_codes_r_wide_m8_k16_c8",
+      s => (opqIvfCentsU(s), opqIvfBooksU(s)), opqTrainedR,
+      s => (opqIvfCentsR(s), opqIvfBooksR(s)))
+    gainQ("sim_opq_ivfpq", opqBrute, resid, opq)
+  }
 
   /** Production face of the composed layout on the REAL embeddings
     * table — the full FAISS `OPQ8,IVF10,PQ8` chain over persisted
@@ -2036,26 +1527,9 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
         opqEmbResidCents(s, dir), opqEmbResidBooks(s, dir),
         k = 10, nProbes = 3)
     },
-    None, oracleFn = Some { (s, dir) =>
-      s"""WITH rm(i, rv) AS (VALUES
-        |  ${opqMatValues(opqEmbR(s, dir))}),
-        |e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v0 FROM embeddings),
-        |rot AS (SELECT e0.vec_id,
-        |    list(list_dot_product(r.rv, e0.v0) ORDER BY r.i) AS v
-        |  FROM e0 CROSS JOIN rm r GROUP BY e0.vec_id),
-        |rbk(sub, code, cv) AS (VALUES
-        |  ${opqBookValues(opqEmbResidBooks(s, dir))}),
-        |rcb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM rbk),
-        |rc2(cell, w) AS (VALUES
-        |  ${centValues(opqEmbResidCents(s, dir))}),
-        |rcn AS (SELECT cell, w, sqrt(list_dot_product(w, w)) AS cnrm FROM rc2),
-        |${opqResidTier("o", "rot", "rcb", "rcn", nProbes = 3, dsub = 8)},
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY d2u, vec_id) AS rank FROM osc)
-        |SELECT query_id, CAST(rank AS INTEGER) AS rank,
-        |  vec_id AS neighbor_id, d2u
-        |FROM r WHERE rank <= 10""".stripMargin
-    }, bench = true)
+    None, oracleFn = Some((s, dir) => ivfTopkSql(
+      rotatedSql(s"($embSql)", opqEmbR(s, dir)), opqEmbResidCents(s, dir),
+      opqEmbResidBooks(s, dir), nProbes = 3, dsub = 8)), bench = true)
 
   /** Oracled recall for the COMPOSED serving face — the sim_opq_recall
     * shape over sim_opq_ivfpq_topk's chain (stored wide residual codes,
@@ -2064,61 +1538,8 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * hash-checked from the three literal sets. Closes the matrix —
     * EVERY serving tier (flat PQ "+R", binq, sq8, flat OPQ, composed
     * OPQ∘residual-IVF-PQ) now carries an oracle-gated recall row. */
-  protected val simOpqIvfpqRecall = Q("sim_opq_ivfpq_recall",
-    (s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val brute = Similarity.bruteTopK(e, k = 10, stride = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      val codesWide = parquetArtifact(s, dir,
-        "opq_ivfpq_resid_codes_wide_m8_k16_c10", "embeddings")(
-        Similarity.opqIvfPqEncode(e, opqEmbR(s, dir),
-          opqEmbResidCents(s, dir), opqEmbResidBooks(s, dir)))
-      val opq = Similarity.opqIvfPqTopK(codesWide,
-          e.where(pmod(col("vec_id"), lit(20)) === 0), opqEmbR(s, dir),
-          opqEmbResidCents(s, dir), opqEmbResidBooks(s, dir),
-          k = 10, nProbes = 3)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = brute.join(opq, Seq("query_id", "neighbor_id"))
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_overlap"))
-      brute.groupBy(col("query_id")).agg(count(lit(1)).as("n_brute"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), col("n_brute"),
-          coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-          expr("coalesce(n_overlap, 0) * 10000 div n_brute").as("recall_bp"))
-    },
-    None, oracleFn = Some { (s, dir) =>
-      s"""WITH rm(i, rv) AS (VALUES
-        |  ${opqMatValues(opqEmbR(s, dir))}),
-        |e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v0 FROM embeddings),
-        |rot AS (SELECT e0.vec_id,
-        |    list(list_dot_product(r.rv, e0.v0) ORDER BY r.i) AS v
-        |  FROM e0 CROSS JOIN rm r GROUP BY e0.vec_id),
-        |rbk(sub, code, cv) AS (VALUES
-        |  ${opqBookValues(opqEmbResidBooks(s, dir))}),
-        |rcb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM rbk),
-        |rc2(cell, w) AS (VALUES
-        |  ${centValues(opqEmbResidCents(s, dir))}),
-        |rcn AS (SELECT cell, w, sqrt(list_dot_product(w, w)) AS cnrm FROM rc2),
-        |${opqResidTier("o", "rot", "rcb", "rcn", nProbes = 3, dsub = 8)},
-        |nn AS (SELECT vec_id, v0 AS v, sqrt(list_dot_product(v0, v0)) AS nrm
-        |  FROM e0 WHERE list_dot_product(v0, v0) > 0),
-        |qn AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM nn
-        |  WHERE vec_id % 20 = 0),
-        |bbs AS (SELECT qn.query_id, nn.vec_id AS neighbor_id,
-        |    ROUND(list_dot_product(qn.qv, nn.v) / (qn.qnrm * nn.nrm), 4) + 0.0 AS cosine
-        |  FROM qn CROSS JOIN nn WHERE nn.vec_id <> qn.query_id),
-        |brute AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cosine DESC, neighbor_id) AS rank FROM bbs)
-        |  WHERE rank <= 10),
-        |hits AS (SELECT b.query_id, count(*) AS n_overlap
-        |  FROM brute b JOIN otop USING (query_id, neighbor_id) GROUP BY 1),
-        |base AS (SELECT query_id, count(*) AS n_brute FROM brute GROUP BY 1)
-        |SELECT base.query_id, CAST(base.n_brute AS BIGINT) AS n_brute,
-        |  CAST(coalesce(hits.n_overlap, 0) AS BIGINT) AS n_overlap,
-        |  CAST(coalesce(hits.n_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS recall_bp
-        |FROM base LEFT JOIN hits USING (query_id)""".stripMargin
-    })
+  protected val simOpqIvfpqRecall = recallQ("sim_opq_ivfpq_recall", embBrute,
+    simOpqIvfpqTopk)
 
   /** Composed-beats-residual on REALISTIC clustered data — the second
     * oracled gain pair for the composed layout (the aniso pair proves
@@ -2131,106 +1552,30 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * (rotation, both centroid sets, both residual codebook sets)
     * interpolate into the oracle; both wide code tables persist. */
   private def opqIvfcR(s: SparkSession): Seq[Array[Double]] =
-    fixtureCache.computeIfAbsent("opqivfc_r", _ =>
-      Similarity.opqTrainRotation(Similarity.synthesizeClustered(s), m = 8))
-      .asInstanceOf[Seq[Array[Double]]]
+    fixture("opqivfc_r")(Similarity.opqTrainRotation(
+      Similarity.synthesizeClustered(s), m = 8))
   private def opqIvfcRotC(s: SparkSession): DataFrame =
     Similarity.rotateEmbeddings(Similarity.synthesizeClustered(s), opqIvfcR(s))
   private def opqIvfcCentsU(s: SparkSession): Seq[Array[Double]] =
-    fixtureCache.computeIfAbsent("opqivfc_cents_u", _ =>
-      Similarity.kmeansCentroidArrays(Similarity.synthesizeClustered(s),
-        nCells = 8)).asInstanceOf[Seq[Array[Double]]]
+    fixture("opqivfc_cents_u")(Similarity.kmeansCentroidArrays(
+      Similarity.synthesizeClustered(s), nCells = 8))
   private def opqIvfcBooksU(s: SparkSession): Seq[Seq[Array[Double]]] =
-    fixtureCache.computeIfAbsent("opqivfc_books_u", _ =>
-      Similarity.pqTrainResidual(Similarity.synthesizeClustered(s),
-        opqIvfcCentsU(s), m = 8, ksub = 8))
-      .asInstanceOf[Seq[Seq[Array[Double]]]]
+    fixture("opqivfc_books_u")(Similarity.pqTrainResidual(
+      Similarity.synthesizeClustered(s), opqIvfcCentsU(s), m = 8, ksub = 8))
   private def opqIvfcCentsR(s: SparkSession): Seq[Array[Double]] =
-    fixtureCache.computeIfAbsent("opqivfc_cents_r", _ =>
-      Similarity.kmeansCentroidArrays(opqIvfcRotC(s), nCells = 8))
-      .asInstanceOf[Seq[Array[Double]]]
+    fixture("opqivfc_cents_r")(Similarity.kmeansCentroidArrays(
+      opqIvfcRotC(s), nCells = 8))
   private def opqIvfcBooksR(s: SparkSession): Seq[Seq[Array[Double]]] =
-    fixtureCache.computeIfAbsent("opqivfc_books_r", _ =>
-      Similarity.pqTrainResidual(opqIvfcRotC(s), opqIvfcCentsR(s),
-        m = 8, ksub = 8)).asInstanceOf[Seq[Seq[Array[Double]]]]
-  protected val simOpqIvfpqGain = Q("sim_opq_ivfpq_gain",
-    (s, dir) => {
-      val fix = Similarity.synthesizeClustered(s)
-      val brute = Similarity.bruteTopK(fix, k = 10, stride = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      val codesU = parquetArtifact(s, dir, "opqivfc_codes_u_wide_m8_k8_c8",
-        "embeddings")(Similarity.ivfPqResidualEncode(fix,
-        opqIvfcCentsU(s), opqIvfcBooksU(s)))
-      val resid = Similarity.ivfPqResidualTopK(codesU,
-          fix.where(pmod(col("vec_id"), lit(20)) === 0),
-          opqIvfcCentsU(s), opqIvfcBooksU(s), k = 10, nProbes = 2)
-        .select(col("query_id"), col("neighbor_id"))
-      val codesR = parquetArtifact(s, dir, "opqivfc_codes_r_wide_m8_k8_c8",
-        "embeddings")(Similarity.opqIvfPqEncode(fix, opqIvfcR(s),
-        opqIvfcCentsR(s), opqIvfcBooksR(s)))
-      val opq = Similarity.opqIvfPqTopK(codesR,
-          fix.where(pmod(col("vec_id"), lit(20)) === 0), opqIvfcR(s),
-          opqIvfcCentsR(s), opqIvfcBooksR(s), k = 10, nProbes = 2)
-        .select(col("query_id"), col("neighbor_id"))
-      def overlap(cand: DataFrame, name: String): DataFrame =
-        brute.join(cand, Seq("query_id", "neighbor_id"))
-          .groupBy(col("query_id")).agg(count(lit(1)).as(name))
-      brute.groupBy(col("query_id")).agg(count(lit(1)).as("n_brute"))
-        .join(overlap(resid, "resid_overlap"), Seq("query_id"), "left")
-        .join(overlap(opq, "opq_overlap"), Seq("query_id"), "left")
-        .select(col("query_id"), col("n_brute"),
-          coalesce(col("resid_overlap"), lit(0L)).as("resid_overlap"),
-          coalesce(col("opq_overlap"), lit(0L)).as("opq_overlap"),
-          expr("coalesce(resid_overlap, 0) * 10000 div n_brute").as("resid_bp"),
-          expr("coalesce(opq_overlap, 0) * 10000 div n_brute").as("opq_bp"))
-    },
-    None, oracleFn = Some { (s, dir) =>
-      s"""WITH fix AS (SELECT r.range AS vec_id,
-        |    list_transform(generate_series(0, 15), d ->
-        |      CAST(((r.range % 8) * 5 + d * 3) % 17 - 8 AS DOUBLE) / 4.0
-        |      + CAST((r.range * 13 + d * 7) % 9 - 4 AS DOUBLE) / 32.0) AS v
-        |  FROM range(0, 560) r),
-        |tm(i, rv) AS (VALUES
-        |  ${opqMatValues(opqIvfcR(s))}),
-        |rott AS (SELECT c.vec_id,
-        |    list(list_dot_product(t.rv, c.v) ORDER BY t.i) AS v
-        |  FROM fix c CROSS JOIN tm t GROUP BY c.vec_id),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM fix),
-        |qn AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n
-        |  WHERE vec_id % 20 = 0),
-        |bs AS (SELECT qn.query_id, n.vec_id AS neighbor_id,
-        |    ROUND(list_dot_product(qn.qv, n.v) / (qn.qnrm * n.nrm), 4) + 0.0 AS cosine
-        |  FROM qn CROSS JOIN n WHERE n.vec_id <> qn.query_id),
-        |brute AS (SELECT query_id, neighbor_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cosine DESC, neighbor_id) AS rank FROM bs)
-        |  WHERE rank <= 10),
-        |ubk(sub, code, cv) AS (VALUES
-        |  ${opqBookValues(opqIvfcBooksU(s))}),
-        |ucb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM ubk),
-        |uc2(cell, w) AS (VALUES
-        |  ${centValues(opqIvfcCentsU(s))}),
-        |ucn AS (SELECT cell, w, sqrt(list_dot_product(w, w)) AS cnrm FROM uc2),
-        |rbk(sub, code, cv) AS (VALUES
-        |  ${opqBookValues(opqIvfcBooksR(s))}),
-        |rcb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM rbk),
-        |rc2(cell, w) AS (VALUES
-        |  ${centValues(opqIvfcCentsR(s))}),
-        |rcn AS (SELECT cell, w, sqrt(list_dot_product(w, w)) AS cnrm FROM rc2),
-        |${opqResidTier("u", "fix", "ucb", "ucn", nProbes = 2)},
-        |${opqResidTier("o", "rott", "rcb", "rcn", nProbes = 2)},
-        |hu AS (SELECT b.query_id, count(*) AS resid_overlap
-        |  FROM brute b JOIN utop USING (query_id, neighbor_id) GROUP BY 1),
-        |ho AS (SELECT b.query_id, count(*) AS opq_overlap
-        |  FROM brute b JOIN otop USING (query_id, neighbor_id) GROUP BY 1),
-        |base AS (SELECT query_id, count(*) AS n_brute FROM brute GROUP BY 1)
-        |SELECT base.query_id, CAST(base.n_brute AS BIGINT) AS n_brute,
-        |  CAST(coalesce(hu.resid_overlap, 0) AS BIGINT) AS resid_overlap,
-        |  CAST(coalesce(ho.opq_overlap, 0) AS BIGINT) AS opq_overlap,
-        |  CAST(coalesce(hu.resid_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS resid_bp,
-        |  CAST(coalesce(ho.opq_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS opq_bp
-        |FROM base LEFT JOIN hu USING (query_id) LEFT JOIN ho USING (query_id)""".stripMargin
-    })
+    fixture("opqivfc_books_r")(Similarity.pqTrainResidual(opqIvfcRotC(s),
+      opqIvfcCentsR(s), m = 8, ksub = 8))
+  protected val simOpqIvfpqGain = {
+    val (resid, opq) = composedTiers("clustered",
+      s => Similarity.synthesizeClustered(s), clusteredFixSql,
+      "opqivfc_codes_u_wide_m8_k8_c8", "opqivfc_codes_r_wide_m8_k8_c8",
+      s => (opqIvfcCentsU(s), opqIvfcBooksU(s)), opqIvfcR,
+      s => (opqIvfcCentsR(s), opqIvfcBooksR(s)))
+    gainQ("sim_opq_ivfpq_gain", clusteredBrute, resid, opq)
+  }
 
   /** Incremental maintenance for the COMPOSED index — the sim_opq_incr
     * posture applied to the full chain: rotation, rotated-space cells
@@ -2275,22 +1620,13 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
             .withColumn("origin", lit("batch")))
     },
     None, oracleFn = Some { (s, dir) =>
-      s"""WITH rm(i, rv) AS (VALUES
-        |  ${opqMatValues(opqHistR(s, dir))}),
-        |e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v0 FROM embeddings),
-        |rot AS (SELECT e0.vec_id,
-        |    list(list_dot_product(r.rv, e0.v0) ORDER BY r.i) AS v
-        |  FROM e0 CROSS JOIN rm r GROUP BY e0.vec_id),
-        |rbk(sub, code, cv) AS (VALUES
-        |  ${opqBookValues(opqIvfHistBooks(s, dir))}),
-        |rcb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM rbk),
-        |rc2(cell, w) AS (VALUES
-        |  ${centValues(opqIvfHistCents(s, dir))}),
-        |rcn AS (SELECT cell, w, sqrt(list_dot_product(w, w)) AS cnrm FROM rc2),
-        |${opqResidTier("o", "rot", "rcb", "rcn", nProbes = 1, dsub = 8)}
+      s"""WITH rot AS (${rotatedSql(s"($embSql)", opqHistR(s, dir))}),
+        |${booksCte(opqIvfHistBooks(s, dir))},
+        |${centsCte(opqIvfHistCents(s, dir))},
+        |${ivfAdcCtes("rot", nProbes = 1, dsub = 8, residual = true)}
         |SELECT vec_id, cell, sub, code,
         |  CASE WHEN vec_id % 7 = 0 THEN 'history' ELSE 'batch' END AS origin
-        |FROM oenc""".stripMargin
+        |FROM enc""".stripMargin
     })
 
   /** Residual-trained PQ codebooks (pq_books_resid artifact): trained on
@@ -2322,74 +1658,9 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
         e.where(pmod(col("vec_id"), lit(20)) === 0),
         cents, books, k = 10, nProbes = 3)
     },
-    None, oracleFn = Some { (s, dir) =>
-      val cents = embCentroids(s, dir, "all", Tables.embeddings(s, dir))
-      val books = pqResidBooks(s, dir)
-      val bookValues = books.zipWithIndex.flatMap { case (cs, sub) =>
-        cs.zipWithIndex.map { case (c, code) =>
-          s"($sub, $code, ${c.mkString("[", ", ", "]")}::DOUBLE[])" }
-      }.mkString(",\n  ")
-      val centValues = cents.zipWithIndex.map { case (v, i) =>
-        s"($i, ${v.mkString("[", ", ", "]")}::DOUBLE[])"
-      }.mkString(",\n  ")
-      s"""WITH cbv(sub, code, cv) AS (VALUES
-        |  $bookValues),
-        |cb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM cbv),
-        |c2(cell, w) AS (VALUES
-        |  $centValues),
-        |cn AS (SELECT cell, w, sqrt(list_dot_product(w, w)) AS cnrm FROM c2),
-        |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-        |asgn AS (SELECT vec_id, cell FROM (
-        |    SELECT n.vec_id, cn.cell,
-        |      row_number() OVER (PARTITION BY n.vec_id
-        |        ORDER BY ROUND(list_dot_product(cn.w, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
-        |    FROM n CROSS JOIN cn)
-        |  WHERE crn = 1),
-        |resid AS (SELECT n.vec_id, a.cell,
-        |    list_transform(n.v, (x, i) -> x - cn.w[i]) AS rv
-        |  FROM n JOIN asgn a ON a.vec_id = n.vec_id
-        |    JOIN cn ON cn.cell = a.cell),
-        |sv AS (SELECT vec_id, cell, CAST(r.range AS INTEGER) AS sub,
-        |    list_slice(rv, r.range * 8 + 1, r.range * 8 + 8) AS xs
-        |  FROM resid CROSS JOIN range(0, 8) r),
-        |sd AS (SELECT vec_id, cell, sub, code,
-        |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-        |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-        |  FROM sv JOIN cb USING (sub)),
-        |enc AS (SELECT vec_id, cell, sub, code FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |      ORDER BY d2u, code) AS rn FROM sd)
-        |  WHERE rn = 1),
-        |pb AS (SELECT query_id, cell FROM (
-        |    SELECT n.vec_id AS query_id, cn.cell,
-        |      row_number() OVER (PARTITION BY n.vec_id
-        |        ORDER BY ROUND(list_dot_product(n.v, cn.w) / (n.nrm * cn.cnrm), 6) DESC, cn.cell) AS pr
-        |    FROM n CROSS JOIN cn WHERE n.vec_id % 20 = 0)
-        |  WHERE pr <= 3),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 20 = 0),
-        |qres AS (SELECT pb.query_id, pb.cell,
-        |    list_transform(q.qv, (x, i) -> x - cn.w[i]) AS rqv
-        |  FROM pb JOIN q ON q.query_id = pb.query_id
-        |    JOIN cn ON cn.cell = pb.cell),
-        |qs AS (SELECT query_id, cell, CAST(r.range AS INTEGER) AS sub,
-        |    list_slice(rqv, r.range * 8 + 1, r.range * 8 + 8) AS xs
-        |  FROM qres CROSS JOIN range(0, 8) r),
-        |lut AS (SELECT query_id, cell, sub, code,
-        |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-        |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-        |  FROM qs JOIN cb USING (sub)),
-        |sc AS (SELECT l.query_id, enc.vec_id, CAST(sum(l.d2u) AS BIGINT) AS d2u
-        |  FROM enc JOIN lut l ON l.cell = enc.cell
-        |      AND l.sub = enc.sub AND l.code = enc.code
-        |  WHERE enc.vec_id <> l.query_id
-        |  GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY d2u, vec_id) AS rank FROM sc)
-        |SELECT query_id, CAST(rank AS INTEGER) AS rank,
-        |  vec_id AS neighbor_id, d2u
-        |FROM r WHERE rank <= 10""".stripMargin
-    })
+    None, oracleFn = Some((s, dir) => ivfTopkSql(embSql,
+      embCentroids(s, dir, "all", Tables.embeddings(s, dir)), pqResidBooks(s, dir),
+      nProbes = 3, dsub = 8)))
 
   /** sim_pq_topk, sim_ivfpq_topk and sim_ivfpq_residual under their
     * earlier `_wide` names: the same query and oracle, kept so the bench
@@ -2540,44 +1811,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * top-10. Both rankings deterministic ⇒ the recall figures
     * themselves hash-check against DuckDB's re-derivation of both
     * chains. */
-  protected val simGraphRecall = Q("sim_graph_recall",
-    (s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val brute = Similarity.bruteTopK(e, k = 10, stride = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      val g = GraphAnn.graphTopK(embServe(s, dir), graphNswAll(s, dir),
-          k = 10, stride = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = brute.join(g, Seq("query_id", "neighbor_id"))
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_overlap"))
-      brute.groupBy(col("query_id")).agg(count(lit(1)).as("n_brute"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), col("n_brute"),
-          coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-          expr("coalesce(n_overlap, 0) * 10000 div n_brute").as("recall_bp"))
-    },
-    Some(s"""WITH ${GraphAnn.buildSql()},
-      |$graphQueriesCte,
-      |bbs AS (SELECT qy.query_id, nb.vec_id AS neighbor_id,
-      |    ROUND(list_dot_product(qy.qv, nb.v) / (qy.qnrm * nb.nrm), 4) + 0.0 AS cosine
-      |  FROM qy CROSS JOIN nb WHERE nb.vec_id <> qy.query_id),
-      |brute AS (SELECT query_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cosine DESC, neighbor_id) AS rnk FROM bbs)
-      |  WHERE rnk <= 10),
-      |${GraphAnn.beamSql("qy")},
-      |gr AS (SELECT query_id, node AS neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cosine DESC, node) AS rnk
-      |    FROM bb${GraphAnn.Hops} WHERE node <> query_id)
-      |  WHERE rnk <= 10),
-      |hits AS (SELECT b.query_id, count(*) AS n_overlap
-      |  FROM brute b JOIN gr USING (query_id, neighbor_id) GROUP BY 1),
-      |base AS (SELECT query_id, count(*) AS n_brute FROM brute GROUP BY 1)
-      |SELECT base.query_id, CAST(base.n_brute AS BIGINT) AS n_brute,
-      |  CAST(coalesce(hits.n_overlap, 0) AS BIGINT) AS n_overlap,
-      |  CAST(coalesce(hits.n_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS recall_bp
-      |FROM base LEFT JOIN hits USING (query_id)""".stripMargin))
+  protected val simGraphRecall = recallQ("sim_graph_recall", embBrute, simGraphTopk)
 
   /** Incremental graph maintenance: history (vec_id ≢ 0 mod 5) builds
     * and persists its graph ONCE; a new batch attaches by beam-
@@ -2699,28 +1933,6 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       |FROM (SELECT src, count(*) AS degree FROM gf GROUP BY src)
       |GROUP BY 1""".stripMargin))
 
-  /** Per-query ADC LUT CTEs over `qy` + `cb` (the simPqRecall chain) —
-    * shared by the graph-ADC oracles. */
-  private val graphAdcLutCtes =
-    """qs AS (SELECT query_id, CAST(r.range AS INTEGER) AS sub,
-      |    list_slice(qv, r.range * 8 + 1, r.range * 8 + 8) AS xs
-      |  FROM qy CROSS JOIN range(0, 8) r),
-      |lut AS (SELECT query_id, sub, code,
-      |    CAST(ROUND(ROUND(list_dot_product(xs, xs)
-      |      - 2 * list_dot_product(xs, cv) + cc, 6) * 1000000, 0) AS BIGINT) AS d2u
-      |  FROM qs JOIN cb USING (sub))""".stripMargin
-
-  private def graphAdcRerankSelect(poolCte: String): String =
-    s"""SELECT query_id, CAST(rnk AS INTEGER) AS rank, node AS neighbor_id, cosine
-       |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, node) AS rnk
-       |  FROM (SELECT s.query_id, s.node,
-       |      ROUND(list_dot_product(q.qv, nb.v) / (q.qnrm * nb.nrm), 4) + 0.0 AS cosine
-       |    FROM $poolCte s JOIN nb ON nb.vec_id = s.node
-       |      JOIN qy q ON q.query_id = s.query_id
-       |    WHERE s.node <> s.query_id))
-       |WHERE rnk <= 10""".stripMargin
-
   /** Graph routing over STORED PQ CODES + exact re-rank — the DiskANN
     * memory posture composed from three persisted artifacts (navigable
     * graph, wide code table, trained codebooks): the beam scores
@@ -2737,51 +1949,23 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       s"""WITH ${GraphAnn.buildSql()},
         |${pqCtes(pqBooks(s, dir))},
         |$graphQueriesCte,
-        |$graphAdcLutCtes,
+        |${pqLutCtes("qy")},
         |${GraphAnn.beamAdcSql("qy")}
-        |${graphAdcRerankSelect("rq")}""".stripMargin })
+        |SELECT query_id, CAST(rnk AS INTEGER) AS rank, node AS neighbor_id, cosine
+        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+        |    ORDER BY cosine DESC, node) AS rnk
+        |  FROM (SELECT s.query_id, s.node,
+        |      ROUND(list_dot_product(q.qv, nb.v) / (q.qnrm * nb.nrm), 4) + 0.0 AS cosine
+        |    FROM rq s JOIN nb ON nb.vec_id = s.node
+        |      JOIN qy q ON q.query_id = s.query_id
+        |    WHERE s.node <> s.query_id))
+        |WHERE rnk <= 10""".stripMargin })
 
   /** Oracled recall for the ADC-routed serving face (the
     * sim_graph_recall shape): quantized routing + exact re-rank vs
     * exact brute, per query. */
-  protected val simGraphAdcRecall = Q("sim_graph_adc_recall",
-    (s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val brute = Similarity.bruteTopK(e, k = 10, stride = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      val g = GraphAnn.graphAdcTopK(embServe(s, dir), graphNswAll(s, dir),
-          pqCodesAllWide(s, dir), pqBooks(s, dir), k = 10, stride = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = brute.join(g, Seq("query_id", "neighbor_id"))
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_overlap"))
-      brute.groupBy(col("query_id")).agg(count(lit(1)).as("n_brute"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), col("n_brute"),
-          coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-          expr("coalesce(n_overlap, 0) * 10000 div n_brute").as("recall_bp"))
-    },
-    None, oracleFn = Some { (s, dir) =>
-      s"""WITH ${GraphAnn.buildSql()},
-      |${pqCtes(pqBooks(s, dir))},
-      |$graphQueriesCte,
-      |$graphAdcLutCtes,
-      |bbs AS (SELECT qy.query_id, nb.vec_id AS neighbor_id,
-      |    ROUND(list_dot_product(qy.qv, nb.v) / (qy.qnrm * nb.nrm), 4) + 0.0 AS cosine
-      |  FROM qy CROSS JOIN nb WHERE nb.vec_id <> qy.query_id),
-      |brute AS (SELECT query_id, neighbor_id FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cosine DESC, neighbor_id) AS rnk FROM bbs)
-      |  WHERE rnk <= 10),
-      |${GraphAnn.beamAdcSql("qy")},
-      |ga AS (SELECT query_id, neighbor_id FROM (
-      |  ${graphAdcRerankSelect("rq")})),
-      |hits AS (SELECT b.query_id, count(*) AS n_overlap
-      |  FROM brute b JOIN ga USING (query_id, neighbor_id) GROUP BY 1),
-      |base AS (SELECT query_id, count(*) AS n_brute FROM brute GROUP BY 1)
-      |SELECT base.query_id, CAST(base.n_brute AS BIGINT) AS n_brute,
-      |  CAST(coalesce(hits.n_overlap, 0) AS BIGINT) AS n_overlap,
-      |  CAST(coalesce(hits.n_overlap, 0) * 10000 // base.n_brute AS BIGINT) AS recall_bp
-      |FROM base LEFT JOIN hits USING (query_id)""".stripMargin })
+  protected val simGraphAdcRecall = recallQ("sim_graph_adc_recall", embBrute,
+    simGraphAdcTopk)
 
   /** This family's registrar — composed into [[Queries.all]]. */
   protected def simQs: Seq[Q] = Seq(

@@ -524,10 +524,7 @@ object GraphAnn {
       k: Int = K, rounds: Int = Rounds, nPlanes: Int = NPlanes,
       dim: Int = 64, offsets: Seq[Int] = RingOffsets,
       tag: String = ""): String = {
-    val planes = Similarity.lshPlanes(nPlanes, dim)
-    val bucket = planes.zipWithIndex.map { case (p, i) =>
-      s"(CASE WHEN list_dot_product(v, ${p.mkString("[", ", ", "]")}) > 0 THEN ${1 << i} ELSE 0 END)"
-    }.mkString(" + ")
+    val bucket = Similarity.lshBucketSql(nPlanes, dim)
     def score(cand: String): String =
       s"""SELECT c.src, c.dst,
          |    ROUND(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 4) + 0.0 AS cosine

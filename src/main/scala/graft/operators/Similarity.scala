@@ -225,6 +225,36 @@ object Similarity {
     Seq.fill(nPlanes)(Seq.fill(dim)(if (rnd.nextBoolean()) 1.0 else -1.0))
   }
 
+  // DuckDB literal builders: every oracle interpolates the planes,
+  // trained vectors and codebooks through these, so the two engines read
+  // one set of constants.
+
+  /** The sign-pattern bucket of `v` over [[lshPlanes]] as a DuckDB
+    * expression — the SQL twin of [[lshCorpus]]'s bucket. */
+  def lshBucketSql(nPlanes: Int, dim: Int, v: String = "v"): String =
+    lshPlanes(nPlanes, dim).zipWithIndex.map { case (p, i) =>
+      s"(CASE WHEN list_dot_product($v, ${p.mkString("[", ", ", "]")}) > 0 THEN ${1 << i} ELSE 0 END)"
+    }.mkString(" + ")
+
+  /** `[bucket, xor(bucket, 1), …]` — the SQL twin of [[hamming1Probes]]. */
+  def hamming1ProbesSql(nPlanes: Int): String =
+    ("bucket" +: (0 until nPlanes).map(p => s"xor(bucket, ${1 << p})"))
+      .mkString("[", ", ", "]")
+
+  /** `(i, [..]::DOUBLE[])` VALUES rows: centroids or rotation rows,
+    * indexed by position. */
+  def vectorValuesSql(vs: Seq[Array[Double]]): String =
+    vs.zipWithIndex.map { case (v, i) =>
+      s"($i, ${v.mkString("[", ", ", "]")}::DOUBLE[])"
+    }.mkString(",\n  ")
+
+  /** `(sub, code, [..]::DOUBLE[])` VALUES rows of PQ codebooks. */
+  def codebookValuesSql(books: Seq[Seq[Array[Double]]]): String =
+    books.zipWithIndex.flatMap { case (cs, sub) =>
+      cs.zipWithIndex.map { case (c, code) =>
+        s"($sub, $code, ${c.mkString("[", ", ", "]")}::DOUBLE[])" }
+    }.mkString(",\n  ")
+
   /** Corpus with its sign-LSH bucket key: the double-cast vector is staged
     * (bucketOf references it nPlanes times), bucket = sign pattern of the
     * `nPlanes` hyperplane projections.
@@ -914,22 +944,26 @@ object Similarity {
       .where(col("pr") <= nProbes)
       .select(col("query_id"), col("qv"), col("qnrm"), col("cell"))
 
-  /** Shared distance-ASC ranking tail: d2u asc NULLS LAST with
-    * neighbor-id tie-break. [[adcTopK]] guards BOTH join sides per-row
-    * ([[validWideCodes]]/[[validWideLut]]) so a null d2u is impossible
-    * by construction — a `d2u IS NOT NULL` filter here would be WRONG:
-    * Catalyst inlines the alias and pushes the whole `adc_sum_l` into
-    * the join condition, re-evaluating the pair kernel per pair (the
-    * r12 double-dot defect class; PlanShapeSpec pins kernels out of
-    * join conditions). NULLS LAST stays as belt-and-braces ordering
-    * only. */
-  private def rankAscByDist(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2u").asc_nulls_last, col("vec_id"))
+  /** Shared ranking tail of the code tiers: top-k per query over
+    * (query_id, vec_id, `score`), `score` ascending for a distance (d2u,
+    * hamming) or descending for a similarity, NULLS LAST either way,
+    * with neighbor-id tie-break; output (query_id, rank, neighbor_id,
+    * `score`). Every caller guards its join sides per-row
+    * ([[validWideCodes]]/[[validWideLut]], the word-count and dim size
+    * predicates) so a null score is impossible by construction — a
+    * `score IS NOT NULL` filter here would be WRONG: Catalyst inlines
+    * the alias and pushes the whole pair kernel into the join condition,
+    * re-evaluating it per pair (the r12 double-dot defect class;
+    * PlanShapeSpec pins kernels out of join conditions). NULLS LAST
+    * stays as belt-and-braces ordering only. */
+  private def rankByScore(scored: DataFrame, k: Int, score: String = "d2u",
+      ascending: Boolean = true): DataFrame = {
+    val order = if (ascending) col(score).asc_nulls_last else col(score).desc_nulls_last
+    val w = Window.partitionBy(col("query_id")).orderBy(order, col("vec_id"))
     scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"),
-        col("vec_id").as("neighbor_id"), col("d2u"))
+        col("vec_id").as("neighbor_id"), col(score))
   }
 
   /** Per-ROW validity guards for the ADC join sides — the
@@ -1004,7 +1038,7 @@ object Similarity {
     * a cross join against the broadcast LUTs otherwise (flat PQ) —
     * self-exclusion by id (the [[bruteTopK]] convention), ONE
     * `adc_sum_l` per pair (m primitive loads + adds inside whole-stage
-    * codegen; corpus vectors are never read), and [[rankAscByDist]].
+    * codegen; corpus vectors are never read), and [[rankByScore]].
     * `codes` is (vec_id[, cell], codes), `lut` is (query_id[, cell],
     * lut). Output: (query_id, rank, neighbor_id, d2u) with d2u the
     * summed integer micro-L2 — a total order, so hash-exact. */
@@ -1015,7 +1049,7 @@ object Similarity {
     val c = codes.where(validWideCodes(m, ksub))
     val q = broadcast(lut.where(validWideLut(m, ksub)))
     val pairs = if (lut.columns.contains("cell")) c.join(q, "cell") else c.crossJoin(q)
-    rankAscByDist(pairs.where(col("vec_id") =!= col("query_id"))
+    rankByScore(pairs.where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         adcSum(col("codes"), col("lut"), ksub).as("d2u")), k)
   }
@@ -1153,12 +1187,7 @@ object Similarity {
       .where(size(col("qbw")) - size(col("bw")) === 0)
       .select(col("query_id"), col("vec_id"),
         hammingWords(col("qbw"), col("bw")).as("hamming"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc_nulls_last, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"),
-        col("vec_id").as("neighbor_id"), col("hamming"))
+    rankByScore(scored, k, "hamming")
   }
 
   /** Sign-bit codes with the per-row width guard (the scoreAgainst
@@ -1387,12 +1416,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         round(dot(col("qq8d"), col("q8d")) * col("qmax") * col("max_abs") /
           (lit(16129.0) * col("qnrm") * col("nrm")), 6).as("score"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"),
-        col("vec_id").as("neighbor_id"), col("score"))
+    rankByScore(scored, k, "score", ascending = false)
   }
 
   // -------------------------------------------------------------------

@@ -818,7 +818,7 @@ case class HammingL(left: Expression, right: Expression)
   * validWideLut), and rank with nulls-last ordering — NOT with an
   * isNotNull filter on this expression's alias, which Catalyst would
   * push into the join condition, dragging the kernel with it (the r12
-  * double-dot class; see rankAscByDist). */
+  * double-dot class; see Similarity.rankByScore). */
 case class AdcSumL(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
   override def dataType: DataType = LongType

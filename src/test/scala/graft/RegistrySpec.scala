@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Sanity guards on the driver-contract registry itself. */
@@ -44,5 +46,38 @@ class RegistrySpec extends AnyFunSuite {
 
   test("no query has both a static and a derived oracle") {
     assert(Queries.all.forall(q => q.oracle.isEmpty || q.oracleFn.isEmpty))
+  }
+
+  test("the recall arithmetic is written once in src/main") {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val text = try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(Files.readString).mkString("\n") finally walk.close()
+    for (frag <- Seq("10000 div n_brute", "// base.n_brute"))
+      assert(text.split(java.util.regex.Pattern.quote(frag), -1).length - 1 == 1,
+        s"'$frag' must appear once, in the recall builder")
+  }
+
+  test("the recall builder keeps a query its tier misses and orders overlaps before bps") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val brute = Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L), (20L, 5L), (20L, 6L))
+      .toDF("query_id", "neighbor_id")
+    val hitsOne = Seq((0L, 1L), (0L, 9L)).toDF("query_id", "neighbor_id")
+    val hitsAll = brute.withColumn("rank", $"neighbor_id")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(_.asInstanceOf[Long])).toSet
+
+    val single = Queries.overlap(brute, Seq(("n_overlap", "recall_bp", hitsOne)))
+    assert(single.columns.toSeq == Seq("query_id", "n_brute", "n_overlap", "recall_bp"))
+    assert(rows(single) == Set(Seq(0L, 4L, 1L, 2500L), Seq(20L, 2L, 0L, 0L)))
+    val none = Queries.overlap(brute, Seq(("n_overlap", "recall_bp", hitsOne.limit(0))))
+    assert(rows(none) == Set(Seq(0L, 4L, 0L, 0L), Seq(20L, 2L, 0L, 0L)))
+
+    val pair = Queries.overlap(brute,
+      Seq(("raw_overlap", "raw_bp", hitsOne), ("resid_overlap", "resid_bp", hitsAll)))
+    assert(pair.columns.toSeq == Seq("query_id", "n_brute",
+      "raw_overlap", "resid_overlap", "raw_bp", "resid_bp"))
+    assert(rows(pair) == Set(Seq(0L, 4L, 1L, 4L, 2500L, 10000L),
+      Seq(20L, 2L, 0L, 2L, 0L, 10000L)))
   }
 }
