@@ -147,4 +147,16 @@ private[graft] trait QueriesBase {
         parquetArtifact(s, dir, s"centroids_emb_${key}_c10", "embeddings")(
           Similarity.centroidsToDF(s,
             Similarity.kmeansCentroidArrays(frame, nCells = 10)))))
+
+  /** The embeddings table assigned to trained `cents`, as the CTEs
+    * e/n/cn/assigned: `n`(vec_id, label, v, nrm) and `assigned`(vec_id,
+    * v, nrm, cell, cell_cos) over the rows of `n` passing `where`
+    * ([[Similarity.assignCellsSql]]) — the prefix of every trained-IVF
+    * and semantic-dedup oracle over the table. */
+  protected def embAssignedCtes(cents: Seq[Array[Double]],
+      where: String = ""): String =
+    s"""e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+      |n AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
+      |${Similarity.centroidsSql(cents)},
+      |assigned AS (${Similarity.assignCellsSql("n", where)})""".stripMargin
 }

@@ -1529,15 +1529,9 @@ private[graft] trait QueriesCuration extends QueriesRelational {
       Similarity.bruteTopK(vecs, k = 5, stride = 50)
     },
     Some(s"""WITH $docVecCtes,
-      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM vec
-      |  WHERE list_dot_product(v, v) > 0),
-      |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n WHERE vec_id % 50 = 0),
-      |sc AS (SELECT q.query_id, n.vec_id AS neighbor_id,
-      |        ROUND(list_dot_product(q.qv, n.v) / (q.qnrm * n.nrm), 4) AS cosine
-      |      FROM q CROSS JOIN n WHERE n.vec_id != q.query_id),
-      |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM sc)
-      |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-      |FROM r WHERE rank <= 5""".stripMargin))
+      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM vec),
+      |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n WHERE vec_id % 50 = 0)
+      |${Similarity.cosineTopKSql("n", "q", Nil, excludeSelf = true, k = 5)}""".stripMargin))
 
   /** The document-embedding vector table behind the decontamination and
     * topic-clustering pipelines: feature-hash embed at dim 16, cast to
@@ -1587,6 +1581,17 @@ private[graft] trait QueriesCuration extends QueriesRelational {
 
   protected lazy val docVecCtes: String = docVecCtesFor("documents")
 
+  /** [[docVecCtes]] with the nonzero vectors' norms `n` and their
+    * `assigned`(vec_id, v, nrm, cell, cell_cos) to the centroid literals
+    * `cents` ([[Similarity.assignCellsSql]]) — the topic oracles'
+    * prefix. */
+  protected def docAssignedCtes(cents: Seq[Array[Double]]): String =
+    s"""$docVecCtes,
+      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM vec
+      |  WHERE list_dot_product(v, v) > 0),
+      |${Similarity.centroidsSql(cents)},
+      |assigned AS (${Similarity.assignCellsSql("n")})""".stripMargin
+
   /** Semantic decontamination (Similarity.crossTopK over
     * TextAnalysis.embedDocuments): every 10th document plays the held-out
     * benchmark; for each benchmark doc the 3 nearest TRAINING docs by
@@ -1602,15 +1607,10 @@ private[graft] trait QueriesCuration extends QueriesRelational {
         vecs.where(pmod(col("vec_id"), lit(10)) === 0), k = 3)
     },
     Some(s"""WITH $docVecCtes,
-      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM vec
-      |  WHERE list_dot_product(v, v) > 0),
+      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM vec),
       |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n WHERE vec_id % 10 = 0),
-      |sc AS (SELECT q.query_id, n.vec_id AS neighbor_id,
-      |        ROUND(list_dot_product(q.qv, n.v) / (q.qnrm * n.nrm), 4) + 0.0 AS cosine
-      |      FROM q CROSS JOIN n WHERE n.vec_id % 10 <> 0),
-      |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM sc)
-      |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-      |FROM r WHERE rank <= 3""".stripMargin))
+      |corpus AS (SELECT * FROM n WHERE vec_id % 10 <> 0)
+      |${Similarity.cosineTopKSql("corpus", "q", Nil, excludeSelf = false, k = 3)}""".stripMargin))
 
   /** Topic clustering over the document embedder (Similarity.kmeansAssign
     * ∘ TextAnalysis.embedDocuments): train k-means‖ cells on the dim-16
@@ -1636,20 +1636,7 @@ private[graft] trait QueriesCuration extends QueriesRelational {
     },
     None, oracleFn = Some { (s, dir) =>
       val cents = docCentroids(s, dir, nCells = 8)
-      s"""WITH $docVecCtes,
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM vec
-        |  WHERE list_dot_product(v, v) > 0),
-        |c(cell, cv) AS (VALUES
-        |  ${Similarity.vectorValuesSql(cents)}),
-        |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
-        |assigned AS (
-        |  SELECT vec_id, cell, cell_cos FROM (
-        |    SELECT n.vec_id, cn.cell,
-        |      ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) + 0.0 AS cell_cos,
-        |      row_number() OVER (PARTITION BY n.vec_id
-        |        ORDER BY ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
-        |    FROM n CROSS JOIN cn)
-        |  WHERE crn = 1),
+      s"""WITH ${docAssignedCtes(cents)},
         |ranked AS (SELECT *, row_number() OVER (PARTITION BY cell
         |    ORDER BY cell_cos DESC, vec_id) AS rn FROM assigned)
         |SELECT cell, count(*) AS n_docs,
@@ -1673,20 +1660,8 @@ private[graft] trait QueriesCuration extends QueriesRelational {
     },
     None, oracleFn = Some { (s, dir) =>
       val cents = docCentroids(s, dir, nCells = 8)
-      s"""WITH $docVecCtes,
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM vec
-        |  WHERE list_dot_product(v, v) > 0),
-        |c(cell, cv) AS (VALUES
-        |  ${Similarity.vectorValuesSql(cents)}),
-        |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
-        |assigned AS (
-        |  SELECT vec_id AS doc_id, cell FROM (
-        |    SELECT n.vec_id, cn.cell,
-        |      row_number() OVER (PARTITION BY n.vec_id
-        |        ORDER BY ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
-        |    FROM n CROSS JOIN cn)
-        |  WHERE crn = 1),
-        |h AS (SELECT doc_id, cell, md5(CAST(doc_id AS VARCHAR)) AS h FROM assigned),
+      s"""WITH ${docAssignedCtes(cents)},
+        |h AS (SELECT vec_id AS doc_id, cell, md5(CAST(vec_id AS VARCHAR)) AS h FROM assigned),
         |r AS (SELECT *, row_number() OVER (PARTITION BY cell ORDER BY h, doc_id) AS rank FROM h)
         |SELECT cell, CAST(rank AS INTEGER) AS rank, doc_id FROM r WHERE rank <= 10""".stripMargin
     })
@@ -1710,12 +1685,8 @@ private[graft] trait QueriesCuration extends QueriesRelational {
         |  ${Similarity.lshBucketSql(6, 16)} AS bucket FROM vec
         |  WHERE list_dot_product(v, v) > 0),
         |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, bucket FROM n WHERE vec_id % 10 = 0),
-        |sc AS (SELECT q.query_id, n.vec_id AS neighbor_id,
-        |        ROUND(list_dot_product(q.qv, n.v) / (q.qnrm * n.nrm), 4) + 0.0 AS cosine
-        |      FROM q JOIN n USING (bucket) WHERE n.vec_id % 10 <> 0),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM sc)
-        |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-        |FROM r WHERE rank <= 3""".stripMargin
+        |corpus AS (SELECT * FROM n WHERE vec_id % 10 <> 0)
+        |${Similarity.cosineTopKSql("corpus", "q", Seq("bucket"), excludeSelf = false, k = 3)}""".stripMargin
     }, bench = true)
 
   /** Cross-corpus LSH top-k (Similarity.crossTopKLsh) on the embeddings
@@ -1734,12 +1705,8 @@ private[graft] trait QueriesCuration extends QueriesRelational {
         |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
         |  ${Similarity.lshBucketSql(6, 64)} AS bucket FROM e),
         |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, bucket FROM n WHERE vec_id % 5 = 0),
-        |s AS (SELECT q.query_id, n.vec_id AS neighbor_id,
-        |        ROUND(list_dot_product(q.qv, n.v) / (q.qnrm * n.nrm), 4) + 0.0 AS cosine
-        |      FROM q JOIN n USING (bucket) WHERE n.vec_id % 5 <> 0),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM s)
-        |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-        |FROM r WHERE rank <= 10""".stripMargin
+        |corpus AS (SELECT * FROM n WHERE vec_id % 5 <> 0)
+        |${Similarity.cosineTopKSql("corpus", "q", Seq("bucket"), excludeSelf = false, k = 10)}""".stripMargin
     })
 
   /** Multi-probe cross-corpus LSH top-k (Similarity.crossTopKLshMultiProbe
@@ -1762,12 +1729,8 @@ private[graft] trait QueriesCuration extends QueriesRelational {
         |q0 AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, bucket FROM n WHERE vec_id % 5 = 0),
         |q AS (SELECT query_id, qv, qnrm,
         |    unnest(${Similarity.hamming1ProbesSql(6)}) AS bucket FROM q0),
-        |s AS (SELECT q.query_id, n.vec_id AS neighbor_id,
-        |        ROUND(list_dot_product(q.qv, n.v) / (q.qnrm * n.nrm), 4) + 0.0 AS cosine
-        |      FROM q JOIN n USING (bucket) WHERE n.vec_id % 5 <> 0),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM s)
-        |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-        |FROM r WHERE rank <= 10""".stripMargin
+        |corpus AS (SELECT * FROM n WHERE vec_id % 5 <> 0)
+        |${Similarity.cosineTopKSql("corpus", "q", Seq("bucket"), excludeSelf = false, k = 10)}""".stripMargin
     })
 
   /** Cross-corpus IVF top-k against the PERSISTED centroid index
@@ -1789,30 +1752,10 @@ private[graft] trait QueriesCuration extends QueriesRelational {
     None, oracleFn = Some { (s, dir) =>
       val cents = embCentroids(s, dir, "corp5",
         Tables.embeddings(s, dir).where(pmod(col("vec_id"), lit(5)) =!= 0))
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-        |c(cell, cv) AS (VALUES
-        |  ${Similarity.vectorValuesSql(cents)}),
-        |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
-        |assigned AS (
-        |  SELECT vec_id, v, nrm, cell FROM (
-        |    SELECT n.vec_id, n.v, n.nrm, cn.cell,
-        |      row_number() OVER (PARTITION BY n.vec_id
-        |        ORDER BY ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
-        |    FROM n CROSS JOIN cn WHERE n.vec_id % 5 <> 0)
-        |  WHERE crn = 1),
-        |q AS (SELECT query_id, qv, qnrm, cell FROM (
-        |    SELECT n.vec_id AS query_id, n.v AS qv, n.nrm AS qnrm, cn.cell,
-        |      row_number() OVER (PARTITION BY n.vec_id
-        |        ORDER BY ROUND(list_dot_product(n.v, cn.cv) / (n.nrm * cn.cnrm), 6) DESC, cn.cell) AS pr
-        |    FROM n CROSS JOIN cn WHERE n.vec_id % 5 = 0)
-        |  WHERE pr <= 2),
-        |s AS (SELECT q.query_id, a.vec_id AS neighbor_id,
-        |        ROUND(list_dot_product(q.qv, a.v) / (q.qnrm * a.nrm), 4) + 0.0 AS cosine
-        |      FROM q JOIN assigned a ON a.cell = q.cell),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM s)
-        |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-        |FROM r WHERE rank <= 10""".stripMargin
+      s"""WITH ${embAssignedCtes(cents, "n.vec_id % 5 <> 0")},
+        |q0 AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n WHERE vec_id % 5 = 0),
+        |q AS (${Similarity.probeCellsSql("q0", 2)})
+        |${Similarity.cosineTopKSql("assigned", "q", Seq("cell"), excludeSelf = false, k = 10)}""".stripMargin
     })
 
   /** Token-budget mixture (TextAnalysis.tokenBudgetSample): greedy prefix

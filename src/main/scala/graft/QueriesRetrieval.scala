@@ -734,12 +734,7 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
     },
     Some(s"""WITH $bmQuerySql,
       |toks AS (SELECT doc_id, $duckToks AS w FROM documents),
-      |post AS (SELECT term, doc_id, dl, count(*) AS tf FROM (
-      |    SELECT doc_id, CAST(len(w) AS BIGINT) AS dl, unnest(w) AS term FROM toks)
-      |  GROUP BY 1, 2, 3),
-      |tdf AS (SELECT term, count(*) AS df FROM post GROUP BY 1),
-      |stats AS (SELECT count(*) AS n_docs,
-      |    CAST(sum(len(w)) AS BIGINT) AS total_tokens FROM toks),
+      |${Retrieval.bm25IndexSql()},
       |${Retrieval.bm25ScoreCtesSql()},
       |topk AS (SELECT query_id, doc_id, CAST(rnk AS INTEGER) AS rnk
       |  FROM ranked WHERE rnk <= 5),
@@ -772,6 +767,16 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
         concat_ws(" ", slice(col("w"), 1, 3)).as("title"),
         col("text").as("body"))
 
+  /** The fielded index's `post` and `stats` ([[Retrieval.fieldedPostings]],
+    * [[Retrieval.fieldedCorpusStats]]) over `ft`(doc_id, wt, wb) and
+    * `occ`(doc_id, term, w), title tokens at weight 3. */
+  private val fieldedPostStatsSql =
+    """dls AS (SELECT doc_id, CAST(3 * len(wt) + len(wb) AS BIGINT) AS dl FROM ft),
+      |post AS (SELECT term, o.doc_id, d.dl, CAST(sum(o.w) AS BIGINT) AS tf
+      |  FROM occ o JOIN dls d USING (doc_id) GROUP BY 1, 2, 3),
+      |stats AS (SELECT count(*) AS n_docs,
+      |    CAST(sum(3 * len(wt) + len(wb)) AS BIGINT) AS total_tokens FROM ft)""".stripMargin
+
   protected val textBm25Fielded = Q("text_bm25_fielded",
     (s, dir) => {
       import s.implicits._
@@ -790,12 +795,7 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
       |  FROM fields),
       |occ AS (SELECT doc_id, unnest(wt) AS term, 3 AS w FROM ft
       |  UNION ALL SELECT doc_id, unnest(wb) AS term, 1 AS w FROM ft),
-      |dls AS (SELECT doc_id, CAST(3 * len(wt) + len(wb) AS BIGINT) AS dl FROM ft),
-      |post AS (SELECT term, o.doc_id, d.dl, CAST(sum(o.w) AS BIGINT) AS tf
-      |  FROM occ o JOIN dls d USING (doc_id) GROUP BY 1, 2, 3),
-      |tdf AS (SELECT term, count(*) AS df FROM post GROUP BY 1),
-      |stats AS (SELECT count(*) AS n_docs,
-      |    CAST(sum(3 * len(wt) + len(wb)) AS BIGINT) AS total_tokens FROM ft),
+      |${Retrieval.bm25IndexSql(postStats = fieldedPostStatsSql)},
       |${Retrieval.bm25ScoreTailSql(5)}""".stripMargin))
 
   /** BM25F from the PERSISTED fielded index (Retrieval.bm25TopKIndexed
@@ -842,12 +842,7 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
       |  FROM fields),
       |occ AS (SELECT doc_id, unnest(wt) AS term, 3 AS w FROM ft
       |  UNION ALL SELECT doc_id, unnest(wb) AS term, 1 AS w FROM ft),
-      |dls AS (SELECT doc_id, CAST(3 * len(wt) + len(wb) AS BIGINT) AS dl FROM ft),
-      |post AS (SELECT term, o.doc_id, d.dl, CAST(sum(o.w) AS BIGINT) AS tf
-      |  FROM occ o JOIN dls d USING (doc_id) GROUP BY 1, 2, 3),
-      |tdf AS (SELECT term, count(*) AS df FROM post GROUP BY 1),
-      |stats AS (SELECT count(*) AS n_docs,
-      |    CAST(sum(3 * len(wt) + len(wb)) AS BIGINT) AS total_tokens FROM ft),
+      |${Retrieval.bm25IndexSql(postStats = fieldedPostStatsSql)},
       |${Retrieval.bm25ScoreTailSql(5)}""".stripMargin))
 
   /** Mergeable term index (Retrieval.termIndex / mergeTermIndex): the
@@ -967,12 +962,7 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
     },
     Some(s"""WITH $bmQuerySql,
       |toks AS (SELECT doc_id, $duckToks AS w FROM documents),
-      |post AS (SELECT term, doc_id, dl, count(*) AS tf FROM (
-      |    SELECT doc_id, CAST(len(w) AS BIGINT) AS dl, unnest(w) AS term FROM toks)
-      |  GROUP BY 1, 2, 3),
-      |stats AS (SELECT count(*) AS n_docs,
-      |    CAST(sum(len(w)) AS BIGINT) AS total_tokens FROM toks),
-      |tdf AS (SELECT term, count(*) AS df FROM post GROUP BY 1),
+      |${Retrieval.bm25IndexSql()},
       |${Retrieval.bm25ScoreCtesSql()},
       |topf AS (SELECT query_id, doc_id FROM ranked WHERE rnk <= 5),
       |fbtf AS (SELECT r.query_id, p.term, CAST(sum(p.tf) AS BIGINT) AS tfs
@@ -1008,12 +998,7 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
     },
     Some(s"""WITH $bmQuerySql,
       |toks AS (SELECT doc_id, $duckToks AS w FROM documents),
-      |post AS (SELECT term, doc_id, dl, count(*) AS tf FROM (
-      |    SELECT doc_id, CAST(len(w) AS BIGINT) AS dl, unnest(w) AS term FROM toks)
-      |  GROUP BY 1, 2, 3),
-      |stats AS (SELECT count(*) AS n_docs,
-      |    CAST(sum(len(w)) AS BIGINT) AS total_tokens FROM toks),
-      |tdf AS (SELECT term, count(*) AS df FROM post GROUP BY 1),
+      |${Retrieval.bm25IndexSql()},
       |${Retrieval.bm25ScoreCtesSql()},
       |topk AS (SELECT query_id, doc_id, CAST(rnk AS INTEGER) AS rnk
       |  FROM ranked WHERE rnk <= 10),
@@ -1120,9 +1105,10 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
     * interpolated plane literals, the query side unnests its own plus
     * every Hamming-1 probe bucket (xor with each plane bit), and the
     * cross join becomes `JOIN … USING (bucket)`. `ivfCents` mirrors the
-    * trained-centroid dense leg instead: centroid VALUES literals,
-    * round-6 argmax assignment + probe ranking (the sim_cross_ivf_topk
-    * oracle shapes), and the dense join becomes `USING (cell)`. */
+    * trained-centroid dense leg instead: centroid literals,
+    * [[Similarity.assignCellsSql]] and [[Similarity.probeCellsSql]],
+    * and the dense join becomes `USING (cell)`. The dense top-10 is
+    * [[Similarity.cosineTopKSql]]. */
   protected def hybridCtesFor(src: String, lsh: Boolean = false,
       nPlanes: Int = 6,
       ivfCents: Option[Seq[Array[Double]]] = None): String = {
@@ -1132,35 +1118,18 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
     val qbucket = bucketExpr("qv")
     val probes = Similarity.hamming1ProbesSql(nPlanes)
     val ivfCtes = ivfCents.fold("") { cs =>
-      s"""c(cell, cv) AS (VALUES
-        |  ${Similarity.vectorValuesSql(cs)}),
-        |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
-        |asg AS (SELECT vec_id, v, nrm, cell FROM (
-        |    SELECT n.vec_id, n.v, n.nrm, cn.cell,
-        |      row_number() OVER (PARTITION BY n.vec_id
-        |        ORDER BY ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
-        |    FROM n CROSS JOIN cn)
-        |  WHERE crn = 1),
-        |qp AS (SELECT query_id, qv, qnrm, cell FROM (
-        |    SELECT qn.query_id, qn.qv, qn.qnrm, cn.cell,
-        |      row_number() OVER (PARTITION BY qn.query_id
-        |        ORDER BY ROUND(list_dot_product(qn.qv, cn.cv) / (qn.qnrm * cn.cnrm), 6) DESC, cn.cell) AS pr
-        |    FROM qn CROSS JOIN cn)
-        |  WHERE pr <= 2),
+      s"""${Similarity.centroidsSql(cs)},
+        |asg AS (${Similarity.assignCellsSql("n")}),
+        |qp AS (${Similarity.probeCellsSql("qn", 2)}),
         |""".stripMargin
     }
-    val denseJoin =
-      if (ivfCents.isDefined) "FROM qp qn JOIN asg n USING (cell)"
-      else if (lsh) s"""FROM (SELECT query_id, qv, qnrm,
-        |      unnest($probes) AS bucket FROM qn) qn JOIN n USING (bucket)""".stripMargin
-      else "FROM qn CROSS JOIN n"
+    val (corpus, queries, keys) =
+      if (ivfCents.isDefined) ("asg", "qp", Seq("cell"))
+      else if (lsh) ("n",
+        s"(SELECT query_id, qv, qnrm, unnest($probes) AS bucket FROM qn)", Seq("bucket"))
+      else ("n", "qn", Nil)
     s"""${docVecCtesFor(src)},
-      |post AS (SELECT term, doc_id, dl, count(*) AS tf FROM (
-      |    SELECT doc_id, CAST(len(w) AS BIGINT) AS dl, unnest(w) AS term FROM toks)
-      |  GROUP BY 1, 2, 3),
-      |stats AS (SELECT count(*) AS n_docs,
-      |    CAST(sum(len(w)) AS BIGINT) AS total_tokens FROM toks),
-      |tdf AS (SELECT term, count(*) AS df FROM post GROUP BY 1),
+      |${Retrieval.bm25IndexSql()},
       |${Retrieval.bm25ScoreCtesSql()},
       |sp AS (SELECT query_id, doc_id, CAST(rnk AS INTEGER) AS rnk
       |  FROM ranked WHERE rnk <= 10),
@@ -1179,13 +1148,8 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
       |  GROUP BY g.query_id),
       |qn AS (SELECT query_id, qv, sqrt(list_dot_product(qv, qv)) AS qnrm$qbucket
       |  FROM qvec WHERE list_dot_product(qv, qv) > 0),
-      |${ivfCtes}dsc AS (SELECT qn.query_id, n.vec_id AS doc_id,
-      |    ROUND(list_dot_product(qn.qv, n.v) / (qn.qnrm * n.nrm), 4) + 0.0 AS cosine
-      |  $denseJoin),
-      |dn AS (SELECT query_id, doc_id,
-      |    CAST(row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cosine DESC, doc_id) AS INTEGER) AS rnk FROM dsc),
-      |dtier AS (SELECT query_id, doc_id, rnk FROM dn WHERE rnk <= 10),
+      |${ivfCtes}dtier AS (SELECT query_id, neighbor_id AS doc_id, rank AS rnk FROM (
+      |${Similarity.cosineTopKSql(corpus, queries, keys, excludeSelf = false, k = 10)})),
       |u AS (SELECT query_id, doc_id, 10000 // (60 + rnk) AS c FROM sp
       |  UNION ALL SELECT query_id, doc_id, 10000 // (60 + rnk) FROM dtier),
       |f AS (SELECT query_id, doc_id, CAST(sum(c) AS BIGINT) AS rrf_score,
@@ -1260,12 +1224,7 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
     },
     Some(s"""WITH $bmQuerySql,
       |${docVecCtesFor("documents")},
-      |post AS (SELECT term, doc_id, dl, count(*) AS tf FROM (
-      |    SELECT doc_id, CAST(len(w) AS BIGINT) AS dl, unnest(w) AS term FROM toks)
-      |  GROUP BY 1, 2, 3),
-      |stats AS (SELECT count(*) AS n_docs,
-      |    CAST(sum(len(w)) AS BIGINT) AS total_tokens FROM toks),
-      |tdf AS (SELECT term, count(*) AS df FROM post GROUP BY 1),
+      |${Retrieval.bm25IndexSql()},
       |${Retrieval.bm25ScoreCtesSql()},
       |cnd0 AS (SELECT query_id, doc_id, rnk FROM ranked WHERE rnk <= 20),
       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM vec
@@ -1432,6 +1391,20 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
     split(col("doc_id"), ":").getItem(0).cast("bigint").as("doc_id"),
     split(col("doc_id"), ":").getItem(1).cast("int").as("chunk_idx"))
 
+  /** SQL twin of [[ragChunkDocs]]: [[chunkDocsCtes]], then the chunk
+    * corpus `cd`(doc_id, text) under the composite `doc_id:chunk_idx`
+    * key. */
+  protected def ragChunkDocsSql: String =
+    s"""$chunkDocsCtes,
+      |cd AS (SELECT CAST(doc_id AS VARCHAR) || ':' || CAST(chunk_idx AS VARCHAR)
+      |  AS doc_id, chunk_text AS text FROM chunks)""".stripMargin
+
+  /** SQL twin of [[ragUnpack]]: the composite chunk key `key` as the
+    * output columns (doc_id, chunk_idx). */
+  protected def ragUnpackSql(key: String = "doc_id"): String =
+    s"""CAST(string_split($key, ':')[1] AS BIGINT) AS doc_id,
+      |  CAST(string_split($key, ':')[2] AS INTEGER) AS chunk_idx""".stripMargin
+
   protected val pipelineRagRetrieval = Q("pipeline_rag_retrieval",
     (s, dir) => {
       val cdocs = ragChunkDocs(s, dir)
@@ -1440,13 +1413,9 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
           col("rrf_score"), col("n_tiers"), col("rnk")): _*)
     },
     Some(s"""WITH RECURSIVE $bmQuerySql,
-      |$chunkDocsCtes,
-      |cd AS (SELECT CAST(doc_id AS VARCHAR) || ':' || CAST(chunk_idx AS VARCHAR)
-      |  AS doc_id, chunk_text AS text FROM chunks),
+      |$ragChunkDocsSql,
       |${hybridCtesFor("cd")}
-      |SELECT query_id,
-      |  CAST(string_split(doc_id, ':')[1] AS BIGINT) AS doc_id,
-      |  CAST(string_split(doc_id, ':')[2] AS INTEGER) AS chunk_idx,
+      |SELECT query_id, ${ragUnpackSql()},
       |  rrf_score, CAST(n_tiers AS BIGINT) AS n_tiers,
       |  CAST(rnk2 AS INTEGER) AS rnk
       |FROM rr WHERE rnk2 <= 5""".stripMargin), bench = true)
@@ -1465,13 +1434,9 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
           col("rrf_score"), col("n_tiers"), col("rnk")): _*)
     },
     Some(s"""WITH RECURSIVE $bmQuerySql,
-      |$chunkDocsCtes,
-      |cd AS (SELECT CAST(doc_id AS VARCHAR) || ':' || CAST(chunk_idx AS VARCHAR)
-      |  AS doc_id, chunk_text AS text FROM chunks),
+      |$ragChunkDocsSql,
       |${hybridCtesFor("cd", lsh = true)}
-      |SELECT query_id,
-      |  CAST(string_split(doc_id, ':')[1] AS BIGINT) AS doc_id,
-      |  CAST(string_split(doc_id, ':')[2] AS INTEGER) AS chunk_idx,
+      |SELECT query_id, ${ragUnpackSql()},
       |  rrf_score, CAST(n_tiers AS BIGINT) AS n_tiers,
       |  CAST(rnk2 AS INTEGER) AS rnk
       |FROM rr WHERE rnk2 <= 5""".stripMargin))
@@ -1650,23 +1615,17 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
       Retrieval.mmrDiversify(fused,
         docVecsFrom(cdocs).select(col("vec_id").as("doc_id"), col("embedding")),
         k = 5)
-        .select(col("query_id"), col("rank"),
-          split(col("doc_id"), ":").getItem(0).cast("bigint").as("doc_id"),
-          split(col("doc_id"), ":").getItem(1).cast("int").as("chunk_idx"))
+        .select((Seq(col("query_id"), col("rank")) ++ ragUnpack): _*)
     },
     Some(s"""WITH RECURSIVE $bmQuerySql,
-      |$chunkDocsCtes,
-      |cd AS (SELECT CAST(doc_id AS VARCHAR) || ':' || CAST(chunk_idx AS VARCHAR)
-      |  AS doc_id, chunk_text AS text FROM chunks),
+      |$ragChunkDocsSql,
       |${hybridCtesFor("cd")},
       |cnd0 AS (SELECT query_id, doc_id, rnk2 AS rnk FROM rr WHERE rnk2 <= 20),
       |cand AS MATERIALIZED (SELECT c.query_id, c.doc_id,
       |    CAST((21 - c.rnk) * 500 AS BIGINT) AS rel_bp, n.v, n.nrm
       |  FROM cnd0 c JOIN n ON n.vec_id = c.doc_id),
       |${Retrieval.mmrSql(5)}
-      |SELECT query_id, rank,
-      |  CAST(string_split(doc_id, ':')[1] AS BIGINT) AS doc_id,
-      |  CAST(string_split(doc_id, ':')[2] AS INTEGER) AS chunk_idx
+      |SELECT query_id, rank, ${ragUnpackSql()}
       |FROM mmr_out""".stripMargin))
 
   /** pipeline_rag_retrieval's TRAINED-index twin — the RAG capstone with
@@ -1685,13 +1644,9 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
     },
     None, oracleFn = Some { (s, dir) =>
       s"""WITH RECURSIVE $bmQuerySql,
-        |$chunkDocsCtes,
-        |cd AS (SELECT CAST(doc_id AS VARCHAR) || ':' || CAST(chunk_idx AS VARCHAR)
-        |  AS doc_id, chunk_text AS text FROM chunks),
+        |$ragChunkDocsSql,
         |${hybridCtesFor("cd", ivfCents = Some(ragChunkCentroids(s, dir)))}
-        |SELECT query_id,
-        |  CAST(string_split(doc_id, ':')[1] AS BIGINT) AS doc_id,
-        |  CAST(string_split(doc_id, ':')[2] AS INTEGER) AS chunk_idx,
+        |SELECT query_id, ${ragUnpackSql()},
         |  rrf_score, CAST(n_tiers AS BIGINT) AS n_tiers,
         |  CAST(rnk2 AS INTEGER) AS rnk
         |FROM rr WHERE rnk2 <= 5""".stripMargin
@@ -1714,13 +1669,9 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
           col("rnk"), col("context")): _*)
     },
     Some(s"""WITH RECURSIVE $bmQuerySql,
-      |$chunkDocsCtes,
-      |cd AS (SELECT CAST(doc_id AS VARCHAR) || ':' || CAST(chunk_idx AS VARCHAR)
-      |  AS doc_id, chunk_text AS text FROM chunks),
+      |$ragChunkDocsSql,
       |${hybridCtesFor("cd", lsh = true)}
-      |SELECT rr.query_id,
-      |  CAST(string_split(rr.doc_id, ':')[1] AS BIGINT) AS doc_id,
-      |  CAST(string_split(rr.doc_id, ':')[2] AS INTEGER) AS chunk_idx,
+      |SELECT rr.query_id, ${ragUnpackSql("rr.doc_id")},
       |  CAST(rr.rnk2 AS INTEGER) AS rnk, cd.text AS context
       |FROM rr JOIN cd ON cd.doc_id = rr.doc_id WHERE rr.rnk2 <= 5""".stripMargin))
 
@@ -1741,9 +1692,7 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
       Retrieval.evalRanking(fused, leading8Qrels(cdocs, q), k = 5)
     },
     Some(s"""WITH RECURSIVE $bmQuerySql,
-      |$chunkDocsCtes,
-      |cd AS (SELECT CAST(doc_id AS VARCHAR) || ':' || CAST(chunk_idx AS VARCHAR)
-      |  AS doc_id, chunk_text AS text FROM chunks),
+      |$ragChunkDocsSql,
       |${hybridCtesFor("cd")},
       |topk AS (SELECT query_id, doc_id, CAST(rnk2 AS INTEGER) AS rnk
       |  FROM rr WHERE rnk2 <= 5),
@@ -1779,12 +1728,7 @@ private[graft] trait QueriesRetrieval extends QueriesCuration {
     * rank (`neg`) — the CTE chain under both training-data ops. */
   protected def hardNegCtesSql: String =
     s"""toks AS (SELECT doc_id, $duckToks AS w FROM documents),
-      |post AS (SELECT term, doc_id, dl, count(*) AS tf FROM (
-      |    SELECT doc_id, CAST(len(w) AS BIGINT) AS dl, unnest(w) AS term FROM toks)
-      |  GROUP BY 1, 2, 3),
-      |stats AS (SELECT count(*) AS n_docs,
-      |    CAST(sum(len(w)) AS BIGINT) AS total_tokens FROM toks),
-      |tdf AS (SELECT term, count(*) AS df FROM post GROUP BY 1),
+      |${Retrieval.bm25IndexSql()},
       |${Retrieval.bm25ScoreCtesSql()},
       |topk AS (SELECT query_id, doc_id, CAST(rnk AS INTEGER) AS rnk
       |  FROM ranked WHERE rnk <= 10),

@@ -15,17 +15,14 @@ import org.apache.spark.sql.functions._
   * (SURVEY §2.14). */
 private[graft] trait QueriesSim extends QueriesRetrieval {
 
+  /** The embeddings table as a DuckDB relation (vec_id, v). */
+  protected val embSql = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
+
+  /** Exact brute-force top-10 — also the reference of every recall row
+    * over the table. */
   protected val simBruteTopk = Q("sim_brute_topk",
     (s, dir) => Similarity.bruteTopK(Tables.embeddings(s, dir), k = 10, stride = 20),
-    Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-      |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n WHERE vec_id % 20 = 0),
-      |s AS (SELECT q.query_id, n.vec_id AS neighbor_id,
-      |        ROUND(list_dot_product(q.qv, n.v) / (q.qnrm * n.nrm), 4) AS cosine
-      |      FROM q CROSS JOIN n WHERE n.vec_id != q.query_id),
-      |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM s)
-      |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-      |FROM r WHERE rank <= 10""".stripMargin), bench = true)
+    Some(bruteRefSql(embSql)), bench = true)
 
   /** Same contract as sim_brute_topk, computed with the bounded-heap
     * aggregate instead of a rank window (the 100 TB shape: ≤k rows per
@@ -114,25 +111,14 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     recallRow(name, reference, Seq(a, b).map { case (t, q) =>
       (s"${t}_overlap", s"${t}_bp", q) })
 
-  /** The exact reference of every recall row: brute-force cosine top-10
-    * of the queries (vec_id ≡ 0 mod 20) over `srcSql` (vec_id, v), with
-    * zero-norm vectors dropped as [[Similarity.bruteTopK]] drops them. */
+  /** The exact reference of every recall row: [[Similarity.bruteTopK]]'s
+    * cosine top-10 of the queries (vec_id ≡ 0 mod 20) over `srcSql`
+    * (vec_id, v). */
   protected def bruteRefSql(srcSql: String): String =
     s"""WITH src AS ($srcSql),
-       |nn AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM src
-       |  WHERE list_dot_product(v, v) > 0),
-       |qn AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM nn
-       |  WHERE vec_id % 20 = 0),
-       |bs AS (SELECT qn.query_id, nn.vec_id AS neighbor_id,
-       |    ROUND(list_dot_product(qn.qv, nn.v) / (qn.qnrm * nn.nrm), 4) + 0.0 AS cosine
-       |  FROM qn CROSS JOIN nn WHERE nn.vec_id <> qn.query_id)
-       |SELECT query_id, neighbor_id FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id) AS rank FROM bs)
-       |  WHERE rank <= 10""".stripMargin
-
-  /** The embeddings table as a DuckDB relation (vec_id, v). */
-  protected val embSql = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
+       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM src),
+       |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n WHERE vec_id % 20 = 0)
+       |${Similarity.cosineTopKSql("n", "q", Nil, excludeSelf = true, k = 10)}""".stripMargin
 
   /** [[Similarity.synthesizeClustered]] as a DuckDB relation (vec_id, v). */
   protected val clusteredFixSql =
@@ -160,8 +146,6 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
        |  FROM range(0, 560) r)
        |${rotatedSql("lat", Similarity.hadamard16)}""".stripMargin
 
-  private val embBrute = Q("brute_embeddings", simBruteTopk.fn,
-    Some(bruteRefSql(embSql)))
   private val clusteredBrute = Q("brute_clustered",
     (s, _) => Similarity.bruteTopK(Similarity.synthesizeClustered(s),
       k = 10, stride = 20),
@@ -172,26 +156,16 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
 
   protected val simIvfTopk = Q("sim_ivf_topk",
     (s, dir) => Similarity.ivfTopK(Tables.embeddings(s, dir), k = 10, stride = 20),
-    Some("""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+    Some(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
       |n AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-      |reps AS (
+      |cn AS (
       |  SELECT label AS cell, v AS cv, nrm AS cnrm FROM (
       |    SELECT *, row_number() OVER (PARTITION BY label ORDER BY vec_id) AS rn FROM n)
       |  WHERE rn = 1),
-      |assigned AS (
-      |  SELECT vec_id, v, nrm, cell FROM (
-      |    SELECT n.vec_id, n.v, n.nrm, reps.cell,
-      |      row_number() OVER (PARTITION BY n.vec_id
-      |        ORDER BY ROUND(list_dot_product(reps.cv, n.v) / (reps.cnrm * n.nrm), 6) DESC, reps.cell) AS crn
-      |    FROM n CROSS JOIN reps)
-      |  WHERE crn = 1),
-      |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, cell FROM assigned WHERE vec_id % 20 = 0),
-      |s AS (SELECT q.query_id, a.vec_id AS neighbor_id,
-      |        ROUND(list_dot_product(q.qv, a.v) / (q.qnrm * a.nrm), 4) AS cosine
-      |      FROM q JOIN assigned a ON a.cell = q.cell WHERE a.vec_id != q.query_id),
-      |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM s)
-      |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-      |FROM r WHERE rank <= 10""".stripMargin), bench = true)
+      |assigned AS (${Similarity.assignCellsSql("n")}),
+      |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, cell FROM assigned WHERE vec_id % 20 = 0)
+      |${Similarity.cosineTopKSql("assigned", "q", Seq("cell"), excludeSelf = true, k = 10)}""".stripMargin),
+    bench = true)
 
   /** DuckDB oracle for the trained-IVF paths: training is bit-deterministic
     * (candidates sorted, Lloyd means rounded to 6 dp — see
@@ -208,31 +182,10 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
         "q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, cell FROM assigned WHERE vec_id % 20 = 0)"
       else
         s"""q0 AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM assigned WHERE vec_id % 20 = 0),
-           |q AS (SELECT query_id, qv, qnrm, cell FROM (
-           |    SELECT q0.query_id, q0.qv, q0.qnrm, cn.cell,
-           |      row_number() OVER (PARTITION BY q0.query_id
-           |        ORDER BY ROUND(list_dot_product(q0.qv, cn.cv) / (q0.qnrm * cn.cnrm), 6) DESC, cn.cell) AS pr
-           |    FROM q0 CROSS JOIN cn)
-           |  WHERE pr <= $nProbes)""".stripMargin
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-       |c(cell, cv) AS (VALUES
-       |  ${Similarity.vectorValuesSql(cents)}),
-       |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
-       |assigned AS (
-       |  SELECT vec_id, v, nrm, cell FROM (
-       |    SELECT n.vec_id, n.v, n.nrm, cn.cell,
-       |      row_number() OVER (PARTITION BY n.vec_id
-       |        ORDER BY ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
-       |    FROM n CROSS JOIN cn)
-       |  WHERE crn = 1),
-       |$qCte,
-       |s AS (SELECT q.query_id, a.vec_id AS neighbor_id,
-       |        ROUND(list_dot_product(q.qv, a.v) / (q.qnrm * a.nrm), 4) AS cosine
-       |      FROM q JOIN assigned a ON a.cell = q.cell WHERE a.vec_id != q.query_id),
-       |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM s)
-       |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-       |FROM r WHERE rank <= 10""".stripMargin
+           |q AS (${Similarity.probeCellsSql("q0", nProbes)})""".stripMargin
+    s"""WITH ${embAssignedCtes(cents)},
+       |$qCte
+       |${Similarity.cosineTopKSql("assigned", "q", Seq("cell"), excludeSelf = true, k = 10)}""".stripMargin
   }
 
   /** IVF over TRAINED k-means‖ cells (Similarity.ivfTopKKmeans) — the
@@ -254,32 +207,6 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       k = 10, stride = 20, nCells = 10, nProbes = 3),
     None, oracleFn = Some((s, dir) => ivfTrainedOracle(s, dir, nProbes = 3)))
 
-  /** SemDeDup semantic dedup (Similarity.semanticDedup — Abbas et al.
-    * 2023): k-means cells scope the pairwise-cosine pass (never corpus
-    * all-pairs), and within a cell every vector with a higher-priority
-    * near-twin (round-4 cosine ≥ 0.2) is dropped — priority is the
-    * paper's keep-farthest-from-centroid rule, vec_id on ties. Training
-    * is bit-deterministic, so the oracle derives at verify time with the
-    * trained centroids as literals (the sim_ivf_kmeans pattern) and
-    * independently re-assigns, re-pairs and re-judges dominance. */
-  /** The centroid-literal assignment CTEs shared by the semantic-dedup
-    * oracles: e/n/c/cn/assigned over the embeddings table, `assigned`
-    * carrying (vec_id, v, nrm, cell, cell_cos). */
-  protected def semAssignedCtes(cents: Seq[Array[Double]]): String =
-    s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-      |c(cell, cv) AS (VALUES
-      |  ${Similarity.vectorValuesSql(cents)}),
-      |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
-      |assigned AS (
-      |  SELECT vec_id, v, nrm, cell, cell_cos FROM (
-      |    SELECT n.vec_id, n.v, n.nrm, cn.cell,
-      |      ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) + 0.0 AS cell_cos,
-      |      row_number() OVER (PARTITION BY n.vec_id
-      |        ORDER BY ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
-      |    FROM n CROSS JOIN cn)
-      |  WHERE crn = 1)""".stripMargin
-
   /** Dominated-vec_id subquery body over relation `rel` (the SemDeDup
     * drop rule: a same-cell near-twin farther from the centroid, vec_id
     * tie-break). */
@@ -291,15 +218,21 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       |    AND (y.cell_cos < x.cell_cos
       |      OR (y.cell_cos = x.cell_cos AND y.vec_id < x.vec_id))""".stripMargin
 
-
-
+  /** SemDeDup semantic dedup (Similarity.semanticDedup — Abbas et al.
+    * 2023): k-means cells scope the pairwise-cosine pass (never corpus
+    * all-pairs), and within a cell every vector with a higher-priority
+    * near-twin (round-4 cosine ≥ 0.2) is dropped — priority is the
+    * paper's keep-farthest-from-centroid rule, vec_id on ties. Training
+    * is bit-deterministic, so the oracle derives at verify time with the
+    * trained centroids as literals (the sim_ivf_kmeans pattern) and
+    * independently re-assigns, re-pairs and re-judges dominance. */
   protected val dedupSemantic = Q("dedup_semantic",
     (s, dir) => Similarity.semanticDedupWith(Tables.embeddings(s, dir),
       embCentroids(s, dir, "all", Tables.embeddings(s, dir)),
       minCosine = 0.2),
     None, oracleFn = Some { (s, dir) =>
       val cents = embCentroids(s, dir, "all", Tables.embeddings(s, dir))
-      s"""WITH ${semAssignedCtes(cents)},
+      s"""WITH ${embAssignedCtes(cents)},
         |dropped AS (${semDominatedSql("assigned")})
         |SELECT a.vec_id, a.cell, a.cell_cos,
         |  CAST(d.vec_id IS NULL AS INTEGER) AS is_survivor
@@ -327,7 +260,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     None, oracleFn = Some { (s, dir) =>
       val cents = embCentroids(s, dir, "hist7",
         Tables.embeddings(s, dir).where(pmod(col("vec_id"), lit(7)) === 0))
-      s"""WITH ${semAssignedCtes(cents)},
+      s"""WITH ${embAssignedCtes(cents)},
         |hist AS (SELECT * FROM assigned WHERE vec_id % 7 = 0),
         |hdrop AS (${semDominatedSql("hist")}),
         |hsurv AS (SELECT h.* FROM hist h LEFT JOIN hdrop d
@@ -365,21 +298,10 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     val cents = Similarity.kmeansCentroidArrays(
       Tables.embeddings(spark, dir).where(pmod(col("vec_id"), lit(10)) =!= 0),
       nCells = 10)
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-       |c(cell, cv) AS (VALUES
-       |  ${Similarity.vectorValuesSql(cents)}),
-       |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
-       |assigned AS (
-       |  SELECT vec_id, cell, cell_cos,
+    s"""WITH ${embAssignedCtes(cents)},
+       |incr AS (SELECT vec_id, cell, cell_cos,
        |    CASE WHEN vec_id % 10 = 0 THEN 'batch' ELSE 'history' END AS origin
-       |  FROM (
-       |    SELECT n.vec_id, cn.cell,
-       |      ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) + 0.0 AS cell_cos,
-       |      row_number() OVER (PARTITION BY n.vec_id
-       |        ORDER BY ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
-       |    FROM n CROSS JOIN cn)
-       |  WHERE crn = 1)""".stripMargin
+       |  FROM assigned)""".stripMargin
   }
 
   /** Incremental IVF maintenance (Similarity.ivfAssignBatch): the appended
@@ -391,7 +313,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     (s, dir) => ivfIncrAssignments(s, dir),
     None, oracleFn = Some { (s, dir) =>
       s"""${ivfIncrAssignedCtes(s, dir)}
-         |SELECT vec_id, cell, cell_cos, origin FROM assigned""".stripMargin
+         |SELECT vec_id, cell, cell_cos, origin FROM incr""".stripMargin
     })
   // (not bench-flagged: the registered form re-trains k-means per call for
   // oracle determinism, so its wall is training-dominated — redundant with
@@ -408,7 +330,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
          |shares AS (
          |  SELECT origin, (sum(CASE WHEN cell_cos < 0.7 THEN 1 ELSE 0 END) * 10000)
          |      // count(*) AS weak_bp
-         |  FROM assigned GROUP BY origin)
+         |  FROM incr GROUP BY origin)
          |SELECT
          |  CAST(max(CASE WHEN origin = 'history' THEN weak_bp END) AS BIGINT) AS hist_weak_bp,
          |  CAST(max(CASE WHEN origin = 'batch' THEN weak_bp END) AS BIGINT) AS batch_weak_bp,
@@ -426,13 +348,8 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
         |  ${Similarity.lshBucketSql(6, 64)} AS bucket FROM e),
-        |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, bucket FROM n WHERE vec_id % 20 = 0),
-        |s AS (SELECT q.query_id, n.vec_id AS neighbor_id,
-        |        ROUND(list_dot_product(q.qv, n.v) / (q.qnrm * n.nrm), 4) AS cosine
-        |      FROM q JOIN n USING (bucket) WHERE n.vec_id != q.query_id),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM s)
-        |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-        |FROM r WHERE rank <= 10""".stripMargin),
+        |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, bucket FROM n WHERE vec_id % 20 = 0)
+        |${Similarity.cosineTopKSql("n", "q", Seq("bucket"), excludeSelf = true, k = 10)}""".stripMargin),
     bench = true)
 
   /** Multi-probe LSH (own bucket + every Hamming-1 bucket per query) —
@@ -448,13 +365,8 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
         |  ${Similarity.lshBucketSql(6, 64)} AS bucket FROM e),
         |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm, bucket FROM n WHERE vec_id % 20 = 0),
         |probes AS (SELECT query_id, qv, qnrm,
-        |    unnest(${Similarity.hamming1ProbesSql(6)}) AS bucket FROM q),
-        |s AS (SELECT p.query_id, n.vec_id AS neighbor_id,
-        |        ROUND(list_dot_product(p.qv, n.v) / (p.qnrm * n.nrm), 4) AS cosine
-        |      FROM probes p JOIN n USING (bucket) WHERE n.vec_id != p.query_id),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM s)
-        |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-        |FROM r WHERE rank <= 10""".stripMargin))
+        |    unnest(${Similarity.hamming1ProbesSql(6)}) AS bucket FROM q)
+        |${Similarity.cosineTopKSql("n", "probes", Seq("bucket"), excludeSelf = true, k = 10)}""".stripMargin))
 
   /** Embedding int8 quantization stats: per-vector scale + checksum of the
     * quantized values. Quantization uses `floor(x·127/max + 0.5)` — the
@@ -544,11 +456,6 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     s"""cb AS (SELECT sub, code, cv, list_dot_product(cv, cv) AS cc FROM (VALUES
        |  ${Similarity.codebookValuesSql(books)}) b(sub, code, cv))""".stripMargin
 
-  /** Centroid relation `cn`(cell, w, cnrm) from the literals. */
-  protected def centsCte(cents: Seq[Array[Double]]): String =
-    s"""cn AS (SELECT cell, w, sqrt(list_dot_product(w, w)) AS cnrm FROM (VALUES
-       |  ${Similarity.vectorValuesSql(cents)}) c(cell, w))""".stripMargin
-
   /** Exact per-query ADC LUT over [[pqCtes]]' `cb`: `qs` slices the raw
     * query vectors `qv` of `qRel`(query_id, qv) into the 8 subspaces,
     * `lut`(query_id, sub, code, d2u) holds the round-6 micro-L2 to every
@@ -573,6 +480,15 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
        |  WHERE enc.vec_id <> l.query_id
        |  GROUP BY 1, 2)""".stripMargin
 
+  /** The SQL of [[Similarity.exactRerank]]: the exact cosine top-10 of
+    * the queries `q`(query_id, qv) over the vectors of `e` in their
+    * shortlist `sl`(query_id, vec_id). */
+  private def rerankSql: String =
+    s"""n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
+       |qn AS (SELECT query_id, qv, sqrt(list_dot_product(qv, qv)) AS qnrm FROM q),
+       |cand AS (SELECT sl.query_id, n.vec_id, n.v, n.nrm FROM sl JOIN n USING (vec_id))
+       |${Similarity.cosineTopKSql("cand", "qn", Seq("query_id"), excludeSelf = false, k = 10)}""".stripMargin
+
   /** The ADC ranking tail over `sc`: top-10 per query by (d2u, vec_id)
     * as (query_id, rank, neighbor_id, d2u). */
   private val adcRankSql =
@@ -592,31 +508,25 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
        |$adcRankSql""".stripMargin
 
   /** IVF ADC over a source relation `src`(vec_id, v) with the codebooks
-    * `cb`(sub, code, cv, cc) and centroids `cn`(cell, w, cnrm) in scope —
-    * the oracle fragment for every IVF-PQ layout: assignment (round-6
-    * cosine desc, min-cell tie-break), with `residual` the whole-vector
+    * `cb`(sub, code, cv, cc) and centroids `cn`(cell, cv, cnrm) in scope —
+    * the oracle fragment for every IVF-PQ layout: assignment
+    * ([[Similarity.assignCellsSql]]), with `residual` the whole-vector
     * residual v − c(cell) (else the raw vector), dsub-wide encode
     * (m = 8; dsub 2 on the dim-16 fixtures, 8 on the dim-64 table) into
     * `enc`(vec_id, cell, sub, code), nProbes probed cells per query
-    * (vec_id ≡ 0 mod 20), one exact LUT per probed cell from the query's
+    * (vec_id ≡ 0 mod 20; [[Similarity.probeCellsSql]]), one exact LUT per probed cell from the query's
     * own residual (or raw vector), and the ADC sum
     * `sc`(query_id, vec_id, d2u). Without `residual` every probed cell
     * gets the same LUT, so a pair scores as in the raw IVF-PQ search. */
   protected def ivfAdcCtes(src: String, nProbes: Int, dsub: Int,
       residual: Boolean): String = {
     def res(v: String): String =
-      if (residual) s"list_transform($v, (x, i) -> x - cn.w[i])" else v
+      if (residual) s"list_transform($v, (x, i) -> x - cn.cv[i])" else v
     s"""vn AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm
       |  FROM $src),
-      |asgn AS (SELECT vec_id, cell FROM (
-      |    SELECT n.vec_id, cn.cell,
-      |      row_number() OVER (PARTITION BY n.vec_id
-      |        ORDER BY ROUND(list_dot_product(cn.w, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
-      |    FROM vn n CROSS JOIN cn)
-      |  WHERE crn = 1),
-      |resid AS (SELECT n.vec_id, a.cell, ${res("n.v")} AS rv
-      |  FROM vn n JOIN asgn a ON a.vec_id = n.vec_id
-      |    JOIN cn ON cn.cell = a.cell),
+      |asgn AS (${Similarity.assignCellsSql("vn")}),
+      |resid AS (SELECT a.vec_id, a.cell, ${res("a.v")} AS rv
+      |  FROM asgn a JOIN cn ON cn.cell = a.cell),
       |sv AS (SELECT vec_id, cell, CAST(r.range AS INTEGER) AS sub,
       |    list_slice(rv, r.range * $dsub + 1, r.range * $dsub + $dsub) AS xs
       |  FROM resid CROSS JOIN range(0, 8) r),
@@ -628,15 +538,11 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       |    SELECT *, row_number() OVER (PARTITION BY vec_id, sub
       |      ORDER BY d2u, code) AS rn FROM sd)
       |  WHERE rn = 1),
-      |pb AS (SELECT query_id, cell FROM (
-      |    SELECT n.vec_id AS query_id, cn.cell,
-      |      row_number() OVER (PARTITION BY n.vec_id
-      |        ORDER BY ROUND(list_dot_product(n.v, cn.w) / (n.nrm * cn.cnrm), 6) DESC, cn.cell) AS pr
-      |    FROM vn n CROSS JOIN cn WHERE n.vec_id % 20 = 0)
-      |  WHERE pr <= $nProbes),
-      |qres AS (SELECT pb.query_id, pb.cell, ${res("q.v")} AS rqv
-      |  FROM pb JOIN vn q ON q.vec_id = pb.query_id
-      |    JOIN cn ON cn.cell = pb.cell),
+      |qry AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM vn
+      |  WHERE vec_id % 20 = 0),
+      |pb AS (${Similarity.probeCellsSql("qry", nProbes)}),
+      |qres AS (SELECT pb.query_id, pb.cell, ${res("pb.qv")} AS rqv
+      |  FROM pb JOIN cn ON cn.cell = pb.cell),
       |qs AS (SELECT query_id, cell, CAST(r.range AS INTEGER) AS sub,
       |    list_slice(rqv, r.range * $dsub + 1, r.range * $dsub + $dsub) AS xs
       |  FROM qres CROSS JOIN range(0, 8) r),
@@ -659,7 +565,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       residual: Boolean = true): String =
     s"""WITH src AS ($srcSql),
        |${booksCte(books)},
-       |${centsCte(cents)},
+       |${Similarity.centroidsSql(cents)},
        |${ivfAdcCtes("src", nProbes, dsub, residual)},
        |$adcRankSql""".stripMargin
 
@@ -711,19 +617,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
         |    SELECT *, row_number() OVER (PARTITION BY query_id
         |      ORDER BY d2u, vec_id) AS rank FROM sc)
         |  WHERE rank <= $shortlist),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e
-        |  WHERE list_dot_product(v, v) > 0),
-        |qn AS (SELECT vec_id AS query_id, v AS qv,
-        |    sqrt(list_dot_product(v, v)) AS qnrm FROM e
-        |  WHERE vec_id % 20 = 0 AND list_dot_product(v, v) > 0),
-        |x AS (SELECT sl.query_id, sl.vec_id AS neighbor_id,
-        |    ROUND(list_dot_product(qn.qv, n.v) / (qn.qnrm * n.nrm), 4) + 0.0 AS cosine
-        |  FROM sl JOIN n ON n.vec_id = sl.vec_id
-        |    JOIN qn ON qn.query_id = sl.query_id),
-        |rr AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, neighbor_id) AS rank FROM x)
-        |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-        |FROM rr WHERE rank <= 10""".stripMargin
+        |$rerankSql""".stripMargin
     })
   protected val simPqRerank = pqRerank(shortlist = 50)
 
@@ -846,7 +740,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * 0.768 aggregate at m8k16). Both rankings deterministic, so the
     * recall figures themselves hash-check against DuckDB's
     * re-derivation of both chains from the codebook literals. */
-  protected val simPqRecall = recallQ("sim_pq_recall", embBrute,
+  protected val simPqRecall = recallQ("sim_pq_recall", simBruteTopk,
     pqRerank(shortlist = 200))
 
   /** Incremental PQ index maintenance — the code-table sibling of
@@ -968,7 +862,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * NOTES.md r15 — 16-byte codes over 64 near-isotropic dims); the
     * contract is that the figure is ORACLED, not that it is high — the
     * quality claim lives on the planted fixture (sim_opq_trained). */
-  protected val simOpqRecall = recallQ("sim_opq_recall", embBrute, simOpqTopk)
+  protected val simOpqRecall = recallQ("sim_opq_recall", simBruteTopk, simOpqTopk)
 
   /** IVF-PQ composition (Similarity.ivfPqTopK): cell-probed ADC — the
     * corpus is cell-assigned against the persisted embedding centroids
@@ -1020,18 +914,8 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     },
     None, oracleFn = Some { (s, dir) =>
       val cents = embCentroids(s, dir, "all", Tables.embeddings(s, dir))
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-        |c(cell, cv) AS (VALUES
-        |  ${Similarity.vectorValuesSql(cents)}),
-        |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
-        |asgn AS (SELECT vec_id, cell FROM (
-        |    SELECT n.vec_id, cn.cell,
-        |      row_number() OVER (PARTITION BY n.vec_id
-        |        ORDER BY ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
-        |    FROM n CROSS JOIN cn)
-        |  WHERE crn = 1),
-        |cnt AS (SELECT cell, count(*) AS n FROM asgn GROUP BY 1),
+      s"""WITH ${embAssignedCtes(cents)},
+        |cnt AS (SELECT cell, count(*) AS n FROM assigned GROUP BY 1),
         |t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM cnt)
         |SELECT cell, CAST(n AS BIGINT) AS n,
         |  CAST(n * 10000 // total AS BIGINT) AS share_bp,
@@ -1057,30 +941,10 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     },
     None, oracleFn = Some { (s, dir) =>
       val cents = embCentroids(s, dir, "all", Tables.embeddings(s, dir))
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-        |n AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-        |c(cell, cv) AS (VALUES
-        |  ${Similarity.vectorValuesSql(cents)}),
-        |cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM c),
-        |assigned AS (
-        |  SELECT vec_id, v, nrm, cell FROM (
-        |    SELECT n.vec_id, n.v, n.nrm, cn.cell,
-        |      row_number() OVER (PARTITION BY n.vec_id
-        |        ORDER BY ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
-        |    FROM n CROSS JOIN cn WHERE n.label = 1)
-        |  WHERE crn = 1),
-        |q AS (SELECT query_id, qv, qnrm, cell FROM (
-        |    SELECT n.vec_id AS query_id, n.v AS qv, n.nrm AS qnrm, cn.cell,
-        |      row_number() OVER (PARTITION BY n.vec_id
-        |        ORDER BY ROUND(list_dot_product(n.v, cn.cv) / (n.nrm * cn.cnrm), 6) DESC, cn.cell) AS pr
-        |    FROM n CROSS JOIN cn WHERE n.vec_id % 20 = 0)
-        |  WHERE pr <= 2),
-        |s AS (SELECT q.query_id, a.vec_id AS neighbor_id,
-        |        ROUND(list_dot_product(q.qv, a.v) / (q.qnrm * a.nrm), 4) + 0.0 AS cosine
-        |      FROM q JOIN assigned a ON a.cell = q.cell),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM s)
-        |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-        |FROM r WHERE rank <= 10""".stripMargin
+      s"""WITH ${embAssignedCtes(cents, "n.label = 1")},
+        |q0 AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n WHERE vec_id % 20 = 0),
+        |q AS (${Similarity.probeCellsSql("q0", 2)})
+        |${Similarity.cosineTopKSql("assigned", "q", Seq("cell"), excludeSelf = false, k = 10)}""".stripMargin
     })
 
   /** Binary (sign-bit) code table (Similarity.binqEncode, exploded to
@@ -1151,19 +1015,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
       |    SELECT *, row_number() OVER (PARTITION BY query_id
       |      ORDER BY hamming, vec_id) AS rank FROM s)
       |  WHERE rank <= $shortlist),
-      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e
-      |  WHERE list_dot_product(v, v) > 0),
-      |qn AS (SELECT vec_id AS query_id, v AS qv,
-      |    sqrt(list_dot_product(v, v)) AS qnrm FROM e
-      |  WHERE vec_id % 20 = 0 AND list_dot_product(v, v) > 0),
-      |x AS (SELECT sl.query_id, sl.vec_id AS neighbor_id,
-      |    ROUND(list_dot_product(qn.qv, n.v) / (qn.qnrm * n.nrm), 4) + 0.0 AS cosine
-      |  FROM sl JOIN n ON n.vec_id = sl.vec_id
-      |    JOIN qn ON qn.query_id = sl.query_id),
-      |rr AS (SELECT *, row_number() OVER (PARTITION BY query_id
-      |    ORDER BY cosine DESC, neighbor_id) AS rank FROM x)
-      |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-      |FROM rr WHERE rank <= 10""".stripMargin))
+      |$rerankSql""".stripMargin))
   protected val simBinqRerank = binqRerank(shortlist = 50)
 
   /** ORACLED recall measurement — the binary tier's quality as a
@@ -1173,7 +1025,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * intersection is too — DuckDB re-derives both chains and must agree
     * on every per-query recall figure. (The NOTES.md aggregate
     * recall@10 = mean of recall_bp/10⁴ over queries.) */
-  protected val simBinqRecall = recallQ("sim_binq_recall", embBrute,
+  protected val simBinqRecall = recallQ("sim_binq_recall", simBruteTopk,
     binqRerank(shortlist = 200))
 
   /** Int8 scalar-quantization top-k (Similarity.sq8Encode + sq8TopK): the
@@ -1212,7 +1064,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * per-query overlap between the exact brute top-10 and the
     * sq8 dequantized-cosine top-10 — hash-checks the tier's near-exact
     * claim (NOTES.md r14: 0.98 aggregate) instead of noting it. */
-  protected val simSq8Recall = recallQ("sim_sq8_recall", embBrute, simSq8Topk)
+  protected val simSq8Recall = recallQ("sim_sq8_recall", simBruteTopk, simSq8Topk)
 
   /** Incremental binary-code index maintenance (VERDICT r13 #4) — the
     * sign-bit sibling of sim_pq_incr: the HISTORY code table (vec_id ≡ 0
@@ -1538,7 +1390,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * hash-checked from the three literal sets. Closes the matrix —
     * EVERY serving tier (flat PQ "+R", binq, sq8, flat OPQ, composed
     * OPQ∘residual-IVF-PQ) now carries an oracle-gated recall row. */
-  protected val simOpqIvfpqRecall = recallQ("sim_opq_ivfpq_recall", embBrute,
+  protected val simOpqIvfpqRecall = recallQ("sim_opq_ivfpq_recall", simBruteTopk,
     simOpqIvfpqTopk)
 
   /** Composed-beats-residual on REALISTIC clustered data — the second
@@ -1622,7 +1474,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     None, oracleFn = Some { (s, dir) =>
       s"""WITH rot AS (${rotatedSql(s"($embSql)", opqHistR(s, dir))}),
         |${booksCte(opqIvfHistBooks(s, dir))},
-        |${centsCte(opqIvfHistCents(s, dir))},
+        |${Similarity.centroidsSql(opqIvfHistCents(s, dir))},
         |${ivfAdcCtes("rot", nProbes = 1, dsub = 8, residual = true)}
         |SELECT vec_id, cell, sub, code,
         |  CASE WHEN vec_id % 7 = 0 THEN 'history' ELSE 'batch' END AS origin
@@ -1811,7 +1663,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
     * top-10. Both rankings deterministic ⇒ the recall figures
     * themselves hash-check against DuckDB's re-derivation of both
     * chains. */
-  protected val simGraphRecall = recallQ("sim_graph_recall", embBrute, simGraphTopk)
+  protected val simGraphRecall = recallQ("sim_graph_recall", simBruteTopk, simGraphTopk)
 
   /** Incremental graph maintenance: history (vec_id ≢ 0 mod 5) builds
     * and persists its graph ONCE; a new batch attaches by beam-
@@ -1964,7 +1816,7 @@ private[graft] trait QueriesSim extends QueriesRetrieval {
   /** Oracled recall for the ADC-routed serving face (the
     * sim_graph_recall shape): quantized routing + exact re-rank vs
     * exact brute, per query. */
-  protected val simGraphAdcRecall = recallQ("sim_graph_adc_recall", embBrute,
+  protected val simGraphAdcRecall = recallQ("sim_graph_adc_recall", simBruteTopk,
     simGraphAdcTopk)
 
   /** This family's registrar — composed into [[Queries.all]]. */

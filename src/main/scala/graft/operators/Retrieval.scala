@@ -780,18 +780,33 @@ object Retrieval {
     * optional stopword df-prune. */
   def bm25Sql(toksSql: String, k: Int,
       k1Bp: Long = K1Bp, bBp: Long = BBp,
-      maxDfShareBp: Int = 10000): String = {
-    val prune =
-      if (maxDfShareBp >= 10000) ""
-      else s"\n  HAVING count(*) * 10000 <= (SELECT n_docs FROM stats) * $maxDfShareBp"
+      maxDfShareBp: Int = 10000): String =
     s"""toks AS (SELECT doc_id, $toksSql AS w FROM documents),
-      |post AS (SELECT term, doc_id, dl, count(*) AS tf FROM (
+      |${bm25IndexSql(maxDfShareBp)},
+      |${bm25ScoreTailSql(k, k1Bp, bBp)}""".stripMargin
+
+  /** [[postings]] and [[corpusStats]] as the CTEs `post`(term, doc_id,
+    * dl, tf) and `stats`(n_docs, total_tokens) over a `toks`(doc_id, w)
+    * relation. */
+  private val toksPostStatsSql =
+    """post AS (SELECT term, doc_id, dl, count(*) AS tf FROM (
       |    SELECT doc_id, CAST(len(w) AS BIGINT) AS dl, unnest(w) AS term FROM toks)
       |  GROUP BY 1, 2, 3),
       |stats AS (SELECT count(*) AS n_docs,
-      |    CAST(sum(len(w)) AS BIGINT) AS total_tokens FROM toks),
-      |tdf AS (SELECT term, count(*) AS df FROM post GROUP BY 1$prune),
-      |${bm25ScoreTailSql(k, k1Bp, bBp)}""".stripMargin
+      |    CAST(sum(len(w)) AS BIGINT) AS total_tokens FROM toks)""".stripMargin
+
+  /** SQL twin of the BM25 index the scorers read: `postStats` (the
+    * `post` and `stats` CTEs, by default [[postings]] and [[corpusStats]]
+    * over an existing `toks`(doc_id, w) relation; the fielded oracles
+    * pass their [[fieldedPostings]] / [[fieldedCorpusStats]] pair), then
+    * `tdf`(term, df) with [[bm25TopK]]'s optional stopword df-prune. */
+  def bm25IndexSql(maxDfShareBp: Int = 10000,
+      postStats: String = toksPostStatsSql): String = {
+    val prune =
+      if (maxDfShareBp >= 10000) ""
+      else s"\n  HAVING count(*) * 10000 <= (SELECT n_docs FROM stats) * $maxDfShareBp"
+    s"""$postStats,
+      |tdf AS (SELECT term, count(*) AS df FROM post GROUP BY 1$prune)""".stripMargin
   }
 
   /** MMR result diversification (Carbonell & Goldstein 1998): greedily

@@ -102,6 +102,30 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
   }
 
+  /** SQL twin of [[scoreAgainst]] + [[rankTopK]], the one cosine
+    * score → rank tail of every brute, LSH, IVF and exact-rerank oracle:
+    * a SELECT of (query_id, rank, neighbor_id, cosine) over the DuckDB
+    * relations `queries`(query_id, qv, qnrm[, keys]) and
+    * `corpus`(vec_id, v, nrm[, keys]). Zero norms drop per row on both
+    * sides, pairs join on `joinKeys` (cross join when empty),
+    * `excludeSelf` drops id-equal pairs, and the round-4 cosine gets
+    * `+ 0.0` (DuckDB's ROUND can return -0.0, Spark's never does). */
+  def cosineTopKSql(corpus: String, queries: String, joinKeys: Seq[String],
+      excludeSelf: Boolean, k: Int): String = {
+    val pairs =
+      if (joinKeys.isEmpty) s"$queries q CROSS JOIN $corpus c"
+      else s"$queries q JOIN $corpus c USING (${joinKeys.mkString(", ")})"
+    val self = if (excludeSelf) " AND c.vec_id <> q.query_id" else ""
+    s"""SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY query_id
+       |      ORDER BY cosine DESC, neighbor_id) AS rank FROM (
+       |    SELECT q.query_id, c.vec_id AS neighbor_id,
+       |      ROUND(list_dot_product(q.qv, c.v) / (q.qnrm * c.nrm), 4) + 0.0 AS cosine
+       |    FROM $pairs
+       |    WHERE q.qnrm > 0 AND c.nrm > 0$self))
+       |WHERE rank <= $k""".stripMargin
+  }
+
   /** Exact brute-force top-k cosine for queries (vec_id ≡ 0 mod `stride`). */
   def bruteTopK(embeddings: DataFrame, k: Int, stride: Int): DataFrame = {
     val corpus = preparedVecs(embeddings)
@@ -359,6 +383,22 @@ object Similarity {
           .as("cell_cos"))
   }
 
+  /** SQL twin of [[assignCellsWithCos]]: a SELECT of (vec_id, v, nrm,
+    * cell, cell_cos) that assigns every row of `src`(vec_id, v, nrm)
+    * passing `where` (a predicate on alias `n`, e.g. `n.label = 1`) to
+    * its round-6 argmax-cosine cell of `cn`(cell, cv, cnrm)
+    * ([[centroidsSql]]), min-cell tie-break. */
+  def assignCellsSql(src: String, where: String = ""): String = {
+    val pred = if (where.isEmpty) "" else s" WHERE $where"
+    s"""SELECT vec_id, v, nrm, cell, cell_cos FROM (
+       |    SELECT n.vec_id, n.v, n.nrm, cn.cell,
+       |      ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) + 0.0 AS cell_cos,
+       |      row_number() OVER (PARTITION BY n.vec_id
+       |        ORDER BY ROUND(list_dot_product(cn.cv, n.v) / (cn.cnrm * n.nrm), 6) DESC, cn.cell) AS crn
+       |    FROM $src n CROSS JOIN cn$pred)
+       |  WHERE crn = 1""".stripMargin
+  }
+
   /** IVF-bucketed approximate top-k: assign every vector to its nearest
     * deterministic centroid, then search only within the query's cell. */
   def ivfTopK(embeddings: DataFrame, k: Int, stride: Int): DataFrame = {
@@ -390,14 +430,8 @@ object Similarity {
       k: Int, stride: Int, nProbes: Int): DataFrame = {
     val queries = assigned.where(pmod(col("vec_id"), lit(stride)) === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val probes = queries.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        round(cosinePrenormed(dot(col("qv"), col("cv")), col("qnrm"), col("cnrm")), 6))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("ccos").desc, col("cell"))))
-      .where(col("pr") <= nProbes)
-      .select(col("query_id"), col("qv"), col("qnrm"), col("cell"))
-    rankTopK(scoreAgainst(assigned, probes, Seq("cell"), excludeSelf = true), k)
+    rankTopK(scoreAgainst(assigned, rankProbes(queries, cents, nProbes),
+      Seq("cell"), excludeSelf = true), k)
   }
 
   /** Shared IVF search body: queries probe only their own cell. */
@@ -458,6 +492,12 @@ object Similarity {
       .toDF("cell", "cv")
       .select(col("cell"), col("cv"), l2Norm(col("cv")).as("cnrm"))
   }
+
+  /** SQL twin of [[centroidFrame]]: the CTE `cn`(cell, cv, cnrm) over
+    * [[vectorValuesSql]] literals. */
+  def centroidsSql(cents: Seq[Array[Double]]): String =
+    s"""cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM (VALUES
+       |  ${vectorValuesSql(cents)}) c(cell, cv))""".stripMargin
 
   /** Trained centroids → a persistable DataFrame (cell, centroid): the
     * third leg of the artifact story next to [[Dedup.bandIndex]] (parquet)
@@ -933,16 +973,33 @@ object Similarity {
     * (query_id, qv, qnrm, cell); callers project what they need. */
   private def probeCells(queries: DataFrame, cdf: DataFrame,
       nProbes: Int): DataFrame =
-    preparedVecs(queries)
+    rankProbes(preparedVecs(queries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qnrm"))
-      .crossJoin(broadcast(cdf))
+        col("nrm").as("qnrm")), cdf, nProbes)
+
+  /** [[probeCells]]' ranking body over prepared (query_id, qv, qnrm)
+    * rows — also the probe list of [[searchMultiProbe]]. */
+  private def rankProbes(queries: DataFrame, cdf: DataFrame,
+      nProbes: Int): DataFrame =
+    queries.crossJoin(broadcast(cdf))
       .withColumn("ccos", round(
         cosinePrenormed(dot(col("qv"), col("cv")), col("qnrm"), col("cnrm")), 6))
       .withColumn("pr", row_number().over(Window.partitionBy(col("query_id"))
         .orderBy(col("ccos").desc, col("cell"))))
       .where(col("pr") <= nProbes)
       .select(col("query_id"), col("qv"), col("qnrm"), col("cell"))
+
+  /** SQL twin of [[probeCells]]: a SELECT of (query_id, qv, qnrm, cell),
+    * the `nProbes` nearest cells of `cn`(cell, cv, cnrm) per row of
+    * `queries`(query_id, qv, qnrm) by round-6 cosine, min-cell
+    * tie-break. */
+  def probeCellsSql(queries: String, nProbes: Int): String =
+    s"""SELECT query_id, qv, qnrm, cell FROM (
+       |    SELECT q.query_id, q.qv, q.qnrm, cn.cell,
+       |      row_number() OVER (PARTITION BY q.query_id
+       |        ORDER BY ROUND(list_dot_product(q.qv, cn.cv) / (q.qnrm * cn.cnrm), 6) DESC, cn.cell) AS pr
+       |    FROM $queries q CROSS JOIN cn)
+       |  WHERE pr <= $nProbes""".stripMargin
 
   /** Shared ranking tail of the code tiers: top-k per query over
     * (query_id, vec_id, `score`), `score` ascending for a distance (d2u,

@@ -48,13 +48,26 @@ class RegistrySpec extends AnyFunSuite {
     assert(Queries.all.forall(q => q.oracle.isEmpty || q.oracleFn.isEmpty))
   }
 
-  test("the recall arithmetic is written once in src/main") {
+  /** How often `frag` appears in the main Scala sources. */
+  private def mainCount(frag: String): Int = {
     val walk = Files.walk(Paths.get("src/main/scala"))
     val text = try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
       .map(Files.readString).mkString("\n") finally walk.close()
+    text.split(java.util.regex.Pattern.quote(frag), -1).length - 1
+  }
+
+  test("the recall arithmetic is written once in src/main") {
     for (frag <- Seq("10000 div n_brute", "// base.n_brute"))
-      assert(text.split(java.util.regex.Pattern.quote(frag), -1).length - 1 == 1,
-        s"'$frag' must appear once, in the recall builder")
+      assert(mainCount(frag) == 1, s"'$frag' must appear once, in the recall builder")
+  }
+
+  test("the search and BM25-index oracle steps are written once in src/main") {
+    for ((frag, home) <- Seq(
+        "6) DESC, cn.cell) AS crn" -> "Similarity.assignCellsSql",
+        "6) DESC, cn.cell) AS pr" -> "Similarity.probeCellsSql",
+        "CAST(rank AS INTEGER) AS rank, neighbor_id, cosine" -> "Similarity.cosineTopKSql",
+        "tdf AS (SELECT term, count(*) AS df FROM post" -> "Retrieval.bm25IndexSql"))
+      assert(mainCount(frag) == 1, s"'$frag' must appear once, in $home")
   }
 
   test("the recall builder keeps a query its tier misses and orders overlaps before bps") {
